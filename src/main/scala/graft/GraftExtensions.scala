@@ -1,13 +1,17 @@
 package graft
 
-import graft.functions.{CanonicalUrl, CdcChunks, CosineSimilarity, CrossModalScore, GramHashes, HtmlText, InterSize, InterSizeSorted, LangScores, LinearScore, MinHashAgg, MinHashSig, MinHashSigSize, NfcNormalize, NfkcCasefold, RepetitionStats, RollingHash, ShingleHashes, SimHashAgg, SimHashSig, SrpBucket, TextStats, TokenHashes}
+import graft.functions.{CanonicalUrl, CdcChunks, CosineSimilarity, CrossModalScore, GramHashes, HtmlText, InterSize, LangScores, LinearScore, MinHashSig, MinHashSigSize, NfcNormalize, NfkcCasefold, RepetitionStats, RollingHash, ShingleHashes, SimHashSig, SrpBucket, TextStats, TokenHashes}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions registering graft's native Catalyst expressions.
-  * Wire with `SparkSession.builder.withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.GraftExtensions`.
+/** Session extensions registering SQL names for graft's native Catalyst
+  * expressions, for `spark.sql` users. Wire with
+  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions`. The library's Column
+  * and DataFrame APIs do not need them: they build the expressions
+  * directly through `org.apache.spark.sql.graft.ColumnBridge`, so they
+  * run the same kernels on any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -32,10 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         requireArity("srp_bucket", children, 2)
         SrpBucket(children.head, children(1))
       }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_agg"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_agg"),
-      (children: Seq[Expression]) => MinHashAgg.fromChildren(children)))
     ext.injectFunction((
       FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
@@ -88,13 +88,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         requireArity("inter_size", children, 2)
         InterSize(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("inter_size_sorted"),
-      new ExpressionInfo(classOf[InterSizeSorted].getName, "inter_size_sorted"),
-      (children: Seq[Expression]) => {
-        requireArity("inter_size_sorted", children, 2)
-        InterSizeSorted(children.head, children(1))
       }))
     ext.injectFunction((
       FunctionIdentifier("lang_scores"),
@@ -169,13 +162,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         requireArity("linear_score", children, 2)
         LinearScore(children.head, literalInt("linear_score", children(1)))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_agg"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "simhash_agg"),
-      (children: Seq[Expression]) => {
-        requireArity("simhash_agg", children, 1)
-        SimHashAgg(children.head)
       }))
   }
 

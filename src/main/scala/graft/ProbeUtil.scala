@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
-/** Shared plumbing for the measurement mains (StageProbe / AnnProbe /
-  * BpeProbe): recursive temp-corpus cleanup and the warm + min-of-2
-  * noop-sink timer. One copy — a fix to the delete semantics or the
-  * warmup policy must not need chasing through per-probe clones.
+/** Temp-directory plumbing shared by queries, ScaleCheck/StreamScale and
+  * the tests: scratch dirs swept recursively at JVM exit, and recursive
+  * delete. One copy — a fix to the delete semantics must not need
+  * chasing through clones.
   */
 object ProbeUtil {
 
@@ -26,7 +24,7 @@ object ProbeUtil {
     d.toAbsolutePath.toString
   }
 
-  /** Recursive delete of a probe's replicated-corpus temp dir — multi-GB
+  /** Recursive delete of a replicated-corpus temp dir — multi-GB
     * at large factors, must not outlive the run (including failed runs).
     */
   def deleteRecursively(dir: java.nio.file.Path): Unit = {
@@ -34,21 +32,5 @@ object ProbeUtil {
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(f => java.nio.file.Files.deleteIfExists(f))
     finally walk.close()
-  }
-
-  /** Time a DataFrame through the noop sink: one untimed warm pass
-    * (codegen/broadcast build), then min of two timed runs. Prints
-    * `PREFIX tag   t s` and returns t.
-    */
-  def timeNoop(prefix: String, tag: String)(df: => DataFrame): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once() // warm
-    val t = math.min(once(), once())
-    println(f"$prefix $tag%-28s ${t}%8.3f s")
-    t
   }
 }

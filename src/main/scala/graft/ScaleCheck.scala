@@ -101,7 +101,7 @@ object ScaleCheck {
   private def preparePipeline(spark: SparkSession, d: DataFrame): DataFrame = {
     import graft.dedup.Dedup
     import graft.functions.TextFunctions
-    val q = d.where(TextFunctions.qualityOkFast(spark, col("text")))
+    val q = d.where(TextFunctions.qualityOkFast(col("text")))
     val keep = Dedup.exact(q, "doc_id", "text").select(col("keep_id").as("doc_id"))
     val kept = q.join(keep, Seq("doc_id"), "left_semi")
     val split = kept.select(col("doc_id"), col("text"),
@@ -1088,8 +1088,8 @@ object ScaleCheck {
       def wet(dir: String): DataFrame = graft.sources.Warc.read(spark, dir)
         .select(
           regexp_extract(col("uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          graft.functions.TextFunctions.htmlTextFast(spark,
-            col("payload").cast("string")).as("text_clean"))
+          graft.functions.TextFunctions.htmlTextFast(col("payload").cast("string"))
+            .as("text_clean"))
         .withColumn("clean_chars", length(col("text_clean")).cast("long"))
       val t4 = min2(wet(d4))
       val t32 = min2(wet(d32))

@@ -45,8 +45,8 @@ object Ann {
   /** Build a model-kernel expression over `v.cast("array<double>")` and
     * wrap it as a Column — the construction path for the ANN quantizer
     * kernels (graft.functions.AnnKernels), whose Broadcast model handle
-    * cannot ride the SQL function registry. Package-visible: AnnProbe
-    * and AnnKernelSpec build the same columns through this one helper.
+    * cannot ride the SQL function registry. Package-visible:
+    * AnnKernelSpec builds the same columns through this one helper.
     */
   private[graft] def kernelCol(
       build: org.apache.spark.sql.catalyst.expressions.Expression => org.apache.spark.sql.catalyst.expressions.Expression,
@@ -62,7 +62,7 @@ object Ann {
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"))
     val scored = c.crossJoin(q) // broadcast nested loop over the small query set
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosineNative(corpus.sparkSession, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -88,7 +88,7 @@ object Ann {
       (filterCols.map(col) :+ col(id).as("neighbor_id")) :+ col(vec).as("cv"): _*)
     val scored = c.join(q, filterCols) // broadcast hash join on the filter keys
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosineNative(corpus.sparkSession, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -105,7 +105,7 @@ object Ann {
                   threshold: Double, nBits: Int = 8, probeBits: Int = 2,
                   maxBucket: Int = 1000): DataFrame = {
     val base0 = corpus.select(col(id).as("vid"), col(vec).as("v"),
-      srpBucketNative(corpus.sparkSession, vec, nBits).as("b0"))
+      srpBucketNative(vec, nBits).as("b0"))
     // Hot-bucket guard (default ON at 1000; maxBucket = 0 is the
     // explicit opt-out) against the LSH skew cliff (a mega-cluster of
     // near-identical embeddings shares one SRP bucket → k²/2 verify pairs
@@ -140,12 +140,12 @@ object Ann {
       // exact and skips the canonicalizing distinct's extra shuffle
       paired.where(col("a") < col("b"))
         .select(col("a"), col("b"),
-          round(cosineNative(corpus.sparkSession, "va", "vb"), 6).as("cos"))
+          round(cosineNative("va", "vb"), 6).as("cos"))
         .where(col("cos") >= threshold)
     else
       paired
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"),
-          round(cosineNative(corpus.sparkSession, "va", "vb"), 6).as("cos"))
+          round(cosineNative("va", "vb"), 6).as("cos"))
         .where(col("cos") >= threshold)
         .distinct()
   }
@@ -159,14 +159,13 @@ object Ann {
   def crossCosinePairs(batch: DataFrame, corpus: DataFrame, id: String, vec: String,
                        threshold: Double, nBits: Int = 8, probeBits: Int = 2,
                        maxBucket: Int = 1000): DataFrame = {
-    val spark = corpus.sparkSession
     val probes = array((lit(0) +: (0 until probeBits).map(b => lit(1 << b))): _*)
     val l = batch.select(col(id).as("batch_id"), col(vec).as("va"),
-        srpBucketNative(spark, vec, nBits).as("b0"))
+        srpBucketNative(vec, nBits).as("b0"))
       .select(col("batch_id"), col("va"),
         explode(transform(probes, f => col("b0").bitwiseXOR(f))).as("bucket"))
     val r0 = corpus.select(col(id).as("corpus_id"), col(vec).as("vb"),
-      srpBucketNative(spark, vec, nBits).as("bucket"))
+      srpBucketNative(vec, nBits).as("bucket"))
     // corpus-side hot-bucket guard (same r-side-only contract as
     // cosinePairs(maxBucket)): an oversized corpus bucket is dropped, so
     // one batch probe can't pull a mega-cluster into a single task;
@@ -176,7 +175,7 @@ object Ann {
     // bucket, batch probes are distinct bucket values
     l.join(r, Seq("bucket"))
       .select(col("batch_id"), col("corpus_id"),
-        round(cosineNative(spark, "va", "vb"), 6).as("cos"))
+        round(cosineNative("va", "vb"), 6).as("cos"))
       .where(col("cos") >= threshold)
   }
 
@@ -245,7 +244,7 @@ object Ann {
       col("cluster") === col("_rc") && col("uid") =!= col("vec_id") &&
         (col("cb") < col("cdot") ||
           (col("cb") === col("cdot") && col("uid") < col("vec_id"))) &&
-        round(cosineNative(spark, col("v"), col("vb")), 6) >= threshold,
+        round(cosineNative(col("v"), col("vb")), 6) >= threshold,
       "left")
     dominated.groupBy(col("vec_id"), col("cluster"))
       .agg((count(col("uid")) === 0).as("keep"))
@@ -282,14 +281,13 @@ object Ann {
     */
   def crossSemanticDup(newAsg: DataFrame, corpusAsg: DataFrame,
                        threshold: Double, maxCluster: Int = 2000): DataFrame = {
-    val spark = newAsg.sparkSession
     val r = graft.dedup.Dedup
       .capBuckets(corpusAsg, Seq("cluster"), maxCluster, "crossSemanticDup")
       .select(col("vec_id").as("uid"), col("v").as("vb"),
         col("cluster").as("_rc"))
     newAsg.join(r,
         col("cluster") === col("_rc") &&
-          round(cosineNative(spark, col("v"), col("vb")), 6) >= threshold,
+          round(cosineNative(col("v"), col("vb")), 6) >= threshold,
         "left_semi")
       .select(col("vec_id"))
   }
@@ -431,7 +429,7 @@ object Ann {
     // already unique — a distinct() here would be a wasted extra shuffle
     val scored = probed.join(assigned, Seq("list"))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosineNative(corpus.sparkSession, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
       .select("query_id", "neighbor_id", "cos")
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -473,7 +471,7 @@ object Ann {
     val scored = probed.join(assigned, Seq("list"))
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("role", when(col("probe_rank") === 0, "pos").otherwise("neg"))
-      .withColumn("cos", cosineNative(corpus.sparkSession, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
     val w = Window.partitionBy("query_id", "role")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -620,7 +618,7 @@ object Ann {
     val refined = coarse
       .join(corpus.select(col(id).as("neighbor_id"), col(vec).as("cv")), Seq("neighbor_id"))
       .join(qFull, Seq("query_id"))
-      .withColumn("cos", cosineNative(corpus.sparkSession, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     refined.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -683,7 +681,7 @@ object Ann {
     val refined = cand
       .join(corpus.select(col(id).as("neighbor_id"), col(vec).as("cv")), "neighbor_id")
       .join(broadcast(queries.select(col(id).as("query_id"), col(vec).as("qv"))), "query_id")
-      .withColumn("cos", cosineNative(spark, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     refined.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -821,7 +819,7 @@ object Ann {
     val refined = cand
       .join(corpus.select(col(id).as("neighbor_id"), col(vec).as("cv")), "neighbor_id")
       .join(broadcast(queries.select(col(id).as("query_id"), col(vec).as("qv"))), "query_id")
-      .withColumn("cos", cosineNative(spark, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     refined.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -836,9 +834,9 @@ object Ann {
   def lshTopK(corpus: DataFrame, queries: DataFrame, id: String,
               vec: String, k: Int, nBits: Int = 8, probeBits: Int = 4): DataFrame = {
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
-      srpBucketNative(corpus.sparkSession, vec, nBits).as("bucket"))
+      srpBucketNative(vec, nBits).as("bucket"))
     val qBase = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      srpBucketNative(corpus.sparkSession, vec, nBits).as("b0"))
+      srpBucketNative(vec, nBits).as("b0"))
     // probe set: own bucket + 1-bit flips of the first probeBits bits
     val probes = array((lit(0) +: (0 until probeBits).map(b => lit(1 << b))): _*)
     val q = qBase.select(col("query_id"), col("qv"),
@@ -847,7 +845,7 @@ object Ann {
     // by its one bucket, the query's probe buckets are distinct values
     val scored = q.join(c, Seq("bucket"))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosineNative(corpus.sparkSession, "qv", "cv"))
+      .withColumn("cos", cosineNative("qv", "cv"))
       .select("query_id", "neighbor_id", "cos")
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))

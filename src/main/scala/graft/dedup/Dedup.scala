@@ -1,8 +1,10 @@
 package graft.dedup
 
-import graft.functions.TextFunctions
+import graft.functions.{CdcChunks, GramHashes, InterSizeSorted, MinHashSig, MinHashSigSize, ShingleHashes, SimHashSig, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Document deduplication for training-data pipelines, designed for the
   * 100 TB shape: every variant is a hash-partitioned groupBy/join on a
@@ -136,102 +138,33 @@ object Dedup {
 
   // ---- MinHash + LSH ------------------------------------------------------
 
-  /** Word-shingle hashes: k-gram shingles over word tokens, each hashed to
-    * a long. Docs shorter than `k` tokens fall back to whole-token hashes
-    * so they still participate.
-    *
-    * Hot-path shape: tokens hash to longs ONCE, then each shingle hash
-    * combines k consecutive token-hash longs with one more xxhash64 —
-    * never materializing gram strings. (The earlier concat_ws("a b c") →
-    * xxhash64(string) form spent ~60% of the whole minhash pipeline
-    * building and re-hashing gram strings; combining longs is
-    * measurement-equivalent for LSH and ~3x cheaper.) The zip of k
-    * shifted slices binds the token-hash array once — HOF lambdas get no
-    * common-subexpression elimination.
-    */
-  def shingleHashes(text: Column, k: Int = 3): Column = {
-    val th = transform(TextFunctions.tokens(text), t => xxhash64(t))
-    val n = size(th)
-    val zipped = arrays_zip(
-      (0 until k).map(j => slice(th, lit(j + 1), greatest(n - (k - 1), lit(0))).as(s"t$j")): _*)
-    val grams = transform(zipped, s => xxhash64((0 until k).map(j => s.getField(s"t$j")): _*))
-    array_distinct(when(n >= k, grams).otherwise(th))
-  }
-
-  /** Native-or-fallback shingle hashing: the single-pass codegen'd kernel
-    * (graft.functions.ShingleHashes) when GraftExtensions is registered,
-    * else the Column form — bit-exact either way (asserted in
-    * FunctionsSpec), same dispatch pattern as cosineNative/srpBucketNative.
-    * `call_function` takes the column as a Column, so dotted/nested paths
-    * resolve identically on both branches (no SQL re-parsing).
-    */
-  def shingleHashesNative(spark: org.apache.spark.sql.SparkSession,
-                          textCol: String, k: Int): Column =
-    if (spark.catalog.functionExists("shingle_hashes"))
-      call_function("shingle_hashes", col(textCol), lit(k))
-    else shingleHashes(col(textCol), k)
-
-  /** MinHash signature per row as a single Column: `numHashes` independent
-    * hash "permutations" h_i(x) = xxhash64(i, x) over the shingle-hash
-    * set, each taking the minimum. Fine for small signature counts;
-    * [[minhashSigs]] is the scan-scale path.
-    */
-  def minhashSignature(hashes: Column, numHashes: Int = 64): Column =
-    array((0 until numHashes).map { i =>
-      aggregate(hashes, lit(Long.MaxValue), (acc, x) => least(acc, xxhash64(lit(i), x)))
-    }: _*)
-
   /** Permutation coefficients h_i(x) = a_i*x + b_i (wrapping 64-bit; odd
-    * a_i → bijection mod 2^64). Shared by the column form and the
-    * [[graft.functions.MinHashAgg]] imperative aggregate so their
-    * signatures are interchangeable.
+    * a_i → bijection mod 2^64). Shared by the [[graft.functions.MinHashSig]]
+    * kernel and the DuckDB oracle replay
+    * ([[graft.queries.MinHashOracleSql]]) so their signatures agree.
     */
   def minhashCoeffs(numHashes: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
     Seq.fill(numHashes)((rnd.nextLong() | 1L, rnd.nextLong()))
   }
 
-  /** MinHash signatures — the 100 TB shape: shingle hashes explode within
-    * the scan partition and fold map-side into one 64-long row per doc
-    * (~0.5 KB across the shuffle regardless of doc size). Uses the
-    * [[graft.functions.MinHashAgg]] imperative aggregate (single long[k]
-    * buffer, mergeable partials) when GraftExtensions is on the session,
-    * else the columnar k-min form — identical signatures either way
-    * (asserted in DedupAnnSpec). A per-row higher-order fold is NOT an
-    * option: 64 `aggregate()` lambdas blow past codegen limits and drop
+  /** MinHash signatures, one (doc, sig) row per document with at least
+    * one token: `numHashes` minima of the permuted shingle hashes.
+    *
+    * The signature is a pure per-document function, so the per-row
+    * [[graft.functions.MinHashSig]] kernel computes it in the scan — one
+    * pass over the document bytes, zero shuffles, zero aggregation
+    * buffers (an explode + groupBy form pays a hash exchange of every
+    * shingle-bearing row). The kernel returns a 0/1-element array and the
+    * explode drops token-free docs, without a filter Catalyst would
+    * re-evaluate below the projection. A per-row higher-order fold is NOT
+    * an option: 64 `aggregate()` lambdas blow past codegen limits and drop
     * to interpreted eval (~30x slower, measured at sf0.01).
     */
   def minhashSigs(docs: DataFrame, id: String, text: String,
                   numHashes: Int = 64, shingleK: Int = 3): DataFrame =
-    // r19 (guide §2.4): the signature is a pure per-document function,
-    // so the per-row kernel removes the explode + groupBy hash exchange
-    // entirely — one scan, zero shuffles, zero aggregation buffers.
-    // The 0/1-element array + explode reproduces the aggregate form's
-    // "no row for token-free docs" contract without a filter Catalyst
-    // would re-evaluate below the projection; signatures bit-identical
-    // (FunctionsSpec r19 witness).
-    if (docs.sparkSession.catalog.functionExists("minhash_sig"))
-      docs.select(col(id).as("doc"),
-        explode(call_function("minhash_sig",
-          col(text), lit(shingleK), lit(numHashes))).as("sig"))
-    else if (docs.sparkSession.catalog.functionExists("minhash_agg"))
-      docs.select(col(id).as("doc"),
-          explode(shingleHashesNative(docs.sparkSession, text, shingleK)).as("h"))
-        .groupBy("doc")
-        .agg(expr(s"minhash_agg(h, $numHashes)").as("sig"))
-    else minhashSigsColumnar(docs, id, text, numHashes, shingleK)
-
-  /** Column-expression form of the signature aggregation (k separate min
-    * aggregates) — extension-free fallback, checked equal to the
-    * imperative aggregate in DedupAnnSpec.
-    */
-  def minhashSigsColumnar(docs: DataFrame, id: String, text: String,
-                          numHashes: Int = 64, shingleK: Int = 3): DataFrame = {
-    val coeffs = minhashCoeffs(numHashes)
-    docs.select(col(id).as("doc"), explode(shingleHashes(col(text), shingleK)).as("h"))
-      .groupBy("doc")
-      .agg(array(coeffs.map { case (a, b) => min(col("h") * a + b) }: _*).as("sig"))
-  }
+    docs.select(col(id).as("doc"),
+      explode(column(MinHashSig(expression(col(text)), shingleK, numHashes))).as("sig"))
 
   /** LSH banding: split the signature into `bands` bands of
     * `numHashes/bands` rows, hash each band. Output: one row per (doc,
@@ -326,8 +259,8 @@ object Dedup {
     * The sketch buys the pruning; the exact [[verifyContainment]] stage
     * downstream keeps the precision.
     *
-    * Scale shape: signatures+sizes reduce map-side to ~0.5 KB/doc, the
-    * candidate join ships 24-byte band rows, and signatures re-join
+    * Scale shape: signatures+sizes are ~0.5 KB/doc straight from the
+    * scan, the candidate join ships 24-byte band rows, and signatures re-join
     * only for bucket-collided survivors — never an all-pairs product,
     * and the mega-bucket failure mode is capped exactly like
     * [[minhashPairs]] (drops observable via the cap metrics).
@@ -336,28 +269,12 @@ object Dedup {
                              estThreshold: Double, numHashes: Int = 64,
                              bands: Int = 16, shingleK: Int = 3,
                              maxBucket: Int = 1000): DataFrame = {
-    val spark = docs.sparkSession
-    // r19 (guide §2.4): signature + |set| are per-document functions —
-    // the per-row kernel removes the explode + groupBy exchange (the
-    // minhashSigs device; nset = distinct gram count, identical to
-    // count(*) over the exploded per-doc-distinct shingle set)
-    val sigs =
-      if (spark.catalog.functionExists("minhash_sig_size"))
-        docs.select(col(id).as("doc"),
-            explode(call_function("minhash_sig_size",
-              col(text), lit(shingleK), lit(numHashes))).as("_ss"))
-          .select(col("doc"), col("_ss.sig").as("sig"), col("_ss.nset").as("nset"))
-      else {
-        val exploded = docs.select(col(id).as("doc"),
-          explode(shingleHashesNative(spark, text, shingleK)).as("h"))
-        val sigExpr =
-          if (spark.catalog.functionExists("minhash_agg"))
-            expr(s"minhash_agg(h, $numHashes)")
-          else // columnar k-min fallback — identical signatures (minhashSigsColumnar)
-            array(minhashCoeffs(numHashes).map { case (a, b) => min(col("h") * a + b) }: _*)
-        exploded.groupBy("doc")
-          .agg(sigExpr.as("sig"), count(lit(1)).as("nset"))
-      }
+    // signature + |set| are per-document functions, so the per-row
+    // kernel needs no explode + groupBy exchange (the minhashSigs
+    // device); nset is the distinct gram count
+    val sigs = docs.select(col(id).as("doc"),
+        explode(column(MinHashSigSize(expression(col(text)), shingleK, numHashes))).as("_ss"))
+      .select(col("doc"), col("_ss.sig").as("sig"), col("_ss.nset").as("nset"))
     val bandedAll = bandsOfSigs(sigs.select(col("doc"), col("sig")), numHashes, bands)
     val banded = capBuckets(bandedAll, Seq("band", "band_hash"), maxBucket,
       "containmentSketchPairs")
@@ -467,10 +384,9 @@ object Dedup {
     *
     * Scale shape: chunking is ONE scan — the native `cdc_chunks` kernel
     * ([[graft.functions.CdcChunks]]) does the O(n·windowChars) hash work
-    * as a compiled loop inside whole-stage codegen (the Column
-    * higher-order-function fallback is semantically identical but
-    * evaluates interpreted — ~3 orders of magnitude slower on the scan;
-    * bit-equality asserted in FunctionsSpec); the keeper is ONE hash
+    * as a compiled loop inside whole-stage codegen (the same rule from
+    * higher-order functions evaluates interpreted — ~3 orders of
+    * magnitude slower on the scan); the keeper is ONE hash
     * exchange partitioned by the chunk content with an in-partition sort
     * (row_number) — per-group work is linear in the duplicate count, so
     * a mega-duplicated boilerplate chunk costs its instance count, never
@@ -479,35 +395,13 @@ object Dedup {
   def chunkDedup(docs: DataFrame, id: String, text: String,
                  windowChars: Int = 8, divisor: Int = 32): DataFrame = {
     require(windowChars >= 1 && divisor >= 2, "windowChars >= 1, divisor >= 2")
-    val chunks =
-      if (docs.sparkSession.catalog.functionExists("cdc_chunks"))
-        call_function("cdc_chunks", col(text), lit(windowChars), lit(divisor))
-      else cdcChunksColumns(col(text), windowChars, divisor)
+    val chunks = column(CdcChunks(expression(col(text)), windowChars, divisor))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("chunk").orderBy(col(id), col("chunk_idx"))
     docs.select(col(id), posexplode(chunks).as(Seq("chunk_idx", "chunk")))
       .where(length(col("chunk")) > 0)
       .select(col(id), col("chunk_idx").cast("long").as("chunk_idx"), col("chunk"))
       .withColumn("keep", row_number().over(w) === 1)
-  }
-
-  /** Extension-free Column form of [[graft.functions.CdcChunks]] — the
-    * same boundary rule from built-in higher-order functions (which run
-    * interpreted: correct everywhere, slow at corpus scale). Kept as the
-    * dispatch fallback and the kernel's equality witness.
-    */
-  private[graft] def cdcChunksColumns(txt: Column, windowChars: Int, divisor: Int): Column = {
-    val mod = 1L << 48
-    val n = length(txt)
-    val bounds = when(n >= windowChars,
-      filter(sequence(lit(windowChars), n), i =>
-        pmod(aggregate(sequence(i - (windowChars - 1), i), lit(0L),
-          (h, j) => pmod(h * lit(31L) + ascii(txt.substr(j, lit(1))).cast("long"), lit(mod))),
-          lit(divisor.toLong)) === 0L))
-      .otherwise(array().cast("array<int>"))
-    val starts = concat(array(lit(0)), bounds)
-    val ends = concat(bounds, array(n))
-    zip_with(starts, ends, (s, e) => txt.substr(s + 1, e - s))
   }
 
   // ---- cross-document duplicated-span statistics --------------------------
@@ -531,7 +425,7 @@ object Dedup {
     * signal): gram sets are per-doc distinct before counting.
     *
     * Scale shape: one shingle scan (the single-pass `shingle_hashes`
-    * kernel when registered) + explode; the corpus frequency of each gram
+    * kernel) + explode; the corpus frequency of each gram
     * is a WINDOW count riding the exploded rows' one hash exchange on the
     * gram (the same device as [[capBuckets]] — an aggregate-and-join-back
     * would shingle the corpus twice, because column pruning specializes
@@ -544,7 +438,7 @@ object Dedup {
   def spanStats(docs: DataFrame, id: String, text: String, k: Int = 8): DataFrame = {
     require(k >= 1, s"gram size must be >= 1, got $k")
     val grams = docs.select(col(id).as("_sp_id"),
-      explode(shingleHashesNative(docs.sparkSession, text, k)).as("gram"))
+      explode(gramSet(text, k)).as("gram"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("gram")
     val perDoc = grams.withColumn("n_docs", count(lit(1)).over(w))
       .groupBy("_sp_id")
@@ -578,7 +472,7 @@ object Dedup {
     * flags those).
     *
     * Scale shape: one scan builds tokens + per-position gram hashes (the
-    * single-pass `gram_hashes` kernel when registered) and explodes to
+    * single-pass `gram_hashes` kernel) and explodes to
     * one row per token; the cross-document test and canonical-document
     * choice are window min/max over the gram value — ONE hash exchange on
     * the gram (positions past the last gram start carry a per-row unique
@@ -643,7 +537,7 @@ object Dedup {
                     k: Int = 8, minSpanTokens: Int = 0): DataFrame = {
     require(k >= 2, s"gram size must be >= 2, got $k")
     val evalGrams = evalSet
-      .select(explode(gramHashArr(corpus.sparkSession, text, k)).as("gram")).distinct()
+      .select(explode(gramHashArr(text, k)).as("gram")).distinct()
       .withColumn("_hit", lit(true))
     // left join on the gram: null grams (positions past the last gram
     // start) never equi-match, so they flag 0 with no discriminator
@@ -653,23 +547,21 @@ object Dedup {
     spanSurgery(flagged, corpus, id, k, math.max(minSpanTokens, k))
   }
 
+  /** The positional gram-hash array ([[graft.functions.GramHashes]]: one
+    * k-gram hash per gram start, no distinct, empty under k tokens) — ONE
+    * definition so the corpus and eval sides of [[decontamSpans]] can
+    * never disagree on which hash they computed.
+    */
+  private def gramHashArr(text: String, k: Int): Column =
+    column(GramHashes(expression(col(text)), k))
+
   /** (shared by [[spanRemove]] / [[decontamSpans]]) one row per corpus
     * token: (_sr_id, pos, tok, gram) with gram null at positions past
     * the last gram start — a single text scan.
     */
-  /** Kernel-or-fallback dispatch for the positional gram-hash array —
-    * ONE definition so the corpus and eval sides of [[decontamSpans]]
-    * can never disagree on which hash they computed.
-    */
-  private def gramHashArr(spark: org.apache.spark.sql.SparkSession,
-                          text: String, k: Int): Column =
-    if (spark.catalog.functionExists("gram_hashes"))
-      call_function("gram_hashes", col(text), lit(k))
-    else positionalGramHashes(col(text), k)
-
   private def tokenGramRows(docs: DataFrame, id: String, text: String, k: Int): DataFrame = {
     val tokArr = TextFunctions.tokens(col(text))
-    val gramArr = gramHashArr(docs.sparkSession, text, k)
+    val gramArr = gramHashArr(text, k)
     // pad the gram array to token length with nulls so ONE zip + explode
     // yields (pos, tok, gram-starting-here?) without carrying whole
     // arrays into every exploded row
@@ -731,19 +623,6 @@ object Dedup {
         coalesce(col("text_kept"), lit("")).as("text_kept"))
   }
 
-  /** Extension-free Column form of [[graft.functions.GramHashes]]: the
-    * per-position k-gram hash array (no distinct, no short-doc fallback,
-    * empty for docs under k tokens) — [[shingleHashes]] minus its set
-    * semantics. Dispatch fallback and the kernel's equality witness.
-    */
-  private[graft] def positionalGramHashes(txt: Column, k: Int): Column = {
-    val th = transform(TextFunctions.tokens(txt), t => xxhash64(t))
-    val n = size(th)
-    val zipped = arrays_zip(
-      (0 until k).map(j => slice(th, lit(j + 1), greatest(n - (k - 1), lit(0))).as(s"t$j")): _*)
-    transform(zipped, s => xxhash64((0 until k).map(j => s.getField(s"t$j")): _*))
-  }
-
   // ---- corpus-frequent line (boilerplate) removal --------------------------
 
   /** CCNet/RefinedWeb-style boilerplate removal: segment each document
@@ -791,7 +670,7 @@ object Dedup {
     // materialization the tokenize+posexplode scan plans twice (the
     // dsirWeightsTagged lesson). One lazy local checkpoint makes the
     // segment pass once-per-call (r19 optimization, guide §2.4;
-    // BoilerProbe same-JVM A/B at sf0.1: 1.14 → 0.89 s, equal output).
+    // measured same-JVM A/B at sf0.1: 1.14 → 0.89 s, equal output).
     val segs = base.select(col("_doc"), posexplode(segArr).as(Seq("line_idx", "line")))
       .localCheckpoint(false)
     // df ≥ max(ceil(maxDfFrac·N), 2): a line must repeat across at
@@ -897,11 +776,11 @@ object Dedup {
     * stage after LSH candidate generation. `ngram = 1` is token-set
     * Jaccard; `ngram = 3` matches the MinHash shingling granularity.
     *
-    * The sets are HASHED grams (the single-pass `shingle_hashes` kernel
-    * when registered): |∩| and |∪| over 64-bit gram hashes equal those
-    * over the gram strings — xxhash64 collisions would need ~2^32 distinct
-    * grams per corpus to matter — while the set arithmetic runs on longs
-    * instead of strings. The extension-free fallback keeps string sets.
+    * The sets are HASHED grams (the single-pass `shingle_hashes` kernel):
+    * |∩| and |∪| over 64-bit gram hashes equal those over the gram
+    * strings — xxhash64 collisions would need ~2^32 distinct grams per
+    * corpus to matter — while the set arithmetic runs on longs instead
+    * of strings.
     *
     * `membersOnly = true` shingles only PAIR MEMBERS: an id-only
     * left-semi prefilter runs before the gram projection, so the
@@ -926,20 +805,24 @@ object Dedup {
           .unionByName(pairs.select(col("b").as("vid"))).distinct(),
         Seq("vid"), "left_semi")
     verifyJaccardWithSets(pairs,
-      filtered.select(col("vid"), gramSet(docs.sparkSession, text, ngram).as("toks")))
+      filtered.select(col("vid"), gramSet(text, ngram).as("toks")))
   }
 
-  /** The distinct gram-set column [[verifyJaccard]] compares on — hashed
-    * grams through the single-pass kernel when registered (set sizes
-    * over 64-bit gram hashes equal those over gram strings), string sets
-    * otherwise.
+  /** The distinct gram-set column [[verifyJaccard]] compares on:
+    * `array<bigint>` of hashed word `ngram`-grams (`ngram <= 1` = token
+    * hashes), per-doc distinct; docs shorter than `ngram` tokens fall
+    * back to their token hashes so they still participate.
+    *
+    * Hot-path shape: the native [[graft.functions.ShingleHashes]] kernel
+    * tokenizes in one byte pass, hashes each token to a long ONCE, and
+    * combines `ngram` consecutive token-hash longs with one more xxhash64
+    * — never materializing gram strings. (A concat_ws("a b c") →
+    * xxhash64(string) form spent ~60% of the whole minhash pipeline
+    * building and re-hashing gram strings; combining longs is
+    * measurement-equivalent for LSH and ~3x cheaper.)
     */
-  def gramSet(spark: org.apache.spark.sql.SparkSession, text: String,
-              ngram: Int): Column =
-    if (spark.catalog.functionExists("shingle_hashes"))
-      call_function("shingle_hashes", col(text), lit(math.max(ngram, 1)))
-    else if (ngram <= 1) array_distinct(TextFunctions.tokens(col(text)))
-    else array_distinct(TextFunctions.wordNgrams(col(text), ngram))
+  def gramSet(text: String, ngram: Int): Column =
+    column(ShingleHashes(expression(col(text)), math.max(ngram, 1)))
 
   /** (vid, toks) gram-set frame for a corpus — the PERSIST-ONCE form the
     * per-micro-batch ingest gate reads back each batch (r17, VERDICT r16
@@ -949,52 +832,34 @@ object Dedup {
     * the semantic gate's persisted cluster assignment already follows).
     */
   def gramSets(docs: DataFrame, id: String, text: String, ngram: Int = 1): DataFrame =
-    docs.select(col(id).as("vid"), gramSet(docs.sparkSession, text, ngram).as("toks"))
+    docs.select(col(id).as("vid"), gramSet(text, ngram).as("toks"))
 
-  /** |A ∩ B| dispatch for the verify stages (r18): the native sort-merge
-    * `inter_size` kernel when registered and the gram sets are hashed
-    * longs; `size(array_intersect(...))` otherwise (extension-free
-    * sessions keep string sets). Value-identical either way (asserted in
-    * FunctionsSpec) — including on a NULL side, where the coalesce
-    * reproduces `size`'s legacy -1-on-null (the engine pins
-    * `sizeOfNull`'s default; the verify ratios below rely on -1/-1
-    * canceling exactly as the old intersect/union form did).
+  /** Sorted sets and the matching |A ∩ B| builder for the verify stages.
+    * Each document's gram set is compared against MANY candidate
+    * partners (~40 per doc at bench SF), so the sets are sorted ONCE per
+    * doc in this projection (sort_array) and the
+    * [[graft.functions.InterSizeSorted]] kernel merge-counts straight
+    * over the arrays with zero per-pair copying or sorting. The kernel
+    * undercounts on unsorted input, so it is built only here, behind the
+    * sort. Output values are untouched: downstream reads only SIZES of
+    * the set arrays, which sorting preserves. A NULL side yields -1
+    * through the coalesce (`size`'s legacy -1-on-null, which the verify
+    * ratios below rely on).
+    *
+    * `toks` must be `array<bigint>` ([[gramSet]] / [[gramSets]] output);
+    * any other type is rejected here rather than failing deep in
+    * analysis.
     */
-  private def interSize(spark: org.apache.spark.sql.SparkSession,
-                        toksType: org.apache.spark.sql.types.DataType,
-                        a: Column, b: Column): Column = {
-    if (isLongArray(toksType) && spark.catalog.functionExists("inter_size"))
-      coalesce(call_function("inter_size", a, b), lit(-1))
-    else size(array_intersect(a, b))
-  }
-
-  private def isLongArray(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.LongType, _) => true
-    case _ => false
-  }
-
-  /** r19 (guide §1.2 — per-pair work): the verify stages compare each
-    * document's gram set against MANY candidate partners (~40 per doc at
-    * bench SF), and [[graft.functions.InterSize]] pays a copy + sort of
-    * both arrays per PAIR. Sorting each set ONCE in the sets projection
-    * (sort_array — per doc, not per pair) lets the `inter_size_sorted`
-    * kernel merge-count straight over the arrays with zero per-pair
-    * allocation. Output values are untouched: downstream reads only
-    * SIZES of the set arrays, which sorting preserves, and the kernel is
-    * value-identical to `size(array_intersect)` on sorted inputs
-    * (FunctionsSpec). Returns (sets', interFn) — the possibly-sorted
-    * frame and the matching |A∩B| column builder (NULL-side pairs keep
-    * the legacy -1 through the coalesce, exactly [[interSize]]).
-    */
-  private def sortedSetsAndInter(spark: org.apache.spark.sql.SparkSession,
-                                 sets: DataFrame)
-    : (DataFrame, (Column, Column) => Column) = {
+  private def sortedSetsAndInter(sets: DataFrame): (DataFrame, (Column, Column) => Column) = {
     val toksType = sets.schema("toks").dataType
-    if (isLongArray(toksType) && spark.catalog.functionExists("inter_size_sorted"))
-      (sets.select(col("vid"), sort_array(col("toks")).as("toks")),
-        (a, b) => coalesce(call_function("inter_size_sorted", a, b), lit(-1)))
-    else (sets, (a, b) => interSize(spark, toksType, a, b))
+    val isGramHashes = toksType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    require(isGramHashes, "verify: toks must be array<bigint> gram hashes " +
+      s"(Dedup.gramSet / gramSets), got ${toksType.catalogString}")
+    (sets.select(col("vid"), sort_array(col("toks")).as("toks")),
+      (a, b) => coalesce(column(InterSizeSorted(expression(a), expression(b))), lit(-1)))
   }
 
   /** The verify stage of [[verifyJaccard]] over an ALREADY-BUILT (vid,
@@ -1004,24 +869,25 @@ object Dedup {
     * pass ONCE; when `sets` is a persisted parquet frame, each join side
     * is a cheap columnar read — no tokenize work at all.
     *
-    * CONTRACT (ADVICE r18): `toks` must be per-row DISTINCT (duplicate-
-    * free) arrays — every in-repo producer goes through
-    * [[gramSet]]/[[gramSets]], which dedup. The Jaccard denominator
+    * CONTRACT: `toks` must be per-row DISTINCT (duplicate-free)
+    * `array<bigint>` gram hashes — every in-repo producer goes through
+    * [[gramSet]]/[[gramSets]], which dedup; another element type is
+    * rejected up front. The Jaccard denominator
     * derives |A∪B| as |A| + |B| − |A∩B|, which is exact only on sets; a
     * caller passing duplicate-bearing arrays (e.g. raw `token_hashes`
     * output) silently inflates the denominator and understates Jaccard.
     *
     * r18 (guide §1.2 — per-pair work): |A∪B| is DERIVED as
     * |A| + |B| − |A∩B| (exact: the gram arrays are per-doc distinct
-    * sets), so each candidate pair pays ONE array_intersect instead of
-    * an intersect plus a union — the set traversal is the whole verify
+    * sets), so each candidate pair pays ONE intersection count instead
+    * of an intersect plus a union — the set traversal is the whole verify
     * cost at 200k blocked candidates per 5k docs (measured: the
     * candidate join alone is 0.27 s of dd_ngram_jaccard's 2.2 s).
     * The intersect size lands in its own projection so CollapseProject
     * cannot inline the non-cheap expression twice.
     */
   def verifyJaccardWithSets(pairs: DataFrame, sets: DataFrame): DataFrame = {
-    val (s2, interFn) = sortedSetsAndInter(pairs.sparkSession, sets)
+    val (s2, interFn) = sortedSetsAndInter(sets)
     pairs
       .join(s2.as("sa"), col("a") === col("sa.vid"))
       .join(s2.as("sb"), col("b") === col("sb.vid"))
@@ -1048,18 +914,11 @@ object Dedup {
     */
   def verifyContainment(pairs: DataFrame, docs: DataFrame, id: String,
                         text: String, ngram: Int = 1): DataFrame = {
-    val grams =
-      if (docs.sparkSession.catalog.functionExists("shingle_hashes"))
-        call_function("shingle_hashes", col(text), lit(math.max(ngram, 1)))
-      else if (ngram <= 1) array_distinct(TextFunctions.tokens(col(text)))
-      else array_distinct(TextFunctions.wordNgrams(col(text), ngram))
-    val sets = docs.select(col(id).as("vid"), grams.as("toks"))
-    // r18: ONE array_intersect per pair, in its own projection
+    // ONE intersection count per pair, in its own projection
     // (CollapseProject cannot inline it into the three consumers);
     // |A∪B| derives as |A| + |B| − |A∩B| — the verifyJaccardWithSets
-    // device, exact on the per-doc-distinct gram sets. r19: sets sorted
-    // once per doc so the merge kernel skips the per-pair copy + sort.
-    val (s2, interFn) = sortedSetsAndInter(pairs.sparkSession, sets)
+    // device, exact on the per-doc-distinct gram sets
+    val (s2, interFn) = sortedSetsAndInter(gramSets(docs, id, text, ngram))
     pairs
       .join(s2.as("sa"), col("a") === col("sa.vid"))
       .join(s2.as("sb"), col("b") === col("sb.vid"))
@@ -1433,7 +1292,7 @@ object Dedup {
     // r19 audit (guide §1.1 — measured and REJECTED): a
     // distinct-pairs-before-verify form (slim (vh, doc) self-join,
     // strings joined back once per distinct pair, DP once per pair)
-    // LOSES same-JVM at sf0.1 — FuzzyProbe best-of-4 1.28 s (this form)
+    // LOSES same-JVM at sf0.1 — best-of-4 1.28 s (this form)
     // vs 2.00 s (that form). At maxDist = 1 the threshold-bounded DP
     // over ~18-char names is a few dozen ops, nearly every
     // shared-variant pair passes it (262.5k verified pairs), and the
@@ -1460,64 +1319,17 @@ object Dedup {
 
   // ---- SimHash ------------------------------------------------------------
 
-  /** 64-bit SimHash: for each bit position, sum ±1 contributions of every
-    * token hash; bit = 1 when the sum is positive. Computed per-row with
-    * higher-order functions (no UDF). Bit positions unroll at plan-build
-    * time (Scala ints) since Spark's shift wrappers take literal shifts;
-    * disjoint bit patterns sum to their OR, sign bit included.
+  /** 64-bit SimHash signatures, one (doc, sh) row per document with at
+    * least one token: for each bit position, sum ±1 contributions of every
+    * token hash; bit = 1 when the sum is positive. SimHash is a pure
+    * per-document fold, so the per-row [[graft.functions.SimHashSig]]
+    * kernel computes it in the scan with no explode + groupBy exchange
+    * (the [[minhashSigs]] device, including its 0/1-element array that
+    * drops token-free docs through the explode).
     */
-  def simhash(text: Column): Column = {
-    val hashes = transform(TextFunctions.tokens(text), t => xxhash64(t))
-    val bits = (0 until 64).map { i =>
-      val cnt = aggregate(hashes, lit(0), (acc, h) =>
-        acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(cnt > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** SimHash signatures via explode + hash aggregation (same scan-scale
-    * rationale as [[minhashSigs]]): per-token hashes explode in the scan
-    * partition, 64 codegen'd conditional sums fold map-side, the bit
-    * assembly runs on one row per doc. Docs with no tokens drop out
-    * (nothing to fingerprint).
-    */
-  def simhashSigs(docs: DataFrame, id: String, text: String): DataFrame = {
-    // r19 (guide §2.4): SimHash is a pure per-document fold — the
-    // per-row kernel removes the explode + groupBy exchange (the
-    // minhashSigs device); bit-identical to simhash_agg (FunctionsSpec)
-    if (docs.sparkSession.catalog.functionExists("simhash_sig"))
-      return docs.select(col(id).as("doc"),
-        explode(call_function("simhash_sig", col(text))).as("sh"))
-    // token hashes via the single-pass native kernel when available
-    // (bit-exact with the HOF form — FunctionsSpec)
-    val tokenHashes =
-      if (docs.sparkSession.catalog.functionExists("token_hashes"))
-        call_function("token_hashes", col(text))
-      else transform(TextFunctions.tokens(col(text)), t => xxhash64(t))
-    val exploded = docs.select(col(id).as("doc"), explode(tokenHashes).as("h"))
-    if (docs.sparkSession.catalog.functionExists("simhash_agg"))
-      // one imperative aggregate (int[64] buffer, map-side partials)
-      // instead of 64 conditional sums — bit-identical (DedupAnnSpec)
-      exploded.groupBy("doc").agg(expr("simhash_agg(h)").as("sh"))
-    else simhashFromCounts(exploded)
-  }
-
-  /** Extension-free fallback: 64 conditional-sum aggregates + bit
-    * assembly (the original column form; checked equal to simhash_agg —
-    * including on null hashes, which contribute nothing on either path).
-    */
-  def simhashFromCounts(exploded: DataFrame): DataFrame = {
-    def bitCount(i: Int) =
-      sum(when(col("h").isNull, 0)
-        .when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"c$i")
-    val counts = exploded
-      .groupBy("doc")
-      .agg(bitCount(0), (1 until 64).map(bitCount): _*)
-    val bits = (0 until 64).map(i => when(col(s"c$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-    counts.select(col("doc"), bits.reduce(_ + _).as("sh"))
-  }
+  def simhashSigs(docs: DataFrame, id: String, text: String): DataFrame =
+    docs.select(col(id).as("doc"),
+      explode(column(SimHashSig(expression(col(text))))).as("sh"))
 
   /** SimHash near-dup pairs with Hamming distance ≤ `maxHamming`, found by
     * blocking on `maxHamming + 1` bit-chunks (pigeonhole: distance ≤ h ⇒

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 /** Frozen byte-pair-encoding model: `merges` in training order. */
 final case class BpeModel(merges: Seq[(String, String)])
 
-/** Learned BPE subword tokenization — the real version of the
-  * [[TextFunctions.subwordCount]] estimate: train a merge list on the
-  * corpus, then count true BPE subwords per document (the number that
-  * drives context budgeting, packing, and mixture token accounting).
+/** Learned BPE subword tokenization — the real version of the regex
+  * subword-count estimate (`text_stats`' `n_subwords`): train a merge
+  * list on the corpus, then count true BPE subwords per document (the
+  * number that drives context budgeting, packing, and mixture token
+  * accounting).
   *
   * TRAINING is the freeze-the-model seam (the [[graft.ann.Ann.trainIvf]]
   * recipe): word frequencies aggregate map-side, only the top
@@ -42,8 +43,8 @@ final case class BpeModel(merges: Seq[(String, String)])
   * divergent one). Subword count = number of `<` markers left. The
   * chain's apply cost is O(nMerges × doc length) — fine as a witness at
   * tens-to-hundreds of merges, which is why the kernel is the default
-  * (BpeProbe measures the flat-vs-linear curve; FunctionsSpec pins
-  * kernel == chain).
+  * (measured flat in merges, ~20x over the chain at 1024 merges;
+  * FunctionsSpec pins kernel == chain).
   */
 object Bpe {
 
@@ -262,12 +263,12 @@ object Bpe {
       BpeSubwordCount(org.apache.spark.sql.graft.ColumnBridge.expression(text),
         modelBroadcast(model)))
 
-  /** The digit-enrichment device `txt_bpe_big`, BpeProbe, ScaleCheck and
+  /** The digit-enrichment device `txt_bpe_big`, ScaleCheck and
     * FunctionsSpec share: append the doc id and a portable pseudo-hash
     * digit token so the synthetic corpus's 31-word vocabulary gains the
     * long-tail pair structure a real corpus has (measured capacity
     * ≥ 1300 merges at the smallest SF). ONE definition plus its SQL twin
-    * — the certified query, the probes and the scale case stay in
+    * — the certified query, the tests and the scale case stay in
     * lockstep by construction.
     */
   def enrichWithIdTokens(df: DataFrame, id: String = "doc_id",
@@ -308,8 +309,8 @@ object Bpe {
     * only (no document text): a 32k-merge DuckDB chain oracle scans the
     * apply text nMerges times, so the certified apply text stays a few
     * hundred bytes while the merge list is full production size — the
-    * KERNEL is flat in merges either way (BpeProbe measures it on the
-    * full-text corpus).
+    * KERNEL is flat in merges either way (measured on the full-text
+    * corpus).
     */
   def digitTokens(df: DataFrame, k: Int, id: String = "doc_id",
                   out: String = "dtext"): DataFrame = {

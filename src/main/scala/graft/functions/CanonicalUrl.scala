@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass URL canonicalization — the native form of
-  * [[TextFunctions.canonicalUrl]]'s ten-regex chain (each regexp_replace
+/** Single-pass URL canonicalization — the native form of a ten-regex
+  * chain (FunctionsSpec's witness; each regexp_replace
   * re-scans the string through the regex engine; this kernel makes a
   * handful of character passes with no backtracking machinery).
   * Byte-for-byte the same policy, in the same order:

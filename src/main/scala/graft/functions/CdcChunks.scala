@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * mod 2^48`, seeded 0 — is ≡ 0 (mod `divisor`). Emits the chunk strings
   * in order, INCLUDING a possibly-empty final chunk when a boundary lands
   * on the last position (so downstream posexplode indexes match the
-  * Column fallback exactly); documents shorter than the window are one
+  * Column form exactly); documents shorter than the window are one
   * chunk.
   *
   * This is [[graft.dedup.Dedup.chunkDedup]]'s scan kernel. The
@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * functions) evaluates INTERPRETED — Spark's lambda functions don't
   * codegen — at ~4 ms/doc on the corpus; this expression does the same
   * O(n·k) work as one compiled loop inside whole-stage codegen (k = 8 →
-  * a few ns per position). Bit-exact equality with the fallback is
+  * a few ns per position). Bit-exact equality with the Column form is
   * asserted in FunctionsSpec; the DuckDB oracle replays the same fold in
   * plain BIGINT arithmetic (2^48 keeps every intermediate in signed-64
   * range).
@@ -75,7 +75,7 @@ object CdcChunks {
       i += 1
     }
     // final span — possibly empty when a boundary landed at n (kept so
-    // posexplode indexes match the fallback); the whole doc when n < k
+    // posexplode indexes match the Column form); the whole doc when n < k
     chunks.add(UTF8String.fromString(new String(cps, prev, n - prev)))
     new GenericArrayData(chunks.toArray)
   }

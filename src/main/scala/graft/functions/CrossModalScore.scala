@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * decorrelated `(x·2654435761 + 224737) mod 2001 − 1000`
   * ([[graft.multimodal.Multimodal.crossModalImageWeight]]); the score
   * is the Σ_d t[d]·i[d] dot product. Bit-identical with the Column
-  * fallback in [[graft.multimodal.Multimodal.textImageScore]]
-  * (FunctionsSpec pins equality on edges and the corpus).
+  * form FunctionsSpec keeps as its witness (equality pinned on edges and
+  * the corpus).
   */
 case class CrossModalScore(text: Expression, hi: Expression, lo: Expression,
                            buckets: Int, dim: Int) extends TernaryExpression {
@@ -80,7 +80,7 @@ object CrossModalScore {
 
   /** Kernel shared by interpreted eval and generated code. Tokenization
     * rides [[ShingleHashes.foreachTokenHash]] — the library's single
-    * tokenizer+seed definition — so this kernel, the Column fallback
+    * tokenizer+seed definition — so this kernel, the Column witness
     * and the DuckDB oracle can never silently fork (review r14).
     */
   def compute(text: UTF8String, hi: Long, lo: Long, buckets: Int, dim: Int): InternalRow = {

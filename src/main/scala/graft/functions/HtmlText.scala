@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass-per-stage WET extraction — the native form of
-  * [[TextFunctions.htmlText]]'s ten-regexp chain (each regexp_replace
+/** Single-pass-per-stage WET extraction — the native form of a
+  * ten-regexp chain (FunctionsSpec's witness; each regexp_replace
   * re-scans the whole page through the regex engine; this kernel makes
   * four plain character passes). Byte-for-byte the same policy in the
   * same order:

@@ -50,8 +50,7 @@ case class InterSize(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 /** [[InterSize]] over arrays the CALLER has already sorted ascending
-  * (nulls first — exactly `sort_array`'s order), registered as SQL
-  * `inter_size_sorted` (r19 optimization, guide §1.2): the verify stages
+  * (nulls first — exactly `sort_array`'s order): the verify stages
   * compare each document's gram set against ~40 candidate partners, so
   * the per-pair copy + sort inside [[InterSize.compute]] re-sorts every
   * array once per PAIR. Sorting once per document in the sets projection
@@ -59,11 +58,12 @@ case class InterSize(left: Expression, right: Expression) extends BinaryExpressi
   * distinct-intersection count with zero per-pair allocation and zero
   * per-pair sorting. Value-identical to
   * `size(array_intersect(a, b))` on the pre-sort arrays (FunctionsSpec
-  * r19 witness); inputs NOT actually sorted are a caller bug — the
-  * count would silently undercount, which is why the kernel is only
-  * dispatched behind `sort_array` projections in Dedup's verify stages.
+  * witness). Unsorted inputs would silently undercount, so the
+  * expression has no SQL name and is package-private: its one builder
+  * is `Dedup.sortedSetsAndInter`, directly behind the `sort_array`
+  * projection it relies on.
   */
-case class InterSizeSorted(left: Expression, right: Expression) extends BinaryExpression {
+private[graft] case class InterSizeSorted(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = IntegerType
 
   private def isLongArray(t: DataType): Boolean = t match {

@@ -8,13 +8,14 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructFiel
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass language-ID: per-language marker-token hit counts plus the
-  * argmax prediction in one scan over the document bytes. Semantics are
-  * exactly [[TextFunctions.argmaxLang]] — every token occurrence matching
+  * argmax prediction in one scan over the document bytes, over
+  * [[TextFunctions.langMarkers]]: every token occurrence matching
   * a language's marker lexicon counts, the winner is the FIRST language
   * in alphabetical order (de, en, es, fr, zh) achieving the strict
-  * maximum, and "und" when nothing matches — but instead of five
-  * filter-HOF chains that each re-tokenize the document, each word run
-  * packs into one long and probes five tiny static tables.
+  * maximum, and "und" when nothing matches. Instead of five filter-HOF
+  * chains that each re-tokenize the document (FunctionsSpec's witness),
+  * each word run packs into one long and probes five tiny static
+  * tables.
   */
 case class LangScores(child: Expression) extends UnaryExpression {
 

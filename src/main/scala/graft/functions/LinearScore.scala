@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `((j * 2654435761 + 104729) mod 2001) - 1000` milli-units — a
   * deterministic stand-in for offline-trained weights (training is an
   * offline concern; the engine's job is the at-scale scoring scan), and
-  * a pure function both of this kernel, the Column fallback, and the
+  * a pure function both of this kernel, the Column witness, and the
   * DuckDB oracle replay, so the score is bit-identical cross-engine with
   * no model artifact to ship. Tokenization and per-token XXH64 are
   * byte-exact with [[ShingleHashes.tokenHashArray]] (lowercase → `\W+`

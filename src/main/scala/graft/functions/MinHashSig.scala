@@ -7,19 +7,18 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash signature as a PER-ROW expression (r19 optimization, guide
-  * §2.4 "remove shuffles outright"): the signature is a pure function of
-  * one document's shingle set, so the explode + `minhash_agg` groupBy —
-  * a full hash exchange of every shingle-bearing row, paid once per
-  * consumer — is unnecessary. This kernel streams the gram hashes (same
+/** MinHash signature as a PER-ROW expression: the signature is a pure
+  * function of one document's shingle set, so an explode + groupBy
+  * aggregation — a full hash exchange of every shingle-bearing row, paid
+  * once per consumer — is unnecessary. This kernel streams the gram hashes (same
   * single-pass tokenizer + running XXH64 as [[ShingleHashes]]) and folds
   * the `numHashes` running minima in place: one pass over the document
   * bytes, zero exchanges, zero aggregation buffers, and `doGenCode`
   * keeps it inside whole-stage codegen.
   *
-  * Signature values are BIT-IDENTICAL to
-  * `explode(shingle_hashes(text,k))` + `minhash_agg(h, n)` (asserted in
-  * FunctionsSpec): the permutation coefficients are the shared
+  * Signature values are BIT-IDENTICAL to the k-min aggregation over
+  * `explode(shingle_hashes(text,k))` (FunctionsSpec's witness): the
+  * permutation coefficients are the shared
   * [[graft.dedup.Dedup.minhashCoeffs]], a minimum is indifferent to the
   * duplicate gram occurrences `shingle_hashes` dedups, and the <k-token
   * fallback (token hashes) matches. The aggregate form emits NO row for
@@ -88,13 +87,13 @@ case class MinHashSigSize(child: Expression, k: Int, numHashes: Int)
   override def prettyName: String = "minhash_sig_size"
 }
 
-/** 64-bit SimHash as a PER-ROW expression — the [[SimHashAgg]] fold over
-  * one document's token hashes (all occurrences, document order
-  * irrelevant: the per-bit counts are a sum), same 0/1-row array
-  * contract as [[MinHashSig]] so no-token docs vanish through the
-  * caller's explode exactly as they vanished through the aggregate
-  * form's. Bit-identical to explode(token_hashes) + `simhash_agg`
-  * (FunctionsSpec). SQL: `simhash_sig(text)` → array<bigint>.
+/** 64-bit SimHash as a PER-ROW expression — for each bit, the sum of ±1
+  * votes over one document's token hashes (all occurrences, document
+  * order irrelevant: the per-bit counts are a sum), bit set when the sum
+  * is positive. Same 0/1-row array contract as [[MinHashSig]], so
+  * no-token docs vanish through the caller's explode. Bit-identical to
+  * the 64 conditional-sum aggregation over explode(token_hashes)
+  * (FunctionsSpec's witness). SQL: `simhash_sig(text)` → array<bigint>.
   */
 case class SimHashSig(child: Expression) extends UnaryExpression {
 
@@ -138,24 +137,22 @@ object MinHashSig {
     var i = 0
     val n = sig.length
     while (i < n) {
-      val h = cs(2 * i) * x + cs(2 * i + 1) // wrapping, as in minhash_agg
+      val h = cs(2 * i) * x + cs(2 * i + 1) // wrapping 64-bit multiply-add
       if (h < sig(i)) sig(i) = h
       i += 1
     }
   }
 
-  /** The shared per-doc pass: token hashes, then either streamed k-gram
-    * hashes (running XXH64, duplicates folded — min is duplicate-blind)
-    * or the <k-token token-hash fallback. Returns null when the doc has
-    * no tokens (the aggregate form emitted no row). When `grams` is
-    * non-null every gram/token hash is also appended to it (for the
-    * distinct count in [[computeWithSize]]).
+  /** The shared per-doc pass over a non-empty token-hash array: either
+    * streamed k-gram hashes (running XXH64, duplicates folded — min is
+    * duplicate-blind) or the <k-token token-hash fallback. When `grams`
+    * is non-null (one slot per folded hash) every gram/token hash is
+    * also stored in it, in order (for the distinct count in
+    * [[computeWithSize]]).
     */
-  private def sigOf(text: UTF8String, k: Int, numHashes: Int,
-                    grams: java.util.ArrayList[java.lang.Long]): Array[Long] = {
-    val toks = ShingleHashes.tokenHashArray(text)
+  private def sigOf(toks: Array[Long], k: Int, numHashes: Int,
+                    grams: Array[Long]): Array[Long] = {
     val nTokens = toks.length
-    if (nTokens == 0) return null
     val cs = coeffs(numHashes)
     val sig = Array.fill(numHashes)(Long.MaxValue)
     if (nTokens >= k) {
@@ -168,14 +165,14 @@ object MinHashSig {
           j += 1
         }
         fold(sig, cs, h)
-        if (grams != null) grams.add(h)
+        if (grams != null) grams(g) = h
         g += 1
       }
     } else {
       var t = 0
       while (t < nTokens) {
         fold(sig, cs, toks(t))
-        if (grams != null) grams.add(toks(t))
+        if (grams != null) grams(t) = toks(t)
         t += 1
       }
     }
@@ -184,24 +181,23 @@ object MinHashSig {
 
   /** Kernel shared by interpreted eval and generated code. */
   def compute(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    val sig = sigOf(text, k, numHashes, null)
-    if (sig == null) new GenericArrayData(Array.empty[Any])
-    else new GenericArrayData(Array[Any](new GenericArrayData(sig)))
+    val toks = ShingleHashes.tokenHashArray(text)
+    if (toks.isEmpty) new GenericArrayData(Array.empty[Any])
+    else new GenericArrayData(Array[Any](new GenericArrayData(sigOf(toks, k, numHashes, null))))
   }
 
-  /** [[compute]] plus the exact distinct gram count (sort + unique scan —
-    * no boxed set; matches `count(*)` over exploded `shingle_hashes`,
-    * whose output is per-doc distinct). */
+  /** [[compute]] plus the exact distinct gram count (sort + unique scan
+    * over a primitive array sized from the token count — no boxing, no
+    * set; matches `count(*)` over exploded `shingle_hashes`, whose
+    * output is per-doc distinct). */
   def computeWithSize(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    val grams = new java.util.ArrayList[java.lang.Long]()
-    val sig = sigOf(text, k, numHashes, grams)
-    if (sig == null) return new GenericArrayData(Array.empty[Any])
-    val gs = new Array[Long](grams.size())
-    var i = 0
-    while (i < gs.length) { gs(i) = grams.get(i); i += 1 }
+    val toks = ShingleHashes.tokenHashArray(text)
+    if (toks.isEmpty) return new GenericArrayData(Array.empty[Any])
+    val gs = new Array[Long](if (toks.length >= k) toks.length - k + 1 else toks.length)
+    val sig = sigOf(toks, k, numHashes, gs)
     java.util.Arrays.sort(gs)
     var nset = 0L
-    i = 0
+    var i = 0
     while (i < gs.length) {
       if (i == 0 || gs(i) != gs(i - 1)) nset += 1L
       i += 1
@@ -211,8 +207,7 @@ object MinHashSig {
     new GenericArrayData(Array[Any](row))
   }
 
-  /** Per-row SimHash fold — exactly [[SimHashAgg]]'s update + eval over
-    * this doc's token hashes. */
+  /** Per-row SimHash fold over this doc's token hashes. */
   def computeSimHash(text: UTF8String): ArrayData = {
     val toks = ShingleHashes.tokenHashArray(text)
     if (toks.isEmpty) return new GenericArrayData(Array.empty[Long])

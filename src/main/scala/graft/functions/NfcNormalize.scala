@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * to a scan over clean corpora and pays only on rows that actually
   * carry decomposed sequences.
   *
-  * No extension-free Column fallback exists (Spark has no normalization
+  * No Column form exists (Spark has no normalization
   * primitive to compose from); the equality witness in FunctionsSpec
   * calls the JVM normalizer directly on the corpus instead.
   */

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * top_tok_frac, n_tokens) per document — the Gopher-rules repetition
   * signals computed in ONE scan with zero shuffles.
   *
-  * The Column form ([[TextFunctions.repetitionSignalsColumnar]]) needs an
+  * A Column form (FunctionsSpec's equality witness) needs an
   * explode → two-level aggregation → doc-key join to get the top-token
   * share without an O(tokens²) HOF; per row that is three array
   * materializations plus two corpus shuffles. This kernel tokenizes once

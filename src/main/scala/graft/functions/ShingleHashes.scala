@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hashes instead, so they still participate in dedup.
   *
   * This is the MinHash pipeline's scan kernel: the equivalent Column form
-  * ([[graft.dedup.Dedup.shingleHashes]]) chains split + filter + two
+  * (FunctionsSpec's witness) chains split + filter + two
   * transforms + arrays_zip + k slices; this expression does one pass over
   * the document bytes with zero intermediate arrays of strings, and
   * `doGenCode` keeps it inside whole-stage codegen. Bit-exact equality

@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** Signed-random-projection bucket id for an `array<float>` vector —
-  * native form of [[VectorFunctions.srpBucket]], bit-exact with it (the
-  * ±1 hyperplane components derive from the same xxhash64(plane, dim)
-  * parity), but computed in one primitive loop per row with the sign
+  * bit-exact with the higher-order-function form FunctionsSpec keeps as
+  * its witness (the ±1 hyperplane components derive from the same
+  * xxhash64(plane, dim) parity), but computed in one primitive loop per row with the sign
   * matrix cached per (nBits, dim) instead of re-hashed per element.
   * This is the corpus-scan side of LSH bucketing — the expression runs
   * once per row of a 100 TB corpus, which is why it earns `doGenCode`.

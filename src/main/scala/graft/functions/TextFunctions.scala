@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
 /** Column-expression text analysis for large-scale training-data pipelines.
   * Everything here is pure `functions._` composition (codegen'd, pushdown-
@@ -18,19 +19,10 @@ object TextFunctions {
   def wsTokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => length(t) > 0))
 
-  /** BPE-ish subword count estimate: word runs + individual punctuation
-    * characters (a common pre-tokenizer shape: \w+ | one non-space-non-word
-    * char). RE2-compatible (no lookarounds) so the same logic runs in
-    * other engines for oracle checks.
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "\\W+"), t => length(t) > 0)) +
-      length(regexp_replace(text, "[\\w\\s]", ""))
-
   /** Word k-grams as strings ("a b c"); documents shorter than k tokens
     * fall back to their tokens. Built from a zip of k shifted slices so
     * the tokenization binds once (HOF lambdas get no common-subexpression
-    * elimination — see graft.dedup.Dedup.shingleHashes).
+    * elimination).
     */
   def wordNgrams(text: Column, k: Int): Column = ngramsFromTokens(tokens(text), k)
 
@@ -68,12 +60,6 @@ object TextFunctions {
     round(length(regexp_replace(text, "[\\w\\s]+", "")).cast("double") /
       greatest(length(text).cast("double"), lit(1.0)), 4)
 
-  def stopwordRatio(text: Column): Column = {
-    val toks = tokens(text)
-    val stops = filter(toks, t => t.isin(stopwords.map(lit(_)): _*))
-    round(size(stops).cast("double") / greatest(size(toks).cast("double"), lit(1.0)), 4)
-  }
-
   def meanTokenLen(text: Column): Column = {
     val toks = tokens(text)
     round(aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
@@ -89,37 +75,26 @@ object TextFunctions {
       (punctRatio(text) < lit(0.3)) &&
       meanTokenLen(text).between(2.0, 12.0)
 
-  /** The full quality-feature frame: native single-pass `text_stats`
-    * kernel when the session has graft's extensions (one byte scan per
-    * document), else the Column-expression chain — identical output,
-    * asserted equal in FunctionsSpec.
+  /** The full quality-feature frame from the native single-pass
+    * [[TextStats]] kernel — one byte scan per document instead of six
+    * tokenizing expressions; `quality_ok` is exactly [[qualityOk]].
     */
   def qualityFeatures(docs: org.apache.spark.sql.DataFrame, id: String,
                       text: String): org.apache.spark.sql.DataFrame =
-    if (docs.sparkSession.catalog.functionExists("text_stats"))
-      docs.select(col(id), call_function("text_stats", col(text)).as("_s"))
-        .select(col(id),
-          col("_s.n_tokens").as("n_tokens"),
-          col("_s.n_subwords").as("n_subwords"),
-          col("_s.punct_ratio").as("punct_ratio"),
-          col("_s.stopword_ratio").as("stopword_ratio"),
-          col("_s.mean_token_len").as("mean_token_len"),
-          col("_s.quality_ok").as("quality_ok"))
-    else docs.select(col(id),
-      wsTokenCount(col(text)).as("n_tokens"),
-      subwordCount(col(text)).as("n_subwords"),
-      punctRatio(col(text)).as("punct_ratio"),
-      stopwordRatio(col(text)).as("stopword_ratio"),
-      meanTokenLen(col(text)).as("mean_token_len"),
-      qualityOk(col(text)).as("quality_ok"))
+    docs.select(col(id), column(TextStats(expression(col(text)))).as("_s"))
+      .select(col(id),
+        col("_s.n_tokens").as("n_tokens"),
+        col("_s.n_subwords").as("n_subwords"),
+        col("_s.punct_ratio").as("punct_ratio"),
+        col("_s.stopword_ratio").as("stopword_ratio"),
+        col("_s.mean_token_len").as("mean_token_len"),
+        col("_s.quality_ok").as("quality_ok"))
 
-  /** [[qualityOk]] through the native kernel when available — one byte
+  /** [[qualityOk]] through the native [[TextStats]] kernel — one byte
     * scan instead of four separate tokenizing expressions.
     */
-  def qualityOkFast(spark: org.apache.spark.sql.SparkSession, text: Column): Column =
-    if (spark.catalog.functionExists("text_stats"))
-      call_function("text_stats", text).getField("quality_ok")
-    else qualityOk(text)
+  def qualityOkFast(text: Column): Column =
+    column(TextStats(expression(text))).getField("quality_ok")
 
   /** PII redaction for training corpora: replace emails, IPv4 addresses,
     * and phone-shaped number runs with typed placeholder tags. Pure
@@ -440,15 +415,12 @@ object TextFunctions {
     // tokenize scan (the dsirWeights / dd_span reuse-breaker class).
     // r18 (guide §2.3 — shuffle narrower keys): the model/aggregation
     // key is the 8-byte xxhash64 of the term (the single-pass
-    // `token_hashes` kernel when registered), not the term string — the
+    // `token_hashes` kernel), not the term string — the
     // (doc, term) tf shuffle and the model join move one long per token
     // instead of a UTF8 string, and no output column carries a term, so
     // rows are identical absent a 64-bit collision (the hashed-gram-set
     // argument of [[graft.dedup.Dedup.verifyJaccard]]).
-    val th =
-      if (docs.sparkSession.catalog.functionExists("token_hashes"))
-        call_function("token_hashes", col(text))
-      else transform(tokens(col(text)), t => xxhash64(t))
+    val th = column(TokenHashes(expression(col(text))))
     val tf = docs
       .where(col(id).isNotNull)
       .select(col(id).as("doc"), explode(th).as("term"))
@@ -504,10 +476,7 @@ object TextFunctions {
     */
   def bigramLmScore(docs: org.apache.spark.sql.DataFrame, id: String,
                     text: String): org.apache.spark.sql.DataFrame = {
-    val th =
-      if (docs.sparkSession.catalog.functionExists("token_hashes"))
-        call_function("token_hashes", col(text))
-      else transform(tokens(col(text)), t => xxhash64(t))
+    val th = column(TokenHashes(expression(col(text))))
     val bi = docs
       .where(col(id).isNotNull)
       .select(col(id).as("doc"), th.as("ts"))
@@ -638,8 +607,8 @@ object TextFunctions {
     * and the gram scan plans twice, exactly the r18 flag-form dead end.
     * Output identical to `dsirWeights(raw, raw.where(isTarget), ...)`
     * (bucket counts aggregate the same rows, just flagged instead of
-    * re-scanned; equality pinned in FunctionsSpec). Same-JVM A/B at
-    * sf0.1 (DsirProbe): 1.42 → 0.70 s.
+    * re-scanned; equality pinned in FunctionsSpec). Measured same-JVM
+    * A/B at sf0.1: 1.42 → 0.70 s.
     */
   def dsirWeightsTagged(raw: org.apache.spark.sql.DataFrame, isTarget: Column,
                         id: String, text: String,
@@ -735,24 +704,6 @@ object TextFunctions {
           coalesce(col("n_grams"), lit(0L)) * col("const_micro")).as("logw_micro"))
   }
 
-  /** Extension-free Column form of [[graft.functions.LinearScore]]:
-    * struct(n_tokens, score_milli) from built-in expressions — per-token
-    * xxhash64 into one of `buckets` hashing-trick feature slots, the
-    * slot's frozen integer milli-weight summed (the weight rule is
-    * documented on the kernel). Semantically identical to the kernel but
-    * the HOF lambda evaluates interpreted; kept as the dispatch fallback
-    * and the kernel's FunctionsSpec equality witness.
-    */
-  def linearScoreParts(text: Column, buckets: Int): Column = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val th = transform(tokens(text), t => xxhash64(t))
-    val w = (c: Column) =>
-      (pmod(c, lit(buckets.toLong)) * lit(2654435761L) + lit(104729L)) % lit(2001L) - lit(1000L)
-    struct(
-      size(th).as("n_tokens"),
-      aggregate(th, lit(0L), (acc, h) => acc + w(h)).as("score_milli"))
-  }
-
   /** Model-based quality filtering — the classifier stage of a training
     * pipeline (fastText / CCNet / DCLM-style): a frozen linear model over
     * hashed token features scores every document, and the keep decision
@@ -774,11 +725,7 @@ object TextFunctions {
   def classifierScore(docs: org.apache.spark.sql.DataFrame, id: String, text: String,
                       buckets: Int = 1 << 20,
                       thrMilli: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val parts =
-      if (docs.sparkSession.catalog.functionExists("linear_score"))
-        call_function("linear_score", col(text), lit(buckets))
-      else linearScoreParts(col(text), buckets)
-    docs.select(col(id), parts.as("_ls"))
+    docs.select(col(id), column(LinearScore(expression(col(text)), buckets)).as("_ls"))
       .select(col(id), col("_ls.n_tokens").as("n_tokens"),
         col("_ls.score_milli").as("score_milli"))
       .withColumn("kept",
@@ -954,52 +901,21 @@ object TextFunctions {
     * the fraction of duplicate word 2-/3-grams and the share of the most
     * frequent token — the standard filters for looping/boilerplate text.
     *
-    * Scale shape: the gram ratios are pure column expressions over one
-    * scan (no shuffle, codegen'd). The top-token share deliberately does
-    * NOT use a per-row HOF count (an O(tokens²) lambda that also falls
-    * out of codegen): it explodes to (doc, token) with a map-side-combined
-    * count and re-joins on the doc key — two narrow shuffles that AQE
-    * co-plans, each partial-aggregated before the wire.
+    * Scale shape: ONE scan, zero shuffles — the native [[RepetitionStats]]
+    * kernel computes all three signals per document in a single pass
+    * (a Column form needs an explode → two-level count → doc-key join to
+    * get the top-token share without an O(tokens²) lambda). Token-less
+    * docs emit no row.
     */
   def repetitionSignals(docs: org.apache.spark.sql.DataFrame, id: String,
                         text: String): org.apache.spark.sql.DataFrame =
-    if (docs.sparkSession.catalog.functionExists("repetition_stats"))
-      // native single-pass kernel: one scan, zero shuffles (the n_tokens
-      // filter replays the agg form's drop of token-less docs)
-      docs.select(col(id), call_function("repetition_stats", col(text)).as("_r"))
-        .where(col("_r.n_tokens") > 0)
-        .select(col(id),
-          col("_r.dup2_ratio").as("dup2_ratio"),
-          col("_r.dup3_ratio").as("dup3_ratio"),
-          col("_r.top_tok_frac").as("top_tok_frac"))
-    else repetitionSignalsColumnar(docs, id, text)
-
-  /** Extension-free Column form of [[repetitionSignals]] — explode →
-    * two-level count → doc-key join; asserted equal to the native kernel
-    * in FunctionsSpec.
-    */
-  def repetitionSignalsColumnar(docs: org.apache.spark.sql.DataFrame, id: String,
-                                text: String): org.apache.spark.sql.DataFrame = {
-    // gram arrays bind ONCE in their own projection: each ratio reads its
-    // array twice (distinct + size), and Spark gives HOF chains no
-    // common-subexpression elimination — inlined, every reference would
-    // re-tokenize and re-zip the document (CollapseProject keeps the
-    // split because the expressions are non-cheap and multiply-referenced)
-    def dupRatio(g: Column): Column =
-      round(lit(1.0) - size(array_distinct(g)).cast("double") /
-        greatest(size(g), lit(1)).cast("double"), 4)
-    val ratios = docs
-      .select(col(id), tokens(col(text)).as("_toks"))
-      .select(col(id), ngramsFromTokens(col("_toks"), 2).as("_g2"),
-        ngramsFromTokens(col("_toks"), 3).as("_g3"))
-      .select(col(id), dupRatio(col("_g2")).as("dup2_ratio"), dupRatio(col("_g3")).as("dup3_ratio"))
-    val topTok = docs
-      .select(col(id), explode(tokens(col(text))).as("tok"))
-      .groupBy(id, "tok").agg(count(lit(1)).as("c"))
-      .groupBy(id).agg(round(max("c").cast("double") / sum("c").cast("double"), 4)
-        .as("top_tok_frac"))
-    ratios.join(topTok, id)
-  }
+    // the n_tokens filter drops token-less docs (no ratios to report)
+    docs.select(col(id), column(RepetitionStats(expression(col(text)))).as("_r"))
+      .where(col("_r.n_tokens") > 0)
+      .select(col(id),
+        col("_r.dup2_ratio").as("dup2_ratio"),
+        col("_r.dup3_ratio").as("dup3_ratio"),
+        col("_r.top_tok_frac").as("top_tok_frac"))
 
   /** Context-length chunking: split each document into sliding token
     * spans of at most `maxTok` tokens with `overlap` tokens of context
@@ -1132,10 +1048,8 @@ object TextFunctions {
       .select(col(id), col("shard"), col("pos"))
   }
 
-  /** Language-ID scores: per-language marker-token hit counts over a fixed
-    * marker lexicon (n-gram/stopword heuristic). `argmaxLang` picks the
-    * best-scoring language with deterministic alphabetical tie-break, else
-    * "und" when nothing matches.
+  /** Language-ID marker lexicon: per-language marker tokens (n-gram /
+    * stopword heuristic) that [[argmaxLangFast]] counts.
     */
   val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "is", "was", "with"),
@@ -1144,31 +1058,12 @@ object TextFunctions {
     "es" -> Seq("el", "los", "las", "es", "una", "que"),
     "zh" -> Seq("de5", "shi4", "zhe4", "bu4", "le5", "wo3"))
 
-  def langScore(text: Column, lang: String): Column = {
-    val toks = tokens(text)
-    size(filter(toks, t => t.isin(langMarkers(lang).map(lit(_)): _*)))
-  }
-
-  def argmaxLang(text: Column): Column = {
-    val langs = langMarkers.keys.toSeq.sorted
-    val scored = array(langs.map(l => struct(langScore(text, l).as("s"), lit(l).as("l"))): _*)
-    // array_max on struct(s, l) orders by score then language — but we want
-    // ties broken by FIRST alphabetical, so invert: maximize (s, reverse-l).
-    val best = aggregate(
-      scored,
-      struct(lit(-1).as("s"), lit("und").as("l")),
-      (acc, x) => when(x.getField("s") > acc.getField("s"), x).otherwise(acc))
-    when(best.getField("s") > 0, best.getField("l")).otherwise(lit("und"))
-  }
-
-  /** [[argmaxLang]] through the native `lang_scores` kernel when the
-    * session has graft's extensions (one byte scan instead of five
-    * filter-HOF chains) — identical prediction, asserted in FunctionsSpec.
+  /** Language ID through the native [[LangScores]] kernel (one byte scan):
+    * the language with the most marker-token hits, ties broken by the
+    * alphabetically first language, "und" when nothing matches.
     */
-  def argmaxLangFast(spark: org.apache.spark.sql.SparkSession, text: Column): Column =
-    if (spark.catalog.functionExists("lang_scores"))
-      call_function("lang_scores", text).getField("lang_pred")
-    else argmaxLang(text)
+  def argmaxLangFast(text: Column): Column =
+    column(LangScores(expression(text))).getField("lang_pred")
 
   /** Token-distribution Shannon entropy (bits): low entropy flags
     * repetitive/boilerplate text (a handful of tokens dominating), high
@@ -1236,77 +1131,36 @@ object TextFunctions {
   /** URL canonicalization for web-corpus dedup: the same page crawled as
     * `HTTPS://Site.COM:443/a/?utm_source=x#top` and `https://site.com/a`
     * must hash identically or exact dedup misses most web duplicates.
-    * Policy (each step a pure regex/string expression, applied in this
-    * fixed order; RE2-compatible so an oracle replays it bit-exactly):
+    * Policy, applied in this fixed order (RE2-expressible, so an oracle
+    * replays it bit-exactly as a regex chain):
     *   1. drop the fragment;
     *   2. lowercase scheme and host; strip the scheme's default port
     *      (`:443` for https, `:80` for http);
     *   3. remove `utm_*` tracking parameters, then repair separator
     *      debris (`&&`→`&`, `?&`→`?`, trailing `?`/`&`);
     *   4. strip the trailing path slash (before `?` or at end).
-    * One scan, no shuffle — composes with [[graft.dedup.Dedup.exact]] on
-    * the canonical form.
+    * The native single-pass [[CanonicalUrl]] kernel makes a few
+    * character passes instead of ten regex-engine scans per row. One
+    * scan, no shuffle — composes with [[graft.dedup.Dedup.exact]] on the
+    * canonical form.
     */
-  def canonicalUrl(u: Column): Column = {
-    val noFrag = regexp_replace(u, "#.*", "")
-    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val hostport = lower(regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
-    val host = when(scheme === "https", regexp_replace(hostport, ":443$", ""))
-      .when(scheme === "http", regexp_replace(hostport, ":80$", ""))
-      .otherwise(hostport)
-    val rest0 = regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$", 1)
-    val rest1 = regexp_replace(rest0, "([?&])utm_[A-Za-z_]+=[^&]*", "$1")
-    val rest2 = regexp_replace(regexp_replace(regexp_replace(
-      rest1, "&&+", "&"), "\\?&", "?"), "[?&]+$", "")
-    val rest3 = regexp_replace(regexp_replace(rest2, "/\\?", "?"), "/$", "")
-    concat(scheme, lit("://"), host, rest3)
-  }
-
-  /** [[canonicalUrl]] through the native single-pass `canonical_url`
-    * kernel when the session has graft's extensions (a few character
-    * passes instead of ten regex-engine scans per row) — identical
-    * output, asserted in FunctionsSpec.
-    */
-  def canonicalUrlFast(spark: org.apache.spark.sql.SparkSession, u: Column): Column =
-    if (spark.catalog.functionExists("canonical_url"))
-      call_function("canonical_url", u)
-    else canonicalUrl(u)
+  def canonicalUrlFast(u: Column): Column = column(CanonicalUrl(expression(u)))
 
   /** Crawl-HTML text extraction — the FIRST stage of every web-corpus
     * pipeline (WET-style plain text from raw HTML): drop script/style
-    * blocks whole, strip the remaining markup, decode the core
-    * character entities (after tag removal; `&amp;` last so escaped
-    * entities don't double-decode), collapse whitespace. A fixed
-    * regexp_replace chain — codegen'd expressions, zero shuffles, and
-    * engine-portable (the DuckDB oracle replays the identical chain).
-    * Real crawls also need block-level boilerplate scoring — that lives
-    * in [[graft.dedup.Dedup.boilerplateRemove]] (corpus-frequent lines)
+    * blocks whole (case-insensitive, non-greedy: a script body containing
+    * '<' or an upper-case <SCRIPT> tag must not leak into the corpus
+    * text), strip the remaining markup, decode the core character
+    * entities (after tag removal; `&amp;` last so escaped entities don't
+    * double-decode), collapse whitespace. The native single-pass
+    * [[HtmlText]] kernel makes four character passes instead of ten
+    * regex-engine scans per page; the DuckDB oracle replays the same
+    * rules as a regexp_replace chain. Zero shuffles. Real crawls also
+    * need block-level boilerplate scoring — that lives in
+    * [[graft.dedup.Dedup.boilerplateRemove]] (corpus-frequent lines)
     * downstream of this per-document pass.
     */
-  /** [[htmlText]] routed through the native single-pass `html_text`
-    * kernel when the session has graft's extensions (four character
-    * passes instead of ten regex-engine scans per page) — identical
-    * output, asserted in FunctionsSpec (the canonicalUrlFast pattern).
-    */
-  def htmlTextFast(spark: org.apache.spark.sql.SparkSession, html: Column): Column =
-    if (spark.catalog.functionExists("html_text"))
-      call_function("html_text", html)
-    else htmlText(html)
-
-  def htmlText(html: Column): Column = {
-    // case-insensitive dotall NON-GREEDY block strip (r15 ADVICE): a
-    // real script body containing '<' (e.g. `if (a<b)`) or an upper-case
-    // <SCRIPT> tag must not leak into the corpus text; pattern is
-    // byte-identical in the DuckDB oracle (both engines: java.util.regex
-    // and RE2 accept inline (?is) and lazy quantifiers)
-    val noScript = regexp_replace(html, "(?is)<script[^>]*>.*?</script>", " ")
-    val noStyle = regexp_replace(noScript, "(?is)<style[^>]*>.*?</style>", " ")
-    val noTags = regexp_replace(noStyle, "<[^>]+>", " ")
-    val ents = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
-      "&#39;" -> "'", "&nbsp;" -> " ", "&amp;" -> "&")
-      .foldLeft(noTags) { case (c, (pat, rep)) => regexp_replace(c, pat, rep) }
-    trim(regexp_replace(ents, "\\s+", " "))
-  }
+  def htmlTextFast(html: Column): Column = column(HtmlText(expression(html)))
 
   /** Deterministic round-robin interleave of a corpus's strata (the
     * source-mixing order for training: batch i draws document i/K from

@@ -2,50 +2,36 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-/** Embedding-vector math as higher-order-function Column expressions
-  * (codegen'd; no UDF deserialization in the scan path). Inputs are
-  * `array<float>` columns; arithmetic is promoted to double for stable
-  * cross-engine comparisons.
+/** Embedding-vector math as Column expressions (codegen'd; no UDF
+  * deserialization in the scan path). Inputs are `array<float>` columns;
+  * arithmetic is promoted to double for stable cross-engine comparisons.
   */
 object VectorFunctions {
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
-
   /** Cosine for the candidate-pair hot path: the native kernel
-    * (graft.functions.CosineSimilarity — codegen'd primitive loop, no HOF
-    * lambda dispatch) when [[graft.GraftExtensions]] is registered on the
-    * session (always true for `Graft.session`), else the Column form.
-    * Dispatches via `call_function` with real Columns, so dotted/nested
-    * paths resolve identically on both branches.
+    * ([[CosineSimilarity]] — codegen'd primitive loop over the two
+    * float arrays, no higher-order-function lambda dispatch).
     */
-  def cosineNative(spark: org.apache.spark.sql.SparkSession, aCol: String, bCol: String): Column =
-    cosineNative(spark, col(aCol), col(bCol))
+  def cosineNative(aCol: String, bCol: String): Column =
+    cosineNative(col(aCol), col(bCol))
 
   /** [[cosineNative]] over explicit Columns — for call sites (e.g. join
     * conditions in a self-join) where bare column names would be
     * ambiguous between the two sides.
     */
-  def cosineNative(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("cosine_sim"))
-      call_function("cosine_sim", a, b)
-    else cosine(a, b)
+  def cosineNative(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  /** SRP bucket with the same native-or-fallback dispatch (bit-exact
-    * either way — see graft.functions.SrpBucket).
+  /** Signed random projection (SimHash for vectors) as the native
+    * [[SrpBucket]] kernel: `nBits` hyperplanes with deterministic ±1
+    * components derived from xxhash64(planeIdx, dim) — no stored model,
+    * reproducible across runs and executors. Returns an int bucket id in
+    * [0, 2^nBits).
     */
-  def srpBucketNative(spark: org.apache.spark.sql.SparkSession, vecCol: String, nBits: Int): Column =
-    if (spark.catalog.functionExists("srp_bucket"))
-      call_function("srp_bucket", col(vecCol), lit(nBits))
-    else srpBucket(col(vecCol), nBits)
+  def srpBucketNative(vecCol: String, nBits: Int): Column =
+    column(SrpBucket(expression(col(vecCol)), expression(lit(nBits))))
 
   /** Symmetric int8 scalar quantization of an embedding vector — the
     * standard 4x storage codec for vector stores (float32 → one byte
@@ -68,21 +54,4 @@ object VectorFunctions {
   /** Inverse of [[quantizeInt8]]: codes × scale back to doubles. */
   def dequantizeInt8(q: Column): Column =
     transform(q.getField("codes"), c => c.cast("double") * q.getField("scale"))
-
-  /** Signed random projection (SimHash for vectors): `nBits` hyperplanes
-    * with deterministic ±1 components derived from xxhash64(planeIdx, dim)
-    * — no stored model, reproducible across runs and executors. Returns an
-    * int bucket id in [0, 2^nBits).
-    */
-  def srpBucket(vec: Column, nBits: Int): Column = {
-    val bits = (0 until nBits).map { p =>
-      // component sign for dim i of plane p: parity of xxhash64(p, i)
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (v, i) =>
-          v.cast("double") * when(pmod(xxhash64(lit(p), i), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _).cast("int")
-  }
 }

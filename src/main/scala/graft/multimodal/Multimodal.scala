@@ -1,7 +1,9 @@
 package graft.multimodal
 
+import graft.functions.CrossModalScore
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: media payloads travel as opaque `binary`
@@ -1269,68 +1271,24 @@ object Multimodal {
     * Input contract: `paired` carries (doc_id, text, dhash_hi, dhash_lo)
     * — one row per image-text pair, fingerprint from [[imageDHash]] (or
     * [[pHashDctOf]]; any 64-bit (hi, lo) packing rides unchanged).
-    * Scale shape: scan-local projection — token hashing via the native
-    * `token_hashes` kernel, towers as pure Column arithmetic inside
-    * whole-stage codegen, ZERO exchanges and no model artifact.
+    * Scale shape: scan-local projection — the native
+    * [[graft.functions.CrossModalScore]] kernel tokenizes ONCE and
+    * accumulates both towers in the same pass (a Column form would
+    * materialize the token-hash array and walk it `dim` times through
+    * aggregate()) inside whole-stage codegen: ZERO exchanges and no
+    * model artifact.
     */
   def textImageScore(paired: DataFrame, buckets: Int = 1 << 20, dim: Int = 8,
                      thrMilli: Long = 0L): DataFrame = {
     require(dim >= 1 && dim <= 64, s"dim must be in [1, 64]: $dim")
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val spark = paired.sparkSession
-    // native single-pass kernel when registered: tokenize ONCE and
-    // accumulate all dim text components in the same scan
-    // (graft.functions.CrossModalScore) instead of materializing the
-    // token-hash array and walking it dim times through aggregate()
-    if (spark.catalog.functionExists("cross_modal_score")) {
-      return paired
-        .select(col("doc_id"),
-          call_function("cross_modal_score", col("text"),
-            col("dhash_hi"), col("dhash_lo"), lit(buckets), lit(dim)).as("_cm"))
-        .select(col("doc_id"),
-          col("_cm.n_tokens").as("n_tokens"), col("_cm.score").as("score"))
-        .withColumn("kept",
-          col("n_tokens") > 0 && col("score") >= lit(thrMilli) * col("n_tokens"))
-    }
-    textImageScoreColumnForm(paired, buckets, dim, thrMilli)
-  }
-
-  /** Extension-free Column form of [[textImageScore]] — the tower
-    * arithmetic as pure `functions._` expressions (token_hashes array +
-    * one aggregate() pass per text dimension). Bit-identical with the
-    * native kernel; kept public as the no-extensions fallback and the
-    * equality witness FunctionsSpec pins against the kernel.
-    */
-  def textImageScoreColumnForm(paired: DataFrame, buckets: Int = 1 << 20, dim: Int = 8,
-                               thrMilli: Long = 0L): DataFrame = {
-    require(dim >= 1 && dim <= 64, s"dim must be in [1, 64]: $dim")
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val spark = paired.sparkSession
-    val tokCol =
-      if (spark.catalog.functionExists("token_hashes"))
-        call_function("token_hashes", col("text"))
-      else transform(graft.functions.TextFunctions.tokens(col("text")), t => xxhash64(t))
-    // token hash → feature bucket, non-negative (pmod == ((h%K)+K)%K)
-    val withTok = paired.withColumn("_b", transform(tokCol, h => pmod(h, lit(buckets.toLong))))
-    def wT(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (x * lit(2654435761L) + lit(104729L)) % lit(2001L) - lit(1000L)
-    val tCols = (0 until dim).map { dd =>
-      aggregate(col("_b"), lit(0L),
-        (acc, b) => acc + wT(b * lit(dim.toLong) + lit(dd.toLong))).as(s"_t$dd")
-    }
-    val iCols = (0 until dim).map { dd =>
-      (0 until 64).map { b =>
-        val word = if (b < 32) col("dhash_lo") else col("dhash_hi")
-        shiftright(word, b % 32).bitwiseAND(lit(1L)) * lit(crossModalImageWeight(b.toLong * dim + dd))
-      }.reduce(_ + _).as(s"_i$dd")
-    }
-    val towers = withTok.select(
-      Seq(col("doc_id"), size(col("_b")).as("n_tokens")) ++ tCols ++ iCols: _*)
-    towers
-      .withColumn("score",
-        (0 until dim).map(dd => col(s"_t$dd") * col(s"_i$dd")).reduce(_ + _))
+    paired
+      .select(col("doc_id"),
+        column(CrossModalScore(expression(col("text")), expression(col("dhash_hi")),
+          expression(col("dhash_lo")), buckets, dim)).as("_cm"))
+      .select(col("doc_id"),
+        col("_cm.n_tokens").as("n_tokens"), col("_cm.score").as("score"))
       .withColumn("kept",
         col("n_tokens") > 0 && col("score") >= lit(thrMilli) * col("n_tokens"))
-      .select("doc_id", "n_tokens", "score", "kept")
   }
 }

@@ -26,7 +26,7 @@ object EmbeddingOracleSql {
 
   /** ±1.0 sign literal arrays, one per plane: parity of the chained
     * xxhash64(p, i) — bit-identical with SrpBucket.signs and the Column
-    * fallback's pmod(xxhash64(p, i), 2). */
+    * form's pmod(xxhash64(p, i), 2). */
   private def signArrays(nBits: Int, dim: Int): Seq[String] =
     (0 until nBits).map { p =>
       val s1 = XXH64.hashInt(p, 42L)

@@ -3,12 +3,13 @@ package graft.queries
 import graft.Graft
 import graft.ann.Ann
 import graft.dedup.Dedup
-import graft.functions.TextFunctions
+import graft.functions.{NfcNormalize, NfkcCasefold, TextFunctions}
 import graft.graph.Graph
 import graft.operators.Aggregates
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Large-scale training-data-pipeline operators as driver-checkable
   * queries: deduplication, similarity search, text analysis, multimodal
@@ -874,7 +875,7 @@ object PipelineQueries {
       // scheme/host, default port, trailing slash, utm_* params, fragment
       // — the corpus has no URL column, so the test plants one
       // deterministically, same device as txt_redact), canonicalize with
-      // TextFunctions.canonicalUrl, exact-dedup on the canonical form.
+      // TextFunctions.canonicalUrlFast, exact-dedup on the canonical form.
       // Pure expressions + one groupBy; fully oracle-checkable (the
       // oracle replays the same canonicalization steps).
       val urls = Graft.documents(s, d).select(col("doc_id"),
@@ -882,7 +883,7 @@ object PipelineQueries {
           lit(".COM:443/Path"), pmod(col("doc_id"), lit(50)), lit("/"),
           lit("?utm_source=feed&id="), pmod(col("doc_id"), lit(25)),
           lit("&utm_campaign=x#sec"), pmod(col("doc_id"), lit(3))).as("url"))
-      urls.select(col("doc_id"), TextFunctions.canonicalUrlFast(s, col("url")).as("curl"))
+      urls.select(col("doc_id"), TextFunctions.canonicalUrlFast(col("url")).as("curl"))
         .groupBy("curl")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
     }),
@@ -964,7 +965,7 @@ object PipelineQueries {
 
     "txt_bpe" -> ((s, d) => {
       // learned BPE subword counting — the real version of the
-      // subwordCount pre-tokenizer estimate: train 64 merges on the
+      // n_subwords pre-tokenizer estimate: train 64 merges on the
       // corpus (bounded, deterministic: top-vocabCap word frequencies
       // reach the driver, lexicographic tie-breaks), then count true
       // subwords per doc in ONE codegen'd replace-chain scan. The
@@ -1040,7 +1041,7 @@ object PipelineQueries {
       // production-size merge list: 1024 merges through the trie-apply
       // kernel (BpeSubwordCount) — apply cost flat in nMerges, which is
       // the point (the replace chain would pay 16x the txt_bpe scans;
-      // BpeProbe measures the curve). The synthetic corpus's 31-word
+      // measured flat in merges). The synthetic corpus's 31-word
       // vocabulary exhausts its pair structure at ~89 merges, so the
       // training/apply text appends the doc-id digit string — the
       // deterministic stand-in for the long-tail token diversity a real
@@ -1069,8 +1070,8 @@ object PipelineQueries {
       // words, measured pair capacity 34.7k ≥ 32768). Certified as
       // ENCODE — every token-id row under the full 32805-entry vocab —
       // with the apply text a 7-token SUBSET of the training corpus:
-      // the trie kernel is flat in merges either way (BpeProbe's 32k
-      // arm measures it on the full-text corpus), while the DuckDB
+      // the trie kernel is flat in merges either way (measured at 32k
+      // merges on the full-text corpus), while the DuckDB
       // chain oracle pays nMerges scans of the apply text, so the
       // certified text stays a few hundred bytes where the merge list
       // is full production size. 96 replaces/CTE-block clears both
@@ -1837,7 +1838,7 @@ object PipelineQueries {
       // deterministic split → sequence packing of the train split
       // (parallel prefix sums). One oracle replays the identical chain.
       val docs = Graft.documents(s, d)
-      val q = docs.where(TextFunctions.qualityOkFast(s, col("text")))
+      val q = docs.where(TextFunctions.qualityOkFast(col("text")))
       val keep = Dedup.exact(q, "doc_id", "text").select(col("keep_id").as("doc_id"))
       val kept = q.join(keep, Seq("doc_id"), "left_semi")
       val split = kept.select(col("doc_id"), col("text"),
@@ -2075,8 +2076,7 @@ object PipelineQueries {
 
     // ---- text analysis ----------------------------------------------------
     "txt_quality" -> ((s, d) =>
-      // native text_stats kernel (one byte scan per doc) with the Column
-      // chain as extension-free fallback — identical columns either way
+      // native text_stats kernel: one byte scan per doc
       TextFunctions.qualityFeatures(Graft.documents(s, d), "doc_id", "text")),
 
     "txt_langid" -> ((s, d) =>
@@ -2086,7 +2086,7 @@ object PipelineQueries {
       // native one-pass lang_scores kernel when extensions are loaded
       Graft.documents(s, d).select(
         col("doc_id"), col("lang"),
-        TextFunctions.argmaxLangFast(s, col("text")).as("lang_pred"))),
+        TextFunctions.argmaxLangFast(col("text")).as("lang_pred"))),
 
     "txt_repetition" -> ((s, d) =>
       // Gopher-style repetition filters: duplicate 2-/3-gram ratios (pure
@@ -2188,7 +2188,7 @@ object PipelineQueries {
               concat(col("text"), lit(" "), lit(decomposed)).as("text"))))
           .otherwise(array(base))).as("r"))
         .select(col("r.doc_id").as("doc_id"),
-          expr("nfc_normalize(r.text)").as("text"))
+          ColumnBridge.column(NfcNormalize(ColumnBridge.expression(col("r.text")))).as("text"))
       // the CANONICAL exact-dedup shape, reused (review r13: an inline
       // md5-groupBy copy would drift from Dedup.exact independently)
       Dedup.exact(planted, "doc_id", "text")
@@ -2225,7 +2225,7 @@ object PipelineQueries {
               concat(col("text"), lit(compat)).as("text"))))
           .otherwise(array(base))).as("r"))
         .select(col("r.doc_id").as("doc_id"),
-          expr("nfkc_casefold(r.text)").as("text"))
+          ColumnBridge.column(NfkcCasefold(ColumnBridge.expression(col("r.text")))).as("text"))
       Dedup.exact(planted, "doc_id", "text")
     }),
 
@@ -2379,7 +2379,7 @@ object PipelineQueries {
       graft.sources.Warc.read(s, out)
         .select(
           regexp_extract(col("uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          TextFunctions.htmlTextFast(s, col("payload").cast("string")).as("text_clean"))
+          TextFunctions.htmlTextFast(col("payload").cast("string")).as("text_clean"))
         .withColumn("clean_chars", length(col("text_clean")).cast("long"))
     }),
 
@@ -2477,7 +2477,7 @@ object PipelineQueries {
       // chain, so the extraction is certified end-to-end.
       val h = syntheticHtml(Graft.documents(s, d))
       h.select(col("doc_id"),
-          TextFunctions.htmlTextFast(s, col("html")).as("text_clean"))
+          TextFunctions.htmlTextFast(col("html")).as("text_clean"))
         .withColumn("clean_chars", length(col("text_clean")).cast("long"))
     }),
 
@@ -2532,7 +2532,7 @@ object PipelineQueries {
       // and shares txt_html_extract's oracle verbatim.
       val docs = graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents")
       val out = syntheticHtml(docs)
-        .select(col("doc_id"), TextFunctions.htmlTextFast(s, col("html")).as("text_clean"))
+        .select(col("doc_id"), TextFunctions.htmlTextFast(col("html")).as("text_clean"))
         .withColumn("clean_chars", length(col("text_clean")).cast("long"))
       graft.streaming.StreamingQueries.runAppendToMemory(s, "txt_html_stream", out)
     }),
@@ -3533,7 +3533,6 @@ object PipelineQueries {
       // view count — are oracle-asserted booleans.
       import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-      import org.apache.spark.sql.graft.ColumnBridge
       val ev = Graft.eventsStream(s, d)
       val purchases = ev.where(col("value") === "purchase").select(col("key"))
       val views = ev.where(col("value") === "view").select(col("key"))
@@ -4623,7 +4622,7 @@ object PipelineQueries {
                                          i -> ord(substr(text, i, 1))::HUGEINT)),
                         (acc, b) -> (31::HUGEINT * acc + b) % 18446744073709551616::HUGEINT) AS hh
                FROM documents)""",
-    // replays TextFunctions.argmaxLang exactly: per-language marker hit
+    // replays TextFunctions.argmaxLangFast exactly: per-language marker hit
     // counts over the same tokenization; winner = first language in
     // alphabetical order (de,en,es,fr,zh) achieving the strict maximum,
     // 'und' when no marker hits at all

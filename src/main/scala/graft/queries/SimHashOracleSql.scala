@@ -35,7 +35,7 @@ object SimHashOracleSql {
          FROM (SELECT doc_id, $toks AS toks FROM ($guardedDocs))""",
       xxh64Str("tok", Seed, "t_"))
     // per-bit ±1 vote counts, then bit assembly: sum of 2^i where the
-    // vote is positive — exactly simhashFromCounts / simhash_agg
+    // vote is positive — exactly the simhash_sig kernel's fold
     val bitVotes =
       s"""SELECT doc_id, i,
              sum(CASE WHEN (hu // power(2, i)::HUGEINT) % 2$HU = 1$HU THEN 1 ELSE -1 END) AS cnt

@@ -42,7 +42,7 @@ object StreamingQueries {
     * is a reduction of input), clamped to [1, session width]: a 100 TB
     * ingest keeps the session's full width, while a bench-SF stream
     * stops paying per-trigger commit overhead for 32 near-empty state
-    * stores. Measured (StreamProbe2, sf0.1 events, complete-mode
+    * stores. Measured (sf0.1 events, complete-mode
     * (user,day) agg): the HDFS-backed store's commit path contends
     * superlinearly in instance count — summed commitTimeMs 10.8-51 s at
     * 32 stores vs 0.6 s at 8 — and the trigger drops 1.7-2.4 s → 1.1 s;
@@ -99,18 +99,22 @@ object StreamingQueries {
   }
 
   /** Streaming read of a parquet "topic" with the batch-inferred schema.
-    * The file-stream source lists a directory; the corpus ships single
-    * parquet files, so stage a link/copy into a temp dir (what a real
-    * deployment's topic directory would be).
+    * The file-stream source lists a directory. A table stored as a
+    * directory of files already is one and streams every file in place;
+    * a single-file table is staged by link (copy across filesystems) into
+    * a temp dir — what a real deployment's topic directory would be.
     */
   def readStreamParquet(spark: SparkSession, dir: String, table: String): DataFrame = {
     val path = Paths.get(s"$dir/$table.parquet")
-    val streamDir = Paths.get(tmpDir(s"stream-$table"))
-    val target = streamDir.resolve(s"$table.parquet")
-    if (!Files.exists(target)) {
-      try Files.createLink(target, path)
-      catch { case _: Exception => Files.copy(path, target) }
-    }
+    val streamDir =
+      if (Files.isDirectory(path)) path
+      else {
+        val staged = Paths.get(tmpDir(s"stream-$table"))
+        val target = staged.resolve(s"$table.parquet")
+        try Files.createLink(target, path)
+        catch { case _: Exception => Files.copy(path, target) }
+        staged
+      }
     val schema = spark.read.parquet(path.toString).schema
     Graft.normalizeEventTs(spark.readStream.schema(schema).parquet(streamDir.toString))
   }
@@ -364,7 +368,7 @@ object StreamingQueries {
     storeDirs.foreach(b => b ++= Seq("seen" -> seenRoot, "corpus" -> storeDir))
     def sideStore(side: DataFrame, inCorpus: Boolean): DataFrame =
       side.select(col("doc_id").as("vid"),
-        graft.dedup.Dedup.gramSet(spark, "text", 1).as("toks"),
+        graft.dedup.Dedup.gramSet("text", 1).as("toks"),
         md5(col("text")).as("h"), lit(inCorpus).as("in_corpus"))
     sideStore(corpus, inCorpus = true)
       .unionByName(sideStore(batchDocs, inCorpus = false))

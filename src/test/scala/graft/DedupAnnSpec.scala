@@ -196,11 +196,45 @@ class DedupAnnSpec extends GraftTest {
     assert(kept.length === kept.distinct.length, "exactly one keeper per cluster at threshold -1")
   }
 
-  test("imperative minhash_agg signatures equal the columnar min-aggregate form") {
+  test("minhashSigs signatures equal the columnar min-aggregate form") {
     val a = Dedup.minhashSigs(docs, "doc_id", "text").withColumnRenamed("sig", "sa")
-    val b = Dedup.minhashSigsColumnar(docs, "doc_id", "text").withColumnRenamed("sig", "sb")
+    val b = ColumnForms.minhashSigsColumnar(docs, "doc_id", "text").withColumnRenamed("sig", "sb")
     val mismatches = a.join(b, "doc").where(col("sa") =!= col("sb")).count()
     assert(mismatches === 0L, s"$mismatches docs with diverging signatures")
+  }
+
+  test("dedup kernels need no function registry: gram sets stay hashed, signatures equal") {
+    // a session whose registry has every graft SQL name dropped: the
+    // Dedup APIs build their kernels directly, so nothing changes
+    val bare = spark.newSession()
+    bare.catalog.listFunctions().collect()
+      .filter(f => Option(f.className).exists(_.startsWith("graft.")))
+      .foreach(f => bare.sql(s"DROP TEMPORARY FUNCTION ${f.name}"))
+    assert(!bare.catalog.functionExists("shingle_hashes") &&
+      !bare.catalog.functionExists("minhash_sig"), "graft functions must be dropped")
+    val sets = Dedup.gramSets(Graft.documents(bare, sf), "doc_id", "text")
+    assert(sets.schema("toks").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType === org.apache.spark.sql.types.LongType,
+      s"gram sets must be hashed longs, got ${sets.schema("toks").dataType.catalogString}")
+    assert(sets.limit(5).collect().nonEmpty)
+    def sigs(s: org.apache.spark.sql.SparkSession) =
+      Dedup.minhashSigs(Graft.documents(s, sf), "doc_id", "text")
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val withRegistry = sigs(spark)
+    assert(withRegistry.nonEmpty)
+    assert(sigs(bare) === withRegistry)
+  }
+
+  test("verifyJaccardWithSets rejects gram sets that are not array<bigint>") {
+    import spark.implicits._
+    // the sorted-merge intersection kernel is only defined over hashed
+    // gram sets; a string set is a caller bug, reported up front
+    val pairs = Seq((1L, 2L)).toDF("a", "b")
+    val stringSets = Seq((1L, Seq("x", "y")), (2L, Seq("y"))).toDF("vid", "toks")
+    val e = intercept[IllegalArgumentException](Dedup.verifyJaccardWithSets(pairs, stringSets))
+    assert(e.getMessage.contains("array<bigint>") && e.getMessage.contains("array<string>"))
+    val hashed = Seq((1L, Seq(7L, 9L)), (2L, Seq(9L))).toDF("vid", "toks")
+    assert(Dedup.verifyJaccardWithSets(pairs, hashed).select("jaccard").head().getDouble(0) === 0.5)
   }
 
   test("minhash est_jaccard approximates exact token-set jaccard") {
@@ -336,15 +370,15 @@ class DedupAnnSpec extends GraftTest {
     assert(errs.sum / errs.length < 0.08, s"mean estimator error ${errs.sum / errs.length}")
   }
 
-  test("imperative simhash_agg signatures equal the 64-conditional-sum form") {
-    val exploded = docs.limit(300).select(col("doc_id").as("doc"),
-      explode(expr("token_hashes(text)")).as("h"))
-    val imperative = exploded.groupBy("doc").agg(expr("simhash_agg(h)").as("sh"))
+  test("simhashSigs signatures equal the 64-conditional-sum form") {
+    val sample = docs.limit(300)
+    val perRow = Dedup.simhashSigs(sample, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val columnar = Dedup.simhashFromCounts(exploded)
+    val columnar = ColumnForms.simhashFromCounts(sample.select(col("doc_id").as("doc"),
+        explode(expr("token_hashes(text)")).as("h")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(imperative === columnar)
-    assert(imperative.nonEmpty)
+    assert(perRow === columnar)
+    assert(perRow.nonEmpty)
   }
 
   test("simhash pairs respect the hamming bound and blocking finds exact dups") {
@@ -1163,7 +1197,7 @@ class DedupAnnSpec extends GraftTest {
     val emb = Graft.embeddings(spark, sf).select("vec_id", "embedding")
     val nBits = 4
     val byId = emb.select(col("vec_id"), col("embedding"),
-        VectorFunctions.srpBucketNative(spark, "embedding", nBits).as("b0"))
+        VectorFunctions.srpBucketNative("embedding", nBits).as("b0"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
     val (_, u, ub) = byId.find(_._1 == 0L).get
     def cos(a: Array[Float], b: Array[Float]): Double = {

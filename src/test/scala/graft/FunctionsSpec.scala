@@ -1,7 +1,9 @@
 package graft
 
+import graft.dedup.Dedup
 import graft.functions.{RollingHash, TextFunctions, VectorFunctions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar/aggregate function tests: the native Catalyst rolling-hash
@@ -47,7 +49,7 @@ class FunctionsSpec extends GraftTest {
   test("quality features have sane ranges on the corpus") {
     val rows = Graft.documents(spark, sf).select(
       TextFunctions.punctRatio(col("text")).as("pr"),
-      TextFunctions.stopwordRatio(col("text")).as("sr"),
+      ColumnForms.stopwordRatio(col("text")).as("sr"),
       TextFunctions.meanTokenLen(col("text")).as("mtl")).collect()
     rows.foreach { r =>
       assert(r.getDouble(0) >= 0 && r.getDouble(0) <= 1)
@@ -59,7 +61,7 @@ class FunctionsSpec extends GraftTest {
   test("langid is deterministic and falls back to 'und'") {
     import spark.implicits._
     val out = Seq("der die das und test", "xyzzy qwfp", "the cat and the hat")
-      .toDF("t").select(TextFunctions.argmaxLang(col("t")).as("l"))
+      .toDF("t").select(ColumnForms.argmaxLang(col("t")).as("l"))
       .collect().map(_.getString(0))
     assert(out(0) === "de")
     assert(out(1) === "und")
@@ -69,7 +71,7 @@ class FunctionsSpec extends GraftTest {
   test("native srp_bucket matches the HOF expression exactly") {
     val emb = Graft.embeddings(spark, sf)
     val mismatches = emb.select(
-        VectorFunctions.srpBucket(col("embedding"), 8).as("hof"),
+        ColumnForms.srpBucket(col("embedding"), 8).as("hof"),
         expr("srp_bucket(embedding, 8)").as("native"))
       .where(col("hof") =!= col("native")).count()
     assert(mismatches === 0L, s"$mismatches vectors bucket differently")
@@ -81,8 +83,8 @@ class FunctionsSpec extends GraftTest {
       .crossJoin(emb.select(col("vec_id").as("b"), col("embedding").as("vb")))
       .where(col("a") < col("b")).limit(500)
     val diffs = pairs.select(
-        abs(VectorFunctions.cosine(col("va"), col("vb")) -
-          VectorFunctions.cosineNative(spark, "va", "vb")).as("d"))
+        abs(ColumnForms.cosine(col("va"), col("vb")) -
+          VectorFunctions.cosineNative("va", "vb")).as("d"))
       .agg(max("d")).head().getDouble(0)
     assert(diffs < 1e-12, s"max |HOF - native| = $diffs")
   }
@@ -91,7 +93,7 @@ class FunctionsSpec extends GraftTest {
     import spark.implicits._
     val df = Seq((Array(1f, 0f, 0f), Array(0f, 1f, 0f)), (Array(1f, 2f, 3f), Array(1f, 2f, 3f)))
       .toDF("a", "b")
-      .select(VectorFunctions.cosine(col("a"), col("b")).as("c"))
+      .select(ColumnForms.cosine(col("a"), col("b")).as("c"))
     val out = df.collect().map(_.getDouble(0))
     assert(math.abs(out(0)) < 1e-12)
     assert(math.abs(out(1) - 1.0) < 1e-12)
@@ -176,7 +178,7 @@ class FunctionsSpec extends GraftTest {
       for (k <- Seq(1, 3, 5)) {
         val native = spark.sql(s"SELECT doc_id, shingle_hashes(text, $k) AS h FROM sh_in")
           .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-        val columnar = df.select(col("doc_id"), Dedup.shingleHashes(col("text"), k).as("h"))
+        val columnar = df.select(col("doc_id"), ColumnForms.shingleHashes(col("text"), k).as("h"))
           .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
         assert(native === columnar, s"k=$k mismatch")
       }
@@ -193,7 +195,7 @@ class FunctionsSpec extends GraftTest {
         val nativeGram = spark.sql(s"SELECT doc_id, gram_hashes(text, $k) AS h FROM sh_in")
           .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
         val hofGram = df.select(col("doc_id"),
-            graft.dedup.Dedup.positionalGramHashes(col("text"), k).as("h"))
+            ColumnForms.positionalGramHashes(col("text"), k).as("h"))
           .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
         assert(nativeGram === hofGram, s"gram_hashes k=$k mismatch")
       }
@@ -226,18 +228,20 @@ class FunctionsSpec extends GraftTest {
       .withColumn("ref", size(array_intersect(col("a"), col("b"))))
       .where(!(col("k") <=> col("ref")))
     assert(edgeDiff.count() === 0L, "inter_size edge-case mismatch")
-    // r19: the presorted kernel (merge over sort_array'd inputs, no
-    // per-pair copy/sort) must agree on the same corpus pairs + edges
+    // the presorted kernel (merge over sort_array'd inputs, no per-pair
+    // copy/sort; no SQL name, so built directly) must agree on the same
+    // corpus pairs + edges
+    def interSorted(a: String, b: String) = coalesce(ColumnBridge.column(
+      graft.functions.InterSizeSorted(ColumnBridge.expression(sort_array(col(a))),
+        ColumnBridge.expression(sort_array(col(b))))), lit(-1))
     val sortedDiff = pairs
-      .withColumn("k", coalesce(call_function("inter_size_sorted",
-        sort_array(col("a")), sort_array(col("b"))), lit(-1)))
+      .withColumn("k", interSorted("a", "b"))
       .withColumn("ref", size(array_intersect(col("a"), col("b"))))
       .where(!(col("k") <=> col("ref")))
     assert(sortedDiff.count() === 0L,
       "inter_size_sorted disagrees with array_intersect on corpus sets")
     val sortedEdgeDiff = edge
-      .withColumn("k", coalesce(call_function("inter_size_sorted",
-        sort_array(col("a")), sort_array(col("b"))), lit(-1)))
+      .withColumn("k", interSorted("a", "b"))
       .withColumn("ref", size(array_intersect(col("a"), col("b"))))
       .where(!(col("k") <=> col("ref")))
     assert(sortedEdgeDiff.count() === 0L, "inter_size_sorted edge-case mismatch")
@@ -253,34 +257,30 @@ class FunctionsSpec extends GraftTest {
       .toDF("doc_id", "text")
     val docs = Graft.documents(spark, sf).select(col("doc_id"), col("text"))
       .limit(200).unionByName(edge)
-    // minhash_sig vs explode(shingle_hashes) + minhash_agg
-    val perRow = docs.select(col("doc_id").as("doc"),
-        explode(call_function("minhash_sig", col("text"), lit(3), lit(64))).as("sig"))
+    // the column k-min aggregation over exploded shingle hashes
+    val columnar = ColumnForms.minhashSigsColumnar(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> ((r.getSeq[Long](1), r.getLong(2)))).toMap
+    assert(columnar.contains(100003L) &&
+      Seq(100001L, 100002L, 100004L).forall(d => !columnar.contains(d)),
+      "token-less docs get no signature, short docs get one")
+    // minhash_sig vs the k-min aggregation
+    val perRow = Dedup.minhashSigs(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val agg = docs.select(col("doc_id").as("doc"),
-        explode(call_function("shingle_hashes", col("text"), lit(3))).as("h"))
-      .groupBy("doc").agg(expr("minhash_agg(h, 64)").as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(perRow === agg, "minhash_sig disagrees with minhash_agg")
+    assert(perRow === columnar.map { case (d, (sig, _)) => d -> sig },
+      "minhash_sig disagrees with the k-min aggregation")
     // minhash_sig_size: same signatures plus the distinct-shingle count
     val perRowSz = docs.select(col("doc_id").as("doc"),
-        explode(call_function("minhash_sig_size", col("text"), lit(3), lit(64))).as("ss"))
+        explode(expr("minhash_sig_size(text, 3, 64)")).as("ss"))
       .select(col("doc"), col("ss.sig"), col("ss.nset"))
       .collect().map(r => r.getLong(0) -> ((r.getSeq[Long](1), r.getLong(2)))).toMap
-    val aggSz = docs.select(col("doc_id").as("doc"),
-        explode(call_function("shingle_hashes", col("text"), lit(3))).as("h"))
-      .groupBy("doc").agg(expr("minhash_agg(h, 64)").as("sig"), count(lit(1)).as("nset"))
-      .collect().map(r => r.getLong(0) -> ((r.getSeq[Long](1), r.getLong(2)))).toMap
-    assert(perRowSz === aggSz, "minhash_sig_size disagrees with the aggregate form")
-    // simhash_sig vs explode(token_hashes) + simhash_agg
-    val perRowSim = docs.select(col("doc_id").as("doc"),
-        explode(call_function("simhash_sig", col("text"))).as("sh"))
+    assert(perRowSz === columnar, "minhash_sig_size disagrees with the aggregate form")
+    // simhash_sig vs 64 conditional sums over exploded token hashes
+    val perRowSim = Dedup.simhashSigs(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val aggSim = docs.select(col("doc_id").as("doc"),
-        explode(call_function("token_hashes", col("text"))).as("h"))
-      .groupBy("doc").agg(expr("simhash_agg(h)").as("sh"))
+    val aggSim = ColumnForms.simhashFromCounts(docs.select(col("doc_id").as("doc"),
+        explode(transform(TextFunctions.tokens(col("text")), t => xxhash64(t))).as("h")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(perRowSim === aggSim, "simhash_sig disagrees with simhash_agg")
+    assert(perRowSim === aggSim, "simhash_sig disagrees with the conditional-sum form")
   }
 
   test("dsirWeightsTagged equals dsirWeights on a predicate-sliced target (r19)") {
@@ -466,9 +466,9 @@ class FunctionsSpec extends GraftTest {
       "session with extensions must dispatch the native kernel")
     val columnar = docs.select(col("doc_id"),
       TextFunctions.wsTokenCount(col("text")).as("n_tokens"),
-      TextFunctions.subwordCount(col("text")).as("n_subwords"),
+      ColumnForms.subwordCount(col("text")).as("n_subwords"),
       TextFunctions.punctRatio(col("text")).as("punct_ratio"),
-      TextFunctions.stopwordRatio(col("text")).as("stopword_ratio"),
+      ColumnForms.stopwordRatio(col("text")).as("stopword_ratio"),
       TextFunctions.meanTokenLen(col("text")).as("mean_token_len"),
       TextFunctions.qualityOk(col("text")).as("quality_ok"))
     assert(native.except(columnar).count() === 0 && columnar.except(native).count() === 0)
@@ -480,9 +480,9 @@ class FunctionsSpec extends GraftTest {
     val ne = graft.functions.TextFunctions.qualityFeatures(edges, "doc_id", "text")
     val ce = edges.select(col("doc_id"),
       TextFunctions.wsTokenCount(col("text")).as("n_tokens"),
-      TextFunctions.subwordCount(col("text")).as("n_subwords"),
+      ColumnForms.subwordCount(col("text")).as("n_subwords"),
       TextFunctions.punctRatio(col("text")).as("punct_ratio"),
-      TextFunctions.stopwordRatio(col("text")).as("stopword_ratio"),
+      ColumnForms.stopwordRatio(col("text")).as("stopword_ratio"),
       TextFunctions.meanTokenLen(col("text")).as("mean_token_len"),
       TextFunctions.qualityOk(col("text")).as("quality_ok"))
     assert(ne.except(ce).count() === 0 && ce.except(ne).count() === 0,
@@ -497,7 +497,7 @@ class FunctionsSpec extends GraftTest {
     assert(native.queryExecution.executedPlan.toString.contains("linear_score"),
       "session with extensions must dispatch the native kernel")
     def columnarScore(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("doc_id"), TextFunctions.linearScoreParts(col("text"), k).as("_ls"))
+      .select(col("doc_id"), ColumnForms.linearScoreParts(col("text"), k).as("_ls"))
       .select(col("doc_id"), col("_ls.n_tokens").as("n_tokens"),
         col("_ls.score_milli").as("score_milli"))
       .withColumn("kept", col("n_tokens") > 0 && col("score_milli") >= lit(0L) * col("n_tokens"))
@@ -530,10 +530,10 @@ class FunctionsSpec extends GraftTest {
     import spark.implicits._
     val docs = Graft.documents(spark, sf)
     val native = docs.select(col("doc_id"),
-      graft.functions.TextFunctions.argmaxLangFast(spark, col("text")).as("lang_pred"))
+      graft.functions.TextFunctions.argmaxLangFast(col("text")).as("lang_pred"))
     assert(native.queryExecution.executedPlan.toString.contains("lang_scores"))
     val columnar = docs.select(col("doc_id"),
-      TextFunctions.argmaxLang(col("text")).as("lang_pred"))
+      ColumnForms.argmaxLang(col("text")).as("lang_pred"))
     assert(native.except(columnar).count() === 0 && columnar.except(native).count() === 0)
     // ties (de/en markers equal → alphabetical), no-marker → und, case folding,
     // duplicate-occurrence counting, >8-byte tokens ignored by both forms
@@ -541,8 +541,8 @@ class FunctionsSpec extends GraftTest {
       "unremarkable letters", "das ist the was with und")
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val ne = edges.select(col("doc_id"),
-      graft.functions.TextFunctions.argmaxLangFast(spark, col("text")).as("lang_pred"))
-    val ce = edges.select(col("doc_id"), TextFunctions.argmaxLang(col("text")).as("lang_pred"))
+      graft.functions.TextFunctions.argmaxLangFast(col("text")).as("lang_pred"))
+    val ce = edges.select(col("doc_id"), ColumnForms.argmaxLang(col("text")).as("lang_pred"))
     assert(ne.except(ce).count() === 0 && ce.except(ne).count() === 0,
       s"native:\n${ne.collect().mkString("\n")}\ncolumnar:\n${ce.collect().mkString("\n")}")
   }
@@ -552,7 +552,7 @@ class FunctionsSpec extends GraftTest {
     val native = graft.functions.TextFunctions.repetitionSignals(docs, "doc_id", "text")
     assert(native.queryExecution.executedPlan.toString.contains("repetition_stats"),
       "session with extensions must dispatch the native kernel")
-    val columnar = graft.functions.TextFunctions.repetitionSignalsColumnar(docs, "doc_id", "text")
+    val columnar = ColumnForms.repetitionSignalsColumnar(docs, "doc_id", "text")
     assert(native.except(columnar).count() === 0 && columnar.except(native).count() === 0,
       "hash-based distinct counts must equal string-based ones on real text")
   }
@@ -1029,7 +1029,7 @@ class FunctionsSpec extends GraftTest {
           graft.multimodal.Multimodal.syntheticPngAssets(docs))
         .withColumnRenamed("asset_id", "doc_id"), Seq("doc_id"))
       .select(col("doc_id"), col("text"), col("dhash_hi"), col("dhash_lo"))
-    val viaColumns = graft.multimodal.Multimodal.textImageScoreColumnForm(paired)
+    val viaColumns = ColumnForms.textImageScoreColumnForm(paired)
       .orderBy("doc_id").collect().map(_.toSeq)
     assert(b.zip(viaColumns).forall { case (x, y) => x == y },
       b.zip(viaColumns).filter { case (x, y) => x != y }.take(3).mkString("; "))
@@ -1113,7 +1113,7 @@ class FunctionsSpec extends GraftTest {
         lit("&utm_campaign=x#sec"), pmod(col("doc_id"), lit(3))).as("u"))
     val all = edges.toDF("u").unionByName(corpus)
     val diff = all.select(col("u"),
-        TextFunctions.canonicalUrl(col("u")).as("chain"),
+        ColumnForms.canonicalUrl(col("u")).as("chain"),
         call_function("canonical_url", col("u")).as("native"))
       .where(col("chain") =!= col("native"))
       .collect()
@@ -1139,7 +1139,7 @@ class FunctionsSpec extends GraftTest {
       // path case is preserved (only scheme+host fold)
       "https://h.io/CaseSensitive/Path"              -> "https://h.io/CaseSensitive/Path")
     val out = cases.map(_._1).toDF("u")
-      .select(col("u"), TextFunctions.canonicalUrl(col("u")).as("c"))
+      .select(col("u"), ColumnForms.canonicalUrl(col("u")).as("c"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     cases.foreach { case (in, want) => assert(out(in) === want, s"for $in") }
   }
@@ -1608,7 +1608,7 @@ class FunctionsSpec extends GraftTest {
         vf.quantizeInt8(col("embedding")).as("q"),
         col("embedding").cast("array<double>").as("v"))
       .select(col("q.codes"),
-        graft.functions.VectorFunctions.cosine(col("v"),
+        ColumnForms.cosine(col("v"),
           vf.dequantizeInt8(col("q"))).as("fid"))
       .collect()
     assert(rows.forall(_.getSeq[Int](0).forall(c => c >= -127 && c <= 127)))
@@ -1708,7 +1708,7 @@ class FunctionsSpec extends GraftTest {
       docs.select(col("doc_id"), c.as("c")).collect()
         .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val native = chunksOf(call_function("cdc_chunks", col("text"), lit(8), lit(32)))
-    val fallback = chunksOf(Dedup.cdcChunksColumns(col("text"), 8, 32))
+    val fallback = chunksOf(ColumnForms.cdcChunksColumns(col("text"), 8, 32))
     assert(native.nonEmpty)
     assert(native === fallback)
     // plus a boundary-shape fixture: empty text and sub-window text are
@@ -1719,7 +1719,7 @@ class FunctionsSpec extends GraftTest {
       tiny.select(col("doc_id"), c.as("c")).collect()
         .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val tn = tinyChunks(call_function("cdc_chunks", col("text"), lit(8), lit(32)))
-    assert(tn === tinyChunks(Dedup.cdcChunksColumns(col("text"), 8, 32)))
+    assert(tn === tinyChunks(ColumnForms.cdcChunksColumns(col("text"), 8, 32)))
     assert(tn(1L) === Seq("") && tn(2L) === Seq("short"))
   }
 
@@ -1813,7 +1813,7 @@ class FunctionsSpec extends GraftTest {
       lit("<html><head><script>var x=1;</script><style>p{}</style></head><body><p>"),
       col("text"), lit("</p></body></html>")).as("html"))
     val corpusDiff = pages.select(
-        graft.functions.TextFunctions.htmlText(col("html")).as("a"),
+        ColumnForms.htmlText(col("html")).as("a"),
         expr("html_text(html)").as("b"))
       .where(col("a") =!= col("b")).count()
     assert(corpusDiff === 0, "kernel must equal the chain on the corpus")
@@ -1835,7 +1835,7 @@ class FunctionsSpec extends GraftTest {
       " \t\n\f\r mixed   ws ",                           // \s class exact
       "")
     val edgeDiff = edges.toDF("html").select(
-        graft.functions.TextFunctions.htmlText(col("html")).as("a"),
+        ColumnForms.htmlText(col("html")).as("a"),
         expr("html_text(html)").as("b"))
       .collect().filter(r => r.getString(0) != r.getString(1))
     assert(edgeDiff.isEmpty,
@@ -1863,7 +1863,7 @@ class FunctionsSpec extends GraftTest {
       ("<div><h1>T</h1><p>body &#39;q&#39; &quot;r&quot;</p></div>", "T body 'q' \"r\"")
     ).toDF("html", "want")
     val got = cases.select(
-      graft.functions.TextFunctions.htmlText(col("html")).as("got"), col("want"))
+      ColumnForms.htmlText(col("html")).as("got"), col("want"))
       .collect()
     got.foreach(r => assert(r.getString(0) === r.getString(1)))
   }

@@ -154,20 +154,11 @@ class PlanSpec extends GraftTest {
       "expected a hash exchange on the shard key:\n" + p.take(3000))
   }
 
-  test("repetition signals: native kernel runs shuffle-free; fallback combines map-side") {
+  test("repetition signals: native kernel runs shuffle-free") {
     val p = plan("txt_repetition")
     assert(p.contains("repetition_stats"), "native kernel expected in the plan:\n" + p.take(3000))
     assert(!p.contains("Exchange"),
       "single-pass kernel needs no shuffle at all:\n" + p.take(3000))
-    // extension-free fallback: explode → two-level agg → doc-key join,
-    // partial-aggregated before the wire
-    val pf = graft.functions.TextFunctions
-      .repetitionSignalsColumnar(Graft.documents(spark, sf), "doc_id", "text")
-      .queryExecution.executedPlan.toString
-    assert(pf.contains("partial_count") || pf.contains("partial_max"),
-      "token counting must partial-aggregate before the shuffle:\n" + pf.take(3000))
-    assert(!pf.contains("CartesianProduct") && !pf.contains("BroadcastNestedLoopJoin"),
-      "signals re-join on the doc key only:\n" + pf.take(3000))
   }
 
   test("windowed stream-stream join shuffles on (key, bucket), not key alone") {
@@ -623,7 +614,7 @@ class PlanSpec extends GraftTest {
     val pe = pairs.queryExecution.executedPlan.toString
     assert(pe.contains("graft-lshsigs"),
       s"pair plan must read the persisted signature store:\n${pe.take(3000)}")
-    assert(!pe.contains("minhash_agg") && !pe.contains("shingle_hashes"),
+    assert(!pe.contains("minhash_sig") && !pe.contains("shingle_hashes"),
       s"pair plan must not re-aggregate signatures or re-tokenize:\n${pe.take(3000)}")
   }
 

@@ -691,6 +691,20 @@ class ProcessorsSpec extends GraftTest {
       3L -> ((-1L, -1L, -1L))))
   }
 
+  test("a table stored as a directory of files streams all of its rows") {
+    // the split layout: <dir>/events.parquet is a directory of part files
+    val dir = java.nio.file.Files.createTempDirectory("split-layout")
+    try {
+      val events = spark.read.parquet(s"$sf/events.parquet")
+      events.repartition(4).write.parquet(s"$dir/events.parquet")
+      assert(dir.resolve("events.parquet").toFile.listFiles()
+        .count(_.getName.endsWith(".parquet")) > 1, "expected a multi-file table")
+      val streamed = SparkEntry.queries("dd_stream_dedup")(spark, dir.toString).count()
+      val batch = events.select("user_id", "event_type").distinct().count()
+      assert(batch > 0 && streamed === batch)
+    } finally ProbeUtil.deleteRecursively(dir)
+  }
+
   test("stageStreamBatchedCached stages once per key and re-streams the full layout") {
     import graft.streaming.StreamingQueries
     val src = spark.range(0, 30).selectExpr("id", "id % 3 AS grp")
