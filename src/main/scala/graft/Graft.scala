@@ -27,8 +27,6 @@ object Graft {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // reference-parity arithmetic: the JVM engine this reproduces wraps
       // on 64-bit overflow (Java semantics); ANSI overflow errors would
       // also forbid the multiply-add hash permutations in graft.dedup
@@ -36,18 +34,29 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
-    val spark = b.getOrCreate()
+    val spark = runtimeConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Apply the runtime-settable configs graft queries rely on, for sessions
-    * we did not build (e.g. the driver's). nanosAsLong must be set before
-    * the first read of a nanos parquet file.
+  /** The runtime-settable configs graft queries rely on: [[session]]
+    * builds with them and [[configure]] applies them. Local streaming
+    * checkpoints go through [[graft.streaming.LocalCheckpointFileManager]]
+    * (one `chmod` fork less per checkpoint file); other file systems keep
+    * Spark's manager.
+    */
+  private val runtimeConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    graft.streaming.LocalCheckpointFileManager.ConfKey ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+
+  /** Apply [[runtimeConfs]] to a session graft did not build (one an
+    * application created itself). nanosAsLong must be set before the
+    * first read of a nanos parquet file.
     */
   def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    runtimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 

@@ -1107,9 +1107,7 @@ object Dedup {
     var converged = false
     var i = 0
     // previous round's label sum for the monotone convergence probe
-    // below; null = "no round measured yet" (and the sum of an EMPTY
-    // label frame, which the null==null clause treats as converged —
-    // the old any-changed probe also stopped after one round there)
+    // below; null = "no round measured yet"
     var prevSum: java.math.BigDecimal = null
     while (!converged && i < maxIter) {
       val nbrMin = edges
@@ -1154,14 +1152,14 @@ object Dedup {
       // replaces the next⋈labels join the old any-changed probe paid
       // every round; the probe job still materializes the round's lazy
       // checkpoints, so jobs per round stay 1 with one less join+shuffle
-      // inside.
-      val sumNow = next.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
+      // inside. The row count rides in the same aggregate, so an empty
+      // frame is told apart from an overflowed (null) sum.
+      val probe = next.agg(count(lit(1)), sum(col("comp").cast("decimal(38,0)"))).head()
+      val sumNow = probe.getDecimal(1)
       release(labels)
       release(stepped)
       labels = next
-      converged =
-        if (sumNow == null) true // empty label frame: nothing to propagate
-        else prevSum != null && prevSum.compareTo(sumNow) == 0
+      converged = labelSumConverged(prevSum, probe.getLong(0), sumNow)
       prevSum = sumNow
       i += 1
     }
@@ -1172,6 +1170,20 @@ object Dedup {
       conf.set("spark.sql.adaptive.enabled", confAqe)
     }
   }
+
+  /** The convergence decision of [[connectedComponents]]' label-sum probe:
+    * an empty label frame has nothing to propagate; otherwise the labels
+    * are stable when this round's sum equals the previous round's. A null
+    * sum over present rows means the decimal sum overflowed, which the
+    * probe cannot judge, so it throws instead of reading it as converged.
+    */
+  private[graft] def labelSumConverged(prevSum: java.math.BigDecimal, rows: Long,
+                                       sumNow: java.math.BigDecimal): Boolean =
+    if (rows == 0L) true
+    else if (sumNow == null)
+      throw new IllegalStateException(
+        s"connectedComponents: label sum over $rows rows is null (decimal overflow)")
+    else prevSum != null && prevSum.compareTo(sumNow) == 0
 
   /** End-to-end dedup resolution: given the corpus and a verified
     * candidate-pair set, drop every document that is NOT its cluster's

@@ -42,15 +42,18 @@ object StreamingQueries {
     * is a reduction of input), clamped to [1, session width]: a 100 TB
     * ingest keeps the session's full width, while a bench-SF stream
     * stops paying per-trigger commit overhead for 32 near-empty state
-    * stores. Measured (sf0.1 events, complete-mode
-    * (user,day) agg): the HDFS-backed store's commit path contends
-    * superlinearly in instance count — summed commitTimeMs 10.8-51 s at
-    * 32 stores vs 0.6 s at 8 — and the trigger drops 1.7-2.4 s → 1.1 s;
-    * the same state on tmpfs is NOT faster, so it is commit-path
-    * contention, not fsync. Values are partition-count-invariant (exact
-    * per-key aggregations / per-key processors), so results are
-    * bit-identical at any width. Session conf restored in `finally`;
-    * post-convergence consumers plan at the caller's width.
+    * stores. Measured (sf0.1 events, complete-mode (user,day) agg,
+    * before local checkpoints moved to
+    * [[LocalCheckpointFileManager]]): summed commitTimeMs was 10.8-51 s
+    * at 32 stores vs 0.6 s at 8, and the trigger dropped 1.7-2.4 s →
+    * 1.1 s; the same state on tmpfs was NOT faster. The cost was not
+    * fsync but a `chmod` process that Hadoop's local file system forks
+    * for every file it creates (no native Hadoop library), paid per
+    * state store per trigger, so it grew with the store count. Values
+    * are partition-count-invariant (exact per-key aggregations /
+    * per-key processors), so results are bit-identical at any width.
+    * Session conf restored in `finally`; post-convergence consumers plan
+    * at the caller's width.
     */
   def withStreamParts[A](spark: SparkSession, inputBytes: Long)(body: => A): A = {
     if (inputBytes < 0) body

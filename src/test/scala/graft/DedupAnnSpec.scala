@@ -565,6 +565,21 @@ class DedupAnnSpec extends GraftTest {
     }
   }
 
+  test("connected components: convergence probe tells an empty frame from an overflowed sum") {
+    def sum(v: Long) = java.math.BigDecimal.valueOf(v)
+    // no label rows: nothing to propagate, whatever the (null) sum
+    assert(Dedup.labelSumConverged(null, 0L, null))
+    assert(Dedup.labelSumConverged(sum(5L), 0L, null))
+    // rows present but a null sum: the decimal sum overflowed, which the
+    // probe cannot judge — it must throw, not read it as converged
+    val e = intercept[IllegalStateException](Dedup.labelSumConverged(sum(5L), 3L, null))
+    assert(e.getMessage.contains("overflow"))
+    // a non-null sum converges only when it equals the previous round's
+    assert(!Dedup.labelSumConverged(null, 3L, sum(5L)), "first round has nothing to compare")
+    assert(!Dedup.labelSumConverged(sum(6L), 3L, sum(5L)))
+    assert(Dedup.labelSumConverged(sum(5L), 3L, new java.math.BigDecimal("5.0")))
+  }
+
   test("connected components: session checkpoint dir auto-enables reliable mode; conflicts throw") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-autockpt-").toFile
