@@ -68,69 +68,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark: SparkSession = Graft.session()
 
-    // (VERDICT r12 #2) INTERLEAVED-PAIR mode: with
-    // SPARK_GRAFT_BENCH_LOCKSTEP=<dir> and SPARK_GRAFT_BENCH_ROLE=A|B,
-    // two Bench JVMs alternate per-query turns through a file baton —
-    // A times query i, hands off, B times query i, hands back. Both
-    // sides of the reproducibility pair then sample the SAME wall-clock
-    // windows, so the box-level drift two SEQUENTIAL full runs
-    // maximally expose (BENCH_DRIFT_r12.md: totals, worst queries and
-    // the calibration sentinel all moved together between runs) cancels
-    // in the per-query ratio instead of landing in it. Only one JVM
-    // computes at a time (the other polls a tiny file), so the timed
-    // sections see an uncontended box, same as a sequential run.
-    val lockstepDir = sys.env.get("SPARK_GRAFT_BENCH_LOCKSTEP")
-    val role = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROLE", "A")
-    require(role == "A" || role == "B", s"SPARK_GRAFT_BENCH_ROLE must be A or B: $role")
-    // Rendezvous before turn 0 so neither side's timed work overlaps the
-    // other's JVM/session boot (class loading steals CPU).
-    lazy val rendezvous: Unit = lockstepDir.foreach { dir =>
-      val d = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(d)
-      java.nio.file.Files.write(d.resolve(s"ready-$role"), Array.emptyByteArray)
-      val t0 = System.currentTimeMillis()
-      while (!java.nio.file.Files.exists(d.resolve("ready-A")) ||
-             !java.nio.file.Files.exists(d.resolve("ready-B"))) {
-        require(System.currentTimeMillis() - t0 < 600000L, "lockstep peer never arrived")
-        Thread.sleep(10)
-      }
-    }
-    def withTurn[A](seq: Int)(body: => A): A = lockstepDir match {
-      case None => body
-      case Some(dir) =>
-        rendezvous
-        val mySlot = 2 * seq + (if (role == "A") 0 else 1)
-        val baton = java.nio.file.Paths.get(dir, "baton")
-        val t0 = System.currentTimeMillis()
-        // tolerate torn reads: Files.write is NOT atomic, so a poll can
-        // observe an empty/partial file mid-write — treat it as "not my
-        // turn yet" and re-poll (a naive .toInt here killed role B with
-        // NumberFormatException in the first pair run)
-        def current: Int =
-          try {
-            if (java.nio.file.Files.exists(baton))
-              new String(java.nio.file.Files.readAllBytes(baton), "UTF-8").trim.toInt
-            else 0
-          } catch { case _: Exception => -1 }
-        while (current < mySlot) {
-          // a turn can legitimately take minutes (streaming twins); the
-          // bound only catches a dead peer
-          require(System.currentTimeMillis() - t0 < 1200000L,
-            s"lockstep baton stuck below slot $mySlot")
-          Thread.sleep(10)
-        }
-        try body
-        finally {
-          // atomic hand-off: write-temp + ATOMIC_MOVE so the peer can
-          // never read a torn value
-          val tmp = java.nio.file.Paths.get(dir, s"baton-$role.tmp")
-          java.nio.file.Files.write(tmp, String.valueOf(mySlot + 1).getBytes("UTF-8"))
-          java.nio.file.Files.move(tmp, baton,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-    }
-
     def jsonEscape(s: String): String = s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -155,8 +92,8 @@ object Bench {
     // Environment-sanity sentinel: time a fixed calibration probe before
     // and after the run. On a healthy box the two agree; on a contended
     // box they drift, and we stamp the artifact instead of letting a bad
-    // measurement window masquerade as an engine regression (BENCH_r04
-    // was 20-100x inflated by exactly this).
+    // measurement window masquerade as an engine regression (a contended
+    // window once inflated a whole run 20-100x).
     val calibrationQuery = headline.head // q1_agg: scan-agg, ~0.5s warm
     // min-of-2, same as the timed queries: a single probe right after
     // warmup still carries residual JIT/codegen cost and reads ~2x the
@@ -168,43 +105,35 @@ object Bench {
       case _                    => Double.NaN
     }
 
-    // turn 0: warmup + start sentinel (inside the lockstep so neither
-    // side's timed turns overlap the other's warmup compute)
-    val calStart = withTurn(0) {
-      // touch every corpus table once (untimed) so first timed runs measure
-      // compute, not cold page cache — an OS-cold read of the large tables
-      // once inflated shuffle-heavy queries ~10x on this box
-      Graft.tableNames.foreach { t =>
-        try Graft.table(spark, sfDir, t).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-      }
-      // JVM/codegen warmup on the first headline query (untimed)
-      runOnce(headline.head)
-      calibrate()
+    // touch every corpus table once (untimed) so first timed runs measure
+    // compute, not cold page cache — an OS-cold read of the large tables
+    // once inflated shuffle-heavy queries ~10x on this box
+    Graft.tableNames.foreach { t =>
+      try Graft.table(spark, sfDir, t).write.mode("overwrite").format("noop").save()
+      catch { case _: Throwable => () }
     }
+    // JVM/codegen warmup on the first headline query (untimed)
+    runOnce(headline.head)
+    val calStart = calibrate()
 
     // per query: one UNTIMED warm pass, then timed reps until the
-    // measurement CONVERGES — the two best reps agree within 25% — or a
-    // rep cap of 5. The warm pass absorbs the one-off costs repetition
+    // measurement CONVERGES — the two best reps agree within 20% — or a
+    // rep cap of 8. The warm pass absorbs the one-off costs repetition
     // alone cannot: whole-stage/expression codegen compiles for this
     // query's kernels, broadcast builds, and the first cold read of any
-    // parquet the corpus warm-up loop missed (the r5 certified artifact
-    // showed ann_brute at 11.28s where a clean re-run measured 0.23s).
-    // Convergence (not a duration threshold) decides extra reps: the old
-    // policy skipped them whenever min-of-2 exceeded 0.5s, so a pair of
-    // cold ~2.4s reps of txt_unigram_lp could ship as the artifact while
-    // the warm cost was 0.76s (the r9 driver/builder 3x disagreement).
-    // A stable expensive query still pays exactly 2 reps; only
-    // still-flapping measurements buy more, and the cap bounds the cost.
-    // Tiny queries additionally get a MINIMUM of 4 timed reps (VERDICT
-    // r11 #4): for sub-quarter-second queries the dominant variance is
-    // scheduler/GC jitter of the same magnitude as the query itself, so
-    // a converged min-of-2 from one run and a converged min-of-2 from
-    // another can still disagree 1.5x (the r11 builder pair's
-    // pp_histogram). min-of-4 tightens the sampled minimum's tail at a
-    // cost of <1s across the whole suite.
-    // streaming entries run LAST as their own segment (VERDICT r17 #1);
-    // both lockstep JVMs compute the same order, so turns stay aligned
+    // parquet the corpus warm-up loop missed (ann_brute once timed
+    // 11.28s cold against 0.23s warm). Convergence (not a duration
+    // threshold) decides extra reps: skipping them whenever min-of-2
+    // exceeded 0.5s let a pair of cold ~2.4s reps of txt_unigram_lp
+    // stand for a 0.76s warm cost. A stable expensive query still pays
+    // exactly 2 reps; only still-flapping measurements buy more, and the
+    // cap bounds the cost.
+    // Queries under 1s additionally get a MINIMUM of 4 timed reps: there
+    // scheduler/GC jitter is the same order as the query itself, so two
+    // runs' converged min-of-2 still disagreed up to 1.5x (pp_histogram,
+    // ann_quantized at 0.58/0.88s). min-of-4 tightens the sampled
+    // minimum's tail at ~30s across the suite.
+    // streaming entries run LAST as their own segment
     val activeAll = headline.filter(SparkEntry.queries.contains)
     val active = activeAll.filterNot(streamingEntries) ++
       activeAll.filter(streamingEntries)
@@ -238,24 +167,16 @@ object Bench {
     }
     val streamBatches =
       scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Long, Long)]]
-    // Segmented sentinel series (VERDICT r16 #6): two rounds in a row
-    // the solo window degraded MID-RUN, and a start/end-only calibration
-    // pair can't localize when — so the q1_agg probe re-runs every ~20
-    // queries (inside the lockstep turn, so pair mode stays uncontended)
-    // and the artifact carries the whole series for per-segment
-    // correction in BENCH_DRIFT. Cost: ~2 probes × n/20 ≈ a few seconds.
+    // Segmented sentinel series (VERDICT r16 #6): the box has degraded
+    // MID-RUN, and a start/end-only calibration pair can't localize
+    // when — so the q1_agg probe re-runs every ~20 queries and the
+    // artifact carries the whole series for per-segment drift
+    // correction. Cost: ~2 probes × n/20 ≈ a few seconds.
     val sentinelEvery = 20
     val sentinelSeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
     val results: Seq[(String, Either[String, Double])] =
-      active.zipWithIndex.map { case (n, qi) => withTurn(1 + qi) {
+      active.zipWithIndex.map { case (n, qi) =>
         runOnce(n) // warm (untimed): discard result, keep only hard errors below
-        // (r12) the min-reps band widened 0.25s -> 1.0s and convergence
-        // tightened 1.25 -> 1.20: the r12 builder pair's worst ratio was
-        // ann_quantized (0.58/0.88s) — a MID-range query whose two runs
-        // each converged at 2 reps yet disagreed 1.51x across runs; the
-        // sampled minimum of 2 reps has a fat tail anywhere scheduler/GC
-        // jitter is the same order as the query. Cost: ~2 extra reps for
-        // the 0.25-1s band, ~30s across the suite.
         val maxReps = 8
         val tinySec = 1.0
         val tinyMinReps = 4
@@ -289,9 +210,9 @@ object Bench {
           sentinelSeries += ((qi, calibrate()))
         if (times.nonEmpty) n -> Right(times.min)
         else n -> Left(lastErr.getOrElse("no successful rep"))
-      }}
+      }
 
-    val calEnd = withTurn(1 + active.size)(calibrate())
+    val calEnd = calibrate()
     // DIRECTIONAL ratio: end/start. The JVM keeps JIT-warming through the
     // run, so end < start is normal on a healthy box (measured ~0.5x) and
     // must not trip the sentinel; contention arriving mid-run makes the
@@ -331,21 +252,16 @@ object Bench {
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$es,"degraded":$degraded,"calibration":$cal,"sentinel_series":$series,"stream_segment":$seg,"streaming_batches":$sb,"sf":"$sfDir"}"""
     println(line)
-    // ALSO persist the result whole (r14, verdict ask #3): the r13
-    // driver artifact shipped `parsed: null` with a truncated stdout
-    // tail (only 83/118 per-query timings recoverable), so cross-round
-    // deltas broke. A file write cannot truncate mid-object; atomic
-    // rename so a concurrently-reading driver never sees a partial
-    // file. Override the path with SPARK_GRAFT_BENCH_OUT; best-effort
-    // (an unwritable path must not fail the bench itself).
-    // working-directory-relative default (ADVICE r14: an absolute
-    // /root/repo path baked into library code silently no-ops on any
-    // other checkout), and a logged failure instead of a silent one
+    // ALSO persist the result whole: a reader of a truncated stdout
+    // tail once recovered only 83 of 118 per-query timings. A file
+    // write cannot truncate mid-object; atomic rename so a concurrent
+    // reader never sees a partial file. Override the path with
+    // SPARK_GRAFT_BENCH_OUT; best-effort (an unwritable path must not
+    // fail the bench itself, so a failure is logged, not thrown). The
+    // default is relative to the working directory, so it works in any
+    // checkout.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      // interleaved-pair JVMs must not clobber each other's artifact
-      new java.io.File(
-        if (lockstepDir.isDefined) s"BENCH_LAST.$role.json"
-        else "BENCH_LAST.json").getAbsolutePath)
+      new java.io.File("BENCH_LAST.json").getAbsolutePath)
     try {
       val target = java.nio.file.Paths.get(outPath)
       val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")

@@ -2,8 +2,9 @@ package graft
 
 /** Temp-directory plumbing shared by queries, ScaleCheck/StreamScale and
   * the tests: scratch dirs swept recursively at JVM exit, and recursive
-  * delete. One copy — a fix to the delete semantics must not need
-  * chasing through clones.
+  * delete. The one place `src/main` makes a temp dir (ContractSpec pins
+  * it; ScaleCheck and StreamScale delete their own) — a fix to the
+  * delete semantics must not need chasing through clones.
   */
 object ProbeUtil {
 

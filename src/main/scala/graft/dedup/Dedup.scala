@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.{CdcChunks, GramHashes, InterSizeSorted, MinHashSig, MinHashSigSize, ShingleHashes, SimHashSig, TextFunctions}
+import graft.graph.RoundLoop
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
@@ -1024,9 +1025,6 @@ object Dedup {
         case None => sc.setCheckpointDir(d)
       }
     }
-    // auto-reliable: a session that configured a checkpoint store gets
-    // executor-loss-proof rounds without opting in per call
-    val reliable = checkpointDir.isDefined || existingDir.isDefined
     // `pairs` is referenced twice (the undirected union swaps the
     // columns — two different projections, so ReuseExchange cannot
     // deduplicate them) and is typically the LAZY tail of a whole
@@ -1045,63 +1043,25 @@ object Dedup {
     // references the previous round's frame multiple times, so WITHOUT
     // lineage truncation the LOGICAL plan grows ~4^rounds and the
     // analyzer OOMs long before the data does (measured: 4.7k edges blew
-    // an 8 GB driver at round ~15). Checkpointing replaces the plan with
-    // the materialized partitions, keeping every round's plan constant-
-    // size.
-    //
-    // Superseded rounds are released EXPLICITLY via their checkpointed
-    // RDDs (unpersist + reliable-file delete) — relying on GC +
-    // ContextCleaner would hold O(rounds) full label copies in executor
-    // storage / the checkpoint store mid-algorithm.
+    // an 8 GB driver at round ~15). Superseded rounds are released
+    // explicitly, after the probe job that materializes their successor.
     // LAZY local checkpoints (r18 optimization, guide §1.2): eager
     // materialization cost one scheduled job per checkpoint — 3 jobs per
     // round (stepped, next, convergence probe) of mostly scheduling
-    // overhead on small-to-moderate pair sets. localCheckpoint(eager =
-    // false) is persist-backed, so each round's stepped/next materialize
-    // AS PART OF the round's convergence-probe job (1 job per round),
-    // computed exactly once (block-level locking serves the self-join's
-    // second reference from the cache) — lineage truncation and the
-    // release contract are unchanged. Reliable mode stays EAGER: an
-    // un-persisted RDD.checkpoint() re-runs the computation at
+    // overhead on small-to-moderate pair sets. Lazy, each round's
+    // stepped/next materialize AS PART OF the round's convergence-probe
+    // job (1 job per round), computed exactly once (block-level locking
+    // serves the self-join's second reference from the cache). A session
+    // with a checkpoint dir (reliable mode, see the scaladoc) stays EAGER:
+    // an un-persisted RDD.checkpoint() re-runs the computation at
     // materialization, and executor-loss-safety is the mode's point.
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint(eager = false)
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-    def release(df: DataFrame): Unit = ckptRdd(df).foreach { r =>
-      r.unpersist(blocking = false)
-      if (reliable) r.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-      }
-    }
-    // Loop parallelism proportional to the measured edge volume (~64k
-    // edges per reducer), clamped at the session's configured width: a
-    // 100 TB pair set keeps every reducer, while a small candidate graph
-    // stops paying (width × stages × rounds) task-scheduling overhead —
-    // the checkpoint boundaries defeat AQE's cross-round coalescing, so
-    // the width must be chosen here. The count also forces the edge
-    // persist ONCE, before round-1 plans would otherwise race to build
-    // it twice. Session-conf override, restored in `finally` (the
-    // returned frame is checkpointed, so downstream consumers plan at
-    // the caller's width).
+    // The loop width is sized to the edge count (see [[RoundLoop]]);
+    // the count also forces the edge persist ONCE, before round-1 plans
+    // would otherwise race to build it twice.
     val nEdges = edges.count()
     p.unpersist(blocking = false) // edges are materialized; the pair cache is done
-    val conf = pairs.sparkSession.conf
-    val confParts = conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L, math.min(confParts.toLong, nEdges / 65536L + 1L))
-    conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // At loopParts == 1 there is nothing for AQE to adapt (no partitions
-    // to coalesce, no skew to split) and its stage-by-stage re-planning
-    // adds scheduling latency to every round job — disable it for the
-    // loop, restore after (r18 optimization). Any loop wider than one
-    // partition keeps AQE: that is the regime where its coalescing and
-    // skew handling earn their cost.
-    val confAqe = conf.get("spark.sql.adaptive.enabled")
-    if (loopParts == 1L) conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try RoundLoop(pairs.sparkSession, nEdges, eagerLocal = false) { loop =>
+    import loop.{checkpoint => ckpt, release}
     var labels = ckpt(edges.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node")))
     var converged = false
@@ -1163,12 +1123,8 @@ object Dedup {
       prevSum = sumNow
       i += 1
     }
-    edges.unpersist()
     labels
-    } finally {
-      conf.set("spark.sql.shuffle.partitions", confParts)
-      conf.set("spark.sql.adaptive.enabled", confAqe)
-    }
+    } finally edges.unpersist()
   }
 
   /** The convergence decision of [[connectedComponents]]' label-sum probe:

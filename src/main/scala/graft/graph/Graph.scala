@@ -77,9 +77,7 @@ object Graph {
       .persist(MEMORY_AND_DISK)
     val nEdges = e.count() // force once, before round-1 plans race to build it twice
     val base = nodes.select(col("node")).withColumn("tp", lit(teleport))
-    withLoopParallelism(e.sparkSession, nEdges) {
-      iterate(e, base, iterations, microScale, damping)
-    }
+    iterate(e, nEdges, base, iterations, microScale, damping)
   }
 
   /** Personalized PageRank (the crawl-frontier / seed-quality variant:
@@ -113,45 +111,12 @@ object Graph {
       .join(distinctSeeds.withColumn("_s", lit(1)), Seq("node"), "left")
       .select(col("node"),
         when(col("_s").isNotNull, lit(perSeed)).otherwise(lit(0L)).as("tp"))
-    withLoopParallelism(e.sparkSession, nEdges) {
-      iterate(e, base, iterations, microScale, damping)
-    }
-  }
-
-  /** Loop parallelism proportional to the measured edge volume — the
-    * [[graft.dedup.Dedup.connectedComponents]] sizing discipline applied
-    * to the K-round graph loops (r18 optimization, guide §2.2): each
-    * round's joins/aggregations are separated from the next by a
-    * checkpoint, which defeats AQE's coalescing, so the loop width must
-    * be chosen here. ~64k edges per reducer, clamped at the session's
-    * configured width — a 100 TB edge list keeps every reducer, while a
-    * small graph stops paying (width × stages × rounds) task-scheduling
-    * overhead (measured at sf0.1: the four g_* entries each run ~2x
-    * faster with 1 loop partition than with 32; ranks are exact integer
-    * arithmetic, so the result is bit-identical at any width). The
-    * session conf is restored in `finally`; the returned frame is
-    * checkpointed, so downstream consumers plan at the caller's width.
-    */
-  private def withLoopParallelism[A](spark: org.apache.spark.sql.SparkSession,
-                                     nEdges: Long)(body: => A): A = {
-    val conf = spark.conf
-    val confParts = conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L, math.min(confParts.toLong, nEdges / 65536L + 1L))
-    conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // at 1 loop partition there is nothing for AQE to adapt; its
-    // stage-by-stage re-planning only adds latency to every round job —
-    // the connectedComponents rule (Dedup.scala), shared here
-    val confAqe = conf.get("spark.sql.adaptive.enabled")
-    if (loopParts == 1L) conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally {
-      conf.set("spark.sql.shuffle.partitions", confParts)
-      conf.set("spark.sql.adaptive.enabled", confAqe)
-    }
+    iterate(e, nEdges, base, iterations, microScale, damping)
   }
 
   /** The shared checkpointed power-iteration loop over a degree-
-    * annotated PERSISTED edge list and a (node, tp) teleport frame.
+    * annotated PERSISTED edge list of `nEdges` edges (which sizes the
+    * loop width, see [[RoundLoop]]) and a (node, tp) teleport frame.
     *
     * Rounds are checkpointed every `ckptEvery = 8` iterations plus once
     * at the END (r18 optimization, guide §1.2 "remove unnecessary
@@ -165,39 +130,15 @@ object Graph {
     * constant instead of 1. The final round is always materialized so
     * the edge unpersist below can never force a re-derivation.
     */
-  private def iterate(e: DataFrame, base: DataFrame, iterations: Int,
-                      microScale: Long, damping: Int): DataFrame = {
-    val sc = base.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach { r =>
-        r.unpersist(blocking = false)
-        if (reliable) r.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-        }
-      }
-    val ckptEvery = 8
-    var ranks = base.select(col("node"), lit(microScale).as("r"))
-    var prev: Option[DataFrame] = None
-    try {
-      for (i <- 1 to iterations) {
-        val next = pageRankRound(e, base, ranks, damping)
-        ranks =
-          if (i % ckptEvery == 0 || i == iterations) {
-            val materialized = ckpt(next)
-            prev.foreach(release)
-            prev = Some(materialized)
-            materialized
-          } else next
-      }
+  private def iterate(e: DataFrame, nEdges: Long, base: DataFrame, iterations: Int,
+                      microScale: Long, damping: Int): DataFrame =
+    try RoundLoop(e.sparkSession, nEdges, eagerLocal = true) { loop =>
+      var ranks = base.select(col("node"), lit(microScale).as("r"))
+      for (i <- 1 to iterations)
+        ranks = loop.round(i, i == iterations, ckptEvery = 8,
+          pageRankRound(e, base, ranks, damping))
       ranks.select(col("node"), col("r").as("rank_micro"))
     } finally e.unpersist(blocking = false)
-  }
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007,
     * the DETERMINISTIC variant: no random visit order, no random
@@ -224,31 +165,16 @@ object Graph {
       .persist(MEMORY_AND_DISK)
     val nEdges = und.count() // force once, before round-1 plans race to build it twice
     val base = nodes.select(col("node"))
-    val sc = base.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach { r =>
-        r.unpersist(blocking = false)
-        if (reliable) r.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-        }
-      }
     // labels is referenced TWICE per round (the neighbor join and the
     // zero-fill join), so an un-checkpointed round would RE-EXECUTE the
     // previous round's work once per reference — measured at sf0.1,
     // ckptEvery = 2 made g_lpa ~25% SLOWER (1.5 → 1.9 s; the duplicated
     // recompute costs more than the saved materialization), unlike
     // pageRank's single-reference round. Per-round checkpointing is the
-    // right call here; kept at 1 deliberately (r18 optimization audit).
-    val ckptEvery = 1
-    var labels = base.select(col("node"), col("node").as("label"))
-    var prev: Option[DataFrame] = None
-    try withLoopParallelism(base.sparkSession, nEdges) {
+    // right call here; ckptEvery stays 1 deliberately (r18 optimization
+    // audit).
+    try RoundLoop(base.sparkSession, nEdges, eagerLocal = true) { loop =>
+      var labels = base.select(col("node"), col("node").as("label"))
       for (i <- 1 to iterations) {
         // argmax by (count, min label): max(struct(c, -label)) picks the
         // highest count, then the LEAST label (ids are non-negative, so
@@ -260,13 +186,7 @@ object Graph {
           .select(col("a").as("node"), (-col("w.nl")).as("winner"))
         val next = labels.join(win, Seq("node"), "left")
           .select(col("node"), coalesce(col("winner"), col("label")).as("label"))
-        labels =
-          if (i % ckptEvery == 0 || i == iterations) {
-            val materialized = ckpt(next)
-            prev.foreach(release)
-            prev = Some(materialized)
-            materialized
-          } else next
+        labels = loop.round(i, i == iterations, ckptEvery = 1, next)
       }
       labels.select(col("node"), col("label").as("community"))
     } finally und.unpersist(blocking = false)

@@ -1,7 +1,7 @@
 package graft.queries
 
-import java.nio.file.Files
 import graft.Graft
+import graft.ProbeUtil.scratchDir
 import graft.operators.{Aggregates, Joins, Profiling, StreamOps, TableView, Windows}
 import graft.sources.Sources
 import graft.plans.Topology
@@ -21,20 +21,17 @@ object CoreQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toAbsolutePath.toString
-
   // Session-cached SETUP writes for queries whose operator-under-test is
   // a read path over a specially laid-out table (partition pruning,
   // bucketed co-location). Bench runs a query several times per process;
   // rewriting the layout each rep times dirty-page write variance instead
-  // of the operator (BENCH_BUILDER_r9 run-to-run flap on
-  // s_partition_prune was 2.67x, entirely in the rewrite). Keyed by
-  // (tag, sfDir) so different corpora never alias.
+  // of the operator (s_partition_prune flapped 2.67x run to run, entirely
+  // in the rewrite). Keyed by (tag, sfDir) so different corpora never
+  // alias.
   private val setupDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def cachedSetup(tag: String, d: String)(build: String => Unit): String =
     setupDirs.computeIfAbsent(s"$tag|$d", { _ =>
-      val path = tmp(tag)
+      val path = scratchDir(tag)
       build(path)
       path
     })
@@ -70,7 +67,7 @@ object CoreQueries {
           col("ts_us").as("last_ts_us"))),
 
     "s3_stream_sink" -> ((s, d) => {
-      val out = tmp("sink")
+      val out = scratchDir("sink")
       Graft.eventsStream(s, d).select("key", "value", "ts_us").to(out)
       s.read.parquet(out)
     }),
@@ -82,7 +79,7 @@ object CoreQueries {
         .build),
 
     "s5_raw_sink" -> ((s, d) => {
-      val out = tmp("rawsink")
+      val out = scratchDir("rawsink")
       new Topology()
         .addSource("events-source", Graft.eventsStream(s, d))
         .addProcessor("upper", _.mapValues(upper))
@@ -98,7 +95,7 @@ object CoreQueries {
     }),
 
     "s7_file_sink" -> ((s, d) => {
-      val out = tmp("filesink")
+      val out = scratchDir("filesink")
       Graft.eventsStream(s, d)
         .select(concat_ws("|", col("event_id"), col("key"), col("value")).as("value"))
         .write.mode("overwrite").text(out)
@@ -116,7 +113,7 @@ object CoreQueries {
         ((col("id") * 37) % 100).as("score"))),
 
     "s9_csv_source" -> ((s, d) => {
-      val out = tmp("csv")
+      val out = scratchDir("csv")
       Graft.region(s, d).write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema(Graft.region(s, d).schema).option("header", "true").csv(out)
     }),
@@ -139,7 +136,7 @@ object CoreQueries {
       // serde core exercised (AvroSerializer/AvroDeserializer) is the
       // same either way.
       val avroFormat = "org.apache.spark.sql.avro.AvroFileFormat"
-      val out = tmp("avro")
+      val out = scratchDir("avro")
       val region = Graft.region(s, d)
       region.write.mode("overwrite").format(avroFormat).save(out)
       s.read.format(avroFormat).schema(region.schema).load(out)
@@ -154,7 +151,7 @@ object CoreQueries {
       // resolution fills the default for old files. This is how a 100 TB
       // Avro lake absorbs column adds without rewriting history.
       val avroFormat = "org.apache.spark.sql.avro.AvroFileFormat"
-      val path = tmp("avroevo")
+      val path = scratchDir("avroevo")
       val docs = Graft.documents(s, d)
       docs.where(pmod(col("doc_id"), lit(2)) === 0)
         .select("doc_id", "lang")
@@ -184,7 +181,7 @@ object CoreQueries {
       // granularity, never a silently-wrong row. Oracle states the
       // surviving set exactly: everything but shard 2.
       val avroFormat = "org.apache.spark.sql.avro.AvroFileFormat"
-      val path = tmp("avrocorrupt")
+      val path = scratchDir("avrocorrupt")
       val docs = Graft.documents(s, d).select("doc_id", "lang")
       (0 until 4).foreach { i =>
         docs.where(pmod(col("doc_id"), lit(4)) === i)
@@ -213,7 +210,7 @@ object CoreQueries {
       // (same no-inference-scan rule as s_jsonl), identity vs the plain
       // table. Spark's vectorized ORC reader gets the same
       // pushdown/pruning treatment as parquet — pinned in SourcesSpec.
-      val out = tmp("orc")
+      val out = scratchDir("orc")
       val docs = Graft.documents(s, d)
       docs.write.mode("overwrite").orc(out)
       s.read.schema(docs.schema).orc(out)
@@ -227,7 +224,7 @@ object CoreQueries {
       // multi-dimensional filters; single-column sort helps only its
       // own column). Content identity is the oracle; the bounding-box
       // property is pinned in SourcesSpec.
-      val out = tmp("zorder")
+      val out = scratchDir("zorder")
       val ev = Graft.events(s, d)
         .select("event_id", "user_id", "ts_us", "event_type", "value")
       Sources.writeZOrdered(ev, out, "user_id", "ts_us")
@@ -245,7 +242,7 @@ object CoreQueries {
       // text), the garbage line routes to the dead-letter filter (T2's
       // log-and-continue at the format boundary, like s_corrupt_skip
       // for parquet shards).
-      val out = tmp("jsonl")
+      val out = scratchDir("jsonl")
       val docs = Graft.documents(s, d)
       docs.write.mode("overwrite").json(out)
       java.nio.file.Files.write(
@@ -267,7 +264,7 @@ object CoreQueries {
       // text shard splits at block boundaries, so read parallelism is
       // independent of how the corpus was sharded — the safer default
       // for text corpora whose shard sizing the reader doesn't control.
-      val out = tmp("jsonlbz2")
+      val out = scratchDir("jsonlbz2")
       val docs = Graft.documents(s, d)
       docs.repartition(2).write.mode("overwrite")
         .option("compression", "bzip2").json(out)
@@ -287,7 +284,7 @@ object CoreQueries {
       // decode to per-asset pixel sums the oracle replays from the
       // pixel formula. Scale shape: shard-parallel read, scan-local
       // decode, one broadcastable join keyed by doc_id.
-      val out = tmp("wds")
+      val out = scratchDir("wds")
       val docs = Graft.documents(s, d)
       val key = format_string("%012d", col("doc_id"))
       val jsonRows = docs.select(key.as("key"), lit("json").as("ext"),
@@ -315,7 +312,7 @@ object CoreQueries {
       // parsed and both member types processed per micro-batch —
       // stateless append, so the converged result equals the batch
       // read and shares s_webdataset's oracle verbatim.
-      val out = tmp("wdss")
+      val out = scratchDir("wdss")
       val docs = Graft.documents(s, d)
       val key = format_string("%012d", col("doc_id"))
       val jsonRows = docs.select(key.as("key"), lit("json").as("ext"),
@@ -364,7 +361,7 @@ object CoreQueries {
       // with the explicit schema → identity vs the plain table. Like
       // gzip text, a shard is one read task (non-splittable framing) —
       // the writer controls parallelism, stated in the write API.
-      val out = tmp("tfrecord")
+      val out = scratchDir("tfrecord")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeTfRecords(
         docs.select(to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
@@ -385,7 +382,7 @@ object CoreQueries {
       // yields a silently-wrong payload), then from_json with the
       // explicit schema. Stateless append, so the converged result
       // equals the batch read and shares s_tfrecord's oracle verbatim.
-      val out = tmp("tfrecords")
+      val out = scratchDir("tfrecords")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeTfRecords(
         docs.select(to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
@@ -414,7 +411,7 @@ object CoreQueries {
       // the whole shard quarantines). The permissive reader surfaces
       // both losses through the observe metric and can never yield a
       // garbage member; the oracle states the exact surviving set.
-      val out = tmp("wdscorrupt")
+      val out = scratchDir("wdscorrupt")
       val docs = Graft.documents(s, d)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       (0 until 4).foreach { i =>
@@ -462,7 +459,7 @@ object CoreQueries {
       // SourcesSpec): documents → 4 .arrows shards → shard-parallel
       // streaming read (schema validated, one batch in memory) →
       // identity vs the plain table.
-      val out = tmp("arrowstream")
+      val out = scratchDir("arrowstream")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeArrowStream(docs, out, shards = 4)
       graft.sources.Sources.readArrowStream(s, out, docs.schema)
@@ -474,7 +471,7 @@ object CoreQueries {
       // mmap-able form pyarrow.ipc.open_file random-accesses
       // (cross-validated in SourcesSpec). Read back through the same
       // schema-validated streaming walk.
-      val out = tmp("arrowfile")
+      val out = scratchDir("arrowfile")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeArrowFile(docs, out, shards = 4)
       graft.sources.Sources.readArrowFile(s, out, docs.schema)
@@ -487,7 +484,7 @@ object CoreQueries {
       // child buffer untouched, so the roundtrip is bit-exact; the
       // harness-facing projection explodes to scalars (the
       // s_tfexample_embeddings device — pandas cannot hash raw arrays).
-      val out = tmp("arrowemb")
+      val out = scratchDir("arrowemb")
       val emb = Graft.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
       graft.sources.Sources.writeArrowStream(emb, out, shards = 4)
@@ -508,7 +505,7 @@ object CoreQueries {
       // all-or-nothing (no record framing), so shard count = read
       // parallelism AND peak writer-task memory — the non-splittable
       // container discipline TFRecord/tar already follow.
-      val out = tmp("safetensors")
+      val out = scratchDir("safetensors")
       val emb = Graft.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
       graft.sources.Safetensors.writeVectors(emb, out, "vec_id", "embedding", "label", shards = 4)
@@ -526,7 +523,7 @@ object CoreQueries {
       // CRC-verifying zip walk composed with the .npy header parser.
       // Float bits ride the LE buffer untouched; same exploded-scalar
       // projection and oracle as the other vector containers.
-      val out = tmp("npz")
+      val out = scratchDir("npz")
       val emb = Graft.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
       graft.sources.Npy.writeNpzVectors(emb, out, "vec_id", "embedding", "label", shards = 4)
@@ -545,7 +542,7 @@ object CoreQueries {
       // exactly: shard = vec_id % 4, row_idx = rank within shard.
       // Float bits ride the LE buffer untouched; exploded-scalar
       // projection like the other vector containers.
-      val out = tmp("npyshards")
+      val out = scratchDir("npyshards")
       val emb = Graft.embeddings(s, d)
       graft.sources.Npy.writeNpyShards(emb, out, "vec_id", "embedding", shards = 4)
       graft.sources.Npy.readNpyShards(s, out)
@@ -562,7 +559,7 @@ object CoreQueries {
       // no record framing — file == batch), shard index from the file
       // name. Stateless append — converged result equals the batch read
       // and shares s_npy's oracle.
-      val out = tmp("npystream")
+      val out = scratchDir("npystream")
       val emb = Graft.embeddings(s, d)
       graft.sources.Npy.writeNpyShards(emb, out, "vec_id", "embedding", shards = 4)
       import s.implicits._
@@ -590,7 +587,7 @@ object CoreQueries {
       // quarantines the WHOLE shard (zero rows for it); the strict dual
       // fails the task instead. Oracle states the surviving set
       // exactly: every shard but vec_id%4 == 2.
-      val out = tmp("npycorrupt")
+      val out = scratchDir("npycorrupt")
       val emb = Graft.embeddings(s, d)
       graft.sources.Npy.writeNpyShards(emb, out, "vec_id", "embedding", shards = 4)
       val victim = java.nio.file.Paths.get(s"$out/part-00002.npy")
@@ -614,7 +611,7 @@ object CoreQueries {
       // (a safetensors shard has no record framing — file == batch).
       // Stateless append — converged result equals the batch read,
       // shared oracle.
-      val out = tmp("ststream")
+      val out = scratchDir("ststream")
       val emb = Graft.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
       graft.sources.Safetensors.writeVectors(emb, out, "vec_id", "embedding", "label", shards = 4)
@@ -643,7 +640,7 @@ object CoreQueries {
       // quarantines the WHOLE shard and surfaces zero rows for it;
       // strict-read duals fail the task instead. Oracle states the
       // surviving set exactly: everything but vec_id%4 == 2.
-      val out = tmp("stcorrupt")
+      val out = scratchDir("stcorrupt")
       val emb = Graft.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
       (0 until 4).foreach { i =>
@@ -672,7 +669,7 @@ object CoreQueries {
       // binaryFile source one shard per micro-batch, each walked by the
       // SAME schema-validated batch reader. Stateless append —
       // converged result equals the batch read, shared oracle.
-      val out = tmp("arrowstreams")
+      val out = scratchDir("arrowstreams")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeArrowStream(docs, out, shards = 4)
       import s.implicits._
@@ -700,7 +697,7 @@ object CoreQueries {
       // parallelism = shard count (stream mode ignores the tail-resident
       // central directory, so a shard is one task — the writer's knob,
       // stated in the write API).
-      val out = tmp("zipshards")
+      val out = scratchDir("zipshards")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeZipShards(
         docs.select(format_string("%012d", col("doc_id")).as("key"),
@@ -719,7 +716,7 @@ object CoreQueries {
       // each archive walked by the SAME CRC-verifying member reader the
       // batch path uses, then from_json. Stateless append — converged
       // result equals the batch read and shares s_zipshards' oracle.
-      val out = tmp("zipshardss")
+      val out = scratchDir("zipshardss")
       val docs = Graft.documents(s, d)
       graft.sources.Sources.writeZipShards(
         docs.select(format_string("%012d", col("doc_id")).as("key"),
@@ -752,7 +749,7 @@ object CoreQueries {
       // that member, the class's max doc_id, must drop; complete
       // CRC-verified members survive; the loss rides the observe
       // metric. The oracle states the exact surviving set.
-      val out = tmp("zipcorrupt")
+      val out = scratchDir("zipcorrupt")
       val docs = Graft.documents(s, d)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       (0 until 3).foreach { i =>
@@ -828,7 +825,7 @@ object CoreQueries {
       // identity. Unknown fields skip by wire type (forward compat);
       // truncation throws. Scale shape: encode and decode are
       // partition-local scans; shards read one-task-per-shard.
-      val out = tmp("tfexample")
+      val out = scratchDir("tfexample")
       val docs = Graft.documents(s, d)
       import s.implicits._
       val payloads = docs.select("doc_id", "text", "lang", "source", "n_chars")
@@ -862,7 +859,7 @@ object CoreQueries {
       // observe metric, and can never yield a silently-wrong payload —
       // the reference's log-and-continue (T2) semantics on binary
       // shards. The oracle states the exact surviving set.
-      val out = tmp("tfrcorrupt")
+      val out = scratchDir("tfrcorrupt")
       val docs = Graft.documents(s, d)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       (0 until 4).foreach { i =>
@@ -895,7 +892,7 @@ object CoreQueries {
       // tf.Example list kind) — roundtripped to the identity. Float
       // bits pass through intBitsToFloat/putFloat untouched, so the
       // roundtrip is bit-exact, not approximately-equal.
-      val out = tmp("tfexemb")
+      val out = scratchDir("tfexemb")
       val emb = Graft.embeddings(s, d)
       import s.implicits._
       val payloads = emb.select("vec_id", "embedding", "label")
@@ -936,7 +933,7 @@ object CoreQueries {
       // oracle replays from the synthetic pixel formula (the
       // s_webdataset device). 100 TB shape: shard-parallel read,
       // scan-local decode, one hash aggregation.
-      val out = tmp("tfexmedia")
+      val out = scratchDir("tfexmedia")
       val docs = Graft.documents(s, d)
       import s.implicits._
       val payloads = docs.select("doc_id", "n_chars").as[(Long, Long)]
@@ -969,7 +966,7 @@ object CoreQueries {
       // transfers verbatim. Together with s_tfexample_media this pins
       // that the container layer is format-agnostic bytes (the
       // image/format feature, not the framing, selects the codec).
-      val out = tmp("tfexmjpg")
+      val out = scratchDir("tfexmjpg")
       val docs = Graft.documents(s, d)
       import s.implicits._
       val payloads = graft.multimodal.Multimodal.syntheticJpegAssets(docs)
@@ -999,7 +996,7 @@ object CoreQueries {
       // so the converged per-asset pixel sums equal the batch read and
       // share its oracle verbatim (the s_webdataset_streaming device
       // applied to the tf.Example container).
-      val out = tmp("tfexmstream")
+      val out = scratchDir("tfexmstream")
       val docs = Graft.documents(s, d)
       import s.implicits._
       val payloads = docs.select("doc_id", "n_chars").as[(Long, Long)]
@@ -1036,7 +1033,7 @@ object CoreQueries {
       // must reproduce the documents columns bit-exactly (UTF-8
       // BytesList roundtrip) and the image goes through the full PNG
       // decode to per-asset pixel sums the oracle replays.
-      val out = tmp("tfexmm")
+      val out = scratchDir("tfexmm")
       val docs = Graft.documents(s, d)
       import s.implicits._
       val payloads = docs.select("doc_id", "text", "lang", "n_chars")
@@ -1071,7 +1068,7 @@ object CoreQueries {
       // unlike gzip text, so a 100 TB corpus parallelizes by row group
       // regardless of shard sizing): write documents with
       // compression=zstd, read back, identity vs the plain table.
-      val out = tmp("zstd")
+      val out = scratchDir("zstd")
       val docs = Graft.documents(s, d)
       docs.write.mode("overwrite").option("compression", "zstd").parquet(out)
       s.read.schema(docs.schema).parquet(out)
@@ -1088,7 +1085,7 @@ object CoreQueries {
       // read returns exactly the oracle rows; SourcesSpec opens the
       // footer with parquet-mr and asserts the filter exists and
       // answers might-contain correctly on planted/absent ids.
-      val out = tmp("bloom")
+      val out = scratchDir("bloom")
       val docs = Graft.documents(s, d)
       docs.write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#doc_id", "true")
@@ -1107,7 +1104,7 @@ object CoreQueries {
       // controls (repartition before write; the 4-shard write here is
       // the miniature of the many-small-shards layout real corpora use).
       // Content identity vs the plain table is the oracle.
-      val out = tmp("jsonlgz")
+      val out = scratchDir("jsonlgz")
       val docs = Graft.documents(s, d)
       docs.repartition(4).write.mode("overwrite")
         .option("compression", "gzip").json(out)
@@ -1845,10 +1842,10 @@ object CoreQueries {
     // the whole job. The reference's log-and-continue policy (T2) at the
     // FILE level rather than the record level.
     "s_corrupt_skip" -> ((s, d) => {
-      val path = tmp("corrupt")
+      val path = scratchDir("corrupt")
       Graft.documents(s, d).select(col("doc_id"), col("lang"))
         .write.mode("overwrite").parquet(path)
-      Files.write(java.nio.file.Paths.get(path, "part-corrupt.parquet"),
+      java.nio.file.Files.write(java.nio.file.Paths.get(path, "part-corrupt.parquet"),
         "this is not a parquet file".getBytes("UTF-8"))
       s.read.option("ignoreCorruptFiles", "true").parquet(path)
         .select(col("doc_id"), col("lang"))
@@ -1859,7 +1856,7 @@ object CoreQueries {
     // mergeSchema reads old and new batches as the union shape with
     // nulls where a batch predates a column, no rewrite of history.
     "s_schema_evolution" -> ((s, d) => {
-      val path = tmp("evo")
+      val path = scratchDir("evo")
       val docs = Graft.documents(s, d)
       docs.where(pmod(col("doc_id"), lit(2)) === 0)
         .select("doc_id", "lang").write.mode("overwrite").parquet(s"$path/b1")

@@ -189,7 +189,11 @@ object MinHashOracleSql {
        SELECT doc_id, unnest(ths) AS sh FROM ($thList) WHERE len(ths) < 3"""
   }
 
-  /** (doc_id, sig) — the full signature replay as one SQL fragment. */
+  /** (doc_id, sig) — the full signature replay as one SQL fragment.
+    * Callers bind it as `sigs AS MATERIALIZED`: banding and both sides
+    * of the estimate join read `sigs`, and DuckDB otherwise inlines a
+    * CTE at each reference, replaying every signature once per read.
+    */
   private def sigSql(numHashes: Int): String = {
     val shingles = shinglesSql
     val coeffVals = graft.dedup.Dedup.minhashCoeffs(numHashes).zipWithIndex
@@ -241,7 +245,7 @@ object MinHashOracleSql {
   /** Oracle for `dd_minhash`: (a, b, est_jaccard). */
   def minhashPairs(threshold: Double = 0.5, numHashes: Int = 64, bands: Int = 16,
                    maxBucket: Int = 1000): String =
-    s"""WITH sigs AS (${sigSql(numHashes)}),
+    s"""WITH sigs AS MATERIALIZED (${sigSql(numHashes)}),
           banded AS (${bandSql(bands, numHashes / bands)}),
           capped AS (${cappedCte("banded", maxBucket)}),
           cand AS (${cappedSelfJoinPairs(maxBucket)})
@@ -252,7 +256,7 @@ object MinHashOracleSql {
     * as in [[graft.dedup.Dedup.crossMinhashPairs]]'s call site. */
   def minhashIncremental(threshold: Double = 0.5, numHashes: Int = 64, bands: Int = 16,
                          maxBucket: Int = 1000): String =
-    s"""WITH sigs AS (${sigSql(numHashes)}),
+    s"""WITH sigs AS MATERIALIZED (${sigSql(numHashes)}),
           banded AS (${bandSql(bands, numHashes / bands)}),
           bb AS (SELECT band, band_hash, doc AS batch_id FROM banded WHERE doc % 10 = 0),
           cb0 AS (SELECT doc, band, band_hash FROM banded WHERE doc % 10 <> 0),
@@ -273,7 +277,7 @@ object MinHashOracleSql {
   def containmentSketch(estThreshold: Double = 0.3, contThreshold: Double = 0.3,
                         numHashes: Int = 64, bands: Int = 16,
                         maxBucket: Int = 1000): String =
-    s"""WITH sigs AS (${sigSql(numHashes)}),
+    s"""WITH sigs AS MATERIALIZED (${sigSql(numHashes)}),
           sizes AS (SELECT doc_id, count(DISTINCT sh) AS nset FROM ($shinglesSql) GROUP BY doc_id),
           banded AS (${bandSql(bands, numHashes / bands)}),
           capped AS (${cappedCte("banded", maxBucket)}),
@@ -306,7 +310,7 @@ object MinHashOracleSql {
     * CTE) → keep canonical members only. */
   def lshResolve(threshold: Double = 0.5, numHashes: Int = 64, bands: Int = 16,
                  maxBucket: Int = 1000): String =
-    s"""WITH RECURSIVE sigs AS (${sigSql(numHashes)}),
+    s"""WITH RECURSIVE sigs AS MATERIALIZED (${sigSql(numHashes)}),
           banded AS (${bandSql(bands, numHashes / bands)}),
           capped AS (${cappedCte("banded", maxBucket)}),
           cand AS (${cappedSelfJoinPairs(maxBucket)}),

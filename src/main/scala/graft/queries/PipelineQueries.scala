@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Graft
+import graft.ProbeUtil.scratchDir
 import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.functions.{NfcNormalize, NfkcCasefold, TextFunctions}
@@ -814,8 +815,7 @@ object PipelineQueries {
       // discipline) and every consumer is a columnar read-back. Parquet
       // roundtrips the signature longs exactly → identical oracle rows.
       val docs = Graft.documents(s, d)
-      val sigDir = java.nio.file.Files
-        .createTempDirectory("graft-lshsigs").toAbsolutePath.toString
+      val sigDir = scratchDir("lshsigs")
       Dedup.minhashSigs(docs, "doc_id", "text")
         .write.mode("overwrite").parquet(sigDir)
       val cand = Dedup.minhashPairsFromSigs(s.read.parquet(sigDir),
@@ -1414,8 +1414,7 @@ object PipelineQueries {
       // verbatim; the container read is what's new in front. 100 TB
       // shape: shard-parallel decode scan, one hash aggregation, one
       // anti-join against the (distinct, shuffling-once) corpus hashes.
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ppingtfex").toAbsolutePath.toString
+      val out = scratchDir("ppingtfex")
       val docs = Graft.documents(s, d)
       val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
@@ -1953,7 +1952,7 @@ object PipelineQueries {
       // oracle replay ann_ivf uses — a persistence bug breaks the hash.
       val emb = Graft.embeddings(s, d)
       val model = frozenModel("ivf16", d)(Ann.trainIvf(emb, "vec_id", "embedding", nLists = 16))
-      val dir = graft.ProbeUtil.scratchDir("ivf-artifact") // swept recursively at exit
+      val dir = scratchDir("ivf-artifact")
       graft.ann.ModelIO.saveIvf(s, model, dir)
       val loaded = graft.ann.ModelIO.loadIvf(s, dir)
       AnnOracleSql.register("ann_ivf_saved",
@@ -2352,7 +2351,7 @@ object PipelineQueries {
       // walk reads them back one-task-per-shard, one record in memory at
       // a time. Identity oracle over the page fixture. doc_id rides the
       // Target-URI (the crawl-pipeline convention: the URI IS the key).
-      val out = java.nio.file.Files.createTempDirectory("graft-warc").toAbsolutePath.toString
+      val out = scratchDir("warc")
       val h = syntheticHtml(Graft.documents(s, d))
         .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
           col("html").cast("binary").as("payload"))
@@ -2371,7 +2370,7 @@ object PipelineQueries {
       // (shares txt_html_extract's oracle verbatim). Scan shape: the
       // extraction regexes run inside the shard-read projection — no
       // extra exchange over the raw HTML.
-      val out = java.nio.file.Files.createTempDirectory("graft-warcwet").toAbsolutePath.toString
+      val out = scratchDir("warcwet")
       val h = syntheticHtml(Graft.documents(s, d))
         .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
           col("html").cast("binary").as("payload"))
@@ -2389,7 +2388,7 @@ object PipelineQueries {
       // an index can seek into), read back through one multi-member
       // decompressor feeding the same strict walk. Same identity oracle
       // as the plain container.
-      val out = java.nio.file.Files.createTempDirectory("graft-warcgz").toAbsolutePath.toString
+      val out = scratchDir("warcgz")
       val h = syntheticHtml(Graft.documents(s, d))
         .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
           col("html").cast("binary").as("payload"))
@@ -2406,7 +2405,7 @@ object PipelineQueries {
       // binaryFile source one shard per micro-batch, each walked by the
       // SAME strict record parser. Stateless append — converged result
       // equals the batch read, shared oracle.
-      val out = java.nio.file.Files.createTempDirectory("graft-warcstream").toAbsolutePath.toString
+      val out = scratchDir("warcstream")
       val h = syntheticHtml(Graft.documents(s, d))
         .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
           col("html").cast("binary").as("payload"))
@@ -2438,7 +2437,7 @@ object PipelineQueries {
       // verified record, reports the loss through the observe metric,
       // and can never surface a truncated payload. Oracle states the
       // exact surviving set.
-      val out = java.nio.file.Files.createTempDirectory("graft-warccorrupt").toAbsolutePath.toString
+      val out = scratchDir("warccorrupt")
       val docs = Graft.documents(s, d)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       (0 until 4).foreach { i =>

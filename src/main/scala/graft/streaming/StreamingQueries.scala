@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 import graft.Graft
+import graft.ProbeUtil.{deleteRecursively, scratchDir}
 import org.apache.spark.sql.{DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,34 +17,21 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQueries {
 
-  // Staged stream dirs fill with parquet files after creation, so
-  // File.deleteOnExit (empty-dir only) would leak them; sweep the full
-  // trees once at JVM exit instead. Idempotent: deleteIfExists, and the
-  // hook tolerates dirs already removed by a test's own cleanup.
-  private val stagedDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    stagedDirs.forEach(p => try deleteRecursively(p) catch { case _: Exception => () })
-  }))
-
-  private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-$tag")
-    stagedDirs.add(d)
-    d.toAbsolutePath.toString
-  }
+  /** Input bytes per state partition in [[withStreamParts]]. */
+  private val StreamPartBytes: Long = 32L << 20
 
   /** Scale-adaptive state partitioning for the stateful streaming twins
     * (r18 optimization, guide §2.2): a streaming stateful operator pins
     * its shuffle-partition count when the query starts — AQE is disabled
     * on streams, so the width must be sized HERE, to the stream's input
-    * volume, the same way [[graft.dedup.Dedup.connectedComponents]]
-    * sizes its loop. One state partition per
-    * `SPARK_GRAFT_STREAM_PART_BYTES` of input (default 32 MiB — the
-    * state-store-commit analog of a ~128 MB scan task given that state
-    * is a reduction of input), clamped to [1, session width]: a 100 TB
-    * ingest keeps the session's full width, while a bench-SF stream
-    * stops paying per-trigger commit overhead for 32 near-empty state
-    * stores. Measured (sf0.1 events, complete-mode (user,day) agg,
-    * before local checkpoints moved to
+    * volume, the same way [[graft.graph.RoundLoop]] sizes the
+    * iterative operators' loops. One state partition per [[StreamPartBytes]] of
+    * input (32 MiB — the state-store-commit analog of a ~128 MB scan
+    * task given that state is a reduction of input), clamped to
+    * [1, session width]: a 100 TB ingest keeps the session's full
+    * width, while a bench-SF stream stops paying per-trigger commit
+    * overhead for 32 near-empty state stores. Measured (sf0.1 events,
+    * complete-mode (user,day) agg, before local checkpoints moved to
     * [[LocalCheckpointFileManager]]): summed commitTimeMs was 10.8-51 s
     * at 32 stores vs 0.6 s at 8, and the trigger dropped 1.7-2.4 s →
     * 1.1 s; the same state on tmpfs was NOT faster. The cost was not
@@ -60,10 +48,7 @@ object StreamingQueries {
     else {
       val conf = spark.conf
       val prev = conf.get("spark.sql.shuffle.partitions")
-      val target = sys.env.getOrElse("SPARK_GRAFT_STREAM_PART_BYTES",
-        (32L << 20).toString).toLong
-      val parts = math.max(1L,
-        math.min(prev.toLong, inputBytes / math.max(1L, target) + 1L))
+      val parts = math.max(1L, math.min(prev.toLong, inputBytes / StreamPartBytes + 1L))
       conf.set("spark.sql.shuffle.partitions", parts.toString)
       try body
       finally conf.set("spark.sql.shuffle.partitions", prev)
@@ -112,7 +97,7 @@ object StreamingQueries {
     val streamDir =
       if (Files.isDirectory(path)) path
       else {
-        val staged = Paths.get(tmpDir(s"stream-$table"))
+        val staged = Paths.get(scratchDir(s"stream-$table"))
         val target = staged.resolve(s"$table.parquet")
         try Files.createLink(target, path)
         catch { case _: Exception => Files.copy(path, target) }
@@ -157,12 +142,12 @@ object StreamingQueries {
   def stageBatchedDir(spark: SparkSession, src: DataFrame,
                       batchOf: org.apache.spark.sql.Column,
                       tag: String): String = {
-    val batchDir = Paths.get(tmpDir(s"streamN-$tag"))
+    val batchDir = Paths.get(scratchDir(s"streamN-$tag"))
     val tagged = src.withColumn("_b", batchOf.cast("int"))
     val nMax = tagged.agg(max(col("_b"))).head().getInt(0)
     val now = System.currentTimeMillis()
     (0 to nMax).foreach { i =>
-      val tmp = Paths.get(tmpDir(s"stage-$i"))
+      val tmp = Paths.get(scratchDir(s"stage-$i"))
       tagged.where(col("_b") === i).drop("_b")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val listing = Files.list(tmp)
@@ -228,11 +213,11 @@ object StreamingQueries {
       batchOf: org.apache.spark.sql.Column,
       tag: String)(snapshot: DataFrame => DataFrame): (DataFrame, String) = {
     val stream = stageStreamBatched(spark, src, batchOf, tag)
-    val changelog = tmpDir(s"changelog-$tag")
-    val snapRoot = tmpDir(s"snap-$tag")
+    val changelog = scratchDir(s"changelog-$tag")
+    val snapRoot = scratchDir(s"snap-$tag")
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
     val q = stream.writeStream
-      .option("checkpointLocation", tmpDir(s"ckpt-upsert-$tag"))
+      .option("checkpointLocation", scratchDir(s"ckpt-upsert-$tag"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         upsertBatch(spark, batch, id, changelog, snapRoot)(snapshot)
@@ -314,11 +299,11 @@ object StreamingQueries {
                     queryTerms: Seq[String], tag: String,
                     storeDirs: Option[scala.collection.mutable.Buffer[(String, String)]] = None): DataFrame = {
     val stream = stageStreamBatched(spark, docs, batchOf, tag)
-    val tfRoot = tmpDir(s"bm25-tf-$tag")
-    val dlRoot = tmpDir(s"bm25-dl-$tag")
+    val tfRoot = scratchDir(s"bm25-tf-$tag")
+    val dlRoot = scratchDir(s"bm25-dl-$tag")
     storeDirs.foreach(b => b ++= Seq("tf" -> tfRoot, "dl" -> dlRoot))
     val q = stream.writeStream
-      .option("checkpointLocation", tmpDir(s"ckpt-bm25-$tag"))
+      .option("checkpointLocation", scratchDir(s"ckpt-bm25-$tag"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, id: Long) =>
         val tf = b.where(col("doc_id").isNotNull)
@@ -355,7 +340,7 @@ object StreamingQueries {
       case Some(k) => stageStreamBatchedCached(spark, batchDocs, tag, k)(batchOf)
       case None    => stageStreamBatched(spark, batchDocs, batchOf, tag)
     }
-    val seenRoot = tmpDir(s"ingest-seen-$tag")
+    val seenRoot = scratchDir(s"ingest-seen-$tag")
     // ONE consolidated corpus-side store (r18, VERDICT r17 #7; extends
     // the r17 persist-once discipline): the exact-hash gate and the
     // gram-set verify read the SAME per-doc frame — (vid, toks, h,
@@ -367,7 +352,7 @@ object StreamingQueries {
     // joins nothing. Values identical: md5/gram longs roundtrip exactly,
     // and an anti-join is indifferent to the corpus hashes no longer
     // being pre-distinct'd.
-    val storeDir = tmpDir(s"ingest-store-$tag")
+    val storeDir = scratchDir(s"ingest-store-$tag")
     storeDirs.foreach(b => b ++= Seq("seen" -> seenRoot, "corpus" -> storeDir))
     def sideStore(side: DataFrame, inCorpus: Boolean): DataFrame =
       side.select(col("doc_id").as("vid"),
@@ -385,7 +370,7 @@ object StreamingQueries {
     // regime; re-measure before flipping (r18 audit, guide §1.1).
     // semantic stage setup: persist the corpus-side cluster assignment once
     val semState = semantic.map { case (emb, model, thr, cap) =>
-      val dir = tmpDir(s"ingest-semasg-$tag")
+      val dir = scratchDir(s"ingest-semasg-$tag")
       graft.ann.Ann.assignClusters(
           emb.join(corpus.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
           "vec_id", "embedding", model)
@@ -404,7 +389,7 @@ object StreamingQueries {
     val corpusHashes = store.where(col("in_corpus")).select(col("h"))
     val storeSets = store.select(col("vid"), col("toks"))
     val q = stream.writeStream
-      .option("checkpointLocation", tmpDir(s"ckpt-ingest-$tag"))
+      .option("checkpointLocation", scratchDir(s"ckpt-ingest-$tag"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, id: Long) =>
         val priorDirs = seenBefore(id)
@@ -540,8 +525,8 @@ object StreamingQueries {
       case Some(k) => stageStreamBatchedCached(spark, batchDocs, tag, k)(batchOf)
       case None    => stageStreamBatched(spark, batchDocs, batchOf, tag)
     }
-    val seenRoot = tmpDir(s"mingest-seen-$tag")
-    val corpusHashDir = tmpDir(s"mingest-corpus-$tag")
+    val seenRoot = scratchDir(s"mingest-seen-$tag")
+    val corpusHashDir = scratchDir(s"mingest-corpus-$tag")
     storeDirs.foreach(b => b ++= Seq("seen" -> seenRoot, "corpus" -> corpusHashDir))
     hasher(corpusDocs)
       .select(hiCol, loCol).distinct()
@@ -551,7 +536,7 @@ object StreamingQueries {
     // resolve once per run instead of once per trigger
     val corpusHashes = spark.read.parquet(corpusHashDir)
     val q = stream.writeStream
-      .option("checkpointLocation", tmpDir(s"ckpt-mingest-$tag"))
+      .option("checkpointLocation", scratchDir(s"ckpt-mingest-$tag"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, id: Long) =>
         val priorDirs = storesBefore(seenRoot, id)
@@ -612,7 +597,7 @@ object StreamingQueries {
         .format("memory")
         .queryName(queryName)
         .outputMode("complete")
-        .option("checkpointLocation", tmpDir(s"ckpt-$queryName"))
+        .option("checkpointLocation", scratchDir(s"ckpt-$queryName"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -634,7 +619,7 @@ object StreamingQueries {
         .format("memory")
         .queryName(queryName)
         .outputMode("append")
-        .option("checkpointLocation", tmpDir(s"ckpt-$queryName"))
+        .option("checkpointLocation", scratchDir(s"ckpt-$queryName"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -655,7 +640,7 @@ object StreamingQueries {
         .format("memory")
         .queryName(queryName)
         .outputMode("update")
-        .option("checkpointLocation", tmpDir(s"ckpt-$queryName"))
+        .option("checkpointLocation", scratchDir(s"ckpt-$queryName"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -673,7 +658,7 @@ object StreamingQueries {
       table: String,
       queryName: String,
       transform: DataFrame => DataFrame): DataFrame = {
-    val ckpt = tmpDir(s"ckpt-$queryName")
+    val ckpt = scratchDir(s"ckpt-$queryName")
     def once(name: String): DataFrame = withStreamParts(
         spark, pathBytes(s"$dir/$table.parquet")) {
       val q = transform(readStreamParquet(spark, dir, table)).writeStream
@@ -687,15 +672,6 @@ object StreamingQueries {
     // cleanUp: wipe local state, then recompute from the source
     deleteRecursively(Paths.get(ckpt))
     once(queryName)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
   }
 
   /** X10: ForeachWriter with the reference's init/process/close lifecycle
@@ -723,10 +699,10 @@ object StreamingQueries {
       dir: String,
       table: String,
       transform: DataFrame => DataFrame): DataFrame = {
-    val outDir = tmpDir("foreach-out")
+    val outDir = scratchDir("foreach-out")
     val q = transform(readStreamParquet(spark, dir, table)).writeStream
       .outputMode("complete")
-      .option("checkpointLocation", tmpDir("ckpt-foreach"))
+      .option("checkpointLocation", scratchDir("ckpt-foreach"))
       .trigger(Trigger.AvailableNow())
       .foreach(new LineWriter(outDir))
       .start()
