@@ -1,36 +1,70 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+import java.util.regex.Pattern
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 
-/** Dumps the physical plans of the headline queries to EXPLAIN.md — the
-  * audit trail for the scale-shape claims (broadcasts on dimension sides,
-  * pushed filters, partial aggregation, no cartesian products).
+/** Writes `plans/fingerprints.tsv` under the working directory: per
+  * headline entry, a hash of its optimized logical plan (plus its join
+  * hints, which canonicalization drops) and of its pre-AQE physical plan,
+  * both in Catalyst's canonical form (what `sameResult` and exchange
+  * reuse compare), with scratch and working-directory paths, lambda
+  * names and exchange ids masked. Entries are built, never run, on the
+  * fixture corpus at width 4, so any JVM writes the same file: rerun it
+  * and `git diff --exit-code plans/fingerprints.tsv` lists the entries
+  * whose plans moved (PlanSpec pins AQE's runtime choices). Throws,
+  * naming the entry, on a cartesian product.
   */
 object Explain {
+
+  val out = "plans/fingerprints.tsv"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Graft.session()
-    val sb = new StringBuilder
-    sb.append("# EXPLAIN — headline query physical plans\n\n")
-    sb.append(s"Generated by `graft.Explain` at `$sfDir`. Each query's own\n")
-    sb.append("QueryExecution is EXECUTED first, so these are the AQE-final plans — runtime join\n")
-    sb.append("strategy choices and whole-stage-codegen stage ids included. Things\n")
-    sb.append("to check per plan: broadcast joins on dimension sides, `PushedFilters`\n")
-    sb.append("on scans, `partial_*` map-side aggregation, `[codegen id : N]` on the\n")
-    sb.append("hot operators, no `CartesianProduct`.\n")
-    Bench.headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      // execute THIS DataFrame's own QueryExecution (a sink write would
-      // plan a separate command and leave df's plan un-executed/non-final)
-      df.queryExecution.toRdd.count()
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(formatted.take(8000))
-      sb.append("\n```\n")
+    val spark = Graft.session("4")
+    val rows = try Bench.headline.map(fingerprint(spark, _)) finally spark.stop()
+    Files.createDirectories(Paths.get(out).getParent)
+    Files.writeString(Paths.get(out), rows.map(_.mkString("\t") + "\n").mkString)
+    println(s"wrote $out (${rows.size} entries)")
+  }
+
+  /** (entry, logical fingerprint, physical fingerprint). */
+  def fingerprint(spark: SparkSession, name: String): Seq[String] = {
+    // keep canonical commutative chains binary: Spark otherwise folds 3+
+    // operands into a MultiCommutativeOp, whose hash includes a `Class`
+    // (an identity hash), and sorts its parent's operands by that hash
+    spark.conf.set("spark.sql.analyzer.canonicalization.multiCommutativeOpMemoryOptThreshold",
+      Int.MaxValue.toString)
+    // a frame an earlier entry cached would be substituted into this plan
+    spark.catalog.clearCache()
+    val qe = SparkEntry.queries(name)(spark, SparkEntry.fixtureDir).queryExecution
+    val physical = qe.sparkPlan.canonicalized
+    if (physical.exists(_.isInstanceOf[CartesianProductExec]))
+      throw new IllegalStateException(s"$name plans a CartesianProduct")
+    // on the small fixture tables a dropped broadcast hint plans the same
+    val hints = qe.optimizedPlan.collect { case j: Join if j.hint != JoinHint.NONE => j.hint }
+    Seq(name, hash(qe.optimizedPlan.canonicalized, hints.mkString("\n")), hash(physical))
+  }
+
+  private val tmpDir = Pattern.quote(Paths.get(System.getProperty("java.io.tmpdir")).toString)
+  private val masks = Seq(
+    // scratch dirs: random names under the temp dir
+    Pattern.compile(tmpDir + "/[^/\\s,()\\[\\]]+") -> "<tmp>",
+    // the working directory: the warehouse (saved bucketed tables) is there
+    Pattern.compile(Pattern.quote(Paths.get("").toAbsolutePath.toString)) -> "<cwd>",
+    // synthetic lambda classes: numbered in load order, hashed by identity
+    Pattern.compile("\\$\\$Lambda[^\\s,()\\[\\]]*") -> "\\$\\$Lambda",
+    // exchange ids: a JVM-wide counter
+    Pattern.compile("plan_id=\\d+") -> "plan_id")
+
+  private def hash(plan: QueryPlan[_], extra: String = ""): String = {
+    val text = masks.foldLeft(plan.treeString(verbose = true, maxFields = Int.MaxValue) + extra) {
+      case (t, (p, r)) => p.matcher(t).replaceAll(r)
     }
-    Files.writeString(Paths.get("EXPLAIN.md"), sb.toString)
-    println(s"wrote EXPLAIN.md (${Bench.headline.size} plans)")
-    spark.stop()
+    MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8"))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
   }
 }

@@ -95,23 +95,6 @@ object ScaleCheck {
       "whose `Profiling.histogram` shows >=10^6-member components.\n")
   }
 
-  /** The pp_pipeline composition over an arbitrary documents frame
-    * (mirrors the PipelineQueries entry, which reads from a directory).
-    */
-  private def preparePipeline(spark: SparkSession, d: DataFrame): DataFrame = {
-    import graft.dedup.Dedup
-    import graft.functions.TextFunctions
-    val q = d.where(TextFunctions.qualityOkFast(col("text")))
-    val keep = Dedup.exact(q, "doc_id", "text").select(col("keep_id").as("doc_id"))
-    val kept = q.join(keep, Seq("doc_id"), "left_semi")
-    val split = kept.select(col("doc_id"), col("text"),
-      TextFunctions.splitAssign(col("doc_id")).as("split"))
-    val packed = TextFunctions
-      .packBins(split.where(col("split") === "train"), "doc_id", "text", tokenBudget = 512)
-      .select(col("doc_id"), col("bin"))
-    split.select("doc_id", "split").join(packed, Seq("doc_id"), "left")
-  }
-
   /** Gaps-and-islands sessionization (1-hour gap, per user) — the A/B
     * control for Spark's built-in `session_window`; the library form is
     * [[graft.operators.Windows.sessionCountGaps]] (tradeoff measured by
@@ -375,76 +358,8 @@ object ScaleCheck {
       }
     }
 
-    // r18 (VERDICT r17 #5): the two product-analytics shapes most likely
-    // to misbehave under skew at 100x — shared with the query entries.
-    // dauWau: the (user, day) dedup aggregation must ABSORB the factor
-    // (replicated events densify the same (user, day) cells, so output
-    // is constant while input grows Nx) and the 7-way explode runs over
-    // the DEDUPED frame, so its volume never scales with raw events.
-    def dauWau(e: DataFrame): DataFrame = {
-      val active = e.where(col("user_id").isNotNull)
-        .select(col("user_id"), expr("ts_us div 86400000000").as("day")).distinct()
-      val dau = active.groupBy("day").agg(countDistinct("user_id").as("dau"))
-      val wau = active
-        .select(col("user_id"),
-          explode(sequence(col("day"), col("day") + lit(6))).as("day"))
-        .groupBy("day").agg(countDistinct("user_id").as("wau"))
-      dau.join(wau, Seq("day")).select("day", "dau", "wau")
-    }
-    // funnel: three chained min-aggregations on the skew-prone user key —
-    // each stage is a pushed-filter scan reduced BEFORE its hash join to
-    // the previous stage's 2-column per-user frame, so the joins ship
-    // user-cardinality rows at any factor; only the scans grow Nx.
-    def funnel(e: DataFrame): DataFrame = {
-      val winUs = 86400000000L
-      val ev3 = e.where(col("user_id").isNotNull)
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-      val t1 = ev3.where(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t1"))
-      val t2 = ev3.where(col("event_type") === "click")
-        .join(t1, "user_id")
-        .where(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + lit(winUs))
-        .groupBy("user_id").agg(min("ts_us").as("t2"))
-      val t3 = ev3.where(col("event_type") === "purchase")
-        .join(t2, "user_id")
-        .where(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + lit(winUs))
-        .groupBy("user_id").agg(min("ts_us").as("t3"))
-      t1.agg(count(lit(1)).as("n_users"))
-        .select(lit(1).as("step"), col("n_users"))
-        .unionByName(t2.agg(count(lit(1)).as("n_users"))
-          .select(lit(2).as("step"), col("n_users")))
-        .unionByName(t3.agg(count(lit(1)).as("n_users"))
-          .select(lit(3).as("step"), col("n_users")))
-    }
-
-    // q_outliers: one scan into a K-row moment aggregate + a broadcast
-    // flag join back over the same events scan — both scans grow Nx
-    // while the stats side stays K rows (never shuffled); DECIMAL(38)
-    // from the operand up keeps the quadratic moment chain exact at any
-    // factor (the int64 sum of squares wraps well inside 100x)
-    def outliers(e: DataFrame): DataFrame = {
-      val ev = e.select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      val cDec = col("cents").cast("decimal(38,0)")
-      val stats = ev.groupBy("event_type").agg(
-        count(lit(1)).as("n"), sum(cDec).as("s1"),
-        sum(cDec * col("cents")).as("q"))
-      val dev = col("n").cast("decimal(38,0)") * col("cents") - col("s1")
-      val varTerm = col("n").cast("decimal(38,0)") * col("q") -
-        col("s1") * col("s1")
-      ev.join(broadcast(stats), Seq("event_type"))
-        .where(dev * dev > varTerm * lit(9))
-        .select("event_id", "event_type", "cents")
-    }
-
-    // the pp_length_buckets query's bucketing, over either corpus
-    def bucketed(dd: DataFrame): DataFrame = {
-      val nTok = graft.functions.TextFunctions.wsTokenCount(col("text")).cast("long")
-      dd.select(col("doc_id"),
-        when(nTok < 32, 0L).when(nTok < 64, 1L)
-          .when(nTok < 128, 2L).when(nTok < 256, 3L)
-          .otherwise(4L).as("bucket"))
-    }
+    // the query entries' own bodies (graft.queries.PipelineQueries)
+    import graft.queries.PipelineQueries.{dauWau, funnelSteps, lengthBucketBatches, outliers, preparePipeline}
 
     val cases: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
       ("w1_tumbling", () => Windows.tumblingCount(evSmall, "ts_us", "5 minutes", col("event_type")),
@@ -586,8 +501,7 @@ object ScaleCheck {
       // offsets; ratio must track data, never a per-bucket funnel (a
       // naive row_number-per-bucket would serialize each bucket)
       ("pp_length_buckets",
-        () => graft.functions.TextFunctions.bucketBatches(bucketed(docs), "doc_id", 8),
-        () => graft.functions.TextFunctions.bucketBatches(bucketed(docsBig), "doc_id", 8)),
+        () => lengthBucketBatches(docs), () => lengthBucketBatches(docsBig)),
       // label-propagation communities (r16): per-round label⋈edge
       // shuffle + two-level hash agg over the persisted undirected edge
       // list — rounds are fixed, so time must track edge count
@@ -606,7 +520,7 @@ object ScaleCheck {
       // r18: ordered funnel — three chained min-agg hash joins on the
       // skew-prone user key, each stage reduced to a per-user frame
       // BEFORE its join; ratio tracks the scans, never a quadratic
-      ("q_funnel_steps", () => funnel(evSmall), () => funnel(evBig)),
+      ("q_funnel_steps", () => funnelSteps(evSmall), () => funnelSteps(evBig)),
       // r18: the 3-sigma gate — scan-bound by construction (K-row
       // broadcast stats, no second exchange); ratio must track events
       ("q_outliers", () => outliers(evSmall), () => outliers(evBig)),
@@ -923,8 +837,7 @@ object ScaleCheck {
           evBig.withColumn("day", expr("ts_us div 86400000000")), "event_type", col("day"), "user_id")),
       // the composed corpus-preparation pipeline: quality gate → exact
       // dedup → split → train-split packing — the end-to-end growth story
-      ("pp_pipeline", () => preparePipeline(spark, docs),
-                      () => preparePipeline(spark, docsBig)))
+      ("pp_pipeline", () => preparePipeline(docs), () => preparePipeline(docsBig)))
 
     sb.append(s"\n## ${factor}x\n\n")
     sb.append(s"| operator | 1x sec | ${factor}x sec | ratio |\n|---|---|---|---|\n")

@@ -16,12 +16,15 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** The sf0.001 fixture corpus: the tests, [[entry]] and graft.Explain read it. */
+  val fixtureDir: String = "/root/testdata/sf0.001"
+
+  /** Flagship query on [[fixtureDir]]; the smoke check expects rows.
     * TPC-H-Q1-shaped aggregation: scan → filter (pushed to parquet) →
     * hash aggregate.
     */
   def entry(spark: SparkSession): DataFrame =
-    spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    spark.read.parquet(s"$fixtureDir/lineitem.parquet")
       .where(col("l_shipdate") <= lit("1998-09-02"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(

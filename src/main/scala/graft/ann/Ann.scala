@@ -1,8 +1,8 @@
 package graft.ann
 
 import graft.functions.VectorFunctions._
-import graft.functions.{IvfAssign, IvfNearestLists, IvfPqAdc, IvfPqEncode, IvfPqLut, IvfPqProbes, PqAdc, PqEncode, PqLut}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{IvfAssign, IvfNearestLists, IvfPqAdc, IvfPqEncode, IvfPqLut, IvfPqProbes, KernelPayload, PqAdc, PqEncode, PqLut}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -44,7 +44,7 @@ object Ann {
 
   /** Build a model-kernel expression over `v.cast("array<double>")` and
     * wrap it as a Column — the construction path for the ANN quantizer
-    * kernels (graft.functions.AnnKernels), whose Broadcast model handle
+    * kernels (graft.functions.AnnKernels), whose broadcast model payload
     * cannot ride the SQL function registry. Package-visible:
     * AnnKernelSpec builds the same columns through this one helper.
     */
@@ -52,6 +52,11 @@ object Ann {
       build: org.apache.spark.sql.catalyst.expressions.Expression => org.apache.spark.sql.catalyst.expressions.Expression,
       v: Column): Column =
     ColumnBridge.column(build(ColumnBridge.expression(v.cast("array<double>"))))
+
+  /** The IVF kernels' model: each centroid with its precomputed norm. */
+  private[graft] def centroidPayload(spark: SparkSession, centroids: Array[Array[Double]])
+      : KernelPayload[Array[(Array[Double], Double)]] =
+    KernelPayload(spark.sparkContext, centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
 
   /** Exact top-k neighbors for each query row (excluding self-matches).
     * Output: query_id, neighbor_id, rank, cosine (rounded 6dp).
@@ -212,8 +217,7 @@ object Ann {
   def semanticDedup(corpus: DataFrame, id: String, vec: String, threshold: Double,
                     model: IvfModel, maxCluster: Int = 2000): DataFrame = {
     val spark = corpus.sparkSession
-    val bcCent = spark.sparkContext.broadcast(
-      model.centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bcCent = centroidPayload(spark, model.centroids)
 
     // one explicit cluster exchange BOTH pair-join sides hang off: the l
     // projection and the capped r projection keep the identical column
@@ -259,8 +263,7 @@ object Ann {
     */
   def assignClusters(df: DataFrame, id: String, vec: String,
                      model: IvfModel): DataFrame = {
-    val bcCent = df.sparkSession.sparkContext.broadcast(
-      model.centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bcCent = centroidPayload(df.sparkSession, model.centroids)
     df.select(col(id).as("vec_id"), col(vec).as("v"))
       .where(col("v").isNotNull)
       .withColumn("_a", kernelCol(IvfAssign(_, bcCent), col("v")))
@@ -410,8 +413,7 @@ object Ann {
     // Lifecycle: the broadcast outlives this call because the returned
     // (lazy) plan references it; ContextCleaner reclaims it once the plan
     // is garbage-collected — it cannot be destroy()ed here.
-    val bcCent = corpus.sparkSession.sparkContext.broadcast(
-      centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bcCent = centroidPayload(corpus.sparkSession, centroids)
 
     // nearest-`n` centroid ids by cosine (ties broken by lower list id):
     // the codegen'd graft.functions.IvfNearestLists kernel — the
@@ -454,8 +456,7 @@ object Ann {
   def contrastivePairs(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
                        kNeg: Int, nProbe: Int, model: IvfModel): DataFrame = {
     require(kNeg > 0 && nProbe >= 2, s"need kNeg > 0 and nProbe >= 2: $kNeg, $nProbe")
-    val bcCent = corpus.sparkSession.sparkContext.broadcast(
-      model.centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bcCent = centroidPayload(corpus.sparkSession, model.centroids)
     val assigned = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"))
       .withColumn("list",
         kernelCol(IvfNearestLists(_, bcCent, 1), col("cv")).getItem(0))
@@ -501,8 +502,7 @@ object Ann {
   def clusterSample(corpus: DataFrame, id: String, vec: String, nPer: Int,
                     model: IvfModel): DataFrame = {
     require(nPer > 0, "clusterSample: nPer must be positive")
-    val bcCent = corpus.sparkSession.sparkContext.broadcast(
-      model.centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bcCent = centroidPayload(corpus.sparkSession, model.centroids)
     // null-embedding rows are excluded explicitly: the kernel
     // null-propagates, and without the filter a null list would form
     // its own ranked group (the oracle guards with v IS NOT NULL)
@@ -650,7 +650,7 @@ object Ann {
              k: Int, refineK: Int, model: PqModel): DataFrame = {
     val spark = corpus.sparkSession
     val kCent = model.kCent
-    val bc = spark.sparkContext.broadcast((model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.books, model.bounds))
 
     // encode (corpus row → m codes + reconstruction norm; nearest
     // sub-centroid by L2 over the unit-normalized vector, ties to the
@@ -771,7 +771,7 @@ object Ann {
                 k: Int, nProbe: Int, refineK: Int, model: IvfPqModel): DataFrame = {
     val spark = corpus.sparkSession
     val kCent = model.kCent
-    val bc = spark.sparkContext.broadcast((model.centroids, model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.centroids, model.books, model.bounds))
 
     // encode (corpus row → list + m residual codes + reconstruction norm,
     // x̂ = c_list + ĉ(codes)), probe selection (nProbe lists by descending

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -20,9 +19,10 @@ import org.apache.spark.sql.types._
   * copies, no converter, results written as catalyst values directly.
   *
   * The trained model (centroids / codebooks) rides a Spark `Broadcast`
-  * held BY the expression: the plan carries only the handle (O(1) plan
+  * held BY the expression as a [[KernelPayload]], which compares by
+  * content digest: the plan carries only the handle (O(1) plan
   * text — the property the r8 review demanded), each executor fetches the
-  * model once, and `bc.value` after the first access is a field read.
+  * model once, and `model.value` after the first access is a field read.
   * Because a `Seq[Expression] => Expression` registry builder cannot
   * supply a broadcast handle, these are constructed directly and wrapped
   * via [[org.apache.spark.sql.graft.ColumnBridge]] rather than
@@ -164,7 +164,7 @@ object AnnKernels {
   * payload: (centroid, precomputed norm) pairs.
   */
 case class IvfNearestLists(child: Expression,
-    bc: Broadcast[Array[(Array[Double], Double)]], n: Int) extends UnaryExpression {
+    model: KernelPayload[Array[(Array[Double], Double)]], n: Int) extends UnaryExpression {
   require(n >= 1, s"n must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -175,7 +175,7 @@ case class IvfNearestLists(child: Expression,
   def computeRow(v: ArrayData): ArrayData = {
     val arr = v.toDoubleArray()
     val vn = math.sqrt(AnnKernels.sumSq(arr))
-    val cents = bc.value
+    val cents = model.value
     val neg = new Array[Double](cents.length)
     var c = 0
     while (c < cents.length) {
@@ -208,7 +208,7 @@ case class IvfNearestLists(child: Expression,
   * that cosine), ties to the lower id — the SemDeDup assignment kernel.
   */
 case class IvfAssign(child: Expression,
-    bc: Broadcast[Array[(Array[Double], Double)]]) extends UnaryExpression {
+    model: KernelPayload[Array[(Array[Double], Double)]]) extends UnaryExpression {
 
   override def dataType: DataType = AnnKernels.assignSchema
 
@@ -218,7 +218,7 @@ case class IvfAssign(child: Expression,
   def computeRow(v: ArrayData): InternalRow = {
     val arr = v.toDoubleArray()
     val vn = math.sqrt(AnnKernels.sumSq(arr))
-    val cents = bc.value
+    val cents = model.value
     var best = 0
     var bestS = Double.NegativeInfinity
     var c = 0
@@ -255,7 +255,7 @@ case class IvfAssign(child: Expression,
   * sub-centroids. Broadcast payload: (books, bounds).
   */
 case class PqEncode(child: Expression,
-    bc: Broadcast[(Array[Array[Array[Double]]], Array[Int])]) extends UnaryExpression {
+    model: KernelPayload[(Array[Array[Array[Double]]], Array[Int])]) extends UnaryExpression {
 
   override def dataType: DataType = AnnKernels.pqEncodeSchema
 
@@ -263,7 +263,7 @@ case class PqEncode(child: Expression,
     AnnKernels.requireVec(prettyName, child.dataType)
 
   def computeRow(v: ArrayData): InternalRow = {
-    val (bks, bds) = bc.value
+    val (bks, bds) = model.value
     val u = AnnKernels.unit(v.toDoubleArray())
     var normSq = 0.0
     val codes = new Array[Int](bks.length)
@@ -310,7 +310,7 @@ case class PqEncode(child: Expression,
   * products (`array<double>`) — the per-query PQ table build.
   */
 case class PqLut(child: Expression,
-    bc: Broadcast[(Array[Array[Array[Double]]], Array[Int])]) extends UnaryExpression {
+    model: KernelPayload[(Array[Array[Array[Double]]], Array[Int])]) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
@@ -318,7 +318,7 @@ case class PqLut(child: Expression,
     AnnKernels.requireVec(prettyName, child.dataType)
 
   def computeRow(v: ArrayData): ArrayData = {
-    val (bks, bds) = bc.value
+    val (bks, bds) = model.value
     val u = AnnKernels.unit(v.toDoubleArray())
     UnsafeArrayData.fromPrimitiveArray(AnnKernels.lutOf(bks, bds, u))
   }
@@ -387,7 +387,7 @@ case class PqAdc(codes: Expression, xnorm: Expression, lut: Expression, kCent: I
   * Broadcast payload: (centroids, residual books, bounds).
   */
 case class IvfPqEncode(child: Expression,
-    bc: Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])])
+    model: KernelPayload[(Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])])
   extends UnaryExpression {
 
   override def dataType: DataType = AnnKernels.ivfPqEncodeSchema
@@ -396,7 +396,7 @@ case class IvfPqEncode(child: Expression,
     AnnKernels.requireVec(prettyName, child.dataType)
 
   def computeRow(v: ArrayData): InternalRow = {
-    val (cents, bks, bds) = bc.value
+    val (cents, bks, bds) = model.value
     val u = AnnKernels.unit(v.toDoubleArray())
     val lst = AnnKernels.nearestListDot(cents, u)
     val cl = cents(lst)
@@ -449,7 +449,7 @@ case class IvfPqEncode(child: Expression,
   * ordered by descending dot (ties to the lower list id).
   */
 case class IvfPqProbes(child: Expression,
-    bc: Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])],
+    model: KernelPayload[(Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])],
     nProbe: Int) extends UnaryExpression {
   require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
 
@@ -459,7 +459,7 @@ case class IvfPqProbes(child: Expression,
     AnnKernels.requireVec(prettyName, child.dataType)
 
   def computeRow(v: ArrayData): ArrayData = {
-    val (cents, _, _) = bc.value
+    val (cents, _, _) = model.value
     val u = AnnKernels.unit(v.toDoubleArray())
     val dots = new Array[Double](cents.length)
     val neg = new Array[Double](cents.length)
@@ -501,7 +501,7 @@ case class IvfPqProbes(child: Expression,
   * for IVFADC ADC scoring.
   */
 case class IvfPqLut(child: Expression,
-    bc: Broadcast[(Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])])
+    model: KernelPayload[(Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])])
   extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
@@ -510,7 +510,7 @@ case class IvfPqLut(child: Expression,
     AnnKernels.requireVec(prettyName, child.dataType)
 
   def computeRow(v: ArrayData): ArrayData = {
-    val (_, bks, bds) = bc.value
+    val (_, bks, bds) = model.value
     val u = AnnKernels.unit(v.toDoubleArray())
     UnsafeArrayData.fromPrimitiveArray(AnnKernels.lutOf(bks, bds, u))
   }

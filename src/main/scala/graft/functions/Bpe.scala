@@ -228,27 +228,24 @@ object Bpe {
 
   // ONE broadcast per frozen model per SparkContext: repeated
   // applications of the same model (probe arms, two branches of one
-  // query) share a single handle — a per-call broadcast churned the
-  // driver AND made equal-model BpeSubwordCount expressions
-  // non-canonically-equal, defeating subtree dedup/ReuseExchange (the
-  // silent-double-scan class). Weak keys: when the caller drops the
-  // model the entry clears and the ContextCleaner reclaims the
+  // query) share a single handle instead of re-broadcasting and
+  // re-digesting the merge list per call. Weak keys: when the caller
+  // drops the model the entry clears and the ContextCleaner reclaims the
   // broadcast; the stored context reference guards against a handle
   // from a stopped session leaking into a new one.
   private val bcCache = new java.util.WeakHashMap[BpeModel,
-    (org.apache.spark.SparkContext, org.apache.spark.broadcast.Broadcast[Array[(String, String)]])]()
+    (org.apache.spark.SparkContext, KernelPayload[Array[(String, String)]])]()
 
-  /** The per-model per-context broadcast handle both kernel forms
+  /** The per-model per-context payload both kernel forms
     * ([[subwordCountBpe]], [[encodeBpe]]) share.
     */
-  private def modelBroadcast(model: BpeModel)
-      : org.apache.spark.broadcast.Broadcast[Array[(String, String)]] = {
+  private def modelPayload(model: BpeModel): KernelPayload[Array[(String, String)]] = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     bcCache.synchronized {
       bcCache.get(model) match {
         case (cachedSc, cached) if cachedSc eq sc => cached
         case _ =>
-          val b = sc.broadcast(model.merges.toArray)
+          val b = KernelPayload(sc, model.merges.toArray)
           bcCache.put(model, (sc, b))
           b
       }
@@ -261,7 +258,7 @@ object Bpe {
   def subwordCountBpe(text: Column, model: BpeModel): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       BpeSubwordCount(org.apache.spark.sql.graft.ColumnBridge.expression(text),
-        modelBroadcast(model)))
+        modelPayload(model)))
 
   /** The digit-enrichment device `txt_bpe_big`, ScaleCheck and
     * FunctionsSpec share: append the doc id and a portable pseudo-hash
@@ -362,7 +359,7 @@ object Bpe {
   def encodeBpe(text: Column, model: BpeModel): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       BpeEncode(org.apache.spark.sql.graft.ColumnBridge.expression(text),
-        modelBroadcast(model)))
+        modelPayload(model)))
 
   /** Fixed-`ctx` context windows over a token-id array — the training-
     * example split, built entirely inside the scan (sequence → slice →

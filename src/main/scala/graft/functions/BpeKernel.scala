@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -37,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * construction, so patterns can never cross a separator.
   */
 case class BpeSubwordCount(child: Expression,
-    bc: Broadcast[Array[(String, String)]]) extends UnaryExpression {
+    model: KernelPayload[Array[(String, String)]]) extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
@@ -51,7 +50,7 @@ case class BpeSubwordCount(child: Expression,
   // instance would multiply that by the task slots; the broadcast value
   // is one array instance per executor, so identity keying shares one
   // automaton across every task and both kernel forms
-  @transient private lazy val auto = BpeAutomaton.forMerges(bc.value)
+  @transient private lazy val auto = BpeAutomaton.forMerges(model.value)
 
   def compute(text: UTF8String): Long = {
     val bytes = text.toLowerCase.getBytes
@@ -311,7 +310,7 @@ private[functions] object BpeAutomaton {
   * merge count like the counting kernel.
   */
 case class BpeEncode(child: Expression,
-    bc: Broadcast[Array[(String, String)]]) extends UnaryExpression {
+    model: KernelPayload[Array[(String, String)]]) extends UnaryExpression {
 
   override def dataType: DataType =
     DataTypes.createArrayType(DataTypes.IntegerType, false)
@@ -321,7 +320,7 @@ case class BpeEncode(child: Expression,
     else TypeCheckResult.TypeCheckFailure(
       s"bpe_encode requires a string argument, got ${child.dataType.catalogString}")
 
-  @transient private lazy val auto = BpeAutomaton.forMerges(bc.value)
+  @transient private lazy val auto = BpeAutomaton.forMerges(model.value)
 
   def compute(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val bytes = text.toLowerCase.getBytes

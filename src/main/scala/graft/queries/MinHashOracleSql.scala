@@ -201,13 +201,15 @@ object MinHashOracleSql {
         s"($i, ${BigInt(a).mod(M)}$HU, ${BigInt(b).mod(M)}$HU)"
       }.mkString(", ")
     // permutation minima in SIGNED 64-bit order, as the Spark side's
-    // min(h*a+b) over LongType
+    // min(h*a+b) over LongType; the wrapped product is a column of its
+    // own layer, so `signed`'s CASE reads it instead of re-deriving it
     val perm = s"((${mulv("hu", "c.a")}) + c.b) % $M$HU"
     s"""SELECT doc_id, list(mn ORDER BY i) AS sig
-       FROM (SELECT doc_id, c.i AS i, min(${signed(perm)}) AS mn
-             FROM (SELECT doc_id, ${unsigned("sh")} AS hu FROM ($shingles)) s,
-                  (VALUES $coeffVals) c(i, a, b)
-             GROUP BY doc_id, c.i)
+       FROM (SELECT doc_id, i, min(${signed("p")}) AS mn
+             FROM (SELECT doc_id, c.i AS i, $perm AS p
+                   FROM (SELECT doc_id, ${unsigned("sh")} AS hu FROM ($shingles)) s,
+                        (VALUES $coeffVals) c(i, a, b))
+             GROUP BY doc_id, i)
        GROUP BY doc_id"""
   }
 

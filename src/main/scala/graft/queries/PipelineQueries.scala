@@ -54,6 +54,157 @@ object PipelineQueries {
       .where(col("jaccard") >= 0.5).select("a", "b")
   }
 
+  // ---- the product-analytics and pipeline entries' bodies, shared with
+  // the scale audit (ScaleCheck) so the timed shape is the shipped one
+
+  /** q_dau_wau over an events frame (user_id, ts_us):
+    * DAU/WAU rolling-active-users (r17) — the other canonical
+    * product-analytics table next to q_retention: per µs-epoch day
+    * the distinct active users, and the 7-day-window count (distinct
+    * users active in [day-6, day]). Scale shape (r18, guide §2.4):
+    * ONE events scan → (user, day) dedup aggregation → bounded 7-way
+    * day explode feeding a SINGLE aggregation
+    * (distinct-over-sliding-window is NOT a sum of dailies — users
+    * overlap days — and the explode keeps it one hash aggregation
+    * instead of a range self-join). See [[dauWauFromCells]]; the
+    * former dau-branch ⋈ wau-branch form scanned events twice (the
+    * Generate above the wau branch specialized its dedup subtree out
+    * of ReuseExchange) and paid a join. Only days with activity
+    * report (dau >= 1 — exactly the days the old inner join kept).
+    */
+  def dauWau(events: DataFrame): DataFrame =
+    dauWauFromCells(events.where(col("user_id").isNotNull)
+      .select(col("user_id"), expr("ts_us div 86400000000").as("day")).distinct())
+
+  /** q_funnel_steps over an events frame (user_id, event_type, ts_us):
+    * ordered-funnel conversion (r17) — the product-analytics
+    * sequence gate: of the users who VIEWed, how many CLICKed
+    * strictly after their first view WITHIN the 24 h conversion
+    * window, then PURCHASEd within 24 h of that first qualifying
+    * click (the window is what makes the funnel discriminate —
+    * unwindowed, any long-lived user converts eventually: 15/15/15
+    * at sf0.001 vs 15/6/3 windowed; 150/60/25 at sf0.01). Scale
+    * shape: each stage is a pushed-filter scan of the slim (user,
+    * type, ts) columns reduced by a min-aggregation, hash-joined to
+    * the previous stage's 2-column per-user frame — never a per-user
+    * ordered buffer, never a window over raw events (the
+    * first-timestamp-chaining device every funnel engine uses).
+    */
+  def funnelSteps(events: DataFrame): DataFrame = {
+    val winUs = 86400000000L
+    val ev = events.where(col("user_id").isNotNull)
+      .select(col("user_id"), col("event_type"), col("ts_us"))
+    val t1 = ev.where(col("event_type") === "view")
+      .groupBy("user_id").agg(min("ts_us").as("t1"))
+    val t2 = ev.where(col("event_type") === "click")
+      .join(t1, "user_id")
+      .where(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + lit(winUs))
+      .groupBy("user_id").agg(min("ts_us").as("t2"))
+    val t3 = ev.where(col("event_type") === "purchase")
+      .join(t2, "user_id")
+      .where(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + lit(winUs))
+      .groupBy("user_id").agg(min("ts_us").as("t3"))
+    // ONE execution of the stage chain: two left joins (t2 ⊆ t1, t3 ⊆ t2,
+    // one row per user) feed a single 1-row aggregate of all three counts,
+    // exploded to three rows. Step 1 counts rows, not non-null t1: a user
+    // whose view events all carry a NULL ts_us still has a t1 row.
+    funnelCountRows(
+      t1.join(t2, Seq("user_id"), "left").join(t3, Seq("user_id"), "left")
+        .agg(count(lit(1)).as("n1"), count(col("t2")).as("n2"),
+          count(col("t3")).as("n3")))
+  }
+
+  /** q_outliers over an events frame (event_id, event_type, value):
+    * integer-exact 3-sigma outlier flagging per event type (r16) —
+    * the data-quality gate before a numeric column feeds training
+    * features: (x − mean)² > 9·variance rearranged to the
+    * denominator-free moment inequality (n·x − s)² > 9(n·q − s²)
+    * over cent-quantized values, with EVERY quadratic-and-sum in
+    * DECIMAL(38) from the operand up (ADVICE r16: the earlier form
+    * aggregated sum(cents*cents) in int64 and cast AFTERWARDS — the
+    * sum of squares overflows int64 BEFORE s² does (q ≥ s²/n), and
+    * non-ANSI Spark wraps silently while DuckDB promotes sums to
+    * HUGEINT, so at exactly the scale the guard exists for Spark
+    * would flag wrong outliers. Casting the operand before the
+    * aggregate keeps the whole moment chain exact; DECIMAL(38)
+    * matches HUGEINT over the reachable range). ONE scan + a tiny
+    * per-type stats broadcast — flagging rides the same pass that
+    * computed nothing more than 3 moments.
+    */
+  def outliers(events: DataFrame): DataFrame = {
+    val ev = outlierCents(events)
+    flagOutliers(ev, outlierMoments(ev))
+  }
+
+  private def cents: Column = round(col("value") * 100).cast("long").as("cents")
+
+  private def outlierCents(events: DataFrame): DataFrame =
+    events.select(col("event_id"), col("event_type"), cents)
+
+  /** Per event type, the moment triple (n, Σx, Σx²) of `cents`, summed in
+    * DECIMAL(38) from the operand up.
+    */
+  private def outlierMoments(ev: DataFrame): DataFrame = {
+    val cDec = col("cents").cast("decimal(38,0)")
+    ev.groupBy("event_type").agg(
+      count(lit(1)).as("n"), sum(cDec).as("s1"),
+      sum(cDec * col("cents")).as("q"))
+  }
+
+  /** The rows of `ev` (event_id, event_type, cents) outside 3 sigma of
+    * their type's `stats` moments: (n·x − s)² > 9(n·q − s²), one
+    * broadcast join of the K-row stats.
+    */
+  private def flagOutliers(ev: DataFrame, stats: DataFrame): DataFrame = {
+    val dev = col("n").cast("decimal(38,0)") * col("cents") - col("s1")
+    val varTerm = col("n").cast("decimal(38,0)") * col("q") -
+      col("s1") * col("s1")
+    ev.join(broadcast(stats), Seq("event_type"))
+      .where(dev * dev > varTerm * lit(9))
+      .select("event_id", "event_type", "cents")
+  }
+
+  /** pp_pipeline over an documents frame:
+    * the whole corpus-preparation pipeline, composed end-to-end from
+    * the library's own stages: quality gate (scan-pushed filter) →
+    * exact dedup (hash groupBy keep-min, semi-join back) →
+    * deterministic split → sequence packing of the train split
+    * (parallel prefix sums). One oracle replays the identical chain.
+    */
+  def preparePipeline(docs: DataFrame): DataFrame = {
+    val q = docs.where(TextFunctions.qualityOkFast(col("text")))
+    val keep = Dedup.exact(q, "doc_id", "text").select(col("keep_id").as("doc_id"))
+    val kept = q.join(keep, Seq("doc_id"), "left_semi")
+    val split = kept.select(col("doc_id"), col("text"),
+      TextFunctions.splitAssign(col("doc_id")).as("split"))
+    val packed = TextFunctions
+      .packBins(split.where(col("split") === "train"), "doc_id", "text", tokenBudget = 512)
+      .select(col("doc_id"), col("bin"))
+    split.select("doc_id", "split").join(packed, Seq("doc_id"), "left")
+      // -1, not NULL, for non-train rows: nullable ints round-trip
+      // differently across engines' parquet/pandas paths
+      .select(col("doc_id"), col("split"), coalesce(col("bin"), lit(-1L)).as("bin"))
+  }
+
+  /** pp_length_buckets over an documents frame:
+    * length-bucketed batch assignment (r16) — the layout that bounds
+    * a batch's padding waste when sequence lengths vary 100×: docs
+    * fall into 5 token-length classes, each class numbers batches of
+    * 8 by doc_id order. Per-bucket ordinals via the packBins
+    * two-phase prefix device on a COMPOSITE (bucket, block) key — no
+    * global sort or single-partition window anywhere; deterministic
+    * (unique doc_id order) under any layout.
+    */
+  def lengthBucketBatches(docs: DataFrame): DataFrame = {
+    val nTok = TextFunctions.wsTokenCount(col("text")).cast("long")
+    val base = docs.select(col("doc_id"),
+      when(nTok < 32, 0L).when(nTok < 64, 1L)
+        .when(nTok < 128, 2L).when(nTok < 256, 3L)
+        .otherwise(4L).as("bucket"))
+    TextFunctions.bucketBatches(base, "doc_id", batchSize = 8)
+      .select("doc_id", "bucket", "batch_id")
+  }
+
   /** Deterministic synthetic crawl page per doc (the dd_url device: the
     * corpus has no HTML column, so the fixture plants one both engines
     * rebuild identically): head noise, script/style blocks, the doc
@@ -1215,22 +1366,7 @@ object PipelineQueries {
       // deterministic by doc_id order — fully oracle-expressible
       TextFunctions.packBins(Graft.documents(s, d), "doc_id", "text", tokenBudget = 512)),
 
-    "pp_length_buckets" -> ((s, d) => {
-      // length-bucketed batch assignment (r16) — the layout that bounds
-      // a batch's padding waste when sequence lengths vary 100×: docs
-      // fall into 5 token-length classes, each class numbers batches of
-      // 8 by doc_id order. Per-bucket ordinals via the packBins
-      // two-phase prefix device on a COMPOSITE (bucket, block) key — no
-      // global sort or single-partition window anywhere; deterministic
-      // (unique doc_id order) under any layout.
-      val nTok = TextFunctions.wsTokenCount(col("text")).cast("long")
-      val base = Graft.documents(s, d).select(col("doc_id"),
-        when(nTok < 32, 0L).when(nTok < 64, 1L)
-          .when(nTok < 128, 2L).when(nTok < 256, 3L)
-          .otherwise(4L).as("bucket"))
-      TextFunctions.bucketBatches(base, "doc_id", batchSize = 8)
-        .select("doc_id", "bucket", "batch_id")
-    }),
+    "pp_length_buckets" -> ((s, d) => lengthBucketBatches(Graft.documents(s, d))),
 
     "pp_anchor_text" -> ((s, d) => {
       // anchor-text aggregation (r16) — the classic web-graph document
@@ -1830,26 +1966,7 @@ object PipelineQueries {
       }
     }),
 
-    "pp_pipeline" -> ((s, d) => {
-      // the whole corpus-preparation pipeline, composed end-to-end from
-      // the library's own stages: quality gate (scan-pushed filter) →
-      // exact dedup (hash groupBy keep-min, semi-join back) →
-      // deterministic split → sequence packing of the train split
-      // (parallel prefix sums). One oracle replays the identical chain.
-      val docs = Graft.documents(s, d)
-      val q = docs.where(TextFunctions.qualityOkFast(col("text")))
-      val keep = Dedup.exact(q, "doc_id", "text").select(col("keep_id").as("doc_id"))
-      val kept = q.join(keep, Seq("doc_id"), "left_semi")
-      val split = kept.select(col("doc_id"), col("text"),
-        TextFunctions.splitAssign(col("doc_id")).as("split"))
-      val packed = TextFunctions
-        .packBins(split.where(col("split") === "train"), "doc_id", "text", tokenBudget = 512)
-        .select(col("doc_id"), col("bin"))
-      split.select("doc_id", "split").join(packed, Seq("doc_id"), "left")
-        // -1, not NULL, for non-train rows: nullable ints round-trip
-        // differently across engines' parquet/pandas paths
-        .select(col("doc_id"), col("split"), coalesce(col("bin"), lit(-1L)).as("bin"))
-    }),
+    "pp_pipeline" -> ((s, d) => preparePipeline(Graft.documents(s, d))),
 
     // ---- similarity search ------------------------------------------------
     "ann_brute" -> ((s, d) => {
@@ -3118,35 +3235,7 @@ object PipelineQueries {
         docs.select(col("doc_id").as("node")), iterations = 3)
     }),
 
-    "q_outliers" -> ((s, d) => {
-      // integer-exact 3-sigma outlier flagging per event type (r16) —
-      // the data-quality gate before a numeric column feeds training
-      // features: (x − mean)² > 9·variance rearranged to the
-      // denominator-free moment inequality (n·x − s)² > 9(n·q − s²)
-      // over cent-quantized values, with EVERY quadratic-and-sum in
-      // DECIMAL(38) from the operand up (ADVICE r16: the earlier form
-      // aggregated sum(cents*cents) in int64 and cast AFTERWARDS — the
-      // sum of squares overflows int64 BEFORE s² does (q ≥ s²/n), and
-      // non-ANSI Spark wraps silently while DuckDB promotes sums to
-      // HUGEINT, so at exactly the scale the guard exists for Spark
-      // would flag wrong outliers. Casting the operand before the
-      // aggregate keeps the whole moment chain exact; DECIMAL(38)
-      // matches HUGEINT over the reachable range). ONE scan + a tiny
-      // per-type stats broadcast — flagging rides the same pass that
-      // computed nothing more than 3 moments.
-      val ev = Graft.events(s, d).select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      val cDec = col("cents").cast("decimal(38,0)")
-      val stats = ev.groupBy("event_type").agg(
-        count(lit(1)).as("n"), sum(cDec).as("s1"),
-        sum(cDec * col("cents")).as("q"))
-      val dev = col("n").cast("decimal(38,0)") * col("cents") - col("s1")
-      val varTerm = col("n").cast("decimal(38,0)") * col("q") -
-        col("s1") * col("s1")
-      ev.join(broadcast(stats), Seq("event_type"))
-        .where(dev * dev > varTerm * lit(9))
-        .select("event_id", "event_type", "cents")
-    }),
+    "q_outliers" -> ((s, d) => outliers(Graft.events(s, d))),
 
     "q_outliers_streaming" -> ((s, d) => {
       // the 3-sigma outlier gate maintained AT INGEST by the real
@@ -3162,22 +3251,10 @@ object PipelineQueries {
       // join the batch events scan exactly as the batch form — moments
       // are the sufficient statistic, so no per-event streaming state
       // is ever held. Shares q_outliers's oracle verbatim.
-      val cDec = col("cents").cast("decimal(38,0)")
       val stats = graft.streaming.StreamingQueries.runCompleteAggToMemory(
         s, d, "events", "q_outliers_stream",
-        df => df.select(col("event_type"),
-            round(col("value") * 100).cast("long").as("cents"))
-          .groupBy("event_type").agg(
-            count(lit(1)).as("n"), sum(cDec).as("s1"),
-            sum(cDec * col("cents")).as("q")))
-      val ev = Graft.events(s, d).select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      val dev = col("n").cast("decimal(38,0)") * col("cents") - col("s1")
-      val varTerm = col("n").cast("decimal(38,0)") * col("q") -
-        col("s1") * col("s1")
-      ev.join(broadcast(stats), Seq("event_type"))
-        .where(dev * dev > varTerm * lit(9))
-        .select("event_id", "event_type", "cents")
+        df => outlierMoments(df.select(col("event_type"), cents)))
+      flagOutliers(outlierCents(Graft.events(s, d)), stats)
     }),
 
     "q_retention" -> ((s, d) => {
@@ -3228,69 +3305,9 @@ object PipelineQueries {
         .select("cohort_wk", "wk", "weeks_since", "n_active")
     }),
 
-    "q_dau_wau" -> ((s, d) => {
-      // DAU/WAU rolling-active-users (r17) — the other canonical
-      // product-analytics table next to q_retention: per µs-epoch day
-      // the distinct active users, and the 7-day-window count (distinct
-      // users active in [day-6, day]). Scale shape (r18, guide §2.4):
-      // ONE events scan → (user, day) dedup aggregation → bounded 7-way
-      // day explode feeding a SINGLE aggregation
-      // (distinct-over-sliding-window is NOT a sum of dailies — users
-      // overlap days — and the explode keeps it one hash aggregation
-      // instead of a range self-join). See [[dauWauFromCells]]; the
-      // former dau-branch ⋈ wau-branch form scanned events twice (the
-      // Generate above the wau branch specialized its dedup subtree out
-      // of ReuseExchange) and paid a join. Only days with activity
-      // report (dau >= 1 — exactly the days the old inner join kept).
-      val day = expr("ts_us div 86400000000")
-      val active = Graft.events(s, d).where(col("user_id").isNotNull)
-        .select(col("user_id"), day.as("day")).distinct()
-      dauWauFromCells(active)
-    }),
+    "q_dau_wau" -> ((s, d) => dauWau(Graft.events(s, d))),
 
-    "q_funnel_steps" -> ((s, d) => {
-      // ordered-funnel conversion (r17) — the product-analytics
-      // sequence gate: of the users who VIEWed, how many CLICKed
-      // strictly after their first view WITHIN the 24 h conversion
-      // window, then PURCHASEd within 24 h of that first qualifying
-      // click (the window is what makes the funnel discriminate —
-      // unwindowed, any long-lived user converts eventually: 15/15/15
-      // at sf0.001 vs 15/6/3 windowed; 150/60/25 at sf0.01). Scale
-      // shape: each stage is a pushed-filter scan of the slim (user,
-      // type, ts) columns reduced by a min-aggregation, hash-joined to
-      // the previous stage's 2-column per-user frame — never a per-user
-      // ordered buffer, never a window over raw events (the
-      // first-timestamp-chaining device every funnel engine uses).
-      val winUs = 86400000000L
-      val ev = Graft.events(s, d).where(col("user_id").isNotNull)
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-      val t1 = ev.where(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t1"))
-      val t2 = ev.where(col("event_type") === "click")
-        .join(t1, "user_id")
-        .where(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + lit(winUs))
-        .groupBy("user_id").agg(min("ts_us").as("t2"))
-      val t3 = ev.where(col("event_type") === "purchase")
-        .join(t2, "user_id")
-        .where(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + lit(winUs))
-        .groupBy("user_id").agg(min("ts_us").as("t3"))
-      // r18 (guide §2.4): ONE execution of the stage chain — the former
-      // three-branch union re-aggregated t1/t2/t3 separately (the t1
-      // subtree executed under every branch); chaining two left joins
-      // (t2 ⊆ t1, t3 ⊆ t2 by construction) gives one per-user frame
-      // whose single 1-row aggregate carries all three counts, exploded
-      // to the same three rows.
-      // step-1 counts ROWS of the frame (= t1's rows by construction:
-      // t2 ⊆ t1, t3 ⊆ t2, one row per user) rather than non-null t1 —
-      // ADVICE r18 #1: a source whose view events all carry NULL ts_us
-      // yields a t1 row with null min, which the old union form counted;
-      // count(lit(1)) makes the single-execution equivalence
-      // unconditional (identical on any data where ts_us is non-null)
-      funnelCountRows(
-        t1.join(t2, Seq("user_id"), "left").join(t3, Seq("user_id"), "left")
-          .agg(count(lit(1)).as("n1"), count(col("t2")).as("n2"),
-            count(col("t3")).as("n3")))
-    }),
+    "q_funnel_steps" -> ((s, d) => funnelSteps(Graft.events(s, d))),
 
     "q_dau_wau_streaming" -> ((s, d) => {
       // DAU/WAU maintained AT INGEST by the real streaming engine (r18,

@@ -592,20 +592,28 @@ object StreamingQueries {
       confs: Map[String, String] = Map.empty): DataFrame = {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try withStreamParts(spark, pathBytes(s"$dir/$table.parquet")) {
-      val out = transform(readStreamParquet(spark, dir, table))
-      val q = out.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("complete")
-        .option("checkpointLocation", scratchDir(s"ckpt-$queryName"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop() // T5: graceful shutdown (idempotent after AvailableNow drains)
-      spark.table(queryName)
+      drainToMemory(spark, transform(readStreamParquet(spark, dir, table)), queryName,
+        "complete", scratchDir(s"ckpt-$queryName"))
     } finally {
       confs.keys.foreach(spark.conf.unset)
     }
+  }
+
+  /** Drain the streaming frame `out` into the in-memory sink `queryName`
+    * (`AvailableNow`, checkpointed at `ckpt`) and return the sink's table.
+    */
+  private def drainToMemory(spark: SparkSession, out: DataFrame, queryName: String,
+                            mode: String, ckpt: String): DataFrame = {
+    val q = out.writeStream
+      .format("memory")
+      .queryName(queryName)
+      .outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q.stop() // T5: graceful shutdown (idempotent after AvailableNow drains)
+    spark.table(queryName)
   }
 
   /** Run an already-built streaming DataFrame to a named in-memory sink in
@@ -615,16 +623,7 @@ object StreamingQueries {
   def runAppendToMemory(spark: SparkSession, queryName: String, out: DataFrame,
                         inputBytes: Long = -1L): DataFrame =
     withStreamParts(spark, inputBytes) {
-      val q = out.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", scratchDir(s"ckpt-$queryName"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      spark.table(queryName)
+      drainToMemory(spark, out, queryName, "append", scratchDir(s"ckpt-$queryName"))
     }
 
   /** Run an already-built streaming DataFrame to a named in-memory sink
@@ -636,16 +635,7 @@ object StreamingQueries {
   def runUpdateToMemory(spark: SparkSession, queryName: String, out: DataFrame,
                         inputBytes: Long = -1L): DataFrame =
     withStreamParts(spark, inputBytes) {
-      val q = out.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("update")
-        .option("checkpointLocation", scratchDir(s"ckpt-$queryName"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      spark.table(queryName)
+      drainToMemory(spark, out, queryName, "update", scratchDir(s"ckpt-$queryName"))
     }
 
   /** T4: `streams.cleanUp()` — run the aggregation twice with the
@@ -661,12 +651,8 @@ object StreamingQueries {
     val ckpt = scratchDir(s"ckpt-$queryName")
     def once(name: String): DataFrame = withStreamParts(
         spark, pathBytes(s"$dir/$table.parquet")) {
-      val q = transform(readStreamParquet(spark, dir, table)).writeStream
-        .format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name)
+      drainToMemory(spark, transform(readStreamParquet(spark, dir, table)), name,
+        "complete", ckpt)
     }
     once(s"${queryName}_first").write.mode("overwrite").format("noop").save()
     // cleanUp: wipe local state, then recompute from the source

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ann.{Ann, AnnUdfWitness}
-import graft.functions.{IvfAssign, IvfNearestLists, IvfPqAdc, IvfPqEncode, IvfPqLut, IvfPqProbes, PqAdc, PqEncode, PqLut}
+import graft.functions.{IvfAssign, IvfNearestLists, IvfPqAdc, IvfPqEncode, IvfPqLut, IvfPqProbes, KernelPayload, PqAdc, PqEncode, PqLut}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
@@ -31,11 +31,10 @@ class AnnKernelSpec extends GraftTest {
 
   test("IvfAssign kernel == UDF witness bit-for-bit (SemDeDup assignment)") {
     val model = Ann.trainIvf(emb, "vec_id", "embedding", nLists = 16)
-    val bc = spark.sparkContext.broadcast(
-      model.centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bc = Ann.centroidPayload(spark, model.centroids)
     val rows = emb.select(
       kcol(IvfAssign(_, bc), col("embedding")).as("k"),
-      AnnUdfWitness.ivfAssign(bc)(col("embedding").cast("array<double>")).as("u")).collect()
+      AnnUdfWitness.ivfAssign(bc.bc)(col("embedding").cast("array<double>")).as("u")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val k = r.getStruct(0); val u = r.getStruct(1)
@@ -47,12 +46,11 @@ class AnnKernelSpec extends GraftTest {
 
   test("IvfNearestLists kernel == UDF witness for n = 1 and n = nProbe") {
     val model = Ann.trainIvf(emb, "vec_id", "embedding", nLists = 16)
-    val bc = spark.sparkContext.broadcast(
-      model.centroids.map(c => (c, math.sqrt(c.map(x => x * x).sum))))
+    val bc = Ann.centroidPayload(spark, model.centroids)
     Seq(1, 4, 16).foreach { n =>
       val rows = emb.select(
         kcol(IvfNearestLists(_, bc, n), col("embedding")).as("k"),
-        AnnUdfWitness.ivfNearestLists(bc, n)(col("embedding").cast("array<double>")).as("u"))
+        AnnUdfWitness.ivfNearestLists(bc.bc, n)(col("embedding").cast("array<double>")).as("u"))
         .collect()
       assert(rows.nonEmpty)
       rows.foreach { r =>
@@ -63,12 +61,12 @@ class AnnKernelSpec extends GraftTest {
 
   test("PqEncode / PqLut kernels == UDF witnesses bit-for-bit") {
     val model = Ann.trainPq(emb, "vec_id", "embedding", m = 8, codebookBits = 6)
-    val bc = spark.sparkContext.broadcast((model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.books, model.bounds))
     val rows = emb.select(
       kcol(PqEncode(_, bc), col("embedding")).as("ke"),
-      AnnUdfWitness.pqEncode(bc)(col("embedding").cast("array<double>")).as("ue"),
+      AnnUdfWitness.pqEncode(bc.bc)(col("embedding").cast("array<double>")).as("ue"),
       kcol(PqLut(_, bc), col("embedding")).as("kl"),
-      AnnUdfWitness.pqLut(bc, model.kCent)(col("embedding").cast("array<double>")).as("ul"))
+      AnnUdfWitness.pqLut(bc.bc, model.kCent)(col("embedding").cast("array<double>")).as("ul"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -81,7 +79,7 @@ class AnnKernelSpec extends GraftTest {
 
   test("PqAdc kernel == UDF witness bit-for-bit on real candidate pairs") {
     val model = Ann.trainPq(emb, "vec_id", "embedding", m = 8, codebookBits = 6)
-    val bc = spark.sparkContext.broadcast((model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.books, model.bounds))
     val enc = emb.select(col("vec_id").as("nid"),
         kcol(PqEncode(_, bc), col("embedding")).as("_e"))
       .select(col("nid"), col("_e._1").as("codes"), col("_e._2").as("xnorm"))
@@ -101,14 +99,14 @@ class AnnKernelSpec extends GraftTest {
   test("IvfPqEncode / IvfPqProbes / IvfPqLut kernels == UDF witnesses bit-for-bit") {
     val model = Ann.trainIvfPq(emb, "vec_id", "embedding",
       nLists = 16, m = 8, codebookBits = 6)
-    val bc = spark.sparkContext.broadcast((model.centroids, model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.centroids, model.books, model.bounds))
     val rows = emb.select(
       kcol(IvfPqEncode(_, bc), col("embedding")).as("ke"),
-      AnnUdfWitness.ivfPqEncode(bc)(col("embedding").cast("array<double>")).as("ue"),
+      AnnUdfWitness.ivfPqEncode(bc.bc)(col("embedding").cast("array<double>")).as("ue"),
       kcol(IvfPqProbes(_, bc, 6), col("embedding")).as("kp"),
-      AnnUdfWitness.ivfPqProbes(bc, 6)(col("embedding").cast("array<double>")).as("up"),
+      AnnUdfWitness.ivfPqProbes(bc.bc, 6)(col("embedding").cast("array<double>")).as("up"),
       kcol(IvfPqLut(_, bc), col("embedding")).as("kl"),
-      AnnUdfWitness.ivfPqLut(bc, model.kCent)(col("embedding").cast("array<double>")).as("ul"))
+      AnnUdfWitness.ivfPqLut(bc.bc, model.kCent)(col("embedding").cast("array<double>")).as("ul"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -130,7 +128,7 @@ class AnnKernelSpec extends GraftTest {
   test("IvfPqAdc kernel == UDF witness bit-for-bit on real candidate pairs") {
     val model = Ann.trainIvfPq(emb, "vec_id", "embedding",
       nLists = 16, m = 8, codebookBits = 6)
-    val bc = spark.sparkContext.broadcast((model.centroids, model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.centroids, model.books, model.bounds))
     val enc = emb.select(col("vec_id").as("nid"),
         kcol(IvfPqEncode(_, bc), col("embedding")).as("_e"))
       .select(col("nid"), col("_e._1").as("list"),
@@ -156,7 +154,7 @@ class AnnKernelSpec extends GraftTest {
   test("kernels null-propagate like the UDFs (null vector in, null out)") {
     import spark.implicits._
     val model = Ann.trainPq(emb, "vec_id", "embedding", m = 4, codebookBits = 4)
-    val bc = spark.sparkContext.broadcast((model.books, model.bounds))
+    val bc = KernelPayload(spark.sparkContext, (model.books, model.bounds))
     val dim = model.bounds.last // model dimensionality (the embeddings table's)
     val df = Seq((1L, Option(Array.tabulate(dim)(_.toDouble))), (2L, Option.empty[Array[Double]]))
       .toDF("id", "v")

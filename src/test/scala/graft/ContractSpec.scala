@@ -37,19 +37,20 @@ class ContractSpec extends GraftTest {
   }
 
   test("src/main makes temp dirs only through ProbeUtil.scratchDir") {
-    // a temp dir made anywhere else is never swept and outlives the JVM;
-    // ScaleCheck and StreamScale delete their own dirs
+    // and so does src/test: a temp dir made anywhere else is never swept
+    // and outlives the JVM; ScaleCheck and StreamScale delete their own
     val allowed = Set("ProbeUtil.scala", "ScaleCheck.scala", "StreamScale.scala")
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
     def walk(f: java.io.File): Unit =
       if (f.isDirectory) f.listFiles.foreach(walk)
       else if (f.getName.endsWith(".scala") && !allowed(f.getName)) {
         val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        if ("""createTempDirectory\s*\(""".r.findFirstIn(text).isDefined) offenders += f.getPath
+        if ("""createTemp(Directory|File)\s*\(""".r.findFirstIn(text).isDefined) offenders += f.getPath
       }
     walk(new java.io.File("src/main/scala"))
+    walk(new java.io.File("src/test/scala"))
     assert(offenders.isEmpty,
-      s"Files.createTempDirectory outside ProbeUtil (use ProbeUtil.scratchDir): ${offenders.mkString(", ")}")
+      s"temp dir or file made outside ProbeUtil (use ProbeUtil.scratchDir): ${offenders.mkString(", ")}")
   }
 
   test("flagship entry returns rows (driver smoke-check)") {

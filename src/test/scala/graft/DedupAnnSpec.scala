@@ -541,7 +541,7 @@ class DedupAnnSpec extends GraftTest {
     // executor loss) must be a pure execution-strategy switch: same
     // labels as the localCheckpoint bench mode, and superseded rounds'
     // checkpoint files must be cleaned up as the algorithm advances
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toFile
+    val dir = new java.io.File(ProbeUtil.scratchDir("ckpt"))
     try {
       val pairs = ((2L, 1L) +: (2L, 3L) +: (10L, 11L) +:
         (100L until 160L).map(i => (i, i + 1))).toDF("a", "b")
@@ -582,8 +582,8 @@ class DedupAnnSpec extends GraftTest {
 
   test("connected components: session checkpoint dir auto-enables reliable mode; conflicts throw") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-autockpt-").toFile
-    val other = java.nio.file.Files.createTempDirectory("graft-otherckpt-").toFile
+    val dir = new java.io.File(ProbeUtil.scratchDir("autockpt"))
+    val other = new java.io.File(ProbeUtil.scratchDir("otherckpt"))
     try {
       spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
       val pairs = ((1L, 2L) +: (100L until 120L).map(i => (i, i + 1))).toDF("a", "b")
@@ -863,7 +863,7 @@ class DedupAnnSpec extends GraftTest {
     val corpus = (Seq((51L, "en", 15), (52L, "en", 20), (53L, "en", 25)) ++
       (500L until 700L).map(i => (i, "en", 300))).toDF("doc_id", "lang", "n_chars")
     val blocks = Seq("lang" -> col("lang"), "blk" -> (col("n_chars") / lit(32)).cast("int"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-blkside").toString
+    val dir = ProbeUtil.scratchDir("blkside")
     try {
       Dedup.cappedBlockSide(corpus, "doc_id", blocks, as = "b", maxBucket = 100)
         .write.mode("overwrite").parquet(dir)

@@ -86,7 +86,7 @@ class KafkaIntegrationSpec extends GraftTest {
     // S3 wire path: complete-mode changelog to the output topic —
     // latest value per key IS the KTable answer, exactly how the
     // reference reads its output (readKeyValuesToMap, latest wins)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kafka-ckpt").toString
+    val ckpt = ProbeUtil.scratchDir("kafka-ckpt")
     sources.Sources.writeKafka(
         perRegion.select(col("key"), col("value").cast("string").as("value")),
         bootstrap, outTopic, ckpt)

@@ -47,7 +47,7 @@ class NpyRobotsSpec extends GraftTest {
     import spark.implicits._
     val df = (0L until 20L).map(i => (i, Array.tabulate(3)(j => (i * 10 + j).toFloat)))
       .toDF("vec_id", "embedding")
-    val out = java.nio.file.Files.createTempDirectory("npy-shards").toString
+    val out = ProbeUtil.scratchDir("npy-shards")
     Npy.writeNpyShards(df, out, "vec_id", "embedding", shards = 4)
     val got = Npy.readNpyShards(spark, out)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Float](2).toVector))

@@ -201,7 +201,7 @@ class PlanSpec extends GraftTest {
 
   test("partitioned layout prunes non-matching directories at the scan") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune").toString
+    val path = ProbeUtil.scratchDir("prune")
     graft.sources.Sources.writePartitioned(
       (0 until 300).map(i => (i.toLong, Seq("en", "de", "fr")(i % 3))).toDF("id", "lang"),
       path, "lang")

@@ -233,7 +233,7 @@ class ProcessorsSpec extends GraftTest {
 
   test("X4 checkpoint resume: restart processes only new data (exactly-once)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("x4-resume")
+    val base = java.nio.file.Paths.get(ProbeUtil.scratchDir("x4-resume"))
     val srcDir = base.resolve("src"); val outDir = base.resolve("out"); val ckpt = base.resolve("ckpt")
     java.nio.file.Files.createDirectories(srcDir)
     // stage then move so the file stream sees complete files
@@ -396,8 +396,8 @@ class ProcessorsSpec extends GraftTest {
     import spark.implicits._
     import graft.streaming.StreamingQueries
     import org.apache.spark.sql.DataFrame
-    val changelog = java.nio.file.Files.createTempDirectory("retry-changelog").toString
-    val snapRoot = java.nio.file.Files.createTempDirectory("retry-snap").toString
+    val changelog = ProbeUtil.scratchDir("retry-changelog")
+    val snapRoot = ProbeUtil.scratchDir("retry-snap")
     def snapshot(acc: DataFrame) =
       acc.groupBy("k").agg(round(sum("v"), 2).as("total"))
     val b0 = Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")
@@ -617,10 +617,10 @@ class ProcessorsSpec extends GraftTest {
     import org.apache.spark.sql.functions._
     val hour = 3600L * 1000000L
     val base = 1704067200000000L
-    val dir = java.nio.file.Files.createTempDirectory("wmdedup")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("wmdedup"))
     def stage(i: Int, rows: Seq[(String, Long)]): Unit = {
       import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory(s"wmst$i")
+      val tmp = java.nio.file.Paths.get(ProbeUtil.scratchDir(s"wmst$i"))
       rows.toDF("k", "us").withColumn("event_time", timestamp_micros(col("us")))
         .drop("us").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val l = java.nio.file.Files.list(tmp)
@@ -647,7 +647,7 @@ class ProcessorsSpec extends GraftTest {
     val q = out.writeStream.format("memory").queryName("wmdedup_probe")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("wmck").toString)
+        ProbeUtil.scratchDir("wmck"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(); q.stop()
@@ -693,7 +693,7 @@ class ProcessorsSpec extends GraftTest {
 
   test("a table stored as a directory of files streams all of its rows") {
     // the split layout: <dir>/events.parquet is a directory of part files
-    val dir = java.nio.file.Files.createTempDirectory("split-layout")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("split-layout"))
     try {
       val events = spark.read.parquet(s"$sf/events.parquet")
       events.repartition(4).write.parquet(s"$dir/events.parquet")
@@ -715,7 +715,7 @@ class ProcessorsSpec extends GraftTest {
         .stageStreamBatchedCached(spark, src, "cachedstage", "cachedstage|spec")(batchOf)
         .writeStream.format("memory").queryName(name).outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("csck").toString)
+          ProbeUtil.scratchDir("csck"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(); q.stop()
       spark.table(name).select("id").collect().map(_.getLong(0)).sorted.toSeq

@@ -142,7 +142,7 @@ class SafetensorsSpec extends GraftTest {
 
   test("permissive read quarantines a torn shard whole; strict read throws") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("stspec").toString
+    val dir = ProbeUtil.scratchDir("stspec")
     val emb = Graft.embeddings(spark, sf).limit(40)
       .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
     Safetensors.writeVectors(emb, dir, "vec_id", "embedding", "label", shards = 2)

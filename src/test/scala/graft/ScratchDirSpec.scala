@@ -25,25 +25,13 @@ object ScratchDirChild {
 class ScratchDirSpec extends GraftTest {
 
   test("a JVM that ran entries with scratch dirs leaves no graft-* dir behind") {
-    val root = Files.createTempDirectory("scratch-sweep")
+    val root = java.nio.file.Paths.get(ProbeUtil.scratchDir("sweep"))
     try {
       val tmp = Files.createDirectory(root.resolve("tmp"))
-      val log = root.resolve("child.log").toFile
-      // the parent's module opens and -D settings, minus its tmpdir and heap
-      val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filter(a => a.startsWith("--add-opens") || a.startsWith("-D"))
-        .filterNot(_.startsWith("-Djava.io.tmpdir"))
-      val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ inherited ++
-        Seq("-Xmx2g", "-Xss32m", s"-Djava.io.tmpdir=$tmp",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.ScratchDirChild", sf,
-          "s_arrow_roundtrip", "dd_lsh_resolve", "dd_stream_dedup_watermark")
-      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log)
-      pb.environment().put("SPARK_GRAFT_CPUS", "2")
-      val exit = pb.start().waitFor()
-      def logTail = Files.readAllLines(log.toPath).asScala.takeRight(30).mkString("\n")
-      assert(exit == 0, s"child JVM exited $exit:\n$logTail")
+      val log = root.resolve("child.log")
+      val exit = ChildJvm.run(tmp, log, "graft.ScratchDirChild", sf,
+        "s_arrow_roundtrip", "dd_lsh_resolve", "dd_stream_dedup_watermark")
+      assert(exit == 0, s"child JVM exited $exit:\n${ChildJvm.logTail(log)}")
       val listing = Files.list(tmp)
       val left = try listing.iterator().asScala.map(_.getFileName.toString)
         .filter(_.startsWith("graft-")).toSeq.sorted

@@ -25,7 +25,7 @@ class SourcesSpec extends GraftTest {
     StructField("genre", StringType)))
 
   private def writeSongFixture(): String = {
-    val dir = Files.createTempDirectory("graft-songs")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("songs"))
     val rows = Seq(
       "1,First Light,The Harbor Lights,Morning Tide,Folk",
       "2,First Light,The Harbor Lights,Gulls Over Granite,Folk",
@@ -60,7 +60,7 @@ class SourcesSpec extends GraftTest {
 
   test("corpus write-out partitions by split: one directory per split, scans prune") {
     import graft.functions.TextFunctions
-    val out = Files.createTempDirectory("graft-corpus-out").toFile
+    val out = new java.io.File(ProbeUtil.scratchDir("corpus-out"))
     out.deleteOnExit()
     val corpus = Graft.documents(spark, sf)
       .select(col("doc_id"), col("text"), TextFunctions.splitAssign(col("doc_id")).as("split"))
@@ -85,7 +85,7 @@ class SourcesSpec extends GraftTest {
     // appear as a _corrupt_record row — not be silently skipped — and
     // embedded newlines must survive the line-delimited framing
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-jsonl").toFile.getAbsolutePath
+    val dir = ProbeUtil.scratchDir("jsonl")
     val docs = Seq((1L, "plain text"), (2L, "line one\nline two\ttabbed"))
       .toDF("doc_id", "text")
     docs.write.mode("overwrite").json(dir)
@@ -114,7 +114,7 @@ class SourcesSpec extends GraftTest {
     // see: Spark's ORC scan must behave like the parquet scan — the
     // predicate reaches the reader (PushedFilters) and a 2-column
     // projection never reads the text column
-    val dir = Files.createTempDirectory("graft-orc").toFile.getAbsolutePath
+    val dir = ProbeUtil.scratchDir("orc")
     val docs = Graft.documents(spark, sf)
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.schema(docs.schema).orc(dir)
@@ -162,7 +162,7 @@ class SourcesSpec extends GraftTest {
     // linear sort
     val grid = for { a <- 0 until 64; b <- 0 until 64 } yield (a.toLong * 64 + b, a.toLong, b.toLong)
     val df = grid.toDF("id", "a", "b")
-    val dir = Files.createTempDirectory("graft-zorder").toFile.getAbsolutePath
+    val dir = ProbeUtil.scratchDir("zorder")
     Sources.writeZOrdered(df, dir, "a", "b", numFiles = 16)
     val back = spark.read.schema(df.schema).parquet(dir)
     // identity on content
@@ -205,7 +205,7 @@ class SourcesSpec extends GraftTest {
 
   test("parquet bloom filter: written, present in the footer, answers might-contain") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft-bloomspec").toString
+    val dir = ProbeUtil.scratchDir("bloomspec")
     val docs = Graft.documents(spark, sf).limit(200)
     docs.coalesce(1).write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#doc_id", "true")
@@ -284,7 +284,7 @@ class SourcesSpec extends GraftTest {
   test("USTAR cross-validation: GNU tar extracts our shards; we read GNU tar's") {
     import graft.sources.Sources.Tar
     assume(new java.io.File("/usr/bin/tar").exists(), "system tar required")
-    val dir = java.nio.file.Files.createTempDirectory("graft-tarx")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("tarx"))
     // ours -> GNU tar
     val shard = dir.resolve("ours.tar")
     val payload = Array.tabulate(700)(i => (i * 7 + 1).toByte)
@@ -351,7 +351,7 @@ class SourcesSpec extends GraftTest {
     // 3. a dot-less regular member survives Tar.readAll but is NOT a
     // WebDataset sample — readWebDataset must skip it, not crash
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wds-mixed")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("wds-mixed"))
     val out = java.nio.file.Files.newOutputStream(dir.resolve("shard-00000.tar"))
     try {
       Tar.writeEntry(out, "README", payload) // no dot
@@ -366,7 +366,7 @@ class SourcesSpec extends GraftTest {
 
   test("WebDataset shards: sample members stay contiguous in one shard, roundtrip exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wds").toString
+    val dir = ProbeUtil.scratchDir("wds")
     val rows = (0 until 200).flatMap { i =>
       val k = f"$i%06d"
       Seq((k, "json", s"""{"i":$i}""".getBytes("UTF-8")),
@@ -395,7 +395,7 @@ class SourcesSpec extends GraftTest {
 
   test("TFRecord shards roundtrip through Spark write/read (payload identity)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tfrec").toString
+    val dir = ProbeUtil.scratchDir("tfrec")
     val rows = (0 until 500).map(i => s"""{"i":$i,"s":"v$i"}""")
     graft.sources.Sources.writeTfRecords(
       rows.toDF("payload").select(col("payload").cast("binary").as("payload")),
@@ -436,7 +436,7 @@ class SourcesSpec extends GraftTest {
 
   test("container reads plan exactly one task per shard (the parallelism contract)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tfr-tasks").toString
+    val dir = ProbeUtil.scratchDir("tfr-tasks")
     val payloads = (1 to 70).map(i => s"rec-$i").toDF("payload")
       .select(col("payload").cast("binary").as("payload"))
     graft.sources.Sources.writeTfRecords(payloads, "payload", dir, shards = 7)
@@ -512,7 +512,7 @@ class SourcesSpec extends GraftTest {
 
   test("failed shard write leaves no temp files behind (ADVICE r14)") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("shardfail")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("shardfail"))
     // a null payload makes TfRecord.write throw mid-shard: the write
     // must fail the job AND delete its .attempt-N.tmp before rethrowing
     val bad = spark.range(10)
@@ -587,7 +587,7 @@ class SourcesSpec extends GraftTest {
 
   test("ZIP shards: roundtrip exact, CRC corruption detection") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-zip").toString
+    val dir = ProbeUtil.scratchDir("zip")
     val rows = (0 until 200).map(i => (f"$i%06d", "bin",
       Array.tabulate[Byte](50 + i % 7)(j => ((i * 31 + j) % 256).toByte)))
     graft.sources.Sources.writeZipShards(rows.toDF("key", "ext", "payload"),
@@ -666,7 +666,7 @@ class SourcesSpec extends GraftTest {
     // mode) never produces; a directory member exercises the skip rule
     val py = new java.io.File("/usr/bin/python3")
     assume(py.exists(), "python3 not available")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zipx")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("zipx"))
     val zf = dir.resolve("foreign.zip")
     val script =
       s"""import zipfile
@@ -690,7 +690,7 @@ class SourcesSpec extends GraftTest {
 
   test("Arrow IPC: Spark roundtrip exact; truncation and garbage throw") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-arrow").toString
+    val dir = ProbeUtil.scratchDir("arrow")
     val df = (0 until 300).map(i =>
       (i.toLong, s"text-$i \u00e9\u4e2d", i * 0.125, Array.tabulate[Byte](i % 5)(j => (i + j).toByte)))
       .toDF("id", "s", "x", "b")
@@ -730,7 +730,7 @@ class SourcesSpec extends GraftTest {
         }
       }
     assume(py.isDefined, "no pyarrow-capable python3 available")
-    val dir = java.nio.file.Files.createTempDirectory("graft-arrowx")
+    val dir = java.nio.file.Paths.get(ProbeUtil.scratchDir("arrowx"))
     // direction 1: OUR writer -> pyarrow reader (checksummed row echo)
     import spark.implicits._
     val df = Seq((1L, "alpha", 1.5), (2L, "beta", -2.25), (3L, "\u00fcber", 0.0))
@@ -772,7 +772,7 @@ class SourcesSpec extends GraftTest {
   test("Arrow IPC list<float32>: bit-exact roundtrip; pyarrow reads our list column") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-arrowl").toString
+    val dir = ProbeUtil.scratchDir("arrowl")
     val df = Seq(
       (1L, Array(1.5f, -0.25f, java.lang.Float.MIN_VALUE)),
       (2L, Array.empty[Float]),
@@ -817,7 +817,7 @@ class SourcesSpec extends GraftTest {
       }
     }
     assume(py.isDefined, "no pyarrow-capable python3")
-    val dir = java.nio.file.Files.createTempDirectory("graft-arrowf").toString
+    val dir = ProbeUtil.scratchDir("arrowf")
     // >1 batch so the footer carries multiple Block records
     val df = (0 until 2500).map(i => (i.toLong, s"r$i")).toDF("id", "s")
     graft.sources.Sources.writeArrowFile(df, dir, shards = 1)

@@ -95,7 +95,7 @@ class StreamOpsSpec extends GraftTest {
   }
 
   test("branched partitioned sink writes disjoint branches in one pass") {
-    val dir = java.nio.file.Files.createTempDirectory("branch-sink").toString
+    val dir = ProbeUtil.scratchDir("branch-sink")
     fixture.toBranchedSink(dir, 2, col("key") === "a" || col("key") === "b", col("value") === "value2")
     val back = spark.read.parquet(dir)
     val byTag = back.collect().groupBy(_.getAs[Int]("branch"))

@@ -23,7 +23,7 @@ class WatermarkBatchSpec extends GraftTest {
       .count()
     val q = src.writeStream.format("memory").queryName("wm3b")
       .outputMode("append")
-      .option("checkpointLocation", java.nio.file.Files.createTempDirectory("wm3b").toString)
+      .option("checkpointLocation", ProbeUtil.scratchDir("wm3b"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
