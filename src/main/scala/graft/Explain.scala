@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   * headline entry, a hash of its optimized logical plan (plus its join
   * hints, which canonicalization drops) and of its pre-AQE physical plan,
   * both in Catalyst's canonical form (what `sameResult` and exchange
-  * reuse compare), with scratch and working-directory paths, lambda
-  * names and exchange ids masked. Entries are built, never run, on the
+  * reuse compare), with scratch paths, lambda names and exchange ids
+  * masked. Entries are built, never run, on the
   * fixture corpus at width 4, so any JVM writes the same file: rerun it
   * and `git diff --exit-code plans/fingerprints.tsv` lists the entries
   * whose plans moved (PlanSpec pins AQE's runtime choices). Throws,
@@ -53,8 +53,6 @@ object Explain {
   private val masks = Seq(
     // scratch dirs: random names under the temp dir
     Pattern.compile(tmpDir + "/[^/\\s,()\\[\\]]+") -> "<tmp>",
-    // the working directory: the warehouse (saved bucketed tables) is there
-    Pattern.compile(Pattern.quote(Paths.get("").toAbsolutePath.toString)) -> "<cwd>",
     // synthetic lambda classes: numbered in load order, hashed by identity
     Pattern.compile("\\$\\$Lambda[^\\s,()\\[\\]]*") -> "\\$\\$Lambda",
     // exchange ids: a JVM-wide counter

@@ -34,10 +34,19 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
+    // the in-memory catalog forgets its tables when the JVM exits, so
+    // its warehouse goes too, unless the JVM names one: a swept scratch
+    // dir, not spark-warehouse/ under the working directory, where a
+    // managed table outlived its catalog entry and a rerun's table of the
+    // same name failed on LOCATION_ALREADY_EXISTS
+    if (!sys.props.contains("spark.sql.warehouse.dir"))
+      b.config("spark.sql.warehouse.dir", warehouse)
     val spark = runtimeConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  private lazy val warehouse = ProbeUtil.scratchDir("warehouse")
 
   /** The runtime-settable configs graft queries rely on: [[session]]
     * builds with them and [[configure]] applies them. Local streaming

@@ -329,10 +329,7 @@ object CoreQueries {
         .load(s"$out/*.tar")
         .select("content").as[Array[Byte]]
         .flatMap(graft.sources.Sources.Tar.readAll(_).collect {
-          // same dot-less/non-sample skip as Sources.readWebDataset
-          case (name, data) if name.lastIndexOf('.') > 0 =>
-            val dot = name.lastIndexOf('.')
-            (name.substring(0, dot), name.substring(dot + 1), data)
+          case (graft.sources.Sources.SampleName(key, ext), data) => (key, ext, data)
         })
         .toDF("key", "ext", "payload")
       val js = stream.where(col("ext") === "json")
@@ -651,13 +648,9 @@ object CoreQueries {
       val victim = java.nio.file.Paths.get(s"$out/s2/part-00000.safetensors")
       val vb = java.nio.file.Files.readAllBytes(victim)
       java.nio.file.Files.write(victim, java.util.Arrays.copyOf(vb, vb.length - 256))
-      val parts = (0 until 4).map(i => s"$out/s$i")
-      parts.tail.foldLeft(
-          graft.sources.Safetensors.readVectorsPermissive(s, parts.head,
-            "vec_id", "embedding", "label")) { (acc, p) =>
-          acc.unionAll(graft.sources.Safetensors.readVectorsPermissive(s, p,
-            "vec_id", "embedding", "label"))
-        }
+      // one read over all four dirs: one observe node, one metric
+      graft.sources.Safetensors.readVectorsPermissive(s, s"$out/s*",
+          "vec_id", "embedding", "label")
         .select(col("vec_id"), posexplode(col("embedding")), col("label"))
         .select(col("vec_id"), col("pos").cast("int").as("idx"),
           col("col").cast("double").as("value"), col("label").cast("int").as("label"))
@@ -730,7 +723,7 @@ object CoreQueries {
         .load(s"$out/*.zip")
         .select("content").as[Array[Byte]]
         .flatMap(graft.sources.Sources.Zip.readAll(_).collect {
-          case (name, data) if name.lastIndexOf('.') > 0 => data
+          case (graft.sources.Sources.SampleName(_, _), data) => data
         })
         .toDF("payload")
         .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
@@ -1889,17 +1882,15 @@ object CoreQueries {
       // The artifact is CATALOG tables, so the key carries a
       // guaranteed-unique session token — a fresh session must rebuild
       // its catalog entries (identityHashCode could collide after GC).
-      cachedSetup(s"bucketed-${sessionToken(s)}", d) { _ =>
+      cachedSetup(s"bucketed-${sessionToken(s)}", d) { dir =>
         Sources.writeBucketed(Graft.lineitem(s, d).select(
             col("l_orderkey"),
             round(col("l_extendedprice") * 100).cast("long").as("price_c"),
             round(col("l_discount") * 100).cast("long").as("disc_c")),
-          "graft_b_lineitem", "l_orderkey", nBuckets = 16,
-          overwriteOrphan = true)
+          "graft_b_lineitem", s"$dir/graft_b_lineitem", "l_orderkey", nBuckets = 16)
         Sources.writeBucketed(
           Graft.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-          "graft_b_orders", "o_orderkey", nBuckets = 16,
-          overwriteOrphan = true)
+          "graft_b_orders", s"$dir/graft_b_orders", "o_orderkey", nBuckets = 16)
       }
       s.table("graft_b_lineitem")
         .join(s.table("graft_b_orders"), col("l_orderkey") === col("o_orderkey"))

@@ -213,39 +213,34 @@ object Npy {
     * (the layout carries no ids). Any header/shape/extent violation
     * fails the task.
     */
-  def readNpyShards(spark: SparkSession, path: String): DataFrame =
-    npyShardFrame(spark, path, permissive = false)
-
-  /** Permissive dual: a shard failing ANY check is quarantined WHOLE —
-    * a bare .npy has no record framing, so a torn tail leaves no
-    * salvageable prefix (the data extent no longer matches the header's
-    * shape). Genuine I/O errors still propagate for task retry.
-    */
-  def readNpyShardsPermissive(spark: SparkSession, path: String): DataFrame =
-    npyShardFrame(spark, path, permissive = true)
-
-  private def npyShardFrame(spark: SparkSession, path: String,
-                            permissive: Boolean): DataFrame = {
+  def readNpyShards(spark: SparkSession, path: String): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(npyShardSchema)
-    Sources.shardRecords(spark, s"$path/*.npy") { (name, len, in) =>
-      def parse(): Iterator[Row] = {
-        if (len > Int.MaxValue - 16)
-          bad(s"shard of $len bytes exceeds the single-buffer bound")
-        val bytes = new Array[Byte](len.toInt)
-        var o = 0
-        while (o < bytes.length) {
-          val k = in.read(bytes, o, bytes.length - o)
-          if (k < 0) bad("truncated shard (EOF before the stated extent)")
-          o += k
-        }
-        decodeVectorShard(shardIndexOf(name), bytes)
-      }
-      if (!permissive) parse()
-      else
-        try parse().toVector.iterator
-        catch { case _: IllegalArgumentException => Iterator.empty }
-    }.toDF()
+    Sources.shardRecords(spark, s"$path/*.npy")(npyShard).toDF()
+  }
+
+  /** Permissive dual ([[Recovery]], metric `graft.npy.skip`): a bare
+    * .npy has no record framing, so a torn tail leaves no salvageable
+    * prefix (the data extent no longer matches the header's shape). The
+    * whole shard is validated before its first row, and a shard failing
+    * ANY check is dropped whole: its full length counts as dropped.
+    */
+  def readNpyShardsPermissive(spark: SparkSession, path: String): DataFrame =
+    Recovery.read(spark, s"$path/*.npy", "npy", npyShardSchema) { (name, len, in) =>
+      Recovery.recover(npyShard(name, len, in).toVector.iterator, len, () => len)
+    } { case row => row }
+
+  private def npyShard(name: String, len: Long, in: java.io.InputStream): Iterator[Row] = {
+    if (len > Int.MaxValue - 16)
+      bad(s"shard of $len bytes exceeds the single-buffer bound")
+    val bytes = new Array[Byte](len.toInt)
+    var o = 0
+    while (o < bytes.length) {
+      val k = in.read(bytes, o, bytes.length - o)
+      if (k < 0) bad("truncated shard (EOF before the stated extent)")
+      o += k
+    }
+    decodeVectorShard(shardIndexOf(name), bytes)
   }
 
   private val shardRe = ".*part-(\\d+)\\.npy$".r

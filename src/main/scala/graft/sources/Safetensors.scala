@@ -366,24 +366,20 @@ object Safetensors {
     }.toDF()
   }
 
-  /** Permissive dual: a shard failing ANY spec check is quarantined
-    * WHOLE (safetensors has no record framing — there is no salvageable
-    * prefix), surfacing zero rows for it instead of failing the job;
-    * genuine I/O errors still propagate for task retry.
+  /** Permissive dual ([[Recovery]], metric `graft.safetensors.skip`):
+    * safetensors has no record framing, so there is no salvageable
+    * prefix. The whole shard is validated before its first row (rows()
+    * is lazy, so it is materialized inside the recovery walk), and a
+    * shard failing ANY spec check is dropped whole: its full length
+    * counts as dropped.
     */
   def readVectorsPermissive(spark: SparkSession, path: String, idCol: String,
-                            vecCol: String, labelCol: String): DataFrame = {
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(vecSchema(idCol, vecCol, labelCol))
-    Sources.shardRecords(spark, s"$path/*.safetensors") { (_, len, in) =>
-      try {
+                            vecCol: String, labelCol: String): DataFrame =
+    Recovery.read(spark, s"$path/*.safetensors", "safetensors",
+        vecSchema(idCol, vecCol, labelCol)) { (_, len, in) =>
+      Recovery.recover({
         val (infos, _, buf) = read(in, len)
-        // materialize eagerly: rows() is lazy, and a per-row failure
-        // AFTER this try would escape the quarantine
         rows(infos, buf, idCol, vecCol, labelCol).toVector.iterator
-      } catch {
-        case _: IllegalArgumentException => Iterator.empty
-      }
-    }.toDF()
-  }
+      }, len, () => len)
+    } { case row => row }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.sql.Row
 
 /** Source/sink surface (SURVEY.md §2.1). The engine's record shape is
@@ -136,33 +136,6 @@ object Sources {
     def readAll(bytes: Array[Byte]): Iterator[Array[Byte]] =
       readStream(new java.io.ByteArrayInputStream(bytes))
 
-    /** Permissive shard parse — the torn-tail recovery mode the CRCs
-      * exist for: a writer killed mid-record (or a truncated copy)
-      * leaves a shard whose PREFIX is intact and whose tail is garbage.
-      * Returns every complete, checksum-verified record up to the first
-      * framing/CRC failure and reports how many bytes were abandoned;
-      * a corrupted byte can therefore only ever DROP the tail, never
-      * yield a silently-wrong payload (the strict reader's guarantee,
-      * minus the throw). Log-and-continue at the shard level — the
-      * reference's T2 semantics applied to binary shards.
-      */
-    def readAllPermissive(bytes: Array[Byte]): (Seq[Array[Byte]], Long) = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-      val it = readAll(bytes)
-      var consumedOk = true
-      var tail = 0L
-      try while (it.hasNext) out += it.next()
-      catch {
-        case _: IllegalArgumentException => consumedOk = false
-      }
-      if (!consumedOk) {
-        // bytes past the last GOOD record are the abandoned tail
-        var good = 0L
-        out.foreach(p => good += 8 + 4 + p.length + 4)
-        tail = bytes.length - good
-      }
-      (out.toSeq, tail)
-    }
   }
 
   /** tf.Example protobuf wire format (r14) — the MESSAGE inside real
@@ -482,14 +455,14 @@ object Sources {
       * members, or a partial trailing header — throws, because a torn
       * shard whose tear lands on a member boundary would otherwise pass
       * strict validation with members silently missing. The lenient
-      * treat-EOF-as-end acceptance lives only in
-      * [[readStreamPermissive]], whose walk surfaces the loss as a
-      * marker instead of garbage.
+      * treat-EOF-as-end acceptance lives only in the lenient walk
+      * [[readWebDatasetPermissive]] recovers, which surfaces the loss as
+      * a counted marker instead of garbage.
       */
     def readStream(in: java.io.InputStream): Iterator[(String, Array[Byte])] =
       walk(in, strict = true)
 
-    private def walk(in: java.io.InputStream, strict: Boolean)
+    private[graft] def walk(in: java.io.InputStream, strict: Boolean)
         : Iterator[(String, Array[Byte])] =
       new Iterator[(String, Array[Byte])] {
         private val din = new java.io.DataInputStream(in)
@@ -589,58 +562,6 @@ object Sources {
     /** [[readStream]] over in-memory bytes. */
     def readAll(bytes: Array[Byte]): Iterator[(String, Array[Byte])] =
       readStream(new java.io.ByteArrayInputStream(bytes))
-
-    /** Torn-tail recovery walk — [[TfRecord.readAllPermissive]]'s twin
-      * for tar shards: every complete, checksum-verified regular member
-      * up to the first framing/checksum failure survives LAZILY; on
-      * failure ONE trailing marker (null name) carries the abandoned
-      * byte count (shard length minus the emitted members' exact
-      * framing — 512-byte header + 512-padded data; non-regular members
-      * walked before the failure conservatively count as abandoned). A
-      * clean shard emits no marker: its end-of-archive blocks are
-      * framing, not loss. A poisoned FIRST header abandons the whole
-      * shard (quarantine semantics) — a corrupted byte can only ever
-      * DROP members, never yield garbage ones.
-      */
-    def readStreamPermissive(in: java.io.InputStream, shardLen: Long)
-        : Iterator[(String, Array[Byte], Long)] =
-      new Iterator[(String, Array[Byte], Long)] {
-        // LAZY: a poisoned FIRST header must throw inside fetch()'s
-        // try/catch, not at construction. The inner walk is the LENIENT
-        // one — EOF-as-end stays acceptable here (strict now rejects it,
-        // ADVICE r14) because this wrapper accounts any cut through the
-        // abandoned-bytes marker instead of failing the shard
-        private lazy val inner = walk(in, strict = false)
-        private var goodBytes = 0L
-        private var finished = false
-        private var failed = false
-        private var markerEmitted = false
-        private var nextEntry: (String, Array[Byte]) = null
-        private def fetch(): Unit = {
-          if (nextEntry != null || finished) return
-          try {
-            if (inner.hasNext) {
-              nextEntry = inner.next()
-              goodBytes += 512 + ((nextEntry._2.length + 511L) / 512L) * 512L
-            } else finished = true
-          } catch {
-            case _: IllegalArgumentException => failed = true; finished = true
-          }
-        }
-        override def hasNext: Boolean = {
-          fetch()
-          nextEntry != null || (failed && !markerEmitted)
-        }
-        override def next(): (String, Array[Byte], Long) = {
-          fetch()
-          if (nextEntry != null) {
-            val (n, d) = nextEntry; nextEntry = null; (n, d, 0L)
-          } else if (failed && !markerEmitted) {
-            markerEmitted = true
-            (null, null, shardLen - goodBytes)
-          } else throw new NoSuchElementException
-        }
-      }
   }
 
   /** Shard-writer commit protocol (ADVICE r13): stream the shard into
@@ -790,52 +711,43 @@ object Sources {
       }
   }
 
+  /** WebDataset/ZIP member naming: `<key>.<ext>`, the sample key being
+    * the name up to the LAST dot. Members without an extension (or
+    * hidden in directories a foreign writer added) are not samples:
+    * readers skip them, never crash on them (review r13:
+    * substring(0, -1) threw on dot-less names).
+    */
+  object SampleName {
+    def unapply(name: String): Option[(String, String)] = {
+      val dot = name.lastIndexOf('.')
+      if (dot > 0) Some((name.substring(0, dot), name.substring(dot + 1))) else None
+    }
+  }
+
+  /** The (key, ext, payload) schema the tar and zip sample readers emit. */
+  private val sampleSchema = StructType(Seq(
+    StructField("key", StringType), StructField("ext", StringType),
+    StructField("payload", BinaryType)))
+
   def readWebDataset(spark: SparkSession, path: String): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte])] =
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
         org.apache.spark.sql.Encoders.BINARY)
     shardRecords(spark, s"$path/*.tar") { (_, _, in) =>
-      Tar.readStream(in).collect {
-        // WebDataset convention: sample key = name up to the LAST dot.
-        // Members without an extension (or hidden in directories a
-        // foreign writer added) are not samples — skip, don't crash
-        // (review r13: substring(0, -1) threw on dot-less names)
-        case (name, data) if name.lastIndexOf('.') > 0 =>
-          val dot = name.lastIndexOf('.')
-          (name.substring(0, dot), name.substring(dot + 1), data)
-      }
+      Tar.readStream(in).collect { case (SampleName(key, ext), data) => (key, ext, data) }
     }.toDF("key", "ext", "payload")
   }
 
-  /** [[readWebDataset]] in torn-tail recovery mode (the
-    * [[readTfRecordsPermissive]] twin): complete checksum-verified
-    * members survive lazily, each corrupted shard emits a trailing
-    * marker whose abandoned-tail byte count rides an observe metric
-    * (`graft.webdataset.skip`), and a poisoned header can only drop
-    * members (whole-shard quarantine at worst), never surface garbage.
+  /** [[readWebDataset]] in torn-tail recovery mode ([[Recovery]],
+    * metric `graft.webdataset.skip`). The walk is the LENIENT one: EOF
+    * without the end-of-archive blocks ends the shard (strict rejects
+    * it), and any cut is accounted as abandoned bytes instead.
     */
-  def readWebDatasetPermissive(spark: SparkSession, path: String): DataFrame = {
-    implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte], Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.BINARY, org.apache.spark.sql.Encoders.scalaLong)
-    shardRecords(spark, s"$path/*.tar") { (_, shardLen, in) =>
-      Tar.readStreamPermissive(in, shardLen).map {
-        case (null, _, tail) => (null: String, null: String, null: Array[Byte], tail)
-        case (name, data, _) if name.lastIndexOf('.') > 0 =>
-          val dot = name.lastIndexOf('.')
-          (name.substring(0, dot), name.substring(dot + 1), data, 0L)
-        case (_, _, _) => (null: String, null: String, null: Array[Byte], 0L)
-      }
-    }
-      .toDF("key", "ext", "payload", "_tail")
-      .observe("graft.webdataset.skip",
-        sum(col("_tail")).as("dropped_bytes"),
-        sum(when(col("_tail") > 0, 1L).otherwise(0L)).as("corrupt_shards"))
-      .where(col("payload").isNotNull)
-      .select("key", "ext", "payload")
-  }
+  def readWebDatasetPermissive(spark: SparkSession, path: String): DataFrame =
+    Recovery.read(spark, s"$path/*.tar", "webdataset", sampleSchema) { (_, len, in) =>
+      Recovery.recoverCounted(in, len)(Tar.walk(_, strict = false))
+    } { case (SampleName(key, ext), data) => Row(key, ext, data) }
 
   /** ZIP shard container (pure JDK `java.util.zip`) — the other common
     * sample-archive layout next to WebDataset tar: many dataset dumps
@@ -858,9 +770,10 @@ object Sources {
     /** Counting little-endian reader over the raw stream, with pushback
       * for the deflate bytes the inflater over-reads past a member's end.
       * `consumed` tracks exactly the bytes the walk has accepted — the
-      * permissive wrapper's abandoned-tail accounting reads it.
+      * recovery walk's abandoned-tail accounting reads it (a counter
+      * outside would count the pushed-back read-ahead as consumed).
       */
-    private final class LeIn(in: java.io.InputStream) {
+    private[graft] final class LeIn(in: java.io.InputStream) {
       private val pb = new java.io.PushbackInputStream(in, 1 << 16)
       var consumed = 0L
       def readN(n: Int): Array[Byte] = {
@@ -912,7 +825,7 @@ object Sources {
     def readStream(in: java.io.InputStream): Iterator[(String, Array[Byte])] =
       walk(new LeIn(in))
 
-    private def walk(s: LeIn): Iterator[(String, Array[Byte])] =
+    private[graft] def walk(s: LeIn): Iterator[(String, Array[Byte])] =
       new Iterator[(String, Array[Byte])] {
         private var nextEntry: (String, Array[Byte]) = null
         private var finished = false
@@ -1007,58 +920,6 @@ object Sources {
 
     def readAll(bytes: Array[Byte]): Iterator[(String, Array[Byte])] =
       readStream(new java.io.ByteArrayInputStream(bytes))
-
-    /** Torn-tail recovery walk (the tar/TFRecord permissive twin):
-      * complete CRC-verified members survive lazily; the first framing
-      * or checksum failure abandons the rest of the shard and emits one
-      * trailing (null, null, abandonedBytes) marker — `shardLen` minus
-      * the bytes consumed through the last verified member, EXACT
-      * framing accounting (the walk counts its own consumption). Unlike
-      * tar, a tear landing exactly between members is still detected:
-      * a valid end is the central-directory signature, so plain EOF is
-      * always a tear. A torn shard can only ever DROP members, never
-      * surface garbage ones.
-      */
-    def readStreamPermissive(in: java.io.InputStream, shardLen: Long)
-        : Iterator[(String, Array[Byte], Long)] =
-      new Iterator[(String, Array[Byte], Long)] {
-        private val le = new LeIn(in)
-        private lazy val inner = walk(le)
-        private var goodBytes = 0L
-        private var finished = false
-        private var failed = false
-        private var markerEmitted = false
-        private var nextEntry: (String, Array[Byte]) = null
-        private def fetch(): Unit = {
-          if (nextEntry != null || finished) return
-          try {
-            if (inner.hasNext) {
-              nextEntry = inner.next()
-              goodBytes = le.consumed
-            } else finished = true
-          } catch {
-            // ONLY the torn-shard signal: the walk converts all framing/
-            // CRC/EOF defects to IllegalArgumentException via bad()
-            // (LeIn.readN throws bad() on EOF), so a raw IOException here
-            // can only be a genuine underlying-stream fault — let it
-            // propagate and fail the task for retry (matches Tar twin)
-            case _: IllegalArgumentException => failed = true; finished = true
-          }
-        }
-        override def hasNext: Boolean = {
-          fetch()
-          nextEntry != null || (failed && !markerEmitted)
-        }
-        override def next(): (String, Array[Byte], Long) = {
-          fetch()
-          if (nextEntry != null) {
-            val (n, d) = nextEntry; nextEntry = null; (n, d, 0L)
-          } else if (failed && !markerEmitted) {
-            markerEmitted = true
-            (null, null, math.max(0L, shardLen - goodBytes))
-          } else throw new NoSuchElementException
-        }
-      }
   }
 
   /** Write ZIP shards: rows are (key, ext, payload), repartitioned BY
@@ -1109,40 +970,21 @@ object Sources {
         org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
         org.apache.spark.sql.Encoders.BINARY)
     shardRecords(spark, s"$path/*.zip") { (_, _, in) =>
-      Zip.readStream(in).collect {
-        case (name, data) if name.lastIndexOf('.') > 0 =>
-          val dot = name.lastIndexOf('.')
-          (name.substring(0, dot), name.substring(dot + 1), data)
-      }
+      Zip.readStream(in).collect { case (SampleName(key, ext), data) => (key, ext, data) }
     }.toDF("key", "ext", "payload")
   }
 
-  /** [[readZipShards]] in torn-tail recovery mode: survivors stream
-    * through lazily, each corrupted shard emits a trailing marker whose
-    * abandoned-byte count rides `graft.zip.skip` (dropped_bytes /
-    * corrupt_shards) — diagnosable, never silent.
+  /** [[readZipShards]] in torn-tail recovery mode ([[Recovery]], metric
+    * `graft.zip.skip`). Unlike tar, a tear exactly between members is
+    * still a failure (a valid end is the central-directory signature),
+    * so it is counted too. Consumption comes from [[Zip.LeIn]], which
+    * pushes the inflater's read-ahead back.
     */
-  def readZipShardsPermissive(spark: SparkSession, path: String): DataFrame = {
-    implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte], Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.BINARY, org.apache.spark.sql.Encoders.scalaLong)
-    shardRecords(spark, s"$path/*.zip") { (_, shardLen, in) =>
-      Zip.readStreamPermissive(in, shardLen).map {
-        case (null, _, tail) => (null: String, null: String, null: Array[Byte], tail)
-        case (name, data, _) if name.lastIndexOf('.') > 0 =>
-          val dot = name.lastIndexOf('.')
-          (name.substring(0, dot), name.substring(dot + 1), data, 0L)
-        case (_, _, _) => (null: String, null: String, null: Array[Byte], 0L)
-      }
-    }
-      .toDF("key", "ext", "payload", "_tail")
-      .observe("graft.zip.skip",
-        sum(col("_tail")).as("dropped_bytes"),
-        sum(when(col("_tail") > 0, 1L).otherwise(0L)).as("corrupt_shards"))
-      .where(col("payload").isNotNull)
-      .select("key", "ext", "payload")
-  }
+  def readZipShardsPermissive(spark: SparkSession, path: String): DataFrame =
+    Recovery.read(spark, s"$path/*.zip", "zip", sampleSchema) { (_, len, in) =>
+      val le = new Zip.LeIn(in)
+      Recovery.recover(Zip.walk(le), len, () => le.consumed)
+    } { case (SampleName(key, ext), data) => Row(key, ext, data) }
 
   /** Write Arrow IPC stream shards (one `.arrows` per partition via the
     * atomic-rename commit) — the zero-copy interchange format ML
@@ -1234,57 +1076,15 @@ object Sources {
       org.apache.spark.sql.Encoders.BINARY)
       .toDF("payload")
 
-  /** [[readTfRecords]] in torn-tail recovery mode: complete verified
-    * records survive lazily (never the shard in memory), each corrupted
-    * shard emits one trailing null-payload marker carrying its
-    * abandoned-tail byte count, and the loss rides an `observe` metric
-    * (`graft.tfrecord.skip` — dropped_bytes / corrupt_shards) so it is
-    * diagnosable, never silent.
+  /** [[readTfRecords]] in torn-tail recovery mode ([[Recovery]], metric
+    * `graft.tfrecord.skip`): the CRCs make every surviving record a
+    * verified one.
     */
-  def readTfRecordsPermissive(spark: SparkSession, path: String): DataFrame = {
-    implicit val enc: org.apache.spark.sql.Encoder[(Array[Byte], Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.BINARY, org.apache.spark.sql.Encoders.scalaLong)
-    shardRecords(spark, s"$path/*.tfrecord") { (_, fileLen, in) =>
-      val inner = TfRecord.readStream(in)
-      new Iterator[(Array[Byte], Long)] {
-        private var goodBytes = 0L
-        private var finished = false
-        private var failed = false
-        private var markerEmitted = false
-        private var nextRec: Array[Byte] = null
-        private def fetch(): Unit = {
-          if (nextRec != null || finished) return
-          try {
-            if (inner.hasNext) {
-              nextRec = inner.next()
-              goodBytes += 8 + 4 + nextRec.length + 4
-            } else finished = true
-          } catch {
-            case _: IllegalArgumentException => failed = true; finished = true
-          }
-        }
-        override def hasNext: Boolean = {
-          fetch()
-          nextRec != null || (failed && !markerEmitted)
-        }
-        override def next(): (Array[Byte], Long) = {
-          fetch()
-          if (nextRec != null) { val r = nextRec; nextRec = null; (r, 0L) }
-          else if (failed && !markerEmitted) {
-            markerEmitted = true
-            (null, fileLen - goodBytes)
-          } else throw new NoSuchElementException
-        }
-      }
-    }
-      .toDF("payload", "_tail")
-      .observe("graft.tfrecord.skip",
-        sum(col("_tail")).as("dropped_bytes"),
-        sum(when(col("_tail") > 0, 1L).otherwise(0L)).as("corrupt_shards"))
-      .where(col("payload").isNotNull)
-      .select("payload")
-  }
+  def readTfRecordsPermissive(spark: SparkSession, path: String): DataFrame =
+    Recovery.read(spark, s"$path/*.tfrecord", "tfrecord",
+        StructType(Seq(StructField("payload", BinaryType)))) { (_, len, in) =>
+      Recovery.recoverCounted(in, len)(TfRecord.readStream)
+    } { case payload => Row(payload) }
 
   /** S9: CSV with an explicit schema (serde-at-the-edge). */
   def csv(spark: SparkSession, path: String, schema: StructType, header: Boolean = true): DataFrame =
@@ -1304,33 +1104,12 @@ object Sources {
     * co-partitioned topics (Kafka Streams joins require both topics to
     * share partition count and keying — reference:
     * src/main/scala/com/github/hosnimed/StreamToStreamJoinExample.scala:92-95).
-    * Requires `saveAsTable` (bucket metadata lives in the catalog).
-    *
-    * `overwriteOrphan`: a managed-table directory left by an EARLIER
-    * session is invisible to this session's in-memory catalog, so
-    * `overwrite` can't drop it and the create fails on
-    * LOCATION_ALREADY_EXISTS. With the flag set the orphan directory is
-    * deleted first — correct for scratch/derived tables this pipeline
-    * owns. Default is OFF: in a shared or persistent-metastore warehouse
-    * that directory may belong to another application that happens to
-    * use the same table name, and silently destroying it would be data
-    * loss; the default instead fails with an explicit message.
+    * Requires `saveAsTable` (bucket metadata lives in the catalog); the
+    * table is EXTERNAL at `path`, so its files live where the caller
+    * says, never in a warehouse under the working directory.
     */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    nBuckets: Int, overwriteOrphan: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    if (!spark.catalog.tableExists(table)) {
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        if (overwriteOrphan) fs.delete(p, true)
-        else throw new IllegalStateException(
-          s"writeBucketed: warehouse directory $p exists but table '$table' " +
-            "is not in this session's catalog - it may belong to another " +
-            "application. Pass overwriteOrphan=true to reclaim it.")
-      }
-    }
+  def writeBucketed(df: DataFrame, table: String, path: String, bucketCol: String,
+                    nBuckets: Int): Unit = {
     // repartition on the bucket column first: Spark's repartition hash
     // (Murmur3 pmod n) IS the bucket hash, so each write task holds
     // exactly one bucket → ONE file per bucket. Without it every task
@@ -1342,6 +1121,7 @@ object Sources {
       .format("parquet")
       .bucketBy(nBuckets, bucketCol)
       .sortBy(bucketCol)
+      .option("path", path)
       .saveAsTable(table)
   }
 

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * missing Content-Length, EOF inside a header/payload/terminator, or
   * an oversized header line all throw
   * `IllegalArgumentException("warc: …")` — the strict-dual convention
-  * of every graft container codec. The permissive dual converts a torn
-  * tail into an abandoned-bytes marker (observe metric downstream)
-  * and can never yield a truncated payload as a record.
+  * of every graft container codec. The permissive dual ([[Recovery]])
+  * counts a torn tail as abandoned bytes and can never yield a
+  * truncated payload as a record.
   *
   * HONEST FRAMING LIMIT (unlike tar): WARC has no end-of-archive
   * marker, so a tear landing EXACTLY between two records is
@@ -65,28 +65,22 @@ object Warc {
     out.write("\r\n\r\n".getBytes("US-ASCII"))
   }
 
-  /** Byte-counting wrapper: the permissive dual needs exact
-    * consumed-byte accounting to size its abandoned-tail marker.
-    */
-  private final class CountIn(in: java.io.InputStream) {
-    var consumed = 0L
-    def read(): Int = { val b = in.read(); if (b >= 0) consumed += 1; b }
-    def readFully(a: Array[Byte], what: String): Array[Byte] = {
-      var o = 0
-      while (o < a.length) {
-        val k = in.read(a, o, a.length - o)
-        if (k < 0) bad(s"truncated (EOF inside $what)")
-        o += k; consumed += k
-      }
-      a
+  private def readFully(in: java.io.InputStream, a: Array[Byte], what: String): Array[Byte] = {
+    var o = 0
+    while (o < a.length) {
+      val k = in.read(a, o, a.length - o)
+      if (k < 0) bad(s"truncated (EOF inside $what)")
+      o += k
     }
+    a
   }
 
-  /** Strict streaming walk: (target-uri, record-id, payload) per record. */
+  /** Strict streaming walk: (target-uri, record-id, payload) per record.
+    * It reads exactly what the record framing asks for (no read-ahead),
+    * so the stream's position is the bytes consumed through the last
+    * record — what the permissive dual's accounting counts.
+    */
   def readStream(in: java.io.InputStream): Iterator[(String, String, Array[Byte])] =
-    walk(new CountIn(in))
-
-  private def walk(cin: CountIn): Iterator[(String, String, Array[Byte])] =
     new Iterator[(String, String, Array[Byte])] {
       private var finished = false
       private var nextRec: (String, String, Array[Byte]) = _
@@ -94,7 +88,7 @@ object Warc {
         * byte (only legal between records). */
       private def readLine(eofLegal: Boolean): Option[String] = {
         val buf = new java.io.ByteArrayOutputStream(128)
-        var b = cin.read()
+        var b = in.read()
         if (b < 0) {
           if (eofLegal) return None else bad("truncated (EOF at a header line start)")
         }
@@ -102,7 +96,7 @@ object Warc {
           if (b < 0) bad("truncated (EOF inside a header line)")
           buf.write(b)
           if (buf.size > MaxHeaderLine) bad(s"header line exceeds $MaxHeaderLine bytes")
-          b = cin.read()
+          b = in.read()
         }
         val a = buf.toByteArray
         if (a.isEmpty || a(a.length - 1) != '\r') bad("header line not CRLF-terminated")
@@ -140,8 +134,8 @@ object Warc {
         }
         if (len < 0) bad("record without Content-Length")
         if (len > Int.MaxValue - 16) bad(s"payload of $len bytes exceeds the single-buffer bound")
-        val payload = cin.readFully(new Array[Byte](len.toInt), "payload")
-        val term = cin.readFully(new Array[Byte](4), "record terminator")
+        val payload = readFully(in, new Array[Byte](len.toInt), "payload")
+        val term = readFully(in, new Array[Byte](4), "record terminator")
         if (!(term(0) == '\r' && term(1) == '\n' && term(2) == '\r' && term(3) == '\n'))
           bad("record terminator is not CRLF CRLF")
         nextRec = (uri, rid, payload)
@@ -153,47 +147,6 @@ object Warc {
       override def next(): (String, String, Array[Byte]) = {
         if (!hasNext) throw new NoSuchElementException
         val r = nextRec; nextRec = null; r
-      }
-    }
-
-  /** Permissive dual: torn-tail records become ONE abandoned-bytes
-    * marker row (uri/rid/payload null); complete verified records are
-    * never dropped, truncated ones never surface. Raw IOExceptions
-    * propagate (genuine stream faults → task retry).
-    */
-  def readStreamPermissive(in: java.io.InputStream, shardLen: Long)
-      : Iterator[(String, String, Array[Byte], Long)] =
-    new Iterator[(String, String, Array[Byte], Long)] {
-      private val cin = new CountIn(in)
-      private lazy val inner = walk(cin)
-      private var goodBytes = 0L
-      private var finished = false
-      private var failed = false
-      private var markerEmitted = false
-      private var nextRec: (String, String, Array[Byte]) = null
-      private def fetch(): Unit = {
-        if (nextRec != null || finished) return
-        try {
-          if (inner.hasNext) {
-            nextRec = inner.next()
-            goodBytes = cin.consumed
-          } else finished = true
-        } catch {
-          case _: IllegalArgumentException => failed = true; finished = true
-        }
-      }
-      override def hasNext: Boolean = {
-        fetch()
-        nextRec != null || (failed && !markerEmitted)
-      }
-      override def next(): (String, String, Array[Byte], Long) = {
-        fetch()
-        if (nextRec != null) {
-          val (u, r, p) = nextRec; nextRec = null; (u, r, p, 0L)
-        } else if (failed && !markerEmitted) {
-          markerEmitted = true
-          (null, null, null, math.max(0L, shardLen - goodBytes))
-        } else throw new NoSuchElementException
       }
     }
 
@@ -396,20 +349,15 @@ object Warc {
       .toDF("uri", "record_id", "payload")
   }
 
-  /** Permissive shard-parallel read: loss rides an observe metric, the
-    * marker rows filter out, survivors are CRLF-framed verified records.
+  /** Permissive shard-parallel read ([[Recovery]], metric
+    * `graft.warc.skip`): survivors are CRLF-framed verified records.
     */
   def readPermissive(spark: SparkSession, path: String): DataFrame = {
-    implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte], Long)] =
-      org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY,
-        org.apache.spark.sql.Encoders.scalaLong)
-    Sources.shardRecords(spark, s"$path/*.warc")((_, len, in) => readStreamPermissive(in, len))
-      .toDF("uri", "record_id", "payload", "_tail")
-      .observe("graft.warc.skip",
-        sum(col("_tail")).as("dropped_bytes"),
-        sum(when(col("_tail") > 0, 1L).otherwise(0L)).as("corrupt_shards"))
-      .where(col("payload").isNotNull)
-      .select("uri", "record_id", "payload")
+    import org.apache.spark.sql.types._
+    Recovery.read(spark, s"$path/*.warc", "warc", StructType(Seq(
+        StructField("uri", StringType), StructField("record_id", StringType),
+        StructField("payload", BinaryType)))) { (_, len, in) =>
+      Recovery.recoverCounted(in, len)(readStream)
+    } { case (uri, rid, payload) => org.apache.spark.sql.Row(uri, rid, payload) }
   }
 }

@@ -53,6 +53,22 @@ class ContractSpec extends GraftTest {
       s"temp dir or file made outside ProbeUtil (use ProbeUtil.scratchDir): ${offenders.mkString(", ")}")
   }
 
+  test("src/main names graft.<format>.skip metrics only in the shared recovery read") {
+    // one permissive read (graft.sources.Recovery) observes every shard
+    // format's drops; a hand-copied observe wrapper would bring back a
+    // second recovery path
+    val helper = "Recovery.scala"
+    val named = scala.collection.mutable.ArrayBuffer[String]()
+    def walk(f: java.io.File): Unit =
+      if (f.isDirectory) f.listFiles.foreach(walk)
+      else if (f.getName.endsWith(".scala")) {
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        if (text.contains(".skip\"")) named += f.getName
+      }
+    walk(new java.io.File("src/main/scala"))
+    assert(named.toSeq === Seq(helper), s"files naming a .skip metric: ${named.mkString(", ")}")
+  }
+
   test("flagship entry returns rows (driver smoke-check)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -217,12 +217,13 @@ class PlanSpec extends GraftTest {
 
   test("bucketed tables join with no Exchange and no Sort before the join") {
     import spark.implicits._
+    val dir = ProbeUtil.scratchDir("bucketed")
     graft.sources.Sources.writeBucketed(
       (0L until 1000L).map(i => (i % 100, s"l$i")).toDF("k", "lv"),
-      "bt_left", "k", nBuckets = 8, overwriteOrphan = true)
+      "bt_left", s"$dir/bt_left", "k", nBuckets = 8)
     graft.sources.Sources.writeBucketed(
       (0L until 500L).map(i => (i % 100, s"r$i")).toDF("k", "rv"),
-      "bt_right", "k", nBuckets = 8, overwriteOrphan = true)
+      "bt_right", s"$dir/bt_right", "k", nBuckets = 8)
     // forbid broadcast so the planner must pick the co-located SMJ path
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("bt_left").join(spark.table("bt_right"), "k")

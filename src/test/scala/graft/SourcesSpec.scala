@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.Sources
+import graft.sources.{Recovery, Sources}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,6 +35,23 @@ class SourcesSpec extends GraftTest {
       "6,Gravel Road,June Calloway,Long Way South,Country")
     Files.write(dir.resolve("songs.csv"), rows.mkString("\n").getBytes("UTF-8"))
     dir.toAbsolutePath.toString
+  }
+
+  /** A recovery walk as (name, data, abandoned bytes): the marker is (null, null, bytes). */
+  private def asTriples(it: Iterator[Either[Long, (String, Array[Byte])]]) =
+    it.map {
+      case Right((name, data)) => (name, data, 0L)
+      case Left(dropped) => (null: String, null: Array[Byte], dropped)
+    }.toSeq
+
+  /** The recovery walk the permissive WebDataset reader runs over one tar shard. */
+  private def tarRecovery(bytes: Array[Byte]) = asTriples(Recovery.recoverCounted(
+    new java.io.ByteArrayInputStream(bytes), bytes.length.toLong)(Sources.Tar.walk(_, strict = false)))
+
+  /** The recovery walk the permissive ZIP reader runs over one zip shard. */
+  private def zipRecovery(bytes: Array[Byte]) = {
+    val le = new Sources.Zip.LeIn(new java.io.ByteArrayInputStream(bytes))
+    asTriples(Recovery.recover(Sources.Zip.walk(le), bytes.length.toLong, () => le.consumed))
   }
 
   test("S9 song-fixture parity: headerless id,album,artist,song,genre CSV loads with explicit schema") {
@@ -412,25 +429,31 @@ class SourcesSpec extends GraftTest {
     val buf = new java.io.ByteArrayOutputStream()
     Seq("one", "two", "three").foreach(s => TfRecord.write(buf, s.getBytes("UTF-8")))
     val good = buf.toByteArray
+    // the shared recovery walk over the strict reader: (records, abandoned bytes)
+    def readAllPermissive(bytes: Array[Byte]): (Seq[Array[Byte]], Long) = {
+      val out = Recovery.recoverCounted(
+        new java.io.ByteArrayInputStream(bytes), bytes.length.toLong)(TfRecord.readStream).toSeq
+      (out.collect { case Right(p) => p }, out.collect { case Left(t) => t }.sum)
+    }
     // intact shard: everything survives, zero abandoned bytes
-    val (all, t0) = TfRecord.readAllPermissive(good)
+    val (all, t0) = readAllPermissive(good)
     assert(all.map(new String(_, "UTF-8")) === Seq("one", "two", "three") && t0 === 0L)
     // torn tail: last record's payload CRC truncated -> first two
     // survive, abandoned byte count equals the torn record's framing
     val torn = java.util.Arrays.copyOf(good, good.length - 4)
-    val (pre, t1) = TfRecord.readAllPermissive(torn)
+    val (pre, t1) = readAllPermissive(torn)
     assert(pre.map(new String(_, "UTF-8")) === Seq("one", "two"))
     assert(t1 === (8 + 4 + "three".length + 4 - 4).toLong)
     // appended garbage: all records survive, only the garbage abandoned
     val noisy = good ++ Array[Byte](9, 9, 9)
-    val (allN, t2) = TfRecord.readAllPermissive(noisy)
+    val (allN, t2) = readAllPermissive(noisy)
     assert(allN.size === 3 && t2 === 3L)
     // fully-garbage shard: zero records, whole length abandoned
-    val (none, t3) = TfRecord.readAllPermissive(Array.fill[Byte](40)(7))
+    val (none, t3) = readAllPermissive(Array.fill[Byte](40)(7))
     assert(none.isEmpty && t3 === 40L)
     // a FLIPPED byte mid-payload can only drop the tail, never corrupt:
     val flipped = good.clone(); flipped(8 + 4 + 1) = 'X'.toByte
-    val (fl, _) = TfRecord.readAllPermissive(flipped)
+    val (fl, _) = readAllPermissive(flipped)
     assert(fl.isEmpty, "flip in record 1 must drop everything from record 1 on")
   }
 
@@ -460,8 +483,7 @@ class SourcesSpec extends GraftTest {
       bos.toByteArray
     }
     val good = shard(Seq("a.json", "b.json", "c.json"))
-    def walk(bytes: Array[Byte]) =
-      Tar.readStreamPermissive(new java.io.ByteArrayInputStream(bytes), bytes.length.toLong).toSeq
+    def walk(bytes: Array[Byte]) = tarRecovery(bytes)
     // intact: all members, no marker
     assert(walk(good).map(_._1) === Seq("a.json", "b.json", "c.json"))
     // torn tail (end blocks + 1 byte of the last member's padded data):
@@ -505,8 +527,7 @@ class SourcesSpec extends GraftTest {
     // the permissive walk keeps the lenient acceptance (its contract
     // surfaces loss as a marker, and a boundary cut loses no member —
     // the complete member survives, markerless)
-    val w = Tar.readStreamPermissive(
-      new java.io.ByteArrayInputStream(noEoa), noEoa.length.toLong).toSeq
+    val w = tarRecovery(noEoa)
     assert(w.map(_._1) === Seq("a.json"))
   }
 
@@ -631,16 +652,14 @@ class SourcesSpec extends GraftTest {
     z.finish()
     val full = baos.toByteArray
     // intact: all three members, no marker
-    val whole = Zip.readStreamPermissive(
-      new java.io.ByteArrayInputStream(full), full.length.toLong).toSeq
+    val whole = zipRecovery(full)
     assert(whole.map(_._1) === Seq("a.txt", "b.txt", "c.txt"))
     assert(whole.forall(_._3 === 0L))
     // torn inside the last member's header: first two survive, one
     // trailing marker accounts EXACTLY the abandoned framing bytes
     // (cutAt sits 20 bytes past the end of member b)
     val torn = java.util.Arrays.copyOf(full, cutAt)
-    val got = Zip.readStreamPermissive(
-      new java.io.ByteArrayInputStream(torn), torn.length.toLong).toSeq
+    val got = zipRecovery(torn)
     assert(got.map(_._1) === Seq("a.txt", "b.txt", null))
     assert(new String(got(1)._2, "UTF-8") === "bravo-bravo")
     assert(got(2)._3 === 20L)
@@ -859,4 +878,122 @@ class SourcesSpec extends GraftTest {
     assert(got === List((7L, "a"), (8L, "b")))
   }
 
+  /** Collects `df` and the `name` metric its run observed. */
+  private def collectObserved(df: org.apache.spark.sql.DataFrame, name: String)
+      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.Row) = {
+    val seen = scala.concurrent.Promise[org.apache.spark.sql.Row]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.get(name).foreach(seen.trySuccess)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val rows = df.collect()
+      import scala.concurrent.duration._
+      (rows, scala.concurrent.Await.result(seen.future, 60.seconds))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("every permissive reader counts the shard it tears: corrupt_shards, exact dropped_bytes, survivors") {
+    import graft.sources.{Npy, Safetensors, Warc}
+    // four shards of three records each (record j of shard i carries
+    // id 10*i + j); shard 2 is torn, so its lost records and bytes are known
+    def payload(i: Int, j: Int) = s"""{"id":${10 * i + j}}""".getBytes("UTF-8")
+    def bytesOf(body: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream(); body(bos); bos.toByteArray
+    }
+    def le(n: Int, put: (java.nio.ByteBuffer, Int) => Unit, width: Int): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(n * width).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      (0 until n).foreach(put(bb, _)); bb.array()
+    }
+    /** Writes the shards, tears shard 2 to `torn(bytes)`, returns its torn length. */
+    def stage(dir: String, ext: String, shard: Int => Array[Byte], torn: Array[Byte] => Array[Byte]): Long = {
+      (0 until 4).foreach { i =>
+        val b = if (i == 2) torn(shard(i)) else shard(i)
+        Files.write(java.nio.file.Paths.get(dir, f"part-$i%05d.$ext"), b)
+      }
+      Files.size(java.nio.file.Paths.get(dir, f"part-00002.$ext"))
+    }
+    def check(df: org.apache.spark.sql.DataFrame, format: String, dropped: Long,
+              ids: Seq[Long], idOf: org.apache.spark.sql.Row => Long): Unit = {
+      val (rows, m) = collectObserved(df, s"graft.$format.skip")
+      assert(m.getAs[Long]("corrupt_shards") === 1L, format)
+      assert(m.getAs[Long]("dropped_bytes") === dropped, format)
+      assert(rows.map(idOf).toSeq.sorted === ids, format)
+    }
+    def jsonId(r: org.apache.spark.sql.Row): Long =
+      """\d+""".r.findFirstIn(new String(r.getAs[Array[Byte]]("payload"), "UTF-8")).get.toLong
+    val all = for (i <- 0 until 4; j <- 0 until 3) yield (10 * i + j).toLong
+    val allButLast = all.filterNot(_ == 22L) // the torn record of shard 2
+    val allButShard = all.filterNot(_ / 10 == 2) // shard 2 dropped whole
+
+    // TFRecord: the last record's payload CRC torn off
+    val tfr = ProbeUtil.scratchDir("skip-tfr")
+    val tfrLen = stage(tfr, "tfrecord",
+      i => bytesOf(out => (0 until 3).foreach(j => Sources.TfRecord.write(out, payload(i, j)))),
+      b => java.util.Arrays.copyOf(b, b.length - 4))
+    check(Sources.readTfRecordsPermissive(spark, tfr), "tfrecord",
+      tfrLen - 2 * (16 + payload(2, 0).length), allButLast, jsonId)
+
+    // tar: the end-of-archive blocks and one byte of the last member torn off
+    val tar = ProbeUtil.scratchDir("skip-tar")
+    val tarLen = stage(tar, "tar",
+      i => bytesOf { out =>
+        (0 until 3).foreach(j => Sources.Tar.writeEntry(out, s"k$i$j.json", payload(i, j)))
+        Sources.Tar.finish(out)
+      },
+      b => java.util.Arrays.copyOf(b, b.length - 1025))
+    check(Sources.readWebDatasetPermissive(spark, tar), "webdataset",
+      tarLen - 2 * (512 + 512), allButLast, jsonId)
+
+    // zip: torn 20 bytes into the last member's local header
+    val zip = ProbeUtil.scratchDir("skip-zip")
+    var zipCut = 0
+    val zipLen = stage(zip, "zip",
+      i => bytesOf { out =>
+        val z = new java.util.zip.ZipOutputStream(out)
+        (0 until 3).foreach { j =>
+          if (j == 2) { z.flush(); if (i == 2) zipCut = out.size() + 20 }
+          val e = new java.util.zip.ZipEntry(s"k$i$j.json"); e.setTime(0L)
+          z.putNextEntry(e); z.write(payload(i, j)); z.closeEntry()
+        }
+        z.finish()
+      },
+      b => java.util.Arrays.copyOf(b, zipCut))
+    assert(zipLen === zipCut)
+    check(Sources.readZipShardsPermissive(spark, zip), "zip", 20L, allButLast, jsonId)
+
+    // WARC: the last record's terminator torn off
+    val warc = ProbeUtil.scratchDir("skip-warc")
+    def warcRecord(i: Int, j: Int) =
+      bytesOf(out => Warc.writeRecord(out, s"https://h/$i/$j", s"urn:$i:$j", payload(i, j)))
+    val warcLen = stage(warc, "warc",
+      i => (0 until 3).map(warcRecord(i, _)).reduce(_ ++ _),
+      b => java.util.Arrays.copyOf(b, b.length - 5))
+    check(Warc.readPermissive(spark, warc), "warc",
+      warcLen - warcRecord(2, 0).length - warcRecord(2, 1).length, allButLast, jsonId)
+
+    // npy: no record framing, so the torn shard drops whole
+    val npy = ProbeUtil.scratchDir("skip-npy")
+    val npyLen = stage(npy, "npy",
+      i => Npy.encode("<f4", Seq(3L, 2L),
+        le(6, (bb, k) => bb.putFloat((10 * i + k / 2).toFloat), 4)),
+      b => java.util.Arrays.copyOf(b, b.length - 8))
+    check(Npy.readNpyShardsPermissive(spark, npy), "npy", npyLen, allButShard,
+      r => 10 * r.getAs[Long]("shard") + r.getAs[Long]("row_idx"))
+
+    // safetensors: likewise dropped whole
+    val st = ProbeUtil.scratchDir("skip-st")
+    val stLen = stage(st, "safetensors",
+      i => bytesOf(out => Safetensors.write(out, Seq(
+        ("id", "I64", Seq(3L), le(3, (bb, j) => bb.putLong(10L * i + j), 8)),
+        ("vec", "F32", Seq(3L, 2L), le(6, (bb, _) => bb.putFloat(1f), 4)),
+        ("label", "I64", Seq(3L), le(3, (bb, _) => bb.putLong(0L), 8))))),
+      b => java.util.Arrays.copyOf(b, b.length - 16))
+    check(Safetensors.readVectorsPermissive(spark, st, "id", "vec", "label"), "safetensors",
+      stLen, allButShard, _.getAs[Long]("id"))
+  }
 }
