@@ -1,10 +1,10 @@
 package graft
 
-/** Temp-directory plumbing shared by queries, ScaleCheck/StreamScale and
-  * the tests: scratch dirs swept recursively at JVM exit, and recursive
-  * delete. The one place `src/main` makes a temp dir (ContractSpec pins
-  * it; ScaleCheck and StreamScale delete their own) — a fix to the
-  * delete semantics must not need chasing through clones.
+/** Temp-directory plumbing shared by queries, ScaleCheck and the tests:
+  * scratch dirs swept recursively at JVM exit, and recursive delete. The
+  * one place `src/main` or `src/test` makes a temp dir (ContractSpec pins
+  * it) — a fix to the delete semantics must not need chasing through
+  * clones.
   */
 object ProbeUtil {
 

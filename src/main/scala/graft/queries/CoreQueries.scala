@@ -1787,11 +1787,10 @@ object CoreQueries {
     "j6_streaming" -> ((s, d) => ttJoinStreaming(s, d, "inner")),
     "j7_streaming" -> ((s, d) => ttJoinStreaming(s, d, "left")),
     "j8_streaming" -> ((s, d) => ttJoinStreaming(s, d, "outer")),
-    // J9: the join type arrives as a runtime string, dispatched through
-    // Joins.sparkJoinType — the reference's CLI inner|left|outer switch.
-    // The oracle is pinned to FULL, matching the default; setting
-    // GRAFT_JOIN_TYPE during a Verify run would intentionally diverge.
-    "j9_dispatch" -> ((s, d) => ttJoin(s, d, sys.env.getOrElse("GRAFT_JOIN_TYPE", "outer"))),
+    // J9: the join type arrives as a string, dispatched through
+    // Joins.sparkJoinType — the reference's CLI inner|left|outer switch,
+    // here its "outer" (the oracle is FULL)
+    "j9_dispatch" -> ((s, d) => ttJoin(s, d, "outer")),
 
     // beyond-reference: explicit skew salting — event_type has 5 distinct
     // values, so an unsalted shuffle join funnels the whole fact side

@@ -12,11 +12,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * with one marker carrying the bytes it abandoned. A corrupted byte can
   * therefore only DROP records, never surface a wrong one, and every
   * drop is counted: the markers feed one `observe` metric per read,
-  * `graft.<format>.skip` (`dropped_bytes`, `corrupt_shards`), before
-  * they are filtered out. A raw `IOException` is a genuine stream fault,
+  * `graft.<format>.skip.<n>` (`dropped_bytes`, `corrupt_shards`), before
+  * they are filtered out. Names are sequence-suffixed (the
+  * `Dedup.capBuckets` convention), so one query can combine two reads of
+  * a format. A raw `IOException` is a genuine stream fault,
   * not a torn shard: it propagates and fails the task so Spark retries.
   */
 private[graft] object Recovery {
+
+  private val skipSeq = new java.util.concurrent.atomic.AtomicInteger()
 
   /** The recovery walk over one shard: `Right(record)` for each record
     * the strict `walk` yields, then, only if the walk failed, one
@@ -94,7 +98,7 @@ private[graft] object Recovery {
         case Left(dropped) => Some(Row(null, dropped))
       }
     }.toDF()
-      .observe(s"graft.$format.skip",
+      .observe(s"graft.$format.skip.${skipSeq.incrementAndGet()}",
         sum(col("_tail")).as("dropped_bytes"),
         sum(when(col("_rec").isNull, 1L).otherwise(0L)).as("corrupt_shards"))
       .where(col("_rec").isNotNull)

@@ -878,14 +878,16 @@ class SourcesSpec extends GraftTest {
     assert(got === List((7L, "a"), (8L, "b")))
   }
 
-  /** Collects `df` and the `name` metric its run observed. */
-  private def collectObserved(df: org.apache.spark.sql.DataFrame, name: String)
-      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.Row) = {
-    val seen = scala.concurrent.Promise[org.apache.spark.sql.Row]()
+  /** Collects `df` and the metrics its run observed under names starting with `prefix`. */
+  private def collectObserved(df: org.apache.spark.sql.DataFrame, prefix: String)
+      : (Array[org.apache.spark.sql.Row], Map[String, org.apache.spark.sql.Row]) = {
+    val seen = scala.concurrent.Promise[Map[String, org.apache.spark.sql.Row]]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(name).foreach(seen.trySuccess)
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        val named = qe.observedMetrics.filter(_._1.startsWith(prefix))
+        if (named.nonEmpty) seen.trySuccess(named)
+      }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -919,7 +921,9 @@ class SourcesSpec extends GraftTest {
     }
     def check(df: org.apache.spark.sql.DataFrame, format: String, dropped: Long,
               ids: Seq[Long], idOf: org.apache.spark.sql.Row => Long): Unit = {
-      val (rows, m) = collectObserved(df, s"graft.$format.skip")
+      val (rows, ms) = collectObserved(df, s"graft.$format.skip.")
+      assert(ms.size === 1, format)
+      val m = ms.values.head
       assert(m.getAs[Long]("corrupt_shards") === 1L, format)
       assert(m.getAs[Long]("dropped_bytes") === dropped, format)
       assert(rows.map(idOf).toSeq.sorted === ids, format)
@@ -995,5 +999,34 @@ class SourcesSpec extends GraftTest {
       b => java.util.Arrays.copyOf(b, b.length - 16))
     check(Safetensors.readVectorsPermissive(spark, st, "id", "vec", "label"), "safetensors",
       stLen, allButShard, _.getAs[Long]("id"))
+  }
+
+  test("two permissive reads of one format in one query observe their drops apart") {
+    /** Two zip shards of two members each; shard 1 torn 20 bytes into its last member. */
+    def stage(base: Int): String = {
+      val dir = ProbeUtil.scratchDir("skip-union")
+      (0 until 2).foreach { i =>
+        val out = new java.io.ByteArrayOutputStream()
+        val z = new java.util.zip.ZipOutputStream(out)
+        var cut = 0
+        (0 until 2).foreach { j =>
+          if (j == 1) { z.flush(); cut = out.size() + 20 }
+          val e = new java.util.zip.ZipEntry(s"k$i$j.json"); e.setTime(0L)
+          z.putNextEntry(e); z.write(s"""{"id":${base + 10 * i + j}}""".getBytes("UTF-8")); z.closeEntry()
+        }
+        z.finish()
+        val b = if (i == 1) java.util.Arrays.copyOf(out.toByteArray, cut) else out.toByteArray
+        Files.write(java.nio.file.Paths.get(dir, f"part-$i%05d.zip"), b)
+      }
+      dir
+    }
+    val df = Sources.readZipShardsPermissive(spark, stage(0))
+      .unionByName(Sources.readZipShardsPermissive(spark, stage(100)))
+    val (rows, ms) = collectObserved(df, "graft.zip.skip.")
+    assert(ms.size === 2, ms.keys)
+    assert(ms.values.map(_.getAs[Long]("corrupt_shards")).toSeq === Seq(1L, 1L))
+    assert(ms.values.map(_.getAs[Long]("dropped_bytes")).toSeq === Seq(20L, 20L))
+    val ids = rows.map(r => """\d+""".r.findFirstIn(new String(r.getAs[Array[Byte]]("payload"), "UTF-8")).get.toLong)
+    assert(ids.toSeq.sorted === Seq(0L, 1L, 10L, 100L, 101L, 110L))
   }
 }

@@ -1,9 +1,10 @@
 #!/bin/bash
 # ScaleCheck 10x/100x arms for the named cases, run one case at a time.
 #
-#   tools/scale_chain.sh <case>...    e.g. tools/scale_chain.sh dd_minhash g_lpa
+#   tools/scale_chain.sh <case>...    e.g. tools/scale_chain.sh dd_minhash g_lpa w2_disjoint
 #
-# Each case appends its rows to SCALE.md (SPARK_GRAFT_SCALE_APPEND=1).
+# A case is a name prefix of a batch case or a streaming arm (the
+# SPARK_GRAFT_SCALE_CASES selector). Each run appends its rows to SCALE.md.
 # Runs SERIALLY from the compiled classes in target/ (run `sbt compile`
 # first, and do not recompile while it runs: the JVM lazy-loads
 # classfiles). Timings need an otherwise idle machine. The corpus is
@@ -37,6 +38,6 @@ J=(java
 for c in "$@"; do
   echo "=== 10x/100x arms: $c"
   SPARK_GRAFT_SCALE_FACTORS=10,100 SPARK_GRAFT_SCALE_CASES="$c" \
-    SPARK_GRAFT_SCALE_APPEND=1 "${J[@]}" graft.ScaleCheck 2>&1 | { grep -E "^\[scale\]|wrote" || true; }
+    "${J[@]}" graft.ScaleCheck 2>&1 | { grep -E "^\[scale\]|SCALE.md" || true; }
 done
 echo "=== chain done"
