@@ -111,16 +111,44 @@ object Graft {
       case _ => df
     }
 
+  /** The canonical form of corpus table `name`, for a batch read and a
+    * stream read alike (`StreamingQueries.readStreamParquet` applies it
+    * too): `events` gets its `ts` as a nanos long plus `ts_us` epoch
+    * micros, `embeddings` its vectors as `array<float>`; the other
+    * tables pass through.
+    */
+  def canonical(name: String, df: DataFrame): DataFrame = name match {
+    case "events" =>
+      normalizeEventTs(df)
+        .withColumn("ts_us", expr("ts div 1000")) // integer div: double math loses µs at 1e18 ns
+    case "embeddings" =>
+      // the native kernels (`srp_bucket`, `cosine_sim`) type-check on
+      // float vectors; a corpus regeneration that ships doubles (the class
+      // of drift that hit `events.ts`) would otherwise fail analysis
+      import org.apache.spark.sql.types.{ArrayType, FloatType}
+      df.schema.fields.find(_.name == "embedding").map(_.dataType) match {
+        case Some(ArrayType(FloatType, _)) => df
+        case Some(_: ArrayType) => df.withColumn("embedding", col("embedding").cast("array<float>"))
+        case _ => df
+      }
+    case _ => df
+  }
+
+  /** Corpus table `name` read in its [[canonical]] form. */
+  def canonicalTable(spark: SparkSession, dir: String, name: String): DataFrame =
+    canonical(name, table(spark, dir, name))
+
   /** `events` with `ts` normalized: nanos long, plus `ts_us` epoch micros. */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventTs(table(spark, dir, "events"))
-      .withColumn("ts_us", expr("ts div 1000")) // integer div: double math loses µs at 1e18 ns
+  def events(spark: SparkSession, dir: String): DataFrame = canonicalTable(spark, dir, "events")
 
   /** `events` shaped as the canonical KStream[String,String]:
     * key = user_id, value = event_type, plus the numeric payload.
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir).select(
+  def eventsStream(spark: SparkSession, dir: String): DataFrame = keyed(events(spark, dir))
+
+  /** Canonical `events` rows as the KStream shape of [[eventsStream]]. */
+  def keyed(events: DataFrame): DataFrame =
+    events.select(
       col("user_id").cast("string").as("key"),
       col("event_type").as("value"),
       col("value").as("amount"),
@@ -130,22 +158,9 @@ object Graft {
 
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
 
-  /** `embeddings` with the vector column normalized to `array<float>` —
-    * the engine's native kernels (`srp_bucket`, `cosine_sim`) type-check
-    * on float vectors, and a corpus regeneration that ships doubles (the
-    * same class of drift that hit `events.ts` in round 9) would
-    * otherwise fail analysis. A float-typed corpus passes through
-    * untouched.
-    */
-  def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    val df = table(spark, dir, "embeddings")
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    df.schema.fields.find(_.name == "embedding").map(_.dataType) match {
-      case Some(ArrayType(FloatType, _)) => df
-      case Some(_: ArrayType) => df.withColumn("embedding", col("embedding").cast("array<float>"))
-      case _ => df
-    }
-  }
+  /** `embeddings` with the vector column normalized to `array<float>` ([[canonical]]). */
+  def embeddings(spark: SparkSession, dir: String): DataFrame =
+    canonicalTable(spark, dir, "embeddings")
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "customer")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{CoreQueries, PipelineQueries}
+import graft.queries.{CoreQueries, PipelineQueries, Twins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,10 +37,11 @@ object SparkEntry {
     CoreQueries.all ++ PipelineQueries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (LSH pair sets, sketches, plan dumps) → driver records a weaker
-    * rows-only check; those are covered by ScalaTest property tests.
+    * the same parquet tables; a streaming twin's is its batch entry's.
+    * Omitted for non-SQL-expressible ops (LSH pair sets, sketches, plan
+    * dumps) → driver records a weaker rows-only check; those are
+    * covered by ScalaTest property tests.
     */
   def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ PipelineQueries.oracles
+    Twins.shareOracles(CoreQueries.oracles ++ PipelineQueries.oracles)
 }

@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions._
   * src/main/scala/com/github/hosnimed/DSLStatefulTransformation.scala:79-86,
   * windowed-key flattening at :117-123).
   *
-  * Batch forms here; the streaming forms (with `withWatermark` ≡ the
-  * reference's grace period) live in [[graft.streaming.StreamingQueries]].
-  * Both use Spark's native `window`/`session_window` — a single hash
-  * aggregation keyed on (window, key): partial-aggregates map-side, one
-  * shuffle, no sort.
+  * One form for a table and a stream: the w1/w2/w4 streaming entries
+  * ([[graft.queries.Twins]]) run these same functions over a stream in
+  * complete mode. They use Spark's native `window`/`session_window` — a
+  * single hash aggregation keyed on (window, key): partial-aggregates
+  * map-side, one shuffle, no sort. A stream that must bound its state
+  * adds `withWatermark` (≡ the reference's grace period) before calling
+  * them.
   */
 object Windows {
 

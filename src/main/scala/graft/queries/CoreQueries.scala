@@ -271,132 +271,6 @@ object CoreQueries {
       s.read.schema(docs.schema).json(out)
     }),
 
-    "s_webdataset" -> ((s, d) => {
-      // WebDataset roundtrip (r13) — the de-facto MULTIMODAL training
-      // corpus layout: per sample, a `<key>.json` metadata member and a
-      // `<key>.png` image member, grouped contiguously inside plain
-      // USTAR tar shards (pure-JVM framing, header checksums verified
-      // on read; write repartitions BY KEY so a sample never splits
-      // across shards — the property streaming WebDataset readers
-      // rely on). Certified BOTH modalities deep: the json side must
-      // reproduce the documents table bit-exactly (from_json, explicit
-      // schema) and the png side goes through the FULL certified PNG
-      // decode to per-asset pixel sums the oracle replays from the
-      // pixel formula. Scale shape: shard-parallel read, scan-local
-      // decode, one broadcastable join keyed by doc_id.
-      val out = scratchDir("wds")
-      val docs = Graft.documents(s, d)
-      val key = format_string("%012d", col("doc_id"))
-      val jsonRows = docs.select(key.as("key"), lit("json").as("ext"),
-        to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload"))
-      val pngRows = graft.multimodal.Multimodal.syntheticPngAssets(docs)
-        .select(format_string("%012d", col("asset_id")).as("key"),
-          lit("png").as("ext"), col("payload"))
-      graft.sources.Sources.writeWebDataset(
-        jsonRows.unionByName(pngRows), out, shards = 4)
-      val back = graft.sources.Sources.readWebDataset(s, out)
-      val js = back.where(col("ext") === "json")
-        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
-        .select(col("r.*"))
-      val px = graft.multimodal.Multimodal.decodePngChannels(
-          back.where(col("ext") === "png")
-            .select(col("key").cast("long").as("asset_id"), col("payload")))
-        .groupBy("asset_id").agg(sum("px_sum").as("png_px_sum"))
-      js.join(px.withColumnRenamed("asset_id", "doc_id"), Seq("doc_id"))
-    }),
-
-    "s_webdataset_streaming" -> ((s, d) => {
-      // WebDataset shards arriving THROUGH the real streaming engine
-      // (the multimodal ingest-at-arrival shape): the SAME 4 shards
-      // are staged, read with a streaming binaryFile source, each tar
-      // parsed and both member types processed per micro-batch —
-      // stateless append, so the converged result equals the batch
-      // read and shares s_webdataset's oracle verbatim.
-      val out = scratchDir("wdss")
-      val docs = Graft.documents(s, d)
-      val key = format_string("%012d", col("doc_id"))
-      val jsonRows = docs.select(key.as("key"), lit("json").as("ext"),
-        to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload"))
-      val pngRows = graft.multimodal.Multimodal.syntheticPngAssets(docs)
-        .select(format_string("%012d", col("asset_id")).as("key"),
-          lit("png").as("ext"), col("payload"))
-      graft.sources.Sources.writeWebDataset(
-        jsonRows.unionByName(pngRows), out, shards = 4)
-      import s.implicits._
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.tar").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.tar")
-        .select("content").as[Array[Byte]]
-        .flatMap(graft.sources.Sources.Tar.readAll(_).collect {
-          case (graft.sources.Sources.SampleName(key, ext), data) => (key, ext, data)
-        })
-        .toDF("key", "ext", "payload")
-      val js = stream.where(col("ext") === "json")
-        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
-        .select(col("r.*"))
-      val px = graft.multimodal.Multimodal.decodePngChannels(
-          stream.where(col("ext") === "png")
-            .select(col("key").cast("long").as("asset_id"), col("payload")))
-      // per-asset channel stats are append-safe (each asset's members
-      // arrive in ONE shard = one batch); the final per-doc reduce +
-      // join runs on the converged tables
-      val jsT = graft.streaming.StreamingQueries.runAppendToMemory(s, "s_wds_js", js)
-      val pxT = graft.streaming.StreamingQueries.runAppendToMemory(s, "s_wds_px", px)
-      jsT.join(
-        pxT.groupBy("asset_id").agg(sum("px_sum").as("png_px_sum"))
-          .withColumnRenamed("asset_id", "doc_id"),
-        Seq("doc_id"))
-    }),
-
-    "s_tfrecord" -> ((s, d) => {
-      // TFRecord roundtrip (r13) — the TensorFlow training-data
-      // interchange format, pure-JVM framing (8-byte LE length + masked
-      // CRC-32C on both the length and the payload; JDK CRC32C, public
-      // spec constants): documents → JSON payloads → 4 TFRecord shards
-      // → shard-parallel read with EVERY checksum verified → from_json
-      // with the explicit schema → identity vs the plain table. Like
-      // gzip text, a shard is one read task (non-splittable framing) —
-      // the writer controls parallelism, stated in the write API.
-      val out = scratchDir("tfrecord")
-      val docs = Graft.documents(s, d)
-      graft.sources.Sources.writeTfRecords(
-        docs.select(to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
-        "payload", out, shards = 4)
-      graft.sources.Sources.readTfRecords(s, out)
-        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
-        .select(docs.columns.map(c => col(s"r.$c")): _*)
-    }),
-
-    "s_tfrecord_streaming" -> ((s, d) => {
-      // TFRecord shards arriving THROUGH the real streaming engine
-      // (r14, verdict ask #5) — the standard TF-data ingest shape:
-      // shards land incrementally and each is parsed at arrival. The
-      // SAME 4 shards as s_tfrecord are staged, read with a streaming
-      // binaryFile source one shard per micro-batch, every record's
-      // masked CRC-32C verified by the SAME strict TfRecord.readAll
-      // the batch path uses (a flipped byte kills the batch, never
-      // yields a silently-wrong payload), then from_json with the
-      // explicit schema. Stateless append, so the converged result
-      // equals the batch read and shares s_tfrecord's oracle verbatim.
-      val out = scratchDir("tfrecords")
-      val docs = Graft.documents(s, d)
-      graft.sources.Sources.writeTfRecords(
-        docs.select(to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
-        "payload", out, shards = 4)
-      import s.implicits._
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.tfrecord").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.tfrecord")
-        .select("content").as[Array[Byte]]
-        .flatMap(graft.sources.Sources.TfRecord.readAll)
-        .toDF("payload")
-        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
-        .select(docs.columns.map(c => col(s"r.$c")): _*)
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "s_tfr_stream", stream)
-    }),
-
     "s_webdataset_corrupt_tail" -> ((s, d) => {
       // torn-tail recovery for tar shards (r14) — the TFRecord entry's
       // twin, certifying BOTH permissive branches: four shards staged
@@ -447,21 +321,6 @@ object CoreQueries {
         .select(docs.columns.map(c => col(s"r.$c")): _*)
     }),
 
-    "s_arrow_roundtrip" -> ((s, d) => {
-      // Arrow IPC stream roundtrip (r15) — the columnar interchange
-      // format ML dataloaders consume, spoken by a HAND-BUILT
-      // FlatBuffers layer (vtables, unions, struct vectors) and the
-      // encapsulated-message framing, pure JVM (Sources.ArrowIpc;
-      // cross-validated BOTH directions against pyarrow in
-      // SourcesSpec): documents → 4 .arrows shards → shard-parallel
-      // streaming read (schema validated, one batch in memory) →
-      // identity vs the plain table.
-      val out = scratchDir("arrowstream")
-      val docs = Graft.documents(s, d)
-      graft.sources.Sources.writeArrowStream(docs, out, shards = 4)
-      graft.sources.Sources.readArrowStream(s, out, docs.schema)
-    }),
-
     "s_arrow_file" -> ((s, d) => {
       // Feather-V2 Arrow FILE roundtrip (r15): the stream content
       // wrapped in magic + a Footer flatbuffer of batch locations — the
@@ -491,27 +350,6 @@ object CoreQueries {
           col("col").cast("double").as("value"), col("label").cast("int").as("label"))
     }),
 
-    "s_safetensors" -> ((s, d) => {
-      // embeddings through the SAFETENSORS interchange (r16) — the
-      // model-ecosystem tensor container (public spec:
-      // huggingface/safetensors): per shard, vec_id I64 [n],
-      // embedding F32 [n,d], label I64 [n] — exactly the file a
-      // torch/NumPy dataloader mmaps. Float bits ride the little-endian
-      // buffer untouched (bit-exact roundtrip); harness projection
-      // explodes to scalars (the s_arrow_embeddings device). Shards are
-      // all-or-nothing (no record framing), so shard count = read
-      // parallelism AND peak writer-task memory — the non-splittable
-      // container discipline TFRecord/tar already follow.
-      val out = scratchDir("safetensors")
-      val emb = Graft.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
-      graft.sources.Safetensors.writeVectors(emb, out, "vec_id", "embedding", "label", shards = 4)
-      graft.sources.Safetensors.readVectors(s, out, "vec_id", "embedding", "label")
-        .select(col("vec_id"), posexplode(col("embedding")), col("label"))
-        .select(col("vec_id"), col("pos").cast("int").as("idx"),
-          col("col").cast("double").as("value"), col("label").cast("int").as("label"))
-    }),
-
     "s_npz" -> ((s, d) => {
       // embeddings through numpy's npz interchange (r16): each shard a
       // ZIP of three .npy members (i8 ids, f4 [n,d] vectors, i8 labels)
@@ -528,53 +366,6 @@ object CoreQueries {
         .select(col("vec_id"), posexplode(col("embedding")), col("label"))
         .select(col("vec_id"), col("pos").cast("int").as("idx"),
           col("col").cast("double").as("value"), col("label").cast("int").as("label"))
-    }),
-
-    "s_npy" -> ((s, d) => {
-      // bare .npy vector shards (r17, VERDICT r16 #4) — the fairseq/
-      // megatron wire form: a directory of raw f4 [n,d] matrices with
-      // NO ids in the container (row identity = shard + row order).
-      // Shards are deterministic (vec_id mod 4, rows ascending by
-      // vec_id within a shard), so the oracle reconstructs the mapping
-      // exactly: shard = vec_id % 4, row_idx = rank within shard.
-      // Float bits ride the LE buffer untouched; exploded-scalar
-      // projection like the other vector containers.
-      val out = scratchDir("npyshards")
-      val emb = Graft.embeddings(s, d)
-      graft.sources.Npy.writeNpyShards(emb, out, "vec_id", "embedding", shards = 4)
-      graft.sources.Npy.readNpyShards(s, out)
-        .select(col("shard"), col("row_idx"), posexplode(col("vec")))
-        .select(col("shard"), col("row_idx"), col("pos").cast("int").as("idx"),
-          col("col").cast("double").as("value"))
-    }),
-
-    "s_npy_streaming" -> ((s, d) => {
-      // bare-.npy shards arriving THROUGH the real streaming engine (the
-      // container family's ingest-at-arrival twin): the SAME 4 shards
-      // staged, streaming binaryFile source one shard per micro-batch,
-      // each decoded whole by the SAME validated parser (a bare .npy has
-      // no record framing — file == batch), shard index from the file
-      // name. Stateless append — converged result equals the batch read
-      // and shares s_npy's oracle.
-      val out = scratchDir("npystream")
-      val emb = Graft.embeddings(s, d)
-      graft.sources.Npy.writeNpyShards(emb, out, "vec_id", "embedding", shards = 4)
-      import s.implicits._
-      implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-        org.apache.spark.sql.Encoders.row(graft.sources.Npy.npyShardSchema)
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.npy").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.npy")
-        .select("path", "content").as[(String, Array[Byte])]
-        .flatMap { case (p, b) =>
-          graft.sources.Npy.decodeVectorShard(graft.sources.Npy.shardIndexOf(p), b)
-        }
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "s_npy_stream",
-          stream.toDF())
-        .select(col("shard"), col("row_idx"), posexplode(col("vec")))
-        .select(col("shard"), col("row_idx"), col("pos").cast("int").as("idx"),
-          col("col").cast("double").as("value"))
     }),
 
     "s_npy_corrupt_tail" -> ((s, d) => {
@@ -598,35 +389,6 @@ object CoreQueries {
         .select(col("shard"), col("row_idx"), posexplode(col("vec")))
         .select(col("shard"), col("row_idx"), col("pos").cast("int").as("idx"),
           col("col").cast("double").as("value"))
-    }),
-
-    "s_safetensors_streaming" -> ((s, d) => {
-      // safetensors shards arriving THROUGH the real streaming engine
-      // (the dataloader-feed shape, the s_arrow_streaming device): the
-      // SAME 4 shards staged, streaming binaryFile source one shard per
-      // micro-batch, each decoded whole by the SAME validated parser
-      // (a safetensors shard has no record framing — file == batch).
-      // Stateless append — converged result equals the batch read,
-      // shared oracle.
-      val out = scratchDir("ststream")
-      val emb = Graft.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
-      graft.sources.Safetensors.writeVectors(emb, out, "vec_id", "embedding", "label", shards = 4)
-      import s.implicits._
-      val schema = graft.sources.Safetensors.vectorSchema("vec_id", "embedding", "label")
-      implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-        org.apache.spark.sql.Encoders.row(schema)
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.safetensors").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.safetensors")
-        .select("content").as[Array[Byte]]
-        .flatMap(b => graft.sources.Safetensors.decodeVectors(b, "vec_id", "embedding", "label"))
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "s_safetensors_stream",
-          stream.toDF())
-        .select(col("vec_id"), posexplode(col("embedding")), col("label"))
-        .select(col("vec_id"), col("pos").cast("int").as("idx"),
-          col("col").cast("double").as("value"), col("label").cast("int").as("label"))
     }),
 
     "s_safetensors_corrupt_skip" -> ((s, d) => {
@@ -654,81 +416,6 @@ object CoreQueries {
         .select(col("vec_id"), posexplode(col("embedding")), col("label"))
         .select(col("vec_id"), col("pos").cast("int").as("idx"),
           col("col").cast("double").as("value"), col("label").cast("int").as("label"))
-    }),
-
-    "s_arrow_streaming" -> ((s, d) => {
-      // Arrow shards arriving THROUGH the real streaming engine (the
-      // dataloader-feed shape): the SAME 4 shards staged, streaming
-      // binaryFile source one shard per micro-batch, each walked by the
-      // SAME schema-validated batch reader. Stateless append —
-      // converged result equals the batch read, shared oracle.
-      val out = scratchDir("arrowstreams")
-      val docs = Graft.documents(s, d)
-      graft.sources.Sources.writeArrowStream(docs, out, shards = 4)
-      import s.implicits._
-      val schema = docs.schema
-      implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-        org.apache.spark.sql.Encoders.row(schema)
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.arrows").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.arrows")
-        .select("content").as[Array[Byte]]
-        .flatMap(b => graft.sources.ArrowIpc.readStream(
-          new java.io.ByteArrayInputStream(b), schema))
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "s_arrow_stream",
-        stream.toDF())
-    }),
-
-    "s_zipshards" -> ((s, d) => {
-      // ZIP shard roundtrip (r15) — the other common sample-archive
-      // container next to WebDataset tar (Kaggle dumps, scraped-corpus
-      // drops, COCO-style sets): documents → JSON members → 4 zip
-      // shards (pure-JDK java.util.zip, DEFLATE) → shard-parallel
-      // streaming read with every member's CRC-32 verified → from_json
-      // with the explicit schema → identity vs the plain table. Read
-      // parallelism = shard count (stream mode ignores the tail-resident
-      // central directory, so a shard is one task — the writer's knob,
-      // stated in the write API).
-      val out = scratchDir("zipshards")
-      val docs = Graft.documents(s, d)
-      graft.sources.Sources.writeZipShards(
-        docs.select(format_string("%012d", col("doc_id")).as("key"),
-          lit("json").as("ext"),
-          to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
-        out, shards = 4)
-      graft.sources.Sources.readZipShards(s, out)
-        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
-        .select(docs.columns.map(c => col(s"r.$c")): _*)
-    }),
-
-    "s_zipshards_streaming" -> ((s, d) => {
-      // zip shards arriving THROUGH the real streaming engine (the
-      // container family's ingest-at-arrival twin): the SAME 4 shards
-      // staged, streaming binaryFile source one shard per micro-batch,
-      // each archive walked by the SAME CRC-verifying member reader the
-      // batch path uses, then from_json. Stateless append — converged
-      // result equals the batch read and shares s_zipshards' oracle.
-      val out = scratchDir("zipshardss")
-      val docs = Graft.documents(s, d)
-      graft.sources.Sources.writeZipShards(
-        docs.select(format_string("%012d", col("doc_id")).as("key"),
-          lit("json").as("ext"),
-          to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
-        out, shards = 4)
-      import s.implicits._
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.zip").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.zip")
-        .select("content").as[Array[Byte]]
-        .flatMap(graft.sources.Sources.Zip.readAll(_).collect {
-          case (graft.sources.Sources.SampleName(_, _), data) => data
-        })
-        .toDF("payload")
-        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
-        .select(docs.columns.map(c => col(s"r.$c")): _*)
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "s_zip_stream", stream)
     }),
 
     "s_zipshards_corrupt_tail" -> ((s, d) => {
@@ -913,43 +600,6 @@ object CoreQueries {
         }.toDF("vec_id", "idx", "value", "label")
     }),
 
-    "s_tfexample_media" -> ((s, d) => {
-      // TFDS-style IMAGE records (r15) — the standard tf.Example image
-      // shape: a PNG payload as an `image/encoded` BytesList feature
-      // (plus `image/format`) inside TFRecord shards, the layout TFDS
-      // image datasets actually ship. Composed entirely from certified
-      // pieces: the tf.Example wire codec (r14), TFRecord framing (r13),
-      // the streaming one-task-per-shard reader, and the full PNG decode
-      // path (chunk walk → CRC-32 → inflate → unfilter). The read side
-      // stream-parses each shard with ONE record in memory, decodes the
-      // BytesList payload, and reduces to per-asset pixel sums the
-      // oracle replays from the synthetic pixel formula (the
-      // s_webdataset device). 100 TB shape: shard-parallel read,
-      // scan-local decode, one hash aggregation.
-      val out = scratchDir("tfexmedia")
-      val docs = Graft.documents(s, d)
-      import s.implicits._
-      val payloads = docs.select("doc_id", "n_chars").as[(Long, Long)]
-        .map { case (id, nc) =>
-          graft.sources.Sources.TfExample.encode(Seq(
-            "asset_id" -> id,
-            "image/encoded" -> graft.multimodal.Multimodal.syntheticPngBytes(id, nc),
-            "image/format" -> "png"))
-        }.toDF("payload")
-      graft.sources.Sources.writeTfRecords(payloads, "payload", out, shards = 4)
-      val decoded = graft.sources.Sources.readTfRecords(s, out)
-        .as[Array[Byte]]
-        .map { b =>
-          val m = graft.sources.Sources.TfExample.decode(b).toMap
-          require(new String(m("image/format").bytes.head, "UTF-8") == "png",
-            "unexpected image/format")
-          (m("asset_id").int64s.head, m("image/encoded").bytes.head)
-        }.toDF("asset_id", "payload")
-      graft.multimodal.Multimodal.decodePngChannels(decoded)
-        .groupBy("asset_id").agg(sum("px_sum").as("png_px_sum"))
-        .select(col("asset_id").as("doc_id"), col("png_px_sum"))
-    }),
-
     "s_tfexample_media_jpeg" -> ((s, d) => {
       // the JPEG arm of the TFDS image-record chain (r15): the same
       // tf.Example `image/encoded` BytesList transport, carrying the
@@ -979,42 +629,6 @@ object CoreQueries {
           (m("asset_id").int64s.head, m("image/encoded").bytes.head)
         }.toDF("asset_id", "payload")
       graft.multimodal.Multimodal.decodeJpegBlocks(assets)
-    }),
-
-    "s_tfexample_media_streaming" -> ((s, d) => {
-      // the streaming twin of s_tfexample_media: the SAME image shards
-      // arrive through the real engine (binaryFile source, one shard
-      // per micro-batch), each TFRecord frame parsed, the tf.Example
-      // decoded, the PNG payload decoded per batch — stateless append,
-      // so the converged per-asset pixel sums equal the batch read and
-      // share its oracle verbatim (the s_webdataset_streaming device
-      // applied to the tf.Example container).
-      val out = scratchDir("tfexmstream")
-      val docs = Graft.documents(s, d)
-      import s.implicits._
-      val payloads = docs.select("doc_id", "n_chars").as[(Long, Long)]
-        .map { case (id, nc) =>
-          graft.sources.Sources.TfExample.encode(Seq(
-            "asset_id" -> id,
-            "image/encoded" -> graft.multimodal.Multimodal.syntheticPngBytes(id, nc),
-            "image/format" -> "png"))
-        }.toDF("payload")
-      graft.sources.Sources.writeTfRecords(payloads, "payload", out, shards = 4)
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.tfrecord").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.tfrecord")
-        .select("content").as[Array[Byte]]
-        .flatMap { shard =>
-          graft.sources.Sources.TfRecord.readAll(shard).map { b =>
-            val m = graft.sources.Sources.TfExample.decode(b).toMap
-            (m("asset_id").int64s.head, m("image/encoded").bytes.head)
-          }
-        }.toDF("asset_id", "payload")
-      val px = graft.multimodal.Multimodal.decodePngChannels(stream)
-      val pxT = graft.streaming.StreamingQueries.runAppendToMemory(s, "s_tfexm_px", px)
-      pxT.groupBy("asset_id").agg(sum("px_sum").as("png_px_sum"))
-        .select(col("asset_id").as("doc_id"), col("png_px_sum"))
     }),
 
     "s_tfexample_multimodal" -> ((s, d) => {
@@ -1119,6 +733,182 @@ object CoreQueries {
          AND gy.y < 1 + d.doc_id % 11
        GROUP BY 1"""
 
+  /** The container families' batch/streaming pairs ([[Twins.ShardTwin]]):
+    * each stream entry reads the SAME 4 shards one per micro-batch
+    * through the batch entry's decode — the ingest-at-arrival shape. A
+    * flipped byte kills the batch, never yields a silently-wrong row.
+    */
+  val shardTwins: Seq[Twins.ShardTwin] = Seq(
+    Twins.ShardTwin("s_webdataset", "s_webdataset_streaming", (s, d, src) => {
+      // WebDataset roundtrip (r13) — the de-facto MULTIMODAL training
+      // corpus layout: per sample, a `<key>.json` metadata member and a
+      // `<key>.png` image member, grouped contiguously inside plain
+      // USTAR tar shards (pure-JVM framing, header checksums verified
+      // on read; write repartitions BY KEY so a sample never splits
+      // across shards — the property streaming WebDataset readers
+      // rely on). Certified BOTH modalities deep: the json side must
+      // reproduce the documents table bit-exactly (from_json, explicit
+      // schema) and the png side goes through the FULL certified PNG
+      // decode to per-asset pixel sums the oracle replays from the
+      // pixel formula. Scale shape: shard-parallel read, scan-local
+      // decode, one broadcastable join keyed by doc_id.
+      val out = scratchDir("wds")
+      val docs = Graft.documents(s, d)
+      val key = format_string("%012d", col("doc_id"))
+      val jsonRows = docs.select(key.as("key"), lit("json").as("ext"),
+        to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload"))
+      val pngRows = graft.multimodal.Multimodal.syntheticPngAssets(docs)
+        .select(format_string("%012d", col("asset_id")).as("key"),
+          lit("png").as("ext"), col("payload"))
+      graft.sources.Sources.writeWebDataset(
+        jsonRows.unionByName(pngRows), out, shards = 4)
+      graft.sources.Sources.readWebDataset(s, out, src)
+    }, (s, d, back) => {
+      // the members decode on the converged stream: the per-doc join
+      // needs both of a sample's members
+      val docs = Graft.documents(s, d)
+      val js = back.where(col("ext") === "json")
+        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
+        .select(col("r.*"))
+      val px = graft.multimodal.Multimodal.decodePngChannels(
+          back.where(col("ext") === "png")
+            .select(col("key").cast("long").as("asset_id"), col("payload")))
+        .groupBy("asset_id").agg(sum("px_sum").as("png_px_sum"))
+      js.join(px.withColumnRenamed("asset_id", "doc_id"), Seq("doc_id"))
+    }),
+
+    Twins.ShardTwin("s_tfrecord", "s_tfrecord_streaming", (s, d, src) => {
+      // TFRecord roundtrip (r13) — the TensorFlow training-data
+      // interchange format, pure-JVM framing (8-byte LE length + masked
+      // CRC-32C on both the length and the payload; JDK CRC32C, public
+      // spec constants): documents → JSON payloads → 4 TFRecord shards
+      // → shard-parallel read with EVERY checksum verified → from_json
+      // with the explicit schema → identity vs the plain table. Like
+      // gzip text, a shard is one read task (non-splittable framing) —
+      // the writer controls parallelism, stated in the write API.
+      val out = scratchDir("tfrecord")
+      val docs = Graft.documents(s, d)
+      graft.sources.Sources.writeTfRecords(
+        docs.select(to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
+        "payload", out, shards = 4)
+      graft.sources.Sources.readTfRecords(s, out, src)
+        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
+        .select(docs.columns.map(c => col(s"r.$c")): _*)
+    }),
+
+    Twins.ShardTwin("s_arrow_roundtrip", "s_arrow_streaming", (s, d, src) => {
+      // Arrow IPC stream roundtrip (r15) — the columnar interchange
+      // format ML dataloaders consume, spoken by a HAND-BUILT
+      // FlatBuffers layer (vtables, unions, struct vectors) and the
+      // encapsulated-message framing, pure JVM (Sources.ArrowIpc;
+      // cross-validated BOTH directions against pyarrow in
+      // SourcesSpec): documents → 4 .arrows shards → shard-parallel
+      // streaming read (schema validated, one batch in memory) →
+      // identity vs the plain table.
+      val out = scratchDir("arrowstream")
+      val docs = Graft.documents(s, d)
+      graft.sources.Sources.writeArrowStream(docs, out, shards = 4)
+      graft.sources.Sources.readArrowStream(s, out, docs.schema, src)
+    }),
+
+    Twins.ShardTwin("s_safetensors", "s_safetensors_streaming", (s, d, src) => {
+      // embeddings through the SAFETENSORS interchange (r16) — the
+      // model-ecosystem tensor container (public spec:
+      // huggingface/safetensors): per shard, vec_id I64 [n],
+      // embedding F32 [n,d], label I64 [n] — exactly the file a
+      // torch/NumPy dataloader mmaps. Float bits ride the little-endian
+      // buffer untouched (bit-exact roundtrip); harness projection
+      // explodes to scalars (the s_arrow_embeddings device). Shards are
+      // all-or-nothing (no record framing), so shard count = read
+      // parallelism AND peak writer-task memory — the non-splittable
+      // container discipline TFRecord/tar already follow.
+      val out = scratchDir("safetensors")
+      val emb = Graft.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
+      graft.sources.Safetensors.writeVectors(emb, out, "vec_id", "embedding", "label", shards = 4)
+      graft.sources.Safetensors.readVectors(s, out, "vec_id", "embedding", "label", src)
+        .select(col("vec_id"), posexplode(col("embedding")), col("label"))
+        .select(col("vec_id"), col("pos").cast("int").as("idx"),
+          col("col").cast("double").as("value"), col("label").cast("int").as("label"))
+    }),
+
+    Twins.ShardTwin("s_npy", "s_npy_streaming", (s, d, src) => {
+      // bare .npy vector shards (r17, VERDICT r16 #4) — the fairseq/
+      // megatron wire form: a directory of raw f4 [n,d] matrices with
+      // NO ids in the container (row identity = shard + row order).
+      // Shards are deterministic (vec_id mod 4, rows ascending by
+      // vec_id within a shard), so the oracle reconstructs the mapping
+      // exactly: shard = vec_id % 4, row_idx = rank within shard.
+      // Float bits ride the LE buffer untouched; exploded-scalar
+      // projection like the other vector containers.
+      val out = scratchDir("npyshards")
+      val emb = Graft.embeddings(s, d)
+      graft.sources.Npy.writeNpyShards(emb, out, "vec_id", "embedding", shards = 4)
+      graft.sources.Npy.readNpyShards(s, out, src)
+        .select(col("shard"), col("row_idx"), posexplode(col("vec")))
+        .select(col("shard"), col("row_idx"), col("pos").cast("int").as("idx"),
+          col("col").cast("double").as("value"))
+    }),
+
+    Twins.ShardTwin("s_zipshards", "s_zipshards_streaming", (s, d, src) => {
+      // ZIP shard roundtrip (r15) — the other common sample-archive
+      // container next to WebDataset tar (Kaggle dumps, scraped-corpus
+      // drops, COCO-style sets): documents → JSON members → 4 zip
+      // shards (pure-JDK java.util.zip, DEFLATE) → shard-parallel
+      // streaming read with every member's CRC-32 verified → from_json
+      // with the explicit schema → identity vs the plain table. Read
+      // parallelism = shard count (stream mode ignores the tail-resident
+      // central directory, so a shard is one task — the writer's knob,
+      // stated in the write API).
+      val out = scratchDir("zipshards")
+      val docs = Graft.documents(s, d)
+      graft.sources.Sources.writeZipShards(
+        docs.select(format_string("%012d", col("doc_id")).as("key"),
+          lit("json").as("ext"),
+          to_json(struct(docs.columns.map(col): _*)).cast("binary").as("payload")),
+        out, shards = 4)
+      graft.sources.Sources.readZipShards(s, out, src)
+        .select(from_json(col("payload").cast("string"), docs.schema).as("r"))
+        .select(docs.columns.map(c => col(s"r.$c")): _*)
+    }),
+
+    Twins.ShardTwin("s_tfexample_media", "s_tfexample_media_streaming", (s, d, src) => {
+      // TFDS-style IMAGE records (r15) — the standard tf.Example image
+      // shape: a PNG payload as an `image/encoded` BytesList feature
+      // (plus `image/format`) inside TFRecord shards, the layout TFDS
+      // image datasets actually ship. Composed entirely from certified
+      // pieces: the tf.Example wire codec (r14), TFRecord framing (r13),
+      // the streaming one-task-per-shard reader, and the full PNG decode
+      // path (chunk walk → CRC-32 → inflate → unfilter). The read side
+      // stream-parses each shard with ONE record in memory, decodes the
+      // BytesList payload, and reduces to per-asset pixel sums the
+      // oracle replays from the synthetic pixel formula (the
+      // s_webdataset device). 100 TB shape: shard-parallel read,
+      // scan-local decode, one hash aggregation.
+      val out = scratchDir("tfexmedia")
+      val docs = Graft.documents(s, d)
+      import s.implicits._
+      val payloads = docs.select("doc_id", "n_chars").as[(Long, Long)]
+        .map { case (id, nc) =>
+          graft.sources.Sources.TfExample.encode(Seq(
+            "asset_id" -> id,
+            "image/encoded" -> graft.multimodal.Multimodal.syntheticPngBytes(id, nc),
+            "image/format" -> "png"))
+        }.toDF("payload")
+      graft.sources.Sources.writeTfRecords(payloads, "payload", out, shards = 4)
+      val decoded = graft.sources.Sources.readTfRecords(s, out, src)
+        .as[Array[Byte]]
+        .map { b =>
+          val m = graft.sources.Sources.TfExample.decode(b).toMap
+          require(new String(m("image/format").bytes.head, "UTF-8") == "png",
+            "unexpected image/format")
+          (m("asset_id").int64s.head, m("image/encoded").bytes.head)
+        }.toDF("asset_id", "payload")
+      graft.multimodal.Multimodal.decodePngChannels(decoded)
+    }, (_, _, px) =>
+      px.groupBy("asset_id").agg(sum("px_sum").as("png_px_sum"))
+        .select(col("asset_id").as("doc_id"), col("png_px_sum"))))
+
   val sourceOracles: Map[String, String] = Map(
     "s1_stream_source" ->
       "SELECT CAST(user_id AS VARCHAR) AS key, event_type AS value, epoch_us(ts) AS ts_us FROM events",
@@ -1158,9 +948,6 @@ object CoreQueries {
     "s_jsonl_gz" -> "SELECT * FROM documents",
     "s_jsonl_bz2" -> "SELECT * FROM documents",
     "s_tfrecord" -> "SELECT * FROM documents",
-    // the streaming twin converges to the identical table (stateless
-    // append over the same 4 shards) — batch oracle shared verbatim
-    "s_tfrecord_streaming" -> "SELECT * FROM documents",
     // tf.Example roundtrip reconstructs the table field-by-field
     "s_tfexample" -> "SELECT * FROM documents",
     // FloatList roundtrip is bit-exact (fixed32 passthrough); exploded
@@ -1174,8 +961,6 @@ object CoreQueries {
     // TFRecord + PNG-decode chain reduces to the synthetic pixel
     // formula (the s_webdataset per-asset pixel-sum device)
     "s_tfexample_media" -> tfexampleMediaPxSql,
-    // the stateless streaming twin converges to the batch read — SAME oracle
-    "s_tfexample_media_streaming" -> tfexampleMediaPxSql,
     // JPEG payloads through the same container reduce to the
     // mm_decode_jpeg block stats — that oracle verbatim
     "s_tfexample_media_jpeg" -> PipelineQueries.mmDecodeJpegSql,
@@ -1207,20 +992,6 @@ object CoreQueries {
       """SELECT * FROM documents
          WHERE NOT (doc_id % 4 = 3 AND doc_id =
            (SELECT max(doc_id) FROM documents WHERE doc_id % 4 = 3))""",
-    // the stateless streaming twin converges to the batch read — SAME oracle
-    "s_webdataset_streaming" ->
-      """SELECT d.*, p.png_px_sum FROM documents d JOIN (
-           SELECT d.doc_id,
-                  CAST(SUM((d.doc_id * 7 + gx.x * 3 + gy.y * 5 + ch.c * 11) % 256) AS BIGINT) AS png_px_sum
-           FROM documents d,
-                UNNEST(generate_series(0, 2)) AS ch(c),
-                UNNEST(generate_series(0, 12)) AS gx(x),
-                UNNEST(generate_series(0, 10)) AS gy(y)
-           WHERE ch.c < (CASE WHEN d.doc_id % 2 = 0 THEN 1 ELSE 3 END)
-             AND gx.x < 1 + d.n_chars % 13
-             AND gy.y < 1 + d.doc_id % 11
-           GROUP BY 1) p ON p.doc_id = d.doc_id""",
-
     // json members reproduce the table; png members decode to the
     // pixel-formula sums (all channels)
     "s_webdataset" ->
@@ -1236,7 +1007,6 @@ object CoreQueries {
              AND gy.y < 1 + d.doc_id % 11
            GROUP BY 1) p ON p.doc_id = d.doc_id""",
     "s_arrow_roundtrip" -> "SELECT * FROM documents",
-    "s_arrow_streaming" -> "SELECT * FROM documents",
     "s_arrow_file" -> "SELECT * FROM documents",
     "s_arrow_embeddings" ->
       """SELECT vec_id, CAST(i - 1 AS INT) AS idx,
@@ -1261,15 +1031,6 @@ object CoreQueries {
          SELECT CAST(shard AS BIGINT) AS shard, CAST(row_idx AS BIGINT) AS row_idx,
                 CAST(i - 1 AS INT) AS idx, CAST(embedding[i] AS DOUBLE) AS value
          FROM r, UNNEST(generate_series(1, len(embedding))) AS t(i)""",
-    // stateless streaming append converges to the batch read — SAME oracle
-    "s_npy_streaming" ->
-      """WITH r AS (SELECT vec_id % 4 AS shard,
-                           row_number() OVER (PARTITION BY vec_id % 4 ORDER BY vec_id) - 1 AS row_idx,
-                           embedding
-                    FROM embeddings)
-         SELECT CAST(shard AS BIGINT) AS shard, CAST(row_idx AS BIGINT) AS row_idx,
-                CAST(i - 1 AS INT) AS idx, CAST(embedding[i] AS DOUBLE) AS value
-         FROM r, UNNEST(generate_series(1, len(embedding))) AS t(i)""",
     // the torn shard (vec_id%4 = 2) quarantines whole; the rest survive
     "s_npy_corrupt_tail" ->
       """WITH r AS (SELECT vec_id % 4 AS shard,
@@ -1280,11 +1041,6 @@ object CoreQueries {
                 CAST(i - 1 AS INT) AS idx, CAST(embedding[i] AS DOUBLE) AS value
          FROM r, UNNEST(generate_series(1, len(embedding))) AS t(i)
          WHERE shard <> 2""",
-    // stateless streaming append converges to the batch read — SAME oracle
-    "s_safetensors_streaming" ->
-      """SELECT vec_id, CAST(i - 1 AS INT) AS idx,
-                CAST(embedding[i] AS DOUBLE) AS value, label
-         FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)""",
     // the torn shard (vec_id%4 = 2) quarantines whole; the rest survive
     "s_safetensors_corrupt_skip" ->
       """SELECT vec_id, CAST(i - 1 AS INT) AS idx,
@@ -1292,7 +1048,6 @@ object CoreQueries {
          FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
          WHERE vec_id % 4 <> 2""",
     "s_zipshards" -> "SELECT * FROM documents",
-    "s_zipshards_streaming" -> "SELECT * FROM documents",
     // torn shard-3 tail (cut inside the final member's local header)
     // drops exactly that shard's last (max-doc_id) record
     "s_zipshards_corrupt_tail" ->
@@ -1419,29 +1174,6 @@ object CoreQueries {
         .toDF("key", "max_amount")
     }),
 
-    "a6_table_reduce" -> ((s, d) => {
-      val latest = TableView.latestPerKey(
-        Graft.eventsStream(s, d), Seq("key"), col("ts_us"), col("event_id"))
-      TableView.regroupAndAgg(latest, col("value"),
-        Seq(round(sum("amount"), 2).as("total")))
-    }),
-
-    // A6 through the real streaming engine: the table re-aggregation's
-    // RETRACTION semantics (adder + subtractor,
-    // DSLStatefulTransformation.scala:105-111) ride the foreachBatch
-    // upsert loop — when a later batch upserts a key into a different
-    // group, the recomputed snapshot moves its amount between groups
-    // (old group sum shrinks: the subtractor's effect, without needing
-    // one). Final snapshot = batch answer, SAME oracle as a6.
-    "a6_streaming" -> ((s, d) => {
-      val ev = Graft.eventsStream(s, d).select("key", "value", "amount", "ts_us", "event_id")
-      StreamingQueries.runUpsertSnapshots(s, ev, pmod(col("event_id"), lit(3)), "a6") { acc =>
-        TableView.regroupAndAgg(
-          TableView.latestPerKey(acc, Seq("key"), col("ts_us"), col("event_id")),
-          col("value"), Seq(round(sum("amount"), 2).as("total")))
-      }._1
-    }),
-
     "a7_table_groupby" -> ((s, d) => {
       val latest = TableView.latestPerKey(
         Graft.eventsStream(s, d), Seq("key"), col("ts_us"), col("event_id"))
@@ -1529,6 +1261,22 @@ object CoreQueries {
         .select(col("c_mktsegment"), col("l_orderkey"), col("revenue"), col("rnk"))
     }))
 
+  /** The events changelog as three micro-batches (a6, j6-j8). */
+  private val eventsChangelog = Twins.Upsert(pmod(col("event_id"), lit(3)))
+
+  /** A6 over the events table and through the foreachBatch upsert loop:
+    * the table re-aggregation's RETRACTION semantics (adder + subtractor,
+    * DSLStatefulTransformation.scala:105-111) — when a later micro-batch
+    * upserts a key into a different group, the recomputed snapshot moves
+    * its amount between groups (the subtractor's effect, without needing
+    * one). The final snapshot has seen the whole changelog.
+    */
+  val aggregationTwins: Seq[Twins.TableTwin] = Seq(
+    Twins.TableTwin("a6_table_reduce", "a6_streaming", "events", eventsChangelog, (_, _, ev) =>
+      TableView.regroupAndAgg(
+        TableView.latestPerKey(Graft.keyed(ev), Seq("key"), col("ts_us"), col("event_id")),
+        col("value"), Seq(round(sum("amount"), 2).as("total")))))
+
   val aggregationOracles: Map[String, String] = Map(
     // a8: exact columns hash-match; hll_ok is the sketch's 10%-bound
     // claim, which the oracle states as literal TRUE (a bound violation
@@ -1550,10 +1298,6 @@ object CoreQueries {
     "a5_reduce" ->
       "SELECT CAST(user_id AS VARCHAR) AS key, max(value) AS max_amount FROM events GROUP BY 1",
     "a6_table_reduce" ->
-      """SELECT event_type AS key, round(sum(value), 2) AS total
-         FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn FROM events)
-         WHERE rn = 1 GROUP BY 1""",
-    "a6_streaming" ->
       """SELECT event_type AS key, round(sum(value), 2) AS total
          FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn FROM events)
          WHERE rn = 1 GROUP BY 1""",
@@ -1595,58 +1339,22 @@ object CoreQueries {
   // ---- W: windows ---------------------------------------------------------
 
   val windows: Map[String, Q] = Map(
-    "w1_tumbling" -> ((s, d) =>
-      Windows.tumblingCount(Graft.events(s, d), "ts_us", "5 minutes", col("event_type"))),
-
-    "w2_session" -> ((s, d) =>
-      Windows.sessionCount(Graft.events(s, d), "ts_us", "1 hour", col("user_id"))),
-
     "w3_windowed_key" -> ((s, d) =>
-      Windows.flattenWindowedKey(Graft.events(s, d), "ts_us", "5 minutes", col("event_type"))),
+      Windows.flattenWindowedKey(Graft.events(s, d), "ts_us", "5 minutes", col("event_type"))))
 
-    "w4_hopping" -> ((s, d) =>
-      Windows.hoppingCount(Graft.events(s, d), "ts_us", "10 minutes", "5 minutes", col("event_type"))),
-
-    // W1 through the streaming engine end-to-end: readStream → watermark
-    // (grace) → tumbling window aggregation → memory sink; same oracle as
-    // the batch form
-    "w1_streaming" -> ((s, d) =>
-      StreamingQueries.runCompleteAggToMemory(s, d, "events", "w1s_counts",
-        df => df
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "3 minutes")
-          .groupBy(window(col("event_time"), "5 minutes"), col("event_type")).count()
-          .select(col("event_type"),
-            unix_timestamp(col("window.start")).as("window_start_s"),
-            col("count").as("cnt")))),
-
-    // W2 through the streaming engine end-to-end: readStream → watermark
-    // (grace) → native session_window aggregation (merging session state
-    // store) → memory sink; same oracle as the batch gaps-and-islands form
-    "w2_streaming" -> ((s, d) =>
-      StreamingQueries.runCompleteAggToMemory(s, d, "events", "w2s_sessions",
-        df => df
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "3 minutes")
-          .groupBy(session_window(col("event_time"), "1 hour"), col("user_id"))
-          .count()
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("session_start_us"),
-            col("count").as("cnt")))),
-
-    // W4 through the streaming engine end-to-end: readStream → watermark →
-    // hopping (overlapping) window aggregation → memory sink; same oracle
-    // as the batch form — each event lands in width/slide windows
-    "w4_streaming" -> ((s, d) =>
-      StreamingQueries.runCompleteAggToMemory(s, d, "events", "w4s_counts",
-        df => df
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "3 minutes")
-          .groupBy(window(col("event_time"), "10 minutes", "5 minutes"), col("event_type"))
-          .count()
-          .select(col("event_type"),
-            unix_timestamp(col("window.start")).as("window_start_s"),
-            col("count").as("cnt")))))
+  /** W1, W2, W4 over the events table and through the streaming engine:
+    * the stream entry runs the same `Windows` aggregation in complete
+    * mode (the session form merges session state across micro-batches),
+    * so the drained counts equal the batch form's. Complete mode keeps
+    * every window's state, so no watermark bounds it.
+    */
+  val windowTwins: Seq[Twins.TableTwin] = Seq(
+    Twins.TableTwin("w1_tumbling", "w1_streaming", "events", Twins.Complete, (_, _, ev) =>
+      Windows.tumblingCount(ev, "ts_us", "5 minutes", col("event_type"))),
+    Twins.TableTwin("w2_session", "w2_streaming", "events", Twins.Complete, (_, _, ev) =>
+      Windows.sessionCount(ev, "ts_us", "1 hour", col("user_id"))),
+    Twins.TableTwin("w4_hopping", "w4_streaming", "events", Twins.Complete, (_, _, ev) =>
+      Windows.hoppingCount(ev, "ts_us", "10 minutes", "5 minutes", col("event_type"))))
 
   val windowOracles: Map[String, String] = Map(
     "w1_tumbling" ->
@@ -1669,24 +1377,7 @@ object CoreQueries {
     "w4_hopping" ->
       """WITH x AS (SELECT event_type, epoch_us(time_bucket(INTERVAL '5 minutes', ts)) // 1000000 AS b FROM events),
               w AS (SELECT event_type, b AS ws FROM x UNION ALL SELECT event_type, b - 300 AS ws FROM x)
-         SELECT event_type, ws AS window_start_s, count(*) AS cnt FROM w GROUP BY 1, 2""",
-    "w1_streaming" ->
-      """SELECT event_type, epoch_us(time_bucket(INTERVAL '5 minutes', ts)) // 1000000 AS window_start_s, count(*) AS cnt
-         FROM events GROUP BY 1, 2""",
-    "w4_streaming" ->
-      """WITH x AS (SELECT event_type, epoch_us(time_bucket(INTERVAL '5 minutes', ts)) // 1000000 AS b FROM events),
-              w AS (SELECT event_type, b AS ws FROM x UNION ALL SELECT event_type, b - 300 AS ws FROM x)
-         SELECT event_type, ws AS window_start_s, count(*) AS cnt FROM w GROUP BY 1, 2""",
-    "w2_streaming" ->
-      """WITH o AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-              m AS (SELECT user_id, ts_us,
-                           CASE WHEN lag(ts_us) OVER w IS NULL
-                                  OR ts_us - lag(ts_us) OVER w > 3600000000 THEN 1 ELSE 0 END AS brk
-                    FROM o WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-              g AS (SELECT user_id, ts_us,
-                           sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us ROWS UNBOUNDED PRECEDING) AS grp
-                    FROM m)
-         SELECT user_id, min(ts_us) AS session_start_us, count(*) AS cnt FROM g GROUP BY user_id, grp""")
+         SELECT event_type, ws AS window_start_s, count(*) AS cnt FROM w GROUP BY 1, 2""")
 
   // ---- J: joins -----------------------------------------------------------
 
@@ -1717,21 +1408,26 @@ object CoreQueries {
                round(a.value + b.value, 2) AS combined
         ${ssJoinOracleBase.format(kind)}"""
 
-  private def latestByType(s: SparkSession, d: String, tpe: String): DataFrame =
-    TableView.latestPerKey(
-      Graft.eventsStream(s, d).filterKV(col("value") === tpe)
-        .select("key", "event_id", "amount", "ts_us"),
-      Seq("key"), col("ts_us"), col("event_id"))
-
   private def latestByTypeSql(tpe: String) =
     s"""(SELECT CAST(user_id AS VARCHAR) AS key, value AS amount
          FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
                FROM events WHERE event_type = '$tpe')
          WHERE rn = 1)"""
 
-  private def ttJoin(s: SparkSession, d: String, joinType: String): DataFrame = {
-    val l = latestByType(s, d, "purchase").select(col("key"), col("amount").as("purchase_amount"))
-    val r = latestByType(s, d, "view").select(col("key").as("rkey"), col("amount").as("view_amount"))
+  /** J6-J8: the latest-per-key purchase and view tables of an events
+    * frame, joined. As a twin's body it runs over the events table and
+    * over the foreachBatch upsert loop's accumulated changelog, which
+    * recomputes the join per micro-batch — the reference's "emit updated
+    * join output as either side upserts"
+    * (TableToTableJoinExample.scala:115-117); mid-stream upsert updates
+    * are asserted in ProcessorsSpec.
+    */
+  private def ttJoin(joinType: String)(ev: DataFrame): DataFrame = {
+    def side(tpe: String) = TableView.latestPerKey(
+      Graft.keyed(ev).filterKV(col("value") === tpe).select("key", "event_id", "amount", "ts_us"),
+      Seq("key"), col("ts_us"), col("event_id"))
+    val l = side("purchase").select(col("key"), col("amount").as("purchase_amount"))
+    val r = side("view").select(col("key").as("rkey"), col("amount").as("view_amount"))
     Joins.tableTableJoin(l, r, "key", "rkey", joinType)
       .select(coalesce(col("key"), col("rkey")).as("key"), col("purchase_amount"), col("view_amount"))
   }
@@ -1740,57 +1436,15 @@ object CoreQueries {
     s"""SELECT coalesce(l.key, r.key) AS key, l.amount AS purchase_amount, r.amount AS view_amount
         FROM ${latestByTypeSql("purchase")} l $kind JOIN ${latestByTypeSql("view")} r ON l.key = r.key"""
 
-  /** J6-J8 through the real streaming engine: the events changelog is
-    * staged as three micro-batches and consumed by a foreachBatch upsert
-    * loop (StreamingQueries.runUpsertSnapshots) that recomputes the
-    * latest-per-key purchase/view tables and re-joins them per batch —
-    * the reference's "emit updated join output as either side upserts"
-    * (TableToTableJoinExample.scala:115-117). The final snapshot has seen
-    * the whole changelog, so it converges to the batch join and SHARES its
-    * oracle; mid-stream upsert updates are asserted in ProcessorsSpec.
-    */
-  private def ttJoinStreaming(s: SparkSession, d: String, joinType: String): DataFrame = {
-    val ev = Graft.eventsStream(s, d).select("key", "value", "amount", "ts_us", "event_id")
-    StreamingQueries.runUpsertSnapshots(s, ev, pmod(col("event_id"), lit(3)),
-        s"tt-$joinType") { acc =>
-      def side(tpe: String) = TableView.latestPerKey(
-        acc.where(col("value") === tpe).select("key", "event_id", "amount", "ts_us"),
-        Seq("key"), col("ts_us"), col("event_id"))
-      val l = side("purchase").select(col("key"), col("amount").as("purchase_amount"))
-      val r = side("view").select(col("key").as("rkey"), col("amount").as("view_amount"))
-      Joins.tableTableJoin(l, r, "key", "rkey", joinType)
-        .select(coalesce(col("key"), col("rkey")).as("key"), col("purchase_amount"), col("view_amount"))
-    }._1
-  }
-
   val joins: Map[String, Q] = Map(
     "j1_ss_inner" -> ((s, d) => ssJoin(s, d, "inner")),
     "j2_ss_left" -> ((s, d) => ssJoin(s, d, "left")),
     "j3_ss_outer" -> ((s, d) => ssJoin(s, d, "outer")),
 
-    "j4_st_inner" -> ((s, d) =>
-      Joins.streamTableJoin(Graft.orders(s, d), Graft.customer(s, d),
-          "o_custkey", "c_custkey", "inner")
-        .select("o_orderkey", "c_mktsegment", "o_totalprice")),
-
-    "j5_st_left" -> ((s, d) =>
-      Joins.streamTableJoin(Graft.orders(s, d),
-          Graft.customer(s, d).where(col("c_nationkey") < 10),
-          "o_custkey", "c_custkey", "left")
-        .select("o_orderkey", "c_mktsegment", "o_totalprice")),
-
-    "j6_tt_inner" -> ((s, d) => ttJoin(s, d, "inner")),
-    "j7_tt_left" -> ((s, d) => ttJoin(s, d, "left")),
-    "j8_tt_outer" -> ((s, d) => ttJoin(s, d, "outer")),
-    // J6-J8 driven through the streaming engine's foreachBatch upsert
-    // loop — same oracles as the batch forms (see ttJoinStreaming)
-    "j6_streaming" -> ((s, d) => ttJoinStreaming(s, d, "inner")),
-    "j7_streaming" -> ((s, d) => ttJoinStreaming(s, d, "left")),
-    "j8_streaming" -> ((s, d) => ttJoinStreaming(s, d, "outer")),
     // J9: the join type arrives as a string, dispatched through
     // Joins.sparkJoinType — the reference's CLI inner|left|outer switch,
     // here its "outer" (the oracle is FULL)
-    "j9_dispatch" -> ((s, d) => ttJoin(s, d, "outer")),
+    "j9_dispatch" -> ((s, d) => ttJoin("outer")(Graft.events(s, d))),
 
     // beyond-reference: explicit skew salting — event_type has 5 distinct
     // values, so an unsalted shuffle join funnels the whole fact side
@@ -1926,53 +1580,11 @@ object CoreQueries {
             col("r_ts_us") - col("l_ts_us") <= hourUs, 1L).otherwise(0L))
             .as("n_converted_1h"))),
 
-    // J4 through the real streaming engine: stream-static join — the
-    // orders stream enriches against the static (broadcast) customer
-    // dimension per micro-batch, exactly SURVEY §2.5's Spark mapping for
-    // stream⋈table; same oracle as the batch j4_st_inner
-    "j4_streaming" -> ((s, d) => {
-      val ordersStream = StreamingQueries.readStreamParquet(s, d, "orders")
-      val joined = Joins.streamTableJoin(ordersStream, Graft.customer(s, d),
-          "o_custkey", "c_custkey", "inner")
-        .select("o_orderkey", "c_mktsegment", "o_totalprice")
-      StreamingQueries.runAppendToMemory(s, "j4s_join", joined)
-    }),
-
-    // J5 through the real streaming engine: stream-static LEFT join —
-    // unlike the stream-stream outers, a stream-static left join pads
-    // un-matched stream rows IMMEDIATELY (the static side is complete
-    // per micro-batch, no watermark wait), so no sentinel staging is
-    // needed; same oracle as the batch j5_st_left
-    "j5_streaming" -> ((s, d) => {
-      val ordersStream = StreamingQueries.readStreamParquet(s, d, "orders")
-      val joined = Joins.streamTableJoin(ordersStream,
-          Graft.customer(s, d).where(col("c_nationkey") < 10),
-          "o_custkey", "c_custkey", "left")
-        .select("o_orderkey", "c_mktsegment", "o_totalprice")
-      StreamingQueries.runAppendToMemory(s, "j5s_join", joined)
-    }),
-
     // J1 through the real streaming engine: two watermarked file streams,
     // native event-time interval join (Spark's stream-stream join keeps
     // per-key state bounded by watermark + range), append-mode memory
-    // sink; same oracle as the batch j1_ss_inner
-    "j1_streaming" -> ((s, d) => {
-      def side(tag: String) =
-        StreamingQueries.readStreamParquet(s, d, "events")
-          .select(col("event_id").as(s"${tag}_event_id"),
-            col("user_id").cast("string").as(s"${tag}_key"),
-            col("event_type").as(s"${tag}_type"),
-            col("value").as(s"${tag}_amount"),
-            timestamp_micros(expr("ts div 1000")).as(s"${tag}_time"))
-          .withWatermark(s"${tag}_time", "3 minutes")
-      val l = side("l").where(col("l_type") === "purchase")
-      val r = side("r").where(col("r_type") === "view")
-      val joined = l.join(r, expr(
-          "l_key = r_key AND r_time BETWEEN l_time - INTERVAL 1 HOUR AND l_time + INTERVAL 1 HOUR"))
-        .select(col("l_event_id"), col("r_event_id"), col("l_key").as("key"),
-          round(col("l_amount") + col("r_amount"), 2).as("combined"))
-      StreamingQueries.runAppendToMemory(s, "j1s_join", joined)
-    }),
+    // sink — the outer joins' staging below, whose sentinels join nothing
+    "j1_streaming" -> ((s, d) => ssJoinStreaming(s, d, "inner", "j1_streaming")),
 
     // J3 through the real engine — SURVEY §7.4 hard part #2: FULL OUTER
     // stream-stream join where null-padded rows for unmatched events may
@@ -2002,17 +1614,40 @@ object CoreQueries {
     // event time sits beyond every real row's interval) and is itself
     // never evicted (its own window outlives the final watermark), so
     // it cannot appear in the append output.
-    "j3_streaming" -> ((s, d) => ssOuterStreaming(s, d, "full_outer", "j3s_join")),
+    "j3_streaming" -> ((s, d) => ssJoinStreaming(s, d, "full_outer", "j3_streaming")),
 
     // J2 through the real engine: LEFT OUTER interval join — the same
     // watermark-sentinel machinery as j3_streaming, with only the left
     // (purchase) side's unmatched rows held in state for null-padded
     // emission after watermark passage. Same oracle as the batch
     // j2_ss_left.
-    "j2_streaming" -> ((s, d) => ssOuterStreaming(s, d, "left_outer", "j2s_join")))
+    "j2_streaming" -> ((s, d) => ssJoinStreaming(s, d, "left_outer", "j2_streaming")))
 
-  /** Outer stream-stream interval join through the real streaming engine
-    * (j2_streaming / j3_streaming). See the j3_streaming comment above
+  /** J4/J5 over the orders table and as an orders stream: stream-static
+    * joins — the stream enriches against the static (broadcast) customer
+    * dimension per micro-batch, exactly SURVEY §2.5's Spark mapping for
+    * stream⋈table. Unlike the stream-stream outers, a stream-static left
+    * join pads un-matched stream rows IMMEDIATELY (the static side is
+    * complete per micro-batch, no watermark wait). J6-J8 over the events
+    * table and its changelog ([[ttJoin]]).
+    */
+  val joinTwins: Seq[Twins.TableTwin] = Seq(
+    Twins.TableTwin("j4_st_inner", "j4_streaming", "orders", Twins.Append, (s, d, orders) =>
+      Joins.streamTableJoin(orders, Graft.customer(s, d), "o_custkey", "c_custkey", "inner")
+        .select("o_orderkey", "c_mktsegment", "o_totalprice")),
+    Twins.TableTwin("j5_st_left", "j5_streaming", "orders", Twins.Append, (s, d, orders) =>
+      Joins.streamTableJoin(orders, Graft.customer(s, d).where(col("c_nationkey") < 10),
+          "o_custkey", "c_custkey", "left")
+        .select("o_orderkey", "c_mktsegment", "o_totalprice")),
+    Twins.TableTwin("j6_tt_inner", "j6_streaming", "events", eventsChangelog,
+      (_, _, ev) => ttJoin("inner")(ev)),
+    Twins.TableTwin("j7_tt_left", "j7_streaming", "events", eventsChangelog,
+      (_, _, ev) => ttJoin("left")(ev)),
+    Twins.TableTwin("j8_tt_outer", "j8_streaming", "events", eventsChangelog,
+      (_, _, ev) => ttJoin("outer")(ev)))
+
+  /** Stream-stream interval join through the real streaming engine
+    * (j1/j2/j3_streaming). See the j3_streaming comment above
     * for the staging design: three time-ordered micro-batch files plus a
     * 4th file carrying one watermark-sentinel row PER event type (a
     * filtered-out sentinel would never reach the watermark operator —
@@ -2022,7 +1657,7 @@ object CoreQueries {
     * outer state, so the append result equals the batch join and shares
     * its oracle.
     */
-  private def ssOuterStreaming(s: SparkSession, d: String, joinType: String,
+  private def ssJoinStreaming(s: SparkSession, d: String, joinType: String,
                                queryName: String): DataFrame = {
     val raw = Graft.normalizeEventTs(s.read.parquet(s"$d/events.parquet"))
     // sentinel ids and keys are DERIVED from the corpus, strictly below
@@ -2084,18 +1719,8 @@ object CoreQueries {
 
   val joinOracles: Map[String, String] = Map(
     "j1_ss_inner" -> ssJoinOracle("INNER"),
-    "j1_streaming" -> ssJoinOracle("INNER"),
-    "j4_streaming" ->
-      "SELECT o_orderkey, c_mktsegment, o_totalprice FROM orders JOIN customer ON o_custkey = c_custkey",
-    "j5_streaming" ->
-      """SELECT o_orderkey, c_mktsegment, o_totalprice
-         FROM orders LEFT JOIN (SELECT * FROM customer WHERE c_nationkey < 10) c ON o_custkey = c_custkey""",
     "j2_ss_left" -> ssJoinOracle("LEFT"),
     "j3_ss_outer" -> ssJoinOracle("FULL"),
-    // the sentinel staging makes the streaming append results converge
-    // to the batch joins, so the SAME oracles apply
-    "j2_streaming" -> ssJoinOracle("LEFT"),
-    "j3_streaming" -> ssJoinOracle("FULL"),
     "j4_st_inner" ->
       "SELECT o_orderkey, c_mktsegment, o_totalprice FROM orders JOIN customer ON o_custkey = c_custkey",
     "j5_st_left" ->
@@ -2104,10 +1729,6 @@ object CoreQueries {
     "j6_tt_inner" -> ttJoinOracle("INNER"),
     "j7_tt_left" -> ttJoinOracle("LEFT"),
     "j8_tt_outer" -> ttJoinOracle("FULL"),
-    // the upsert loop converges to the batch join — SAME oracles
-    "j6_streaming" -> ttJoinOracle("INNER"),
-    "j7_streaming" -> ttJoinOracle("LEFT"),
-    "j8_streaming" -> ttJoinOracle("FULL"),
     "j9_dispatch" -> ttJoinOracle("FULL"),
     "j_salted" ->
       """WITH dim AS (SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS sum_amount
@@ -2421,8 +2042,11 @@ object CoreQueries {
                 string_split(p_name, ' ')[1] AS first_word
          FROM part""")
 
+  val twins: Seq[Twins.TableTwin] = aggregationTwins ++ windowTwins ++ joinTwins
+
   val all: Map[String, Q] =
-    sources ++ stateless ++ aggregations ++ windows ++ joins ++ duality ++ processor ++ timeError
+    sources ++ stateless ++ aggregations ++ windows ++ joins ++ duality ++ processor ++
+      timeError ++ Twins.entries(twins, shardTwins)
 
   val oracles: Map[String, String] =
     sourceOracles ++ statelessOracles ++ aggregationOracles ++ windowOracles ++

@@ -592,7 +592,166 @@ object PipelineQueries {
     }
   }
 
-  val all: Map[String, Q] = Map(
+  private def documentsTwin(batch: String, stream: String)(body: DataFrame => DataFrame) =
+    Twins.TableTwin(batch, stream, "documents", Twins.Append, (_, _, docs) => body(docs))
+
+  /** Stateless per-document pipelines over the documents table and
+    * through the streaming engine ([[Twins.TableTwin]]): the stream entry
+    * maps the same body over each micro-batch and appends — the
+    * process-at-ingest shape (mask, extract, decode, score as pages land).
+    */
+  val twins: Seq[Twins.TableTwin] = Seq(
+    documentsTwin("pp_mlm_mask", "pp_mlm_mask_streaming") { docs =>
+      // deterministic MLM masking (r16) — BERT-style corpus prep: each
+      // whitespace token masks iff its portable md5 position hash lands
+      // under 15% (the standard rate), so the same doc always masks the
+      // same positions (reproducible epochs, the interleave/split hash
+      // device). Pure per-row HOF over ONE codegen'd scan — no shuffle,
+      // no RNG; the oracle replays the hash and the lambda exactly.
+      // The boolean mask array is computed ONCE in its own projection
+      // (r17, VERDICT r16 #2): the earlier form evaluated the md5
+      // position hash in BOTH the masked_text transform and the
+      // n_masked aggregate — 2× md5 + hex-conv per token. The mask
+      // alias is non-cheap and referenced twice, so CollapseProject
+      // leaves the two Projects separate: one hash evaluation per
+      // token in the plan, both outputs derived from the array.
+      docs
+        .select(col("doc_id"), split(col("text"), "\\s+").as("_toks"))
+        .select(col("doc_id"), col("_toks"),
+          transform(col("_toks"), (t, i) => length(t) > 0 &&
+            conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
+              i.cast("string"))), 1, 8), 16, 10).cast("long") % 100 < 15).as("_mask"))
+        .select(col("doc_id"),
+          concat_ws(" ", zip_with(col("_toks"), col("_mask"),
+            (t, m) => when(m, lit("[MASK]")).otherwise(t))).as("masked_text"),
+          aggregate(col("_mask"), lit(0L),
+            (acc, m) => acc + when(m, 1L).otherwise(0L)).as("n_masked"))
+    },
+
+    documentsTwin("txt_html_extract", "txt_html_extract_streaming") { docs =>
+      // crawl-HTML -> plain text (the WET extraction, stage one of
+      // every web pipeline): drop script/style whole, strip markup,
+      // decode the core entities, collapse whitespace. Pure codegen'd
+      // regexp chain over the synthetic page fixture (the dd_url
+      // device) — zero shuffles, and the oracle replays the identical
+      // chain, so the extraction is certified end-to-end.
+      syntheticHtml(docs).select(col("doc_id"),
+          TextFunctions.htmlTextFast(col("html")).as("text_clean"))
+        .withColumn("clean_chars", length(col("text_clean")).cast("long"))
+    },
+
+    documentsTwin("mm_decode_jpeg", "mm_decode_jpeg_streaming") { docs =>
+      // REAL compressed-format decode (r11 verdict #8): each doc becomes
+      // a spec-conformant baseline JPEG (Annex-K Huffman coding, DQT,
+      // SOF0, restart markers) and decodes back through the FULL
+      // pipeline — entropy decode → dequantize → IDCT → level shift →
+      // crop. Flat DC-only blocks under q00 = 8 make the lossy path
+      // bit-exact, so the oracle replays decoded pixels arithmetically;
+      // JpegSpec cross-validates the codec against the JDK's own
+      // ImageIO JPEG coder so builder+parser can't be wrong together.
+      // Scale shape: generation and decode are partition-local scans.
+      Multimodal.decodeJpegBlocks(Multimodal.syntheticJpegAssets(docs))
+    },
+
+    documentsTwin("mm_decode_png", "mm_decode_png_streaming") { docs =>
+      // REAL compressed-format decode #2 — PNG with a genuine
+      // general-purpose compressor: each doc becomes a spec-conformant
+      // 8-bit gray/RGB PNG (zlib/DEFLATE IDAT, CRC-32 chunks, filter
+      // tag (id+y)%5 so all five scanline filters — None/Sub/Up/
+      // Average/Paeth — appear in certified bytes; id%4==0 splits the
+      // stream across two IDAT chunks) and decodes back through the
+      // FULL pipeline: chunk walk → CRC verify → Inflater → unfilter.
+      // PNG is lossless, so the oracle replays every pixel exactly; the
+      // position-weighted sum pins pixels to coordinates. PngSpec
+      // cross-validates the codec against the JDK's own ImageIO PNG
+      // coder both ways so builder+parser can't be wrong together.
+      // Scale shape: generation and decode are partition-local scans.
+      Multimodal.decodePngChannels(Multimodal.syntheticPngAssets(docs))
+    },
+
+    documentsTwin("mm_video_mjpeg", "mm_video_mjpeg_streaming") { docs =>
+      // REAL video decode + frame sampling: each doc becomes a genuine
+      // single-stream MJPEG AVI (nested RIFF LISTs: avih/strh/strf
+      // headers + a 'movi' list of '00dc' chunks, each an independent
+      // baseline JPEG); the decode side walks the container, samples
+      // every 2nd frame, and runs ONLY the sampled frames through the
+      // full JPEG pipeline — unsampled frames are never entropy-decoded,
+      // which is the point of frame sampling at 100 TB. Flat DC-only
+      // frames make the luma extrema exact, so the oracle replays the
+      // per-frame formula plus the avih-declared frame count.
+      // Scale shape: generation and decode are partition-local scans.
+      Multimodal.mjpegSampledFrames(Multimodal.syntheticMjpegAviAssets(docs), everyNth = 2)
+    },
+
+    documentsTwin("mm_audio_fft", "mm_audio_fft_streaming") { docs =>
+      // REAL DSP feature extraction: each doc becomes a mono 16-bit PCM
+      // WAV whose 64-sample frames are pure sinusoids at integer bins
+      // k = 1 + (id + 3f) % 31; the decode side chunk-walks the WAV,
+      // reads little-endian int16 samples, runs a radix-2 FFT per frame
+      // and reports argmax |X|² over the positive bins. Integer-bin
+      // tones make the argmax exactly k (int16 rounding noise is 4
+      // orders of magnitude down), so the oracle replays k
+      // arithmetically — no cross-engine float surface. DspSpec
+      // certifies the FFT kernel against a naive DFT, Parseval, and
+      // closed forms. Scale shape: partition-local scans end to end.
+      Multimodal.audioSpectralFrames(Multimodal.syntheticToneWavAssets(docs))
+    },
+
+    documentsTwin("mm_audio_mel", "mm_audio_mel_streaming") { docs =>
+      // MEL-SPECTROGRAM features on the FFT kernel (VERDICT r12 #4):
+      // per frame, 6 triangular mel-filterbank band energies as integer
+      // milli-fractions of total positive-bin power. The fixture's
+      // integer-bin tones concentrate all power at bin k, so band m's
+      // fraction equals the triangular weight w_m(k) — a small rational
+      // the oracle replays in EXACT integer arithmetic
+      // ((2000p + q) div 2q, i.e. round-half of 1000·p/q); the int16
+      // noise floor is 6 orders of magnitude inside every boundary.
+      // Filterbank edges are the HTK mel grid snapped to integer FFT
+      // bins (Multimodal.melCenters64, re-derived in DspSpec). Scale
+      // shape: partition-local scan end to end, zero exchanges.
+      Multimodal.audioMelFrames(Multimodal.syntheticToneWavAssets(docs))
+    },
+
+    documentsTwin("mm_text_image_score", "mm_text_image_score_streaming") { docs =>
+      // cross-modal consistency filter (r14, verdict ask #7) — the
+      // CLIP-score-proxy gate on image-text pairs: a frozen two-tower
+      // integer model (hashed token grams × dHash fingerprint bits,
+      // factorized bilinear — Multimodal.textImageScore) scores each
+      // pair and `kept` is the integer cross-multiplied decision.
+      // SINGLE-SCAN pairing: text and image derive from the SAME
+      // documents row, so one mapPartitions generates the PNG bytes
+      // (syntheticPngBytes) and runs the FULL certified decode + dHash
+      // (Png.decode → dHashOf — the imageDHash core, shared so the two
+      // consumers can never drift) inline while the text column rides
+      // along — one corpus scan, zero exchanges, towers in whole-stage
+      // codegen downstream (PlanSpec pins scan count and exchange-
+      // freeness). Oracle: CrossModalOracleSql replays token XXH64 +
+      // both weight rules in BIGINT over the SHARED dhashCtes prefix.
+      textImagePairsScore(docs)
+    })
+
+  /** The WARC container's batch/streaming pair ([[Twins.ShardTwin]]). */
+  val shardTwins: Seq[Twins.ShardTwin] = Seq(
+    Twins.ShardTwin("s_warc", "s_warc_streaming", (s, d, src) => {
+      // WARC container roundtrip (r16) — the web-archive format
+      // CommonCrawl ships (ISO 28500): each synthetic crawl page becomes
+      // a response record (fixed date, deterministic record id, exact
+      // Content-Length framing) across 4 shards; the strict streaming
+      // walk reads them back one-task-per-shard, one record in memory at
+      // a time. Identity oracle over the page fixture. doc_id rides the
+      // Target-URI (the crawl-pipeline convention: the URI IS the key).
+      val out = scratchDir("warc")
+      val h = syntheticHtml(Graft.documents(s, d))
+        .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
+          col("html").cast("binary").as("payload"))
+      graft.sources.Warc.writeShards(h, "uri", "payload", out, shards = 4)
+      graft.sources.Warc.read(s, out, src)
+        .select(
+          regexp_extract(col("uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
+          col("payload").cast("string").as("html"))
+    }))
+
+  val all: Map[String, Q] = Map[String, Q](
     // ---- deduplication ----------------------------------------------------
     "dd_exact" -> ((s, d) =>
       Dedup.exact(Graft.documents(s, d), "doc_id", "text")),
@@ -1749,7 +1908,7 @@ object PipelineQueries {
       // span, so the emitted set equals exact DISTINCT and the batch
       // oracle applies.
       val out = graft.streaming.StreamingQueries.readStreamParquet(s, d, "events")
-        .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+        .withColumn("event_time", timestamp_micros(col("ts_us")))
         .withWatermark("event_time", "30 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
@@ -2342,33 +2501,6 @@ object PipelineQueries {
         .select("doc_id", "n_tok", "n_oov", "oov_bp")
     }),
 
-    "pp_mlm_mask" -> ((s, d) => {
-      // deterministic MLM masking (r16) — BERT-style corpus prep: each
-      // whitespace token masks iff its portable md5 position hash lands
-      // under 15% (the standard rate), so the same doc always masks the
-      // same positions (reproducible epochs, the interleave/split hash
-      // device). Pure per-row HOF over ONE codegen'd scan — no shuffle,
-      // no RNG; the oracle replays the hash and the lambda exactly.
-      // The boolean mask array is computed ONCE in its own projection
-      // (r17, VERDICT r16 #2): the earlier form evaluated the md5
-      // position hash in BOTH the masked_text transform and the
-      // n_masked aggregate — 2× md5 + hex-conv per token. The mask
-      // alias is non-cheap and referenced twice, so CollapseProject
-      // leaves the two Projects separate: one hash evaluation per
-      // token in the plan, both outputs derived from the array.
-      Graft.documents(s, d)
-        .select(col("doc_id"), split(col("text"), "\\s+").as("_toks"))
-        .select(col("doc_id"), col("_toks"),
-          transform(col("_toks"), (t, i) => length(t) > 0 &&
-            conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-              i.cast("string"))), 1, 8), 16, 10).cast("long") % 100 < 15).as("_mask"))
-        .select(col("doc_id"),
-          concat_ws(" ", zip_with(col("_toks"), col("_mask"),
-            (t, m) => when(m, lit("[MASK]")).otherwise(t))).as("masked_text"),
-          aggregate(col("_mask"), lit(0L),
-            (acc, m) => acc + when(m, 1L).otherwise(0L)).as("n_masked"))
-    }),
-
     "pp_sft_multiturn" -> ((s, d) => {
       // MULTI-TURN SFT assembly (r16) — real chat training data is
       // conversations, not single exchanges: each doc becomes a 2-turn
@@ -2422,25 +2554,6 @@ object PipelineQueries {
         .select(col("url").as("href"), col("allowed"), col("matched_prefix"))
     }),
 
-    "s_warc" -> ((s, d) => {
-      // WARC container roundtrip (r16) — the web-archive format
-      // CommonCrawl ships (ISO 28500): each synthetic crawl page becomes
-      // a response record (fixed date, deterministic record id, exact
-      // Content-Length framing) across 4 shards; the strict streaming
-      // walk reads them back one-task-per-shard, one record in memory at
-      // a time. Identity oracle over the page fixture. doc_id rides the
-      // Target-URI (the crawl-pipeline convention: the URI IS the key).
-      val out = scratchDir("warc")
-      val h = syntheticHtml(Graft.documents(s, d))
-        .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
-          col("html").cast("binary").as("payload"))
-      graft.sources.Warc.writeShards(h, "uri", "payload", out, shards = 4)
-      graft.sources.Warc.read(s, out)
-        .select(
-          regexp_extract(col("uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("payload").cast("string").as("html"))
-    }),
-
     "s_warc_wet" -> ((s, d) => {
       // the REAL crawl front end end-to-end (r16): WARC shards → strict
       // record walk → WET text extraction — the exact WARC→WET stage a
@@ -2476,34 +2589,6 @@ object PipelineQueries {
         .select(
           regexp_extract(col("uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
           col("payload").cast("string").as("html"))
-    }),
-
-    "s_warc_streaming" -> ((s, d) => {
-      // WARC shards arriving THROUGH the real streaming engine (the
-      // s_arrow_streaming device): the SAME 4 shards staged, streaming
-      // binaryFile source one shard per micro-batch, each walked by the
-      // SAME strict record parser. Stateless append — converged result
-      // equals the batch read, shared oracle.
-      val out = scratchDir("warcstream")
-      val h = syntheticHtml(Graft.documents(s, d))
-        .select(concat(lit("https://corpus.example/doc/"), col("doc_id")).as("uri"),
-          col("html").cast("binary").as("payload"))
-      graft.sources.Warc.writeShards(h, "uri", "payload", out, shards = 4)
-      import s.implicits._
-      val stream = s.readStream.format("binaryFile")
-        .schema(s.read.format("binaryFile").load(s"$out/*.warc").schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(s"$out/*.warc")
-        .select("content").as[Array[Byte]]
-        .flatMap { b =>
-          graft.sources.Warc.readStream(new java.io.ByteArrayInputStream(b))
-            .map { case (uri, _, payload) => (uri, new String(payload, "UTF-8")) }
-        }
-        .toDF("uri", "html")
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "s_warc_stream", stream)
-        .select(
-          regexp_extract(col("uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("html"))
     }),
 
     "s_warc_corrupt_tail" -> ((s, d) => {
@@ -2546,19 +2631,6 @@ object PipelineQueries {
           col("payload").cast("string").as("html"))
     }),
 
-    "txt_html_extract" -> ((s, d) => {
-      // crawl-HTML -> plain text (the WET extraction, stage one of
-      // every web pipeline): drop script/style whole, strip markup,
-      // decode the core entities, collapse whitespace. Pure codegen'd
-      // regexp chain over the synthetic page fixture (the dd_url
-      // device) — zero shuffles, and the oracle replays the identical
-      // chain, so the extraction is certified end-to-end.
-      val h = syntheticHtml(Graft.documents(s, d))
-      h.select(col("doc_id"),
-          TextFunctions.htmlTextFast(col("html")).as("text_clean"))
-        .withColumn("clean_chars", length(col("text_clean")).cast("long"))
-    }),
-
     "txt_html_links" -> ((s, d) => {
       // anchor extraction (the crawl-graph edge builder: href + anchor
       // text per link, link order preserved) — regexp_extract_all over
@@ -2578,41 +2650,6 @@ object PipelineQueries {
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("link_idx"),
           hrefFromAttrs(col("col.attrs")).as("href"), col("col.anchor").as("anchor"))
         .where(col("href").isNotNull)
-    }),
-
-    "pp_mlm_mask_streaming" -> ((s, d) => {
-      // MLM masking AT INGEST through the real streaming engine — the
-      // same deterministic hash lambda per micro-batch, stateless
-      // append, so the converged table equals the batch pass and shares
-      // pp_mlm_mask's oracle verbatim. Single-evaluation mask array
-      // (r17) — same two-Project device as the batch twin: one md5 per
-      // token, both outputs derived from the boolean array.
-      val docs = graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents")
-      val out = docs
-        .select(col("doc_id"), split(col("text"), "\\s+").as("_toks"))
-        .select(col("doc_id"), col("_toks"),
-          transform(col("_toks"), (t, i) => length(t) > 0 &&
-            conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-              i.cast("string"))), 1, 8), 16, 10).cast("long") % 100 < 15).as("_mask"))
-        .select(col("doc_id"),
-          concat_ws(" ", zip_with(col("_toks"), col("_mask"),
-            (t, m) => when(m, lit("[MASK]")).otherwise(t))).as("masked_text"),
-          aggregate(col("_mask"), lit(0L),
-            (acc, m) => acc + when(m, 1L).otherwise(0L)).as("n_masked"))
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "pp_mlm_stream", out)
-    }),
-
-    "txt_html_extract_streaming" -> ((s, d) => {
-      // WET extraction AT ARRIVAL through the real streaming engine —
-      // the crawl-ingest shape (pages land, text extracts per
-      // micro-batch): the same codegen'd chain over a parquet stream,
-      // stateless append, so the converged table equals the batch pass
-      // and shares txt_html_extract's oracle verbatim.
-      val docs = graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents")
-      val out = syntheticHtml(docs)
-        .select(col("doc_id"), TextFunctions.htmlTextFast(col("html")).as("text_clean"))
-        .withColumn("clean_chars", length(col("text_clean")).cast("long"))
-      graft.streaming.StreamingQueries.runAppendToMemory(s, "txt_html_stream", out)
     }),
 
     "pp_blocklist" -> ((s, d) => {
@@ -2828,31 +2865,6 @@ object PipelineQueries {
       Multimodal.decodeMedia(Multimodal.syntheticMediaAssets(Graft.documents(s, d)))
     }),
 
-    "mm_decode_jpeg" -> ((s, d) => {
-      // REAL compressed-format decode (r11 verdict #8): each doc becomes
-      // a spec-conformant baseline JPEG (Annex-K Huffman coding, DQT,
-      // SOF0, restart markers) and decodes back through the FULL
-      // pipeline — entropy decode → dequantize → IDCT → level shift →
-      // crop. Flat DC-only blocks under q00 = 8 make the lossy path
-      // bit-exact, so the oracle replays decoded pixels arithmetically;
-      // JpegSpec cross-validates the codec against the JDK's own
-      // ImageIO JPEG coder so builder+parser can't be wrong together.
-      // Scale shape: generation and decode are partition-local scans.
-      Multimodal.decodeJpegBlocks(Multimodal.syntheticJpegAssets(Graft.documents(s, d)))
-    }),
-
-    "mm_decode_jpeg_streaming" -> ((s, d) => {
-      // the JPEG decode under the REAL streaming engine: the same
-      // fixture generation + full decode pipeline mapped over a
-      // streaming parquet read of documents (stateless, append mode),
-      // drained via AvailableNow to a memory sink. Shares
-      // mm_decode_jpeg's oracle verbatim — decode-at-ingest parity.
-      val assets = Multimodal.syntheticJpegAssets(
-        graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents"))
-      graft.streaming.StreamingQueries.runAppendToMemory(
-        s, "mm_decode_jpeg_streaming", Multimodal.decodeJpegBlocks(assets))
-    }),
-
     "mm_jpeg_coefs" -> ((s, d) => {
       // the general (lossless) JPEG entropy layer certified exactly:
       // 3-component interleaved MCUs, per-component DC predictors,
@@ -2883,34 +2895,6 @@ object PipelineQueries {
       Multimodal.jpegRgbBlocks(Multimodal.syntheticJpegColorAssets(Graft.documents(s, d)))
     }),
 
-    "mm_decode_png" -> ((s, d) => {
-      // REAL compressed-format decode #2 — PNG with a genuine
-      // general-purpose compressor: each doc becomes a spec-conformant
-      // 8-bit gray/RGB PNG (zlib/DEFLATE IDAT, CRC-32 chunks, filter
-      // tag (id+y)%5 so all five scanline filters — None/Sub/Up/
-      // Average/Paeth — appear in certified bytes; id%4==0 splits the
-      // stream across two IDAT chunks) and decodes back through the
-      // FULL pipeline: chunk walk → CRC verify → Inflater → unfilter.
-      // PNG is lossless, so the oracle replays every pixel exactly; the
-      // position-weighted sum pins pixels to coordinates. PngSpec
-      // cross-validates the codec against the JDK's own ImageIO PNG
-      // coder both ways so builder+parser can't be wrong together.
-      // Scale shape: generation and decode are partition-local scans.
-      Multimodal.decodePngChannels(Multimodal.syntheticPngAssets(Graft.documents(s, d)))
-    }),
-
-    "mm_decode_png_streaming" -> ((s, d) => {
-      // the PNG decode under the REAL streaming engine: same fixture
-      // generation + full decode pipeline mapped over a streaming
-      // parquet read of documents (stateless, append mode), drained via
-      // AvailableNow to a memory sink. Shares mm_decode_png's oracle
-      // verbatim — decode-at-ingest parity.
-      val assets = Multimodal.syntheticPngAssets(
-        graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents"))
-      graft.streaming.StreamingQueries.runAppendToMemory(
-        s, "mm_decode_png_streaming", Multimodal.decodePngChannels(assets))
-    }),
-
     "mm_resize_box" -> ((s, d) => {
       // the real thumbnail resize over DECODED pixels: full PNG decode,
       // then a 2x2 box-filter average in integer arithmetic (floor
@@ -2920,16 +2904,6 @@ object PipelineQueries {
       // missing one. Position-weighted sum pins each averaged value to
       // its coordinate. Partition-local scan end to end.
       Multimodal.boxDownsample(Multimodal.syntheticPngAssets(Graft.documents(s, d)))
-    }),
-
-    "mm_video_mjpeg_streaming" -> ((s, d) => {
-      // the video path under the REAL streaming engine (stateless map
-      // over a streaming parquet read, append mode, AvailableNow ->
-      // memory sink); shares mm_video_mjpeg's oracle verbatim.
-      val assets = Multimodal.syntheticMjpegAviAssets(
-        graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents"))
-      graft.streaming.StreamingQueries.runAppendToMemory(
-        s, "mm_video_mjpeg_streaming", Multimodal.mjpegSampledFrames(assets, everyNth = 2))
     }),
 
     "mm_video_scenes" -> ((s, d) => {
@@ -2955,21 +2929,6 @@ object PipelineQueries {
         .withColumn("delta", abs(col("intensity") - lag(col("intensity"), 1).over(w)))
         .withColumn("is_scene", col("delta").isNull || col("delta") > 32)
         .withColumn("delta", coalesce(col("delta"), lit(-1)).cast("int"))
-    }),
-
-    "mm_video_mjpeg" -> ((s, d) => {
-      // REAL video decode + frame sampling: each doc becomes a genuine
-      // single-stream MJPEG AVI (nested RIFF LISTs: avih/strh/strf
-      // headers + a 'movi' list of '00dc' chunks, each an independent
-      // baseline JPEG); the decode side walks the container, samples
-      // every 2nd frame, and runs ONLY the sampled frames through the
-      // full JPEG pipeline — unsampled frames are never entropy-decoded,
-      // which is the point of frame sampling at 100 TB. Flat DC-only
-      // frames make the luma extrema exact, so the oracle replays the
-      // per-frame formula plus the avih-declared frame count.
-      // Scale shape: generation and decode are partition-local scans.
-      Multimodal.mjpegSampledFrames(
-        Multimodal.syntheticMjpegAviAssets(Graft.documents(s, d)), everyNth = 2)
     }),
 
     "dd_image_phash" -> ((s, d) => {
@@ -3033,56 +2992,6 @@ object PipelineQueries {
         "phash_hi", "phash_lo", maxHam = 3)
     }),
 
-    "mm_audio_fft" -> ((s, d) => {
-      // REAL DSP feature extraction: each doc becomes a mono 16-bit PCM
-      // WAV whose 64-sample frames are pure sinusoids at integer bins
-      // k = 1 + (id + 3f) % 31; the decode side chunk-walks the WAV,
-      // reads little-endian int16 samples, runs a radix-2 FFT per frame
-      // and reports argmax |X|² over the positive bins. Integer-bin
-      // tones make the argmax exactly k (int16 rounding noise is 4
-      // orders of magnitude down), so the oracle replays k
-      // arithmetically — no cross-engine float surface. DspSpec
-      // certifies the FFT kernel against a naive DFT, Parseval, and
-      // closed forms. Scale shape: partition-local scans end to end.
-      Multimodal.audioSpectralFrames(Multimodal.syntheticToneWavAssets(Graft.documents(s, d)))
-    }),
-
-    "mm_audio_fft_streaming" -> ((s, d) => {
-      // the FFT feature extraction under the REAL streaming engine
-      // (stateless map over a streaming parquet read, append mode,
-      // AvailableNow → memory sink); shares mm_audio_fft's oracle
-      // verbatim — featurize-at-ingest parity.
-      val assets = Multimodal.syntheticToneWavAssets(
-        graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents"))
-      graft.streaming.StreamingQueries.runAppendToMemory(
-        s, "mm_audio_fft_streaming", Multimodal.audioSpectralFrames(assets))
-    }),
-
-    "mm_audio_mel" -> ((s, d) => {
-      // MEL-SPECTROGRAM features on the FFT kernel (VERDICT r12 #4):
-      // per frame, 6 triangular mel-filterbank band energies as integer
-      // milli-fractions of total positive-bin power. The fixture's
-      // integer-bin tones concentrate all power at bin k, so band m's
-      // fraction equals the triangular weight w_m(k) — a small rational
-      // the oracle replays in EXACT integer arithmetic
-      // ((2000p + q) div 2q, i.e. round-half of 1000·p/q); the int16
-      // noise floor is 6 orders of magnitude inside every boundary.
-      // Filterbank edges are the HTK mel grid snapped to integer FFT
-      // bins (Multimodal.melCenters64, re-derived in DspSpec). Scale
-      // shape: partition-local scan end to end, zero exchanges.
-      Multimodal.audioMelFrames(Multimodal.syntheticToneWavAssets(Graft.documents(s, d)))
-    }),
-
-    "mm_audio_mel_streaming" -> ((s, d) => {
-      // mel featurization under the REAL streaming engine (stateless
-      // map, append mode, AvailableNow → memory sink); shares
-      // mm_audio_mel's oracle verbatim — featurize-at-ingest parity.
-      val assets = Multimodal.syntheticToneWavAssets(
-        graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents"))
-      graft.streaming.StreamingQueries.runAppendToMemory(
-        s, "mm_audio_mel_streaming", Multimodal.audioMelFrames(assets))
-    }),
-
     "mm_audio_decimate" -> ((s, d) => {
       // decimate-by-2 resampling with the ALIAS FOLD as the certified
       // contract: tone k < 16 stays at k, k > 16 folds to 32−k, k = 16
@@ -3115,36 +3024,6 @@ object PipelineQueries {
       bandedHammingPairs(
         Multimodal.audioFingerprint(Multimodal.syntheticToneWavAssets(Graft.documents(s, d))),
         "afp_hi", "afp_lo", maxHam = 3)
-    }),
-
-    "mm_text_image_score" -> ((s, d) => {
-      // cross-modal consistency filter (r14, verdict ask #7) — the
-      // CLIP-score-proxy gate on image-text pairs: a frozen two-tower
-      // integer model (hashed token grams × dHash fingerprint bits,
-      // factorized bilinear — Multimodal.textImageScore) scores each
-      // pair and `kept` is the integer cross-multiplied decision.
-      // SINGLE-SCAN pairing: text and image derive from the SAME
-      // documents row, so one mapPartitions generates the PNG bytes
-      // (syntheticPngBytes) and runs the FULL certified decode + dHash
-      // (Png.decode → dHashOf — the imageDHash core, shared so the two
-      // consumers can never drift) inline while the text column rides
-      // along — one corpus scan, zero exchanges, towers in whole-stage
-      // codegen downstream (PlanSpec pins scan count and exchange-
-      // freeness). Oracle: CrossModalOracleSql replays token XXH64 +
-      // both weight rules in BIGINT over the SHARED dhashCtes prefix.
-      textImagePairsScore(Graft.documents(s, d))
-    }),
-
-    "mm_text_image_score_streaming" -> ((s, d) => {
-      // the cross-modal scorer under the REAL streaming engine —
-      // score-at-arrival parity: the same single-scan pairing +
-      // two-tower kernel mapped over a streaming parquet read of
-      // documents (stateless, append mode), drained via AvailableNow
-      // to a memory sink. Shares mm_text_image_score's oracle verbatim.
-      graft.streaming.StreamingQueries.runAppendToMemory(
-        s, "mm_text_image_score_streaming",
-        textImagePairsScore(
-          graft.streaming.StreamingQueries.readStreamParquet(s, d, "documents")))
     }),
 
     "pp_ingest_crossmodal" -> ((s, d) => {
@@ -3257,7 +3136,7 @@ object PipelineQueries {
       val cells = graft.streaming.StreamingQueries.runCompleteAggToMemory(
         s, d, "events", "q_retention_stream",
         df => df.where(col("user_id").isNotNull)
-          .select(col("user_id"), expr("(ts div 1000) div 604800000000").as("wk"))
+          .select(col("user_id"), expr("ts_us div 604800000000").as("wk"))
           .groupBy("user_id", "wk").agg(count(lit(1)).as("n")))
       cells.select("user_id", "wk")
         .withColumn("cohort_wk", min("wk").over(Window.partitionBy("user_id")))
@@ -3288,7 +3167,7 @@ object PipelineQueries {
       val cells = graft.streaming.StreamingQueries.runCompleteAggToMemory(
         s, d, "events", "q_dau_wau_stream",
         df => df.where(col("user_id").isNotNull)
-          .select(col("user_id"), expr("(ts div 1000) div 86400000000").as("day"))
+          .select(col("user_id"), expr("ts_us div 86400000000").as("day"))
           .groupBy("user_id", "day").agg(count(lit(1)).as("n")))
       // post-convergence derivation = the batch form's single-pass
       // explode+aggregate over the deduped cells (dauWauFromCells)
@@ -3648,11 +3527,8 @@ object PipelineQueries {
       graft.functions.Sketches.heavyHitters(
         Graft.documents(s, d)
           .select(explode(TextFunctions.tokens(col("text"))).as("tok")),
-        col("tok"))))
+        col("tok")))) ++ Twins.entries(twins, shardTwins)
 
-  // Batch/streaming twin oracles bound ONCE (review r12): each
-  // streaming entry shares its batch SQL by reference, so a formula
-  // tweak can never silently decouple the two certifications.
   // shared with CoreQueries' s_tfexample_media_jpeg (same decode, JPEG
   // payloads arriving through the tf.Example container instead)
   private[queries] val mmDecodeJpegSql: String =
@@ -4082,21 +3958,7 @@ object PipelineQueries {
   private val staticOracles: Map[String, String] = Map(
     // txt_html_*: WET-style extraction replayed as the identical regex
     // chain; anchors via regexp_extract_all + 1-based ordinality
-    "txt_html_extract_streaming" -> htmlExtractSql,
     "txt_html_extract" -> htmlExtractSql,
-    // the stateless streaming twin converges to the batch mask — the
-    // oracle below serves both
-    "pp_mlm_mask_streaming" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents)
-         SELECT doc_id,
-                array_to_string(list_transform(generate_series(1, len(l)), i ->
-                  CASE WHEN len(l[i]) > 0
-                        AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)), 1, 8))::BIGINT % 100 < 15
-                       THEN '[MASK]' ELSE l[i] END), ' ') AS masked_text,
-                CAST(len(list_filter(generate_series(1, len(l)), i ->
-                  len(l[i]) > 0
-                  AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)), 1, 8))::BIGINT % 100 < 15)) AS BIGINT) AS n_masked
-         FROM t""",
     // the portable md5 position hash replayed exactly (Spark transform
     // indexes 0-based; generate_series is 1-based, hence i-1)
     "pp_mlm_mask" ->
@@ -4171,8 +4033,6 @@ object PipelineQueries {
     "s_warc" -> s"WITH $htmlCte SELECT doc_id, html FROM h",
     // per-record gzip members decompress to the identical stream
     "s_warc_gz" -> s"WITH $htmlCte SELECT doc_id, html FROM h",
-    // the stateless streaming twin converges to the batch read
-    "s_warc_streaming" -> s"WITH $htmlCte SELECT doc_id, html FROM h",
     // WARC -> WET composition converges to the extraction chain's answer
     "s_warc_wet" -> htmlExtractSql,
     // torn shard-3 tail drops exactly that shard's last (max-doc_id)
@@ -4225,24 +4085,9 @@ object PipelineQueries {
     "g_lpa" -> GraphOracleSql.labelPropagation(),
     // HUGEINT quadratics mirror Spark's DECIMAL(38) exactly
     "q_outliers" -> outliersSql,
-    // the streaming moments converge to the batch moments — SAME oracle
-    // (r18: the per-type (n, Σx, Σx²) triple is the streaming state's
-    // sufficient statistic; flagging is a projection of the converged frame)
-    "q_outliers_streaming" -> outliersSql,
     "q_retention" -> retentionSql,
-    // the streaming triangle converges to the batch one — SAME oracle
-    // (r18: the (user, week) cells are the streaming state's sufficient
-    // statistic; cohort + triangle are projections of the converged frame)
-    "q_retention_streaming" -> retentionSql,
     "q_dau_wau" -> dauWauSql,
-    // the streaming card converges to the batch table — SAME oracle
-    // (r18: the (user, day) cells are the streaming state's sufficient
-    // statistic; DAU/WAU are projections of the converged frame)
-    "q_dau_wau_streaming" -> dauWauSql,
     "q_funnel_steps" -> funnelSql,
-    // the stateful-processor chain converges to the batch chain under
-    // ascending event-time micro-batches — SAME oracle
-    "q_funnel_steps_streaming" -> funnelSql,
     // rank = md5-prefix bucket replay (the splitAssign device); token
     // count is the shared whitespace-token formula
     "pp_rank_shards" ->
@@ -4647,12 +4492,6 @@ object PipelineQueries {
       s"""WITH $bm25Ctes
          SELECT doc_id, n_hit, bm25_micro FROM bm25""",
 
-    // the streaming twin shares the batch oracle verbatim (accumulated
-    // per-batch stats reproduce the batch statistics exactly)
-    "txt_bm25_streaming" ->
-      s"""WITH $bm25Ctes
-         SELECT doc_id, n_hit, bm25_micro FROM bm25""",
-
     // hybrid retrieval: the lexical top-20 (bm25 rank, integer total
     // order with id tie-break) fused with the semantic top-20 (exact
     // cosine rank from the ann_brute replay) by Reciprocal Rank Fusion
@@ -5015,14 +4854,6 @@ object PipelineQueries {
          SELECT source, n_docs, n_langs, total_chars,
                 CAST((n_docs * 10000) // (SELECT sum(n_docs) FROM per) AS BIGINT) AS share_bp
          FROM per""",
-    // the streaming card converges to the batch card — SAME oracle
-    "pp_datacard_streaming" ->
-      """WITH per AS (SELECT source, count(*) AS n_docs, count(DISTINCT lang) AS n_langs,
-                             CAST(sum(n_chars) AS BIGINT) AS total_chars
-                      FROM documents GROUP BY source)
-         SELECT source, n_docs, n_langs, total_chars,
-                CAST((n_docs * 10000) // (SELECT sum(n_docs) FROM per) AS BIGINT) AS share_bp
-         FROM per""",
     "pp_mixture_epochs" ->
       """WITH t AS (SELECT source,
                            CAST(len(list_filter(string_split_regex(text, '\s+'), w -> len(w) > 0)) AS BIGINT) AS n_tok
@@ -5058,10 +4889,6 @@ object PipelineQueries {
                 CAST(mask_end + seq_off AS BIGINT) AS packed_mask_end
          FROM o""",
     "pp_ingest" -> ppIngestSql,
-    // the streaming composition converges to the identical result
-    // (ascending-range micro-batches make first-accepted == keep-min),
-    // so it certifies against the same replay
-    "pp_ingest_streaming" -> ppIngestSql,
     "pp_pipeline" ->
       """WITH t AS (SELECT doc_id, text,
                            len(list_filter(string_split_regex(text, '\s+'), w -> len(w) > 0)) AS n_tokens,
@@ -5312,10 +5139,6 @@ object PipelineQueries {
     // make the lossy path exact, so min == max == the formula value
     "mm_decode_jpeg" -> mmDecodeJpegSql,
 
-    // the streaming twin shares the batch oracle verbatim (same
-    // fixture formulas, same decode pipeline, real engine)
-    "mm_decode_jpeg_streaming" -> mmDecodeJpegSql,
-
     // the color generator's Y/Cb/Cr formulas pushed through the JFIF
     // matrix with the SAME floor(v + 0.5) rounding and int clamps; the
     // chroma index map bx//2, by//2 replays the replication upsample
@@ -5368,9 +5191,6 @@ object PipelineQueries {
                 CAST(COALESCE(SUM(cl.val * (cl.ox + cl.oy * b.ow)), 0) AS BIGINT) AS px_wsum
          FROM base b LEFT JOIN cells cl ON cl.doc_id = b.doc_id AND cl.c = b.c
          GROUP BY 1, 2, 3, 4""",
-
-    // the streaming twin shares the batch oracle verbatim
-    "mm_video_mjpeg_streaming" -> mmVideoMjpegSql,
 
     // the scene-boundary replay: per-frame intensity from the flat-frame
     // formula, lag-delta per asset, frame 0 opens a scene (delta -1)
@@ -5475,7 +5295,6 @@ object PipelineQueries {
     // real WAV bytes — a misframed read or wrong twiddle moves argmax
     "mm_audio_fft" -> mmAudioFftSql,
     "mm_audio_mel" -> mmAudioMelSql,
-    "mm_audio_mel_streaming" -> mmAudioMelSql,
 
     // the alias-fold replay: k<16 stays, k>16 folds to 32-k, k=16 is
     // exact silence whose all-zero argmax is deterministically bin 1
@@ -5495,11 +5314,6 @@ object PipelineQueries {
     // from the SHARED dhashCtes prefix → decorrelated image rule; BIGINT
     // dot product + the same cross-multiplied keep decision
     "mm_text_image_score" ->
-      CrossModalOracleSql.textImageScore(dhashCtes, buckets = 1 << 20, dim = 8, thrMilli = 0L),
-
-    // the streaming twin converges to the identical scored table
-    // (stateless append) — batch oracle shared verbatim
-    "mm_text_image_score_streaming" ->
       CrossModalOracleSql.textImageScore(dhashCtes, buckets = 1 << 20, dim = 8, thrMilli = 0L),
 
     // the gated-ingest chain converges to the batch statement: gate →
@@ -5526,19 +5340,12 @@ object PipelineQueries {
            AND bit_count(xor(a.afp_hi, b.afp_hi))
                + bit_count(xor(a.afp_lo, b.afp_lo)) <= 3""",
 
-    // the streaming twin shares the batch oracle verbatim
-    "mm_audio_fft_streaming" -> mmAudioFftSql,
-
     // the PNG generator's pixel formulas replayed per channel: the
     // Spark side must recover exactly these pixels by CRC-checking,
     // inflating, and unfiltering real PNG bytes (all five filter tags
     // appear across scanlines); the position-weighted sum px*(x + y*w)
     // pins every pixel to its coordinate, not just the value multiset
     "mm_decode_png" -> mmDecodePngSql,
-
-    // the streaming twin shares the batch oracle verbatim (same fixture
-    // formulas, same decode pipeline, real engine)
-    "mm_decode_png_streaming" -> mmDecodePngSql,
 
     // the 4:2:0 generator's formulas replayed over each component's OWN
     // grid: luma (comp 0) spans a (2*mcusX) x 4 grid, chroma mcusX x 2 —

@@ -213,10 +213,11 @@ object Npy {
     * (the layout carries no ids). Any header/shape/extent violation
     * fails the task.
     */
-  def readNpyShards(spark: SparkSession, path: String): DataFrame = {
+  def readNpyShards(spark: SparkSession, path: String,
+                    src: Sources.ShardSource = Sources.batchShards): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(npyShardSchema)
-    Sources.shardRecords(spark, s"$path/*.npy")(npyShard).toDF()
+    src(spark, s"$path/*.npy")(npyShard).toDF()
   }
 
   /** Permissive dual ([[Recovery]], metric `graft.npy.skip`): a bare
@@ -246,14 +247,13 @@ object Npy {
   private val shardRe = ".*part-(\\d+)\\.npy$".r
 
   /** The deterministic shard index a [[writeNpyShards]] file name carries. */
-  def shardIndexOf(name: String): Long = name match {
+  private def shardIndexOf(name: String): Long = name match {
     case shardRe(k) => k.toLong
     case _ => bad(s"unrecognized npy shard name $name")
   }
 
-  /** One whole shard (as bytes) → (shard, row_idx, vec) rows — the
-    * per-micro-batch unit the streaming twin flatMaps over (a bare .npy
-    * has no record framing, so file == record batch). Strict: any
+  /** One whole shard (as bytes) → (shard, row_idx, vec) rows (a bare
+    * .npy has no record framing, so file == record batch). Strict: any
     * header/shape/extent violation throws.
     */
   def decodeVectorShard(shard: Long, bytes: Array[Byte]): Iterator[Row] = {
@@ -273,7 +273,7 @@ object Npy {
   }
 
   /** The (shard, row_idx, vec) catalyst schema the npy shard readers emit. */
-  def npyShardSchema: org.apache.spark.sql.types.StructType = {
+  private def npyShardSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("shard", LongType, nullable = false),

@@ -329,20 +329,6 @@ object Safetensors {
     }
   }
 
-  /** One whole file (as bytes) → rows — the per-micro-batch unit the
-    * streaming twin flatMaps over (a safetensors shard is all-or-nothing,
-    * so file == record batch).
-    */
-  def decodeVectors(bytes: Array[Byte], idCol: String, vecCol: String,
-                    labelCol: String): Iterator[Row] = {
-    val (infos, _, buf) = read(new java.io.ByteArrayInputStream(bytes), bytes.length.toLong)
-    rows(infos, buf, idCol, vecCol, labelCol)
-  }
-
-  /** The (id, vec, label) catalyst schema [[readVectors]] emits. */
-  def vectorSchema(idCol: String, vecCol: String, labelCol: String): org.apache.spark.sql.types.StructType =
-    vecSchema(idCol, vecCol, labelCol)
-
   private def vecSchema(idCol: String, vecCol: String, labelCol: String) = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -357,10 +343,11 @@ object Safetensors {
     * the first row).
     */
   def readVectors(spark: SparkSession, path: String, idCol: String,
-                  vecCol: String, labelCol: String): DataFrame = {
+                  vecCol: String, labelCol: String,
+                  src: Sources.ShardSource = Sources.batchShards): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(vecSchema(idCol, vecCol, labelCol))
-    Sources.shardRecords(spark, s"$path/*.safetensors") { (_, len, in) =>
+    src(spark, s"$path/*.safetensors") { (_, len, in) =>
       val (infos, _, buf) = read(in, len)
       rows(infos, buf, idCol, vecCol, labelCol)
     }.toDF()

@@ -132,10 +132,6 @@ object Sources {
       }
     }
 
-    /** [[readStream]] over in-memory bytes. */
-    def readAll(bytes: Array[Byte]): Iterator[Array[Byte]] =
-      readStream(new java.io.ByteArrayInputStream(bytes))
-
   }
 
   /** tf.Example protobuf wire format (r14) — the MESSAGE inside real
@@ -558,10 +554,6 @@ object Sources {
           e
         }
       }
-
-    /** [[readStream]] over in-memory bytes. */
-    def readAll(bytes: Array[Byte]): Iterator[(String, Array[Byte])] =
-      readStream(new java.io.ByteArrayInputStream(bytes))
   }
 
   /** Shard-writer commit protocol (ADVICE r13): stream the shard into
@@ -711,6 +703,45 @@ object Sources {
       }
   }
 
+  /** Where a shard reader takes its shards from. Both sources run the
+    * reader's one `(path, length, stream) => records` walk per shard, so
+    * a container's batch read and its stream read share their decode.
+    */
+  trait ShardSource {
+    def apply[T: org.apache.spark.sql.Encoder](spark: SparkSession, glob: String)(
+        parse: (String, Long, java.io.InputStream) => Iterator[T])
+        : org.apache.spark.sql.Dataset[T]
+  }
+
+  /** The batch source: one task per shard ([[shardRecords]]). */
+  val batchShards: ShardSource = new ShardSource {
+    def apply[T: org.apache.spark.sql.Encoder](spark: SparkSession, glob: String)(
+        parse: (String, Long, java.io.InputStream) => Iterator[T])
+        : org.apache.spark.sql.Dataset[T] = shardRecords(spark, glob)(parse)
+  }
+
+  /** The stream source: a binaryFile file stream admitting one shard per
+    * micro-batch — shards parsed as they land. It reads under Spark's
+    * fixed binaryFile schema (no listing to infer one) and walks each
+    * shard's bytes with the same parse as [[batchShards]]; a shard is
+    * one row, so it is held whole (the batch source streams it).
+    */
+  val streamShards: ShardSource = new ShardSource {
+    def apply[T: org.apache.spark.sql.Encoder](spark: SparkSession, glob: String)(
+        parse: (String, Long, java.io.InputStream) => Iterator[T])
+        : org.apache.spark.sql.Dataset[T] = {
+      import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+      import spark.implicits._
+      spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(glob)
+        .select("path", "length", "content").as[(String, Long, Array[Byte])]
+        .flatMap { case (path, len, bytes) =>
+          parse(path, len, new java.io.ByteArrayInputStream(bytes))
+        }
+    }
+  }
+
   /** WebDataset/ZIP member naming: `<key>.<ext>`, the sample key being
     * the name up to the LAST dot. Members without an extension (or
     * hidden in directories a foreign writer added) are not samples:
@@ -729,12 +760,13 @@ object Sources {
     StructField("key", StringType), StructField("ext", StringType),
     StructField("payload", BinaryType)))
 
-  def readWebDataset(spark: SparkSession, path: String): DataFrame = {
+  def readWebDataset(spark: SparkSession, path: String,
+                     src: ShardSource = batchShards): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte])] =
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
         org.apache.spark.sql.Encoders.BINARY)
-    shardRecords(spark, s"$path/*.tar") { (_, _, in) =>
+    src(spark, s"$path/*.tar") { (_, _, in) =>
       Tar.readStream(in).collect { case (SampleName(key, ext), data) => (key, ext, data) }
     }.toDF("key", "ext", "payload")
   }
@@ -917,9 +949,6 @@ object Sources {
           val r = nextEntry; nextEntry = null; r
         }
       }
-
-    def readAll(bytes: Array[Byte]): Iterator[(String, Array[Byte])] =
-      readStream(new java.io.ByteArrayInputStream(bytes))
   }
 
   /** Write ZIP shards: rows are (key, ext, payload), repartitioned BY
@@ -964,12 +993,13 @@ object Sources {
     * memory at a time. Same `<key>.<ext>` naming convention as
     * [[readWebDataset]] (dot-less members skip, they are not samples).
     */
-  def readZipShards(spark: SparkSession, path: String): DataFrame = {
+  def readZipShards(spark: SparkSession, path: String,
+                    src: ShardSource = batchShards): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte])] =
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
         org.apache.spark.sql.Encoders.BINARY)
-    shardRecords(spark, s"$path/*.zip") { (_, _, in) =>
+    src(spark, s"$path/*.zip") { (_, _, in) =>
       Zip.readStream(in).collect { case (SampleName(key, ext), data) => (key, ext, data) }
     }.toDF("key", "ext", "payload")
   }
@@ -1038,10 +1068,11 @@ object Sources {
     * time, nulls honored through the validity bitmaps.
     */
   def readArrowStream(spark: SparkSession, path: String,
-                      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+                      schema: org.apache.spark.sql.types.StructType,
+                      src: ShardSource = batchShards): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(schema)
-    shardRecords(spark, s"$path/*.arrows")((_, _, in) => ArrowIpc.readStream(in, schema))
+    src(spark, s"$path/*.arrows")((_, _, in) => ArrowIpc.readStream(in, schema))
       .toDF()
   }
 
@@ -1071,8 +1102,9 @@ object Sources {
     * the format's non-splittable framing), every checksum verified,
     * one record in memory at a time.
     */
-  def readTfRecords(spark: SparkSession, path: String): DataFrame =
-    shardRecords(spark, s"$path/*.tfrecord")((_, _, in) => TfRecord.readStream(in))(
+  def readTfRecords(spark: SparkSession, path: String,
+                    src: ShardSource = batchShards): DataFrame =
+    src(spark, s"$path/*.tfrecord")((_, _, in) => TfRecord.readStream(in))(
       org.apache.spark.sql.Encoders.BINARY)
       .toDF("payload")
 

@@ -341,11 +341,12 @@ object Warc {
   }
 
   /** Strict shard-parallel read: (uri, record_id, payload). */
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def read(spark: SparkSession, path: String,
+           src: Sources.ShardSource = Sources.batchShards): DataFrame = {
     implicit val enc: org.apache.spark.sql.Encoder[(String, String, Array[Byte])] =
       org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
         org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY)
-    Sources.shardRecords(spark, s"$path/*.warc")((_, _, in) => readStream(in))
+    src(spark, s"$path/*.warc")((_, _, in) => readStream(in))
       .toDF("uri", "record_id", "payload")
   }
 

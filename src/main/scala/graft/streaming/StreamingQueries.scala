@@ -7,13 +7,16 @@ import org.apache.spark.sql.{DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Structured-Streaming forms of the engine's queries (SURVEY.md §2.1 S1/S3,
-  * §2.7 X4-X6/X10, §2.8 T3-T5). Each helper runs a real streaming query
-  * (file source → transform → sink) to completion with
-  * `Trigger.AvailableNow`, so the driver's batch-style correctness gate can
-  * hash the result while the code path exercised is the streaming engine:
+/** The streaming engine under graft's streaming entries (SURVEY.md §2.1
+  * S1/S3, §2.7 X4-X6/X10, §2.8 T3-T5): stream reads of corpus tables in
+  * their canonical form, staged micro-batch inputs, and the drains that
+  * run a streaming query to completion with `Trigger.AvailableNow` —
+  * append, complete and update memory sinks, the foreachBatch upsert
+  * and ingest loops — so the batch-style correctness gate can hash the
+  * converged result while the path exercised is the streaming engine:
   * checkpointing (X4 ≈ commit), state stores (X5/X6), watermarks (T3),
-  * graceful stop (T5).
+  * graceful stop (T5). A streaming twin of a batch entry is declared
+  * once in [[graft.queries.Twins]], which picks its drain here.
   */
 object StreamingQueries {
 
@@ -40,18 +43,29 @@ object StreamingQueries {
     * state store per trigger, so it grew with the store count. Values
     * are partition-count-invariant (exact per-key aggregations /
     * per-key processors), so results are bit-identical at any width.
-    * Session conf restored in `finally`; post-convergence consumers plan
-    * at the caller's width.
+    * The session's width comes back afterwards ([[withConfs]]);
+    * post-convergence consumers plan at the caller's width.
     */
-  def withStreamParts[A](spark: SparkSession, inputBytes: Long)(body: => A): A = {
+  def withStreamParts[A](spark: SparkSession, inputBytes: Long)(body: => A): A =
     if (inputBytes < 0) body
     else {
-      val conf = spark.conf
-      val prev = conf.get("spark.sql.shuffle.partitions")
-      val parts = math.max(1L, math.min(prev.toLong, inputBytes / StreamPartBytes + 1L))
-      conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try body
-      finally conf.set("spark.sql.shuffle.partitions", prev)
+      val width = spark.conf.get("spark.sql.shuffle.partitions").toLong
+      val parts = math.max(1L, math.min(width, inputBytes / StreamPartBytes + 1L))
+      withConfs(spark, Map("spark.sql.shuffle.partitions" -> parts.toString))(body)
+    }
+
+  /** Run `body` with `confs` set on the session, then give each key back
+    * the value it held before (a key the session never set is unset
+    * again), so a caller's own setting survives the run.
+    */
+  def withConfs[A](spark: SparkSession, confs: Map[String, String])(body: => A): A = {
+    val conf = spark.conf
+    val prev = confs.keys.map(k => k -> conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
     }
   }
 
@@ -86,7 +100,8 @@ object StreamingQueries {
     }
   }
 
-  /** Streaming read of a parquet "topic" with the batch-inferred schema.
+  /** Streaming read of a parquet "topic" with the batch-inferred schema,
+    * in the same [[Graft.canonical]] form as the batch read of `table`.
     * The file-stream source lists a directory. A table stored as a
     * directory of files already is one and streams every file in place;
     * a single-file table is staged by link (copy across filesystems) into
@@ -104,7 +119,7 @@ object StreamingQueries {
         staged
       }
     val schema = spark.read.parquet(path.toString).schema
-    Graft.normalizeEventTs(spark.readStream.schema(schema).parquet(streamDir.toString))
+    Graft.canonical(table, spark.readStream.schema(schema).parquet(streamDir.toString))
   }
 
   /** Stage a table as an N-FILE stream directory (file i = rows where
@@ -581,7 +596,8 @@ object StreamingQueries {
   /** Run `transform` over a streaming read of `table`, aggregate to a
     * named in-memory sink in complete mode, checkpointed (X4), and return
     * the final result table. `confs` lets callers pick the state-store
-    * flavor (X6), e.g. the RocksDB provider.
+    * flavor (X6), e.g. the RocksDB provider, for this run only
+    * ([[withConfs]]).
     */
   def runCompleteAggToMemory(
       spark: SparkSession,
@@ -590,12 +606,11 @@ object StreamingQueries {
       queryName: String,
       transform: DataFrame => DataFrame,
       confs: Map[String, String] = Map.empty): DataFrame = {
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try withStreamParts(spark, pathBytes(s"$dir/$table.parquet")) {
-      drainToMemory(spark, transform(readStreamParquet(spark, dir, table)), queryName,
-        "complete", scratchDir(s"ckpt-$queryName"))
-    } finally {
-      confs.keys.foreach(spark.conf.unset)
+    withConfs(spark, confs) {
+      withStreamParts(spark, pathBytes(s"$dir/$table.parquet")) {
+        drainToMemory(spark, transform(readStreamParquet(spark, dir, table)), queryName,
+          "complete", scratchDir(s"ckpt-$queryName"))
+      }
     }
   }
 

@@ -69,6 +69,20 @@ class ContractSpec extends GraftTest {
     assert(named.toSeq === Seq(helper), s"files naming a .skip metric: ${named.mkString(", ")}")
   }
 
+  test("the queries layer opens no stream of its own") {
+    // a streaming entry is its batch body over a stream source
+    // (graft.queries.Twins, StreamingQueries, Sources.streamShards), so
+    // no entry re-types a readStream chain or a binaryFile shard source
+    val opens = """\.readStream\b(?!\s*\()|format\("binaryFile"\)""".r
+    val sites = new java.io.File("src/main/scala/graft/queries").listFiles
+      .filter(_.getName.endsWith(".scala")).sortBy(_.getName).toSeq.flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
+        lines.indices.filter(i => opens.findFirstIn(lines(i)).isDefined)
+          .map(i => s"${f.getName}:${i + 1}")
+      }
+    assert(sites.isEmpty, s"stream sources opened in the queries layer: ${sites.mkString(", ")}")
+  }
+
   test("flagship entry returns rows (driver smoke-check)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -99,6 +99,21 @@ class ProcessorsSpec extends GraftTest {
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
+  test("a run with its own state-store provider gives back the session's") {
+    // runCompleteAggToMemory's `confs` hold for its run only: a session
+    // that chose RocksDB itself still has it afterwards
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark.conf.set(key, rocks)
+    try {
+      graft.streaming.StreamingQueries.runCompleteAggToMemory(spark, sf, "events", "conf_restore",
+          _.groupBy("event_type").count(),
+          Map(key -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
+        .collect()
+      assert(spark.conf.get(key) === rocks)
+    } finally spark.conf.unset(key)
+  }
+
   test("X9 pass-through topology: streaming identity in → out") {
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -38,6 +38,8 @@ class SourcesSpec extends GraftTest {
   }
 
   /** A recovery walk as (name, data, abandoned bytes): the marker is (null, null, bytes). */
+  private def bytesIn(b: Array[Byte]) = new java.io.ByteArrayInputStream(b)
+
   private def asTriples(it: Iterator[Either[Long, (String, Array[Byte])]]) =
     it.map {
       case Right((name, data)) => (name, data, 0L)
@@ -260,20 +262,20 @@ class SourcesSpec extends GraftTest {
     // length field is little-endian uint64
     assert(bytes(0) === 5.toByte && bytes.slice(1, 8).forall(_ == 0))
     // exact roundtrip, multi-record file
-    val back = TfRecord.readAll(bytes).toSeq
+    val back = TfRecord.readStream(bytesIn(bytes)).toSeq
     assert(back.size === 3)
     payloads.zip(back).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
     // any single flipped byte must surface as a framing/CRC error or a
     // changed payload — NEVER as a silently-identical parse
     for (i <- Seq(0, 5, 11, 12, 16, bytes.length - 1)) {
       val bad = bytes.clone(); bad(i) = (bad(i) ^ 0x40).toByte
-      val r = scala.util.Try(TfRecord.readAll(bad).toSeq)
+      val r = scala.util.Try(TfRecord.readStream(bytesIn(bad)).toSeq)
       assert(r.isFailure || r.get.map(_.toSeq) != payloads.map(_.toSeq),
         s"flip at $i went undetected")
     }
     // truncation mid-record throws
     intercept[IllegalArgumentException](
-      TfRecord.readAll(bytes.dropRight(2)).toSeq)
+      TfRecord.readStream(bytesIn(bytes.dropRight(2))).toSeq)
   }
 
   test("USTAR framing: roundtrip, padding, checksum corruption detection") {
@@ -288,13 +290,13 @@ class SourcesSpec extends GraftTest {
     val bytes = bos.toByteArray
     // every member occupies header + ceil(size/512) blocks; +2 EOF blocks
     assert(bytes.length === members.map(m => 512 + (m._2.length + 511) / 512 * 512).sum + 1024)
-    val back = Tar.readAll(bytes).toSeq
+    val back = Tar.readStream(bytesIn(bytes)).toSeq
     assert(back.map(_._1) === members.map(_._1))
     members.zip(back).foreach { case ((_, a), (_, b)) => assert(a.toSeq === b.toSeq) }
     // corrupting any header byte must break its checksum
     for (off <- Seq(0, 50, 124)) {
       val bad = bytes.clone(); bad(off) = (bad(off) ^ 0x01).toByte
-      intercept[IllegalArgumentException](Tar.readAll(bad).toSeq)
+      intercept[IllegalArgumentException](Tar.readStream(bytesIn(bad)).toSeq)
     }
   }
 
@@ -319,7 +321,7 @@ class SourcesSpec extends GraftTest {
     val rc2 = new ProcessBuilder("tar", "--format=ustar", "-cf", theirs.toString,
       "-C", src.toString, "k2.bin").inheritIO().start().waitFor()
     assert(rc2 === 0)
-    val back = Tar.readAll(java.nio.file.Files.readAllBytes(theirs)).toSeq
+    val back = Tar.readStream(bytesIn(java.nio.file.Files.readAllBytes(theirs))).toSeq
     assert(back.map(_._1) === Seq("k2.bin"))
     assert(back.head._2.toSeq === payload.toSeq)
   }
@@ -346,7 +348,7 @@ class SourcesSpec extends GraftTest {
     val cs = java.lang.Long.toOctalString(sum)
     val csField = (" " * (6 - cs.length)) + cs + "  "
     System.arraycopy(csField.getBytes("US-ASCII"), 0, bytes, 148, 8)
-    val back = Tar.readAll(bytes).toSeq
+    val back = Tar.readStream(bytesIn(bytes)).toSeq
     assert(back.map(_._1) === Seq("a.bin") && back.head._2.toSeq === payload.toSeq,
       "space-padded octal fields must parse (v7-style writers)")
     // 2. directory + pax-style members are walked over, never yielded
@@ -363,7 +365,7 @@ class SourcesSpec extends GraftTest {
     arr(154) = 0; arr(155) = ' '.toByte
     val bos3 = new java.io.ByteArrayOutputStream()
     bos3.write(arr); Tar.finish(bos3)
-    assert(Tar.readAll(bos3.toByteArray).map(_._1).toSeq === Seq("k.json"),
+    assert(Tar.readStream(bytesIn(bos3.toByteArray)).map(_._1).toSeq === Seq("k.json"),
       "directory members must be skipped")
     // 3. a dot-less regular member survives Tar.readAll but is NOT a
     // WebDataset sample — readWebDataset must skip it, not crash
@@ -396,7 +398,7 @@ class SourcesSpec extends GraftTest {
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".tar"))
     assert(files.length === 4)
     val perShard = files.map(f =>
-      Tar.readAll(java.nio.file.Files.readAllBytes(f.toPath)).map(_._1).toSeq)
+      Tar.readStream(bytesIn(java.nio.file.Files.readAllBytes(f.toPath))).map(_._1).toSeq)
     perShard.foreach { names =>
       names.grouped(2).foreach { pair =>
         assert(pair.map(_.split('.').head).distinct.size === 1,
@@ -499,8 +501,8 @@ class SourcesSpec extends GraftTest {
     assert(p.map(_._1) === Seq(null.asInstanceOf[String]))
     assert(p.head._3 === good.length.toLong)
     // strict walk still throws on both corruptions
-    intercept[IllegalArgumentException](Tar.readAll(torn).toSeq)
-    intercept[IllegalArgumentException](Tar.readAll(poisoned).toSeq)
+    intercept[IllegalArgumentException](Tar.readStream(bytesIn(torn)).toSeq)
+    intercept[IllegalArgumentException](Tar.readStream(bytesIn(poisoned)).toSeq)
   }
 
   test("tar strict walk rejects torn end-of-archive framing; permissive stays lenient") {
@@ -515,15 +517,15 @@ class SourcesSpec extends GraftTest {
     finBos.write(noEoa); Tar.finish(finBos)
     val finished = finBos.toByteArray
     // intact archive reads clean
-    assert(Tar.readAll(finished).map(_._1).toSeq === Seq("a.json"))
+    assert(Tar.readStream(bytesIn(finished)).map(_._1).toSeq === Seq("a.json"))
     // tear exactly at the member boundary: EOF with no end-of-archive
-    intercept[IllegalArgumentException](Tar.readAll(noEoa).toSeq)
+    intercept[IllegalArgumentException](Tar.readStream(bytesIn(noEoa)).toSeq)
     // partial trailing header block (1-511 bytes)
     intercept[IllegalArgumentException](
-      Tar.readAll(java.util.Arrays.copyOf(finished, noEoa.length + 100)).toSeq)
+      Tar.readStream(bytesIn(java.util.Arrays.copyOf(finished, noEoa.length + 100))).toSeq)
     // lone zero block: the spec's SECOND end-of-archive block torn off
     intercept[IllegalArgumentException](
-      Tar.readAll(java.util.Arrays.copyOf(finished, noEoa.length + 512)).toSeq)
+      Tar.readStream(bytesIn(java.util.Arrays.copyOf(finished, noEoa.length + 512))).toSeq)
     // the permissive walk keeps the lenient acceptance (its contract
     // surfaces loss as a marker, and a boundary cut loses no member —
     // the complete member survives, markerless)
@@ -667,16 +669,16 @@ class SourcesSpec extends GraftTest {
     // clean end — the ZipInputStream silent-truncation gap, closed by
     // walking local headers by hand): valid end = CEN/EOCD signature
     intercept[IllegalArgumentException] {
-      Zip.readAll(torn).toList
+      Zip.readStream(bytesIn(torn)).toList
     }
     // a tear landing exactly BETWEEN members (at the next signature
     // boundary, cutAt - 20) is still torn framing, not end-of-archive
     intercept[IllegalArgumentException] {
-      Zip.readAll(java.util.Arrays.copyOf(full, cutAt - 20)).toList
+      Zip.readStream(bytesIn(java.util.Arrays.copyOf(full, cutAt - 20))).toList
     }
     // EOCD-only empty archive (what an empty write partition commits)
     val eocd = Array[Byte]('P', 'K', 5, 6) ++ new Array[Byte](18)
-    assert(Zip.readAll(eocd).isEmpty)
+    assert(Zip.readStream(bytesIn(eocd)).isEmpty)
   }
 
   test("ZIP cross-validation: foreign-written archives (stored + deflated, no descriptors) read back") {
@@ -698,8 +700,8 @@ class SourcesSpec extends GraftTest {
          |""".stripMargin
     val p = new ProcessBuilder("/usr/bin/python3", "-c", script).inheritIO().start()
     assert(p.waitFor() === 0)
-    val got = graft.sources.Sources.Zip.readAll(
-      java.nio.file.Files.readAllBytes(zf)).toList
+    val got = graft.sources.Sources.Zip.readStream(bytesIn(
+      java.nio.file.Files.readAllBytes(zf))).toList
     assert(got.map(_._1) === List("stored.txt", "deflated.txt", "subdir/nested.bin"))
     assert(new String(got(0)._2, "UTF-8") === "plain stored payload")
     assert(new String(got(1)._2, "UTF-8") === "deflate " * 50)
