@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -308,34 +308,18 @@ object ScaleCheck {
   import graft.queries.PipelineQueries
   import graft.streaming.StreamingQueries
 
-  // the ingest split of one corpus: (batch = the doc_id%10 == 0 slice,
-  // standing corpus = the rest)
-  private def tenths(d: DataFrame): (DataFrame, DataFrame) =
-    (d.where(pmod(col("doc_id"), lit(10)) === 0), d.where(pmod(col("doc_id"), lit(10)) =!= 0))
-
-  // an empty batch slice has no micro-batches (harnessBatches is None)
-  private def ingestStream(df: DataFrame): DataFrame = {
-    val (batch, corpus) = tenths(df)
-    StreamingQueries.harnessBatches(batch, "doc_id") match {
-      case None => batch.select(col("doc_id"), lit("train").as("split")).limit(0)
-      case Some(batchOf) =>
-        StreamingQueries.runIngestStream(
-          df.sparkSession, batch, corpus, batchOf, jaccardMin = 0.5, tag = "scale")
-    }
+  private def ingestStream(df: DataFrame, root: String): DataFrame = {
+    val (batch, corpus) = PipelineQueries.ingestSplit(df)
+    StreamingQueries.runIngestStream(df.sparkSession, batch, corpus,
+      StreamingQueries.harnessBatches(batch, "doc_id"), jaccardMin = 0.5, root)
   }
 
   // the gated multimodal ingest chain (consistency gate → decode + dHash
   // → corpus/seen anti-joins), the SHARED gate from the query
-  private def crossmodalIngest(df: DataFrame): DataFrame = {
-    val (batch, corpus) = tenths(df)
-    StreamingQueries.harnessBatches(batch, "doc_id") match {
-      case None => batch.select(col("doc_id").as("asset_id"),
-        lit(0L).as("dhash_hi"), lit(0L).as("dhash_lo")).limit(0)
-      case Some(batchOf) =>
-        StreamingQueries.runMediaIngestStream(
-          df.sparkSession, batch, corpus, batchOf, tag = "scalexm",
-          hashFn = PipelineQueries.crossModalGatedHash)
-    }
+  private def crossmodalIngest(df: DataFrame, root: String): DataFrame = {
+    val (batch, corpus) = PipelineQueries.ingestSplit(df)
+    StreamingQueries.runGate(df.sparkSession, batch, corpus,
+      StreamingQueries.harnessBatches(batch, "doc_id"), root)(PipelineQueries.crossModalGatedHash)
   }
 
   private def windowedJoin(ev: DataFrame, joinType: String): DataFrame =
@@ -453,7 +437,7 @@ object ScaleCheck {
     // incremental ingestion dedup: batch (10%) anti-joined against the
     // standing corpus (90%) — both sides hash-reduced before the join
     ("dd_incremental", c => {
-      val (batch, corpus) = tenths(c.docs)
+      val (batch, corpus) = PipelineQueries.ingestSplit(c.docs)
       Dedup.incremental(batch, corpus, "doc_id", "text")
     }),
     // SymSpell fuzzy dedup: variant-hash bucket join + Levenshtein
@@ -625,10 +609,10 @@ object ScaleCheck {
     // (lang, n_chars) blocking keys, so the near-dup candidate join
     // would grow QUADRATICALLY in the factor — a data artifact, not the
     // operator's shape (the same invariant dd_ngram_disjoint keeps)
-    ("pp_ingest_streaming", c => ingestStream(c.docsDisjoint)),
+    ("pp_ingest_streaming", c => ingestStream(c.docsDisjoint, c.scratch("ingest"))),
     // gated multimodal ingest: per-batch score + decode scans are
     // linear; the anti-joins ride 16-byte hashes (never pixels/text)
-    ("pp_ingest_crossmodal", c => crossmodalIngest(c.docs)),
+    ("pp_ingest_crossmodal", c => crossmodalIngest(c.docs, c.scratch("xmodal"))),
     // int8 quantization: pure per-row codegen'd scan, no shuffle
     ("mm_quantize", c => c.emb.select(col("vec_id"),
       graft.functions.VectorFunctions.quantizeInt8(col("embedding")).as("q"))),
@@ -866,7 +850,8 @@ object ScaleCheck {
   /** Persisted-store arms: ingest twins whose cross-batch state lives in
     * PER-BATCH PARQUET STORES (the compacted-topic shape), not in the
     * engine's state operators, measured by reading the stores back after
-    * the stream drains. Each body registers its store dirs. Replication
+    * the stream drains. Each body runs under a fresh root, and every
+    * store under it is counted ([[runStore]]). Replication
     * keeps the TEXT UNCHANGED (Corpus.docsSameText):
     *   - txt_bm25_streaming: no dedup in this path, so disjoint ids alone
     *     grow the stats honestly → stats-store rows (per-doc lengths +
@@ -882,37 +867,38 @@ object ScaleCheck {
     *     dedup-state law the media arm certifies, here for the md5 text
     *     gate.
     */
-  private val storeArms: Seq[(String, (Corpus, mutable.Buffer[(String, String)]) => DataFrame)] = {
-    def batchesOf(d: DataFrame) = StreamingQueries.harnessBatches(d, "doc_id").getOrElse(lit(0))
-    Seq(
-      ("txt_bm25_streaming (stats store, Nx docs)", (c, dirs) => {
-        val d = c.docsSameText
-        StreamingQueries.runBm25Stream(c.spark, d, batchesOf(d),
-          Seq("dup", "spark", "merge", "vector"), s"bm25-${c.factor}x", storeDirs = Some(dirs))
-      }),
-      ("pp_ingest_media (hash store, Nx assets)", (c, dirs) => {
-        val (batch, corpus) = tenths(c.docsSameText)
-        StreamingQueries.runMediaIngestStream(c.spark, batch, corpus, batchesOf(batch),
-          s"media-${c.factor}x", storeDirs = Some(dirs))
-      }),
-      ("pp_ingest (content-hash stores, Nx docs, text unchanged)", (c, dirs) => {
-        val (batch, corpus) = tenths(c.docsSameText)
-        StreamingQueries.runIngestStream(c.spark, batch, corpus, batchesOf(batch),
-          jaccardMin = 0.5, s"ing-${c.factor}x", storeDirs = Some(dirs))
-      }))
-  }
+  private val storeArms: Seq[(String, (Corpus, String) => DataFrame)] = Seq(
+    ("txt_bm25_streaming (stats store, Nx docs)", (c, root) => {
+      val d = c.docsSameText
+      StreamingQueries.runBm25Stream(c.spark, d, StreamingQueries.harnessBatches(d, "doc_id"),
+        Seq("dup", "spark", "merge", "vector"), root)
+    }),
+    ("pp_ingest_media (hash store, Nx assets)", (c, root) => {
+      val (batch, corpus) = PipelineQueries.ingestSplit(c.docsSameText)
+      StreamingQueries.runGate(c.spark, batch, corpus,
+          StreamingQueries.harnessBatches(batch, "doc_id"), root)(
+        df => Multimodal.imageDHash(Multimodal.syntheticPngAssets(df)))
+    }),
+    ("pp_ingest (content-hash stores, Nx docs, text unchanged)", (c, root) => {
+      val (batch, corpus) = PipelineQueries.ingestSplit(c.docsSameText)
+      StreamingQueries.runIngestStream(c.spark, batch, corpus,
+        StreamingQueries.harnessBatches(batch, "doc_id"), jaccardMin = 0.5, root)
+    }))
 
-  /** Seconds a store arm takes into fresh store dirs, the rows of its
-    * stores and their MB. */
-  private def runStore(body: mutable.Buffer[(String, String)] => DataFrame,
-                       spark: SparkSession): (Double, Long, Double) = {
-    val dirs = mutable.ArrayBuffer.empty[(String, String)]
-    val sec = time(body(dirs))
-    val stores = dirs.map(_._2).filter(d => Files.exists(Paths.get(d)))
+  /** Seconds a store arm takes under a fresh root, the rows of the
+    * stores under it and their MB. The run's checkpoint is
+    * `_checkpoint` there, skipped like every `_`-prefixed Hadoop path. */
+  private def runStore(c: Corpus, body: (Corpus, String) => DataFrame): (Double, Long, Double) = {
+    val root = c.scratch("store")
+    val sec = time(body(c, root))
+    val listing = Files.list(Paths.get(root))
+    val stores = try listing.iterator().asScala.toList
+      .filter(p => Files.isDirectory(p) && !p.getFileName.toString.startsWith("_"))
+    finally listing.close()
     (sec,
-      stores.map(d => spark.read.option("recursiveFileLookup", "true").parquet(d).count()).sum,
+      stores.map(d => c.spark.read.option("recursiveFileLookup", "true").parquet(d.toString).count()).sum,
       stores.map { d =>
-        val walk = Files.walk(Paths.get(d))
+        val walk = Files.walk(d)
         try walk.filter(_.toString.endsWith(".parquet")).mapToLong(Files.size(_)).sum()
         finally walk.close()
       }.sum / 1e6)
@@ -993,7 +979,7 @@ object ScaleCheck {
         sb.append("|---|---|---|---|---|---|---|---|---|\n")
         stores.foreach { case (name, body) =>
           val ((ss, sRows, sMB), (bs, bRows, bMB)) =
-            fasterOfTwo(runStore(body(small, _), spark), runStore(body(big, _), spark))(_._1)
+            fasterOfTwo(runStore(small, body), runStore(big, body))(_._1)
           val row = f"| $name | $ss%.2f | $bs%.2f | ${bs / ss}%.1f | $sRows%d | $bRows%d | " +
             f"${if (sRows == 0) 0.0 else bRows.toDouble / sRows}%.1f | $sMB%.1f | $bMB%.1f |"
           println(s"[scale] ${factor}x $row")

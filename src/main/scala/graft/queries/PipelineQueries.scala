@@ -534,9 +534,18 @@ object PipelineQueries {
     Multimodal.textImageScore(paired, buckets = 1 << 20, dim = 8, thrMilli = 0L)
   }
 
+  /** The ingest split of one corpus: (new batch = the doc_id % 10 == 0
+    * slice, standing corpus = the rest). The decontamination entries
+    * read the same tenth as their eval set. The oracles state it as
+    * `doc_id % 10 = 0` / `<> 0`.
+    */
+  def ingestSplit(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.where(pmod(col("doc_id"), lit(10)) === 0), docs.where(pmod(col("doc_id"), lit(10)) =!= 0))
+
   /** The pp_ingest_crossmodal gate, shared with the scale audit: keep
     * only consistency-gate-passing pairs, then decode + dHash the
-    * survivors — the pluggable hashFn runMediaIngestStream consumes.
+    * survivors — the fingerprint [[graft.streaming.StreamingQueries.runGate]]
+    * keys its cross-batch dedup by.
     */
   val crossModalGatedHash: DataFrame => DataFrame = b => {
     val keptIds = textImagePairsScore(b).where(col("kept")).select("doc_id")
@@ -1102,10 +1111,8 @@ object PipelineQueries {
       // companion of dd_incremental's exact-hash check. Full hash oracle
       // since r8 (MinHashOracleSql.minhashIncremental) plus the
       // planted-pair recall test in DedupAnnSpec.
-      val docs = Graft.documents(s, d)
-      Dedup.crossMinhashPairs(
-        docs.where(pmod(col("doc_id"), lit(10)) === 0),
-        docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      Dedup.crossMinhashPairs(batch, corpus,
         "doc_id", "text", threshold = 0.5, maxBucket = 1000)
     }),
 
@@ -1123,11 +1130,8 @@ object PipelineQueries {
       // incremental ingestion dedup: every 10th doc stands in for the new
       // batch, the rest for the standing corpus — both sides reduce to
       // content hashes before the anti-join; fully oracle-checkable
-      val docs = Graft.documents(s, d)
-      Dedup.incremental(
-        docs.where(pmod(col("doc_id"), lit(10)) === 0),
-        docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
-        "doc_id", "text")
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      Dedup.incremental(batch, corpus, "doc_id", "text")
     }),
 
     "dd_fuzzy" -> ((s, d) =>
@@ -1443,11 +1447,8 @@ object PipelineQueries {
       // "eval set" (every 10th doc stands in for a benchmark — a split
       // that provably intersects the corpus's planted near-dup clusters);
       // eval grams broadcast, corpus never shuffles
-      val docs = Graft.documents(s, d)
-      Dedup.contaminatedIds(
-        docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", n = 8)
+      val (evalSet, corpus) = ingestSplit(Graft.documents(s, d))
+      Dedup.contaminatedIds(corpus, evalSet, "doc_id", "text", n = 8)
     }),
 
     "pp_decontam_spans" -> ((s, d) => {
@@ -1458,11 +1459,8 @@ object PipelineQueries {
       // hash set (benchmark-sized → AQE broadcast), corpus never
       // shuffles on the gram — its one exchange is the shared doc-id
       // hash of the gate/coverage/rebuild windows.
-      val docs = Graft.documents(s, d)
-      Dedup.decontamSpans(
-        docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", k = 8, minSpanTokens = 16)
+      val (evalSet, corpus) = ingestSplit(Graft.documents(s, d))
+      Dedup.decontamSpans(corpus, evalSet, "doc_id", "text", k = 8, minSpanTokens = 16)
     }),
 
     "pp_split" -> ((s, d) =>
@@ -1642,20 +1640,14 @@ object PipelineQueries {
       // streaming engine: per micro-batch, generate the slice's PNGs,
       // run the full decode + dHash, drop hashes already in the
       // persisted corpus store or earlier batches, keep lowest
-      // asset_id per hash (see StreamingQueries.runMediaIngestStream).
+      // asset_id per hash (see StreamingQueries.runGate).
       // Ascending-id micro-batches make first-accepted == keep-min, so
       // the converged output equals the batch dedup the oracle states.
-      val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-      graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id") match {
-        case None => batch.select(col("doc_id").as("asset_id"),
-          lit(0L).as("dhash_hi"), lit(0L).as("dhash_lo")).limit(0)
-        case Some(batchOf) =>
-          graft.streaming.StreamingQueries.runMediaIngestStream(
-            s, batch, corpus, batchOf, tag = "ppmedia",
-            stageKey = Some(s"ppmedia|$d"))
-      }
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      graft.streaming.StreamingQueries.runGate(s, batch, corpus,
+          graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id"),
+          scratchDir("ppmedia"), Some(s"ppmedia|$d"))(
+        df => Multimodal.imageDHash(Multimodal.syntheticPngAssets(df)))
     }),
 
     "pp_ingest_tfexample_media" -> ((s, d) => {
@@ -1672,8 +1664,7 @@ object PipelineQueries {
       // anti-join against the (distinct, shuffling-once) corpus hashes.
       val out = scratchDir("ppingtfex")
       val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
+      val (batch, corpus) = ingestSplit(docs)
       import s.implicits._
       val payloads = batch.select("doc_id", "n_chars").as[(Long, Long)]
         .map { case (id, nc) =>
@@ -1704,27 +1695,19 @@ object PipelineQueries {
       // images now collide into the same fingerprint and get dropped at
       // the gate — the production choice when assets arrive through
       // lossy re-hosting. Same streaming machinery, same per-batch
-      // idempotent stores; the fingerprint function and column names
-      // are parameters (runMediaIngestStream hashFn). Micro-batches are
+      // idempotent stores; the fingerprint function, which names the key
+      // columns, is the gate's parameter (StreamingQueries.runGate). Micro-batches are
       // ascending-id HALVES (r18, the pp_ingest_streaming VERDICT r17
       // #7 audit applied to the DCT arm): two batches certify the
       // cross-batch hash state exactly as three did — batch 1 must drop
       // fingerprints batch 0 accepted — at two-thirds the per-batch
       // decode+store actions; the >1-prior-store union path stays
       // exercised in-registry by pp_ingest_media's three batches.
-      val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-      graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id", n = 2) match {
-        case None => batch.select(col("doc_id").as("asset_id"),
-          lit(0L).as("phash_hi"), lit(0L).as("phash_lo")).limit(0)
-        case Some(batchOf) =>
-          graft.streaming.StreamingQueries.runMediaIngestStream(
-            s, batch, corpus, batchOf, tag = "ppmediadct",
-            hashFn = df => Multimodal.imagePHashDct(Multimodal.syntheticPngAssets(df)),
-            hiCol = "phash_hi", loCol = "phash_lo",
-            stageKey = Some(s"ppmediadct|$d"))
-      }
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      graft.streaming.StreamingQueries.runGate(s, batch, corpus,
+          graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id", n = 2),
+          scratchDir("ppmediadct"), Some(s"ppmediadct|$d"))(
+        df => Multimodal.imagePHashDct(Multimodal.syntheticPngAssets(df)))
     }),
 
     "pp_mix" -> ((s, d) =>
@@ -1970,8 +1953,7 @@ object PipelineQueries {
       // blocking join; production feeds crossMinhashPairs) → stable split
       // assignment for what survives. One SQL chain replays it all.
       val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
+      val (batch, corpus) = ingestSplit(docs)
       val keptExact = Dedup.incremental(batch, corpus, "doc_id", "text")
         .select(col("keep_id").as("doc_id"))
       // guarded cross-corpus blocking (r15): same default-on cap as the
@@ -2001,17 +1983,10 @@ object PipelineQueries {
       // fixture and the media ingest entries). First-accepted ==
       // keep-min under ascending ids, so the converged output equals
       // the batch chain: the entry shares pp_ingest's oracle verbatim.
-      val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-      // empty batch slice → harnessBatches is None (the shared null guard)
-      graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id", n = 2) match {
-        case None => batch.select(col("doc_id"), lit("train").as("split")).limit(0)
-        case Some(batchOf) =>
-          graft.streaming.StreamingQueries.runIngestStream(
-            s, batch, corpus, batchOf, jaccardMin = 0.5, tag = "ppingest",
-            stageKey = Some(s"ppingest|$d"))
-      }
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      graft.streaming.StreamingQueries.runIngestStream(s, batch, corpus,
+        graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id", n = 2),
+        jaccardMin = 0.5, scratchDir("ppingest"), stageKey = Some(s"ppingest|$d"))
     }),
 
     "pp_ingest_semantic" -> ((s, d) => {
@@ -2025,8 +2000,7 @@ object PipelineQueries {
       // cluster (capBuckets r-side-only). Threshold 0.3: the corpus's
       // cross-pair p99.9 — drops are real but sparse (see spec).
       val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
+      val (batch, corpus) = ingestSplit(docs)
       val keptExact = Dedup.incremental(batch, corpus, "doc_id", "text")
         .select(col("keep_id").as("doc_id"))
       // guarded cross-corpus blocking (r15): same default-on cap as the
@@ -2065,25 +2039,19 @@ object PipelineQueries {
       // batch-chain-parity property), so the entry shares
       // pp_ingest_semantic's oracle verbatim; cross-batch behavior is
       // pinned in ProcessorsSpec.
-      val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-      graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id") match {
-        case None => batch.select(col("doc_id"), lit("train").as("split")).limit(0)
-        case Some(batchOf) =>
-          val emb = Graft.embeddings(s, d)
-          val model = frozenModel("ivf16", d)(Ann.trainIvf(emb, "vec_id", "embedding", nLists = 16))
-          // identical frozen model (trainIvf is deterministic) → the
-          // batch entry's oracle replays this run too
-          AnnOracleSql.register("pp_ingest_semantic_streaming",
-            ppIngestSqlBuilder(Some(AnnOracleSql.ingestSemanticCtes(model,
-              threshold = 0.3, maxCluster = 2000,
-              newPred = "b.vec_id % 10 = 0", corpusPred = "vec_id % 10 <> 0"))))
-          graft.streaming.StreamingQueries.runIngestStream(
-            s, batch, corpus, batchOf, jaccardMin = 0.5, tag = "ppsem",
-            semantic = Some((emb, model, 0.3, 2000)),
-            stageKey = Some(s"ppsem|$d"))
-      }
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      val emb = Graft.embeddings(s, d)
+      val model = frozenModel("ivf16", d)(Ann.trainIvf(emb, "vec_id", "embedding", nLists = 16))
+      // identical frozen model (trainIvf is deterministic) → the
+      // batch entry's oracle replays this run too
+      AnnOracleSql.register("pp_ingest_semantic_streaming",
+        ppIngestSqlBuilder(Some(AnnOracleSql.ingestSemanticCtes(model,
+          threshold = 0.3, maxCluster = 2000,
+          newPred = "b.vec_id % 10 = 0", corpusPred = "vec_id % 10 <> 0"))))
+      graft.streaming.StreamingQueries.runIngestStream(s, batch, corpus,
+        graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id"),
+        jaccardMin = 0.5, scratchDir("ppsem"), semantic = Some((emb, model, 0.3, 2000)),
+        stageKey = Some(s"ppsem|$d"))
     }),
 
     "pp_pipeline" -> ((s, d) => preparePipeline(Graft.documents(s, d))),
@@ -2700,13 +2668,9 @@ object PipelineQueries {
       // (TextFunctions.bm25Score), so the entry shares txt_bm25's
       // oracle verbatim — retrieval-stats-at-ingest parity.
       val docs = Graft.documents(s, d)
-      graft.streaming.StreamingQueries.harnessBatches(docs, "doc_id") match {
-        case None =>
-          docs.select(col("doc_id"), lit(0).as("n_hit"), lit(0L).as("bm25_micro")).limit(0)
-        case Some(batchOf) =>
-          graft.streaming.StreamingQueries.runBm25Stream(
-            s, docs, batchOf, Seq("dup", "spark", "merge", "vector"), tag = "bm25")
-      }
+      graft.streaming.StreamingQueries.runBm25Stream(s, docs,
+        graft.streaming.StreamingQueries.harnessBatches(docs, "doc_id"),
+        Seq("dup", "spark", "merge", "vector"), scratchDir("bm25"))
     }),
 
     "q_hybrid_retrieval" -> ((s, d) => {
@@ -3036,21 +3000,14 @@ object PipelineQueries {
       // Gate-everywhere semantics: the corpus store itself holds only
       // gate-passing corpus hashes — the corpus was built by this same
       // chain. Same idempotent per-batch stores as pp_ingest_media
-      // (runMediaIngestStream; the composed gate rides the pluggable
-      // hashFn seam). Ascending-id micro-batches make first-accepted ==
+      // (StreamingQueries.runGate; the composed gate is its
+      // fingerprint). Ascending-id micro-batches make first-accepted ==
       // keep-min, so the converged output equals the batch statement
       // the oracle replays (CrossModalOracleSql.crossModalIngest).
-      val docs = Graft.documents(s, d)
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-      graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id") match {
-        case None => batch.select(col("doc_id").as("asset_id"),
-          lit(0L).as("dhash_hi"), lit(0L).as("dhash_lo")).limit(0)
-        case Some(batchOf) =>
-          graft.streaming.StreamingQueries.runMediaIngestStream(
-            s, batch, corpus, batchOf, tag = "ppxmodal", hashFn = crossModalGatedHash,
-            stageKey = Some(s"ppxmodal|$d"))
-      }
+      val (batch, corpus) = ingestSplit(Graft.documents(s, d))
+      graft.streaming.StreamingQueries.runGate(s, batch, corpus,
+          graft.streaming.StreamingQueries.harnessBatches(batch, "doc_id"),
+          scratchDir("ppxmodal"), Some(s"ppxmodal|$d"))(crossModalGatedHash)
     }),
 
     "mm_audio" -> ((s, d) =>
@@ -3195,44 +3152,41 @@ object PipelineQueries {
           col("event_type").isin("view", "click", "purchase"))
         .select(col("user_id").cast("long").as("user_id"),
           col("event_type"), col("ts_us").cast("long").as("ts_us"))
-      graft.streaming.StreamingQueries
-          .harnessBatches(ev.select(col("ts_us").as("id")), "id") match {
-        case None =>
-          ev.select(lit(1).as("step"), lit("view").as("step_name"),
-            lit(0L).as("n_users")).limit(0)
-        case Some(_) =>
-          // ascending event-time thirds over the OBSERVED [min, max] ts
-          // range (r18 fix: ts_us is epoch-scale, so the earlier
-          // floor(ts·3/(max+1)) collapsed EVERY row into batch 2 — the
-          // stream paid two no-data triggers and the cross-batch
-          // write-once contract was exercised vacuously); staging is
-          // session-cached per corpus (r18) — the bench's repeat reps
-          // re-run the STREAM, not the byte-identical stage
-          val stageKey = s"qfunnel|$d"
-          val stream = graft.streaming.StreamingQueries
-            .stageStreamBatchedCached(s, ev, "qfunnel", stageKey) {
-              val r = ev.agg(min("ts_us"), max("ts_us")).head()
-              val (lo, hi) = (r.getLong(0), r.getLong(1))
-              least(floor((col("ts_us") - lit(lo)) * 3 / lit(hi - lo + 1)),
-                lit(2)).cast("int")
-            }
-            .as[(Long, String, Long)]
-          val snaps = graft.streaming.Processors.funnelChain(stream, winUs)
-            .toDF("user_id", "t1", "t2", "t3")
-          val conv = graft.streaming.StreamingQueries
-            .runUpdateToMemory(s, "q_funnel_stream", snaps,
-              graft.streaming.StreamingQueries.stagedBytes(stageKey))
-            .groupBy("user_id")
-            .agg(max("t1").as("t1"), max("t2").as("t2"), max("t3").as("t3"))
-          // r18 (guide §2.4): the three-branch union referenced the
-          // `counts` aggregate three times and the memory-sink reduce
-          // chain got NO exchange reuse (r18 plan audit: 24 Exchange /
-          // 0 ReusedExchange — LocalTableScan subtrees re-executed per
-          // branch); the literal-array explode runs the chain ONCE.
-          funnelCountRows(conv.agg(
-            sum(when(col("t1") >= 0, 1L).otherwise(0L)).as("n1"),
-            sum(when(col("t2") >= 0, 1L).otherwise(0L)).as("n2"),
-            sum(when(col("t3") >= 0, 1L).otherwise(0L)).as("n3")))
+      if (ev.isEmpty)
+        ev.select(lit(1).as("step"), lit("view").as("step_name"), lit(0L).as("n_users")).limit(0)
+      else {
+        // ascending event-time thirds over the OBSERVED [min, max] ts
+        // range (r18 fix: ts_us is epoch-scale, so the earlier
+        // floor(ts·3/(max+1)) collapsed EVERY row into batch 2 — the
+        // stream paid two no-data triggers and the cross-batch
+        // write-once contract was exercised vacuously); staging is
+        // session-cached per corpus (r18) — the bench's repeat reps
+        // re-run the STREAM, not the byte-identical stage
+        val stageKey = s"qfunnel|$d"
+        val stream = graft.streaming.StreamingQueries
+          .stageStreamBatchedCached(s, ev, "qfunnel", stageKey) {
+            val r = ev.agg(min("ts_us"), max("ts_us")).head()
+            val (lo, hi) = (r.getLong(0), r.getLong(1))
+            least(floor((col("ts_us") - lit(lo)) * 3 / lit(hi - lo + 1)),
+              lit(2)).cast("int")
+          }
+          .as[(Long, String, Long)]
+        val snaps = graft.streaming.Processors.funnelChain(stream, winUs)
+          .toDF("user_id", "t1", "t2", "t3")
+        val conv = graft.streaming.StreamingQueries
+          .runUpdateToMemory(s, "q_funnel_stream", snaps,
+            graft.streaming.StreamingQueries.stagedBytes(stageKey))
+          .groupBy("user_id")
+          .agg(max("t1").as("t1"), max("t2").as("t2"), max("t3").as("t3"))
+        // r18 (guide §2.4): the three-branch union referenced the
+        // `counts` aggregate three times and the memory-sink reduce
+        // chain got NO exchange reuse (r18 plan audit: 24 Exchange /
+        // 0 ReusedExchange — LocalTableScan subtrees re-executed per
+        // branch); the literal-array explode runs the chain ONCE.
+        funnelCountRows(conv.agg(
+          sum(when(col("t1") >= 0, 1L).otherwise(0L)).as("n1"),
+          sum(when(col("t2") >= 0, 1L).otherwise(0L)).as("n2"),
+          sum(when(col("t3") >= 0, 1L).otherwise(0L)).as("n3")))
       }
     }),
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Graft
+import graft.ProbeUtil.scratchDir
 import graft.sources.Sources
 import graft.streaming.StreamingQueries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -59,7 +60,7 @@ object Twins {
             StreamingQueries.runCompleteAggToMemory(s, d, t.table, t.stream, t.body(s, d, _))
           case Upsert(batchOf) =>
             StreamingQueries.runUpsertSnapshots(s, Graft.canonicalTable(s, d, t.table),
-              batchOf, t.stream)(t.body(s, d, _))._1
+              batchOf, scratchDir(t.stream))(t.body(s, d, _))._1
         }))
     } ++ shards.flatMap { t =>
       Seq[(String, Q)](

@@ -1,18 +1,22 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.Graft
 import graft.ProbeUtil.{deleteRecursively, scratchDir}
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row, SparkSession}
+import graft.functions.TextFunctions
+import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** The streaming engine under graft's streaming entries (SURVEY.md §2.1
   * S1/S3, §2.7 X4-X6/X10, §2.8 T3-T5): stream reads of corpus tables in
   * their canonical form, staged micro-batch inputs, and the drains that
   * run a streaming query to completion with `Trigger.AvailableNow` —
-  * append, complete and update memory sinks, the foreachBatch upsert
-  * and ingest loops — so the batch-style correctness gate can hash the
+  * append, complete and update memory sinks, and the one foreachBatch
+  * drain under the per-batch store drivers (upsert, BM25 stats, the
+  * cross-batch dedup gate) — so the batch-style correctness gate can hash the
   * converged result while the path exercised is the streaming engine:
   * checkpointing (X4 ≈ commit), state stores (X5/X6), watermarks (T3),
   * graceful stop (T5). A streaming twin of a batch entry is declared
@@ -85,19 +89,15 @@ object StreamingQueries {
   /** Micro-batch assignment for the streaming-twin harnesses: ascending
     * `idCol` n-tiles computed ARITHMETICALLY from one bounded 1-row max —
     * batch i holds ids in [i·(max+1)/n, (i+1)·(max+1)/n) — so staging
-    * never needs a rank. Returns None when the frame is empty (max() is
-    * NULL); the ADVICE r11 null guard lives HERE, in one definition,
-    * instead of five inline copies (VERDICT r12 #3). The 1-row agg is
-    * the sanctioned bounded-scalar driver read.
+    * never needs a rank. The 1-row agg is the sanctioned bounded-scalar
+    * driver read; the drivers take the column by name, so a staging-cache
+    * hit skips it. An empty frame has no max and stages no file whatever
+    * the column says ([[stageBatchedDir]]).
     */
-  def harnessBatches(df: DataFrame, idCol: String,
-                     n: Int = 3): Option[org.apache.spark.sql.Column] = {
+  def harnessBatches(df: DataFrame, idCol: String, n: Int = 3): Column = {
     val maxRow = df.agg(max(idCol)).head()
-    if (maxRow.isNullAt(0)) None
-    else {
-      val maxId = maxRow.getLong(0)
-      Some(least(floor(col(idCol) * n / (maxId + 1)), lit(n - 1)).cast("int"))
-    }
+    val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+    least(floor(col(idCol) * n / (maxId + 1)), lit(n - 1)).cast("int")
   }
 
   /** Streaming read of a parquet "topic" with the batch-inferred schema,
@@ -153,13 +153,13 @@ object StreamingQueries {
   }
 
   /** The staging half of [[stageStreamBatched]]: write the N batch files
-    * and return the directory. */
-  def stageBatchedDir(spark: SparkSession, src: DataFrame,
-                      batchOf: org.apache.spark.sql.Column,
+    * (none for an empty `src`) and return the directory. */
+  def stageBatchedDir(spark: SparkSession, src: DataFrame, batchOf: Column,
                       tag: String): String = {
     val batchDir = Paths.get(scratchDir(s"streamN-$tag"))
     val tagged = src.withColumn("_b", batchOf.cast("int"))
-    val nMax = tagged.agg(max(col("_b"))).head().getInt(0)
+    val top = tagged.agg(max(col("_b"))).head()
+    val nMax = if (top.isNullAt(0)) -1 else top.getInt(0)
     val now = System.currentTimeMillis()
     (0 to nMax).foreach { i =>
       val tmp = Paths.get(scratchDir(s"stage-$i"))
@@ -204,6 +204,57 @@ object StreamingQueries {
   def stagedBytes(key: String): Long =
     Option(stagedBatchDirs.get(key)).map(pathBytes).getOrElse(0L)
 
+  /** The one `foreachBatch` drain behind the per-batch store drivers
+    * ([[runUpsertSnapshots]], [[runBm25Stream]], [[runGate]]): stage
+    * `src` as micro-batches by `batchOf` (by name, so a staging-cache hit
+    * under `stageKey` skips its probe), run `step(batch, id)` on each with
+    * `AvailableNow`, checkpointed under `root`, then stop. A step keeps
+    * its state in per-batch stores under the same `root`
+    * ([[writeStore]]); an empty `src` stages no file and runs no step.
+    */
+  private def drain(spark: SparkSession, src: DataFrame, batchOf: => Column, root: String,
+                    stageKey: Option[String] = None)(step: (DataFrame, Long) => Unit): Unit = {
+    val stream = stageKey match {
+      case Some(k) => stageStreamBatchedCached(spark, src, "drain", k)(batchOf)
+      case None => stageStreamBatched(spark, src, batchOf, "drain")
+    }
+    val q = stream.writeStream
+      .option("checkpointLocation", s"$root/_checkpoint")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(step)
+      .start()
+    q.awaitTermination()
+    q.stop()
+  }
+
+  /** Batch `id`'s part of store `name` under a drain's `root`, written
+    * OVERWRITE: foreachBatch is at-least-once, and a retried batch
+    * replaces its part instead of adding its rows twice. */
+  private def writeStore(df: DataFrame, root: String, name: String, id: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$root/$name/batch-$id")
+
+  /** Every batch's part of store `name` under `root`, read as `schema`
+    * (empty, with that schema, when no batch ran). */
+  private def readStore(spark: SparkSession, root: String, name: String,
+                        schema: StructType): DataFrame = {
+    val dir = Files.createDirectories(Paths.get(root, name))
+    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(dir.toString)
+  }
+
+  /** The parts of store `name` that batches strictly BEFORE `id` wrote,
+    * so a retried batch never reads its own overwritten part. */
+  private def partsBefore(root: String, name: String, id: Long): Seq[String] = {
+    val dir = Paths.get(root, name)
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val l = Files.list(dir)
+      try l.iterator().asScala.toList.map(_.getFileName.toString)
+        .filter(n => n.startsWith("batch-") && n.stripPrefix("batch-").toLong < id)
+        .map(n => dir.resolve(n).toString)
+      finally l.close()
+    }
+  }
+
   /** J6-J8 / A6 through the real streaming engine. A KTable is a
     * changelog, and a table-table join (or table re-aggregation) emits an
     * updated joined snapshot whenever either side upserts (reference:
@@ -212,7 +263,7 @@ object StreamingQueries {
     * per micro-batch and recomputes the latest-per-key `snapshot` —
     * update-by-recompute, so no subtractor is needed and replaced values
     * are never counted. Each batch's snapshot lands in
-    * `<snapRoot>/batch-<i>` so mid-stream updates (e.g. a key moving
+    * `<root>/snapshot/batch-<i>` so mid-stream updates (e.g. a key moving
     * groups on upsert) are observable; the last one is the converged
     * table. Returns (finalSnapshot, snapshotRoot).
     *
@@ -222,160 +273,168 @@ object StreamingQueries {
     * changelog (the parquet dir here stands in for a compacted topic)
     * or move the state into transformWithState.
     */
-  def runUpsertSnapshots(
-      spark: SparkSession,
-      src: DataFrame,
-      batchOf: org.apache.spark.sql.Column,
-      tag: String)(snapshot: DataFrame => DataFrame): (DataFrame, String) = {
-    val stream = stageStreamBatched(spark, src, batchOf, tag)
-    val changelog = scratchDir(s"changelog-$tag")
-    val snapRoot = scratchDir(s"snap-$tag")
+  def runUpsertSnapshots(spark: SparkSession, src: DataFrame, batchOf: => Column, root: String)
+                        (snapshot: DataFrame => DataFrame): (DataFrame, String) = {
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val q = stream.writeStream
-      .option("checkpointLocation", scratchDir(s"ckpt-upsert-$tag"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertBatch(spark, batch, id, changelog, snapRoot)(snapshot)
-        lastBatch.updateAndGet(prev => math.max(prev, id))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q.stop()
-    (spark.read.parquet(s"$snapRoot/batch-${lastBatch.get}"), snapRoot)
+    drain(spark, src, batchOf, root) { (batch, id) =>
+      upsertBatch(spark, batch, id, root)(snapshot)
+      lastBatch.updateAndGet(prev => math.max(prev, id))
+    }
+    val snapRoot = s"$root/snapshot"
+    val last = lastBatch.get
+    (if (last < 0) snapshot(readStore(spark, root, "changelog", src.schema))
+     else spark.read.parquet(s"$snapRoot/batch-$last"), snapRoot)
   }
 
   /** One upsert step of [[runUpsertSnapshots]], idempotent under
     * foreachBatch's at-least-once contract: the batch lands in an
-    * OVERWRITTEN per-batch subdir (a task retry rewrites the same rows,
-    * never double-counts them in the accumulated changelog) and the
-    * snapshot is recomputed from the full changelog. Package-visible so
-    * the retry property is directly testable (ProcessorsSpec replays a
-    * batch and asserts the snapshot is unchanged).
+    * OVERWRITTEN per-batch changelog part (a retry rewrites the same
+    * rows, never double-counts them) and the snapshot is recomputed from
+    * the full changelog. Package-visible so the retry property is
+    * directly testable (ProcessorsSpec replays a batch and asserts the
+    * snapshot is unchanged).
     */
-  private[graft] def upsertBatch(spark: SparkSession, batch: DataFrame, id: Long,
-      changelog: String, snapRoot: String)(snapshot: DataFrame => DataFrame): Unit = {
-    batch.write.mode("overwrite").parquet(s"$changelog/batch-$id")
-    snapshot(spark.read.option("recursiveFileLookup", "true").parquet(changelog))
-      .write.mode("overwrite").parquet(s"$snapRoot/batch-$id")
+  private[graft] def upsertBatch(spark: SparkSession, batch: DataFrame, id: Long, root: String)
+                                (snapshot: DataFrame => DataFrame): Unit = {
+    writeStore(batch, root, "changelog", id)
+    writeStore(snapshot(readStore(spark, root, "changelog", batch.schema)), root, "snapshot", id)
   }
 
-  /** The pp_ingest chain driven THROUGH the real streaming engine (r10
-    * verdict #5): new-batch docs arrive as micro-batches (one staged file
-    * per trigger), and each `foreachBatch` invocation runs the library's
-    * own ingest stages against the standing corpus AND the cross-batch
-    * dedup state:
-    *   1. exact dedup — drop content whose md5 is already in the corpus
-    *      hash store OR was seen in any earlier micro-batch; keep-min
-    *      doc_id within the micro-batch;
-    *   2. near-dup gate — (lang, n_chars)-blocked candidates against the
-    *      corpus, `Dedup.verifyJaccard` ≥ `jaccardMin` drops;
-    *   3. deterministic split assignment for survivors.
-    * Cross-batch state is a per-batch parquet changelog of content
-    * hashes (the persisted-store shape a deployment would keep in a
-    * compacted topic / state table), written OVERWRITE per batch id so
-    * foreachBatch's at-least-once retries are idempotent — the
-    * [[upsertBatch]] contract, pinned for this path in ProcessorsSpec.
-    * When `batchOf` partitions the ingest into ascending doc_id ranges,
-    * first-accepted == keep-min and the converged output EQUALS the
-    * batch `pp_ingest` chain, so the entry shares its oracle verbatim.
-    * Expects columns (doc_id, text, lang, n_chars); returns
-    * (doc_id, split).
-    *
-    * `semantic` (r12, VERDICT r11 #3) composes the SemDeDup stage into
-    * the micro-batch chain: (embeddings frame keyed vec_id == doc_id,
-    * frozen IVF model, cosine threshold, corpus-side cluster cap). The
-    * CORPUS assignment is computed ONCE with the
-    * [[graft.ann.Ann.assignClusters]] kernel and persisted (the
-    * standing-state shape — at 100 TB each batch joins the persisted
-    * assignment, never raw corpus vectors); each micro-batch assigns
-    * only its own fresh docs and drops those with a same-cluster corpus
-    * match at round(cos, 6) ≥ threshold
-    * ([[graft.ann.Ann.crossSemanticDup]]). The gate is CORPUS-scoped by
-    * design (a batch doc semantically close to an earlier ACCEPTED
-    * batch doc is kept — SemDeDup curates against standing content;
-    * cross-batch exact state still drops identical text), which is also
-    * what keeps the converged output equal to the batch chain.
-    */
   /** BM25 under the real streaming engine — retrieval-stats
     * accumulation at ingest: documents arrive in micro-batches, and
     * each batch contributes ONLY its own per-doc statistics (query-term
-    * tf rows + doc lengths, both batch-local aggregations) to per-batch
-    * state stores, written idempotently (`b-<id>` overwrite, so an
-    * at-least-once retry replaces rather than double-counts). After the
-    * stream drains, scores compute from the ACCUMULATED state through
-    * `TextFunctions.bm25Score` — literally the batch scoring core, one
-    * source of truth. Docs are disjoint across batches, so df/N/tot are
-    * additive and the converged state reproduces the batch statistics
-    * exactly: the caller shares the batch oracle verbatim.
+    * tf rows + doc lengths, both batch-local aggregations) to the `tf`
+    * and `dl` stores. After the stream drains, scores compute from the
+    * ACCUMULATED state through `TextFunctions.bm25Score` — literally the
+    * batch scoring core, one source of truth. Docs are disjoint across
+    * batches, so df/N/tot are additive and the converged state
+    * reproduces the batch statistics exactly: the caller shares the
+    * batch oracle verbatim.
     */
-  def runBm25Stream(spark: SparkSession, docs: DataFrame,
-                    batchOf: org.apache.spark.sql.Column,
-                    queryTerms: Seq[String], tag: String,
-                    storeDirs: Option[scala.collection.mutable.Buffer[(String, String)]] = None): DataFrame = {
-    val stream = stageStreamBatched(spark, docs, batchOf, tag)
-    val tfRoot = scratchDir(s"bm25-tf-$tag")
-    val dlRoot = scratchDir(s"bm25-dl-$tag")
-    storeDirs.foreach(b => b ++= Seq("tf" -> tfRoot, "dl" -> dlRoot))
-    val q = stream.writeStream
-      .option("checkpointLocation", scratchDir(s"ckpt-bm25-$tag"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val tf = b.where(col("doc_id").isNotNull)
-          .select(col("doc_id"),
-            explode(graft.functions.TextFunctions.tokens(col("text"))).as("term"))
-          .groupBy("doc_id", "term").agg(count(lit(1)).cast("long").as("tf"))
-          .localCheckpoint() // one tokenize per batch, two consumers below
-        tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-          .write.mode("overwrite").parquet(s"$dlRoot/b-$id")
-        tf.where(col("term").isin(queryTerms: _*))
-          .write.mode("overwrite").parquet(s"$tfRoot/b-$id")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q.stop()
-    graft.functions.TextFunctions.bm25Score(
-      spark.read.option("recursiveFileLookup", "true").parquet(tfRoot),
-      spark.read.option("recursiveFileLookup", "true").parquet(dlRoot))
+  def runBm25Stream(spark: SparkSession, docs: DataFrame, batchOf: => Column,
+                    queryTerms: Seq[String], root: String): DataFrame = {
+    def termFreqs(b: DataFrame) = b.where(col("doc_id").isNotNull)
+      .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).cast("long").as("tf"))
+    def docLengths(tf: DataFrame) = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    drain(spark, docs, batchOf, root) { (b, id) =>
+      // one tokenize per batch for both stores; a lost cached block
+      // recomputes from the micro-batch
+      val tf = termFreqs(b).persist()
+      try {
+        writeStore(docLengths(tf), root, "dl", id)
+        writeStore(tf.where(col("term").isin(queryTerms: _*)), root, "tf", id)
+      } finally tf.unpersist()
+    }
+    val tf = termFreqs(docs)
+    TextFunctions.bm25Score(readStore(spark, root, "tf", tf.schema),
+      readStore(spark, root, "dl", docLengths(tf).schema))
   }
 
-  def runIngestStream(spark: SparkSession, batchDocs: DataFrame, corpus: DataFrame,
-                      batchOf: org.apache.spark.sql.Column,
-                      jaccardMin: Double, tag: String,
-                      semantic: Option[(DataFrame, graft.ann.IvfModel, Double, Int)] = None,
-                      storeDirs: Option[scala.collection.mutable.Buffer[(String, String)]] = None,
-                      // r18: per-corpus staging cache key (the
-                      // stageStreamBatchedCached discipline) — the staged
-                      // input is a pure function of (corpus, batchOf), so
-                      // bench reps re-run the STREAM, not the byte-identical
-                      // stage; None (tests, ad-hoc fixtures) stages fresh
-                      stageKey: Option[String] = None): DataFrame = {
-    val stream = stageKey match {
-      case Some(k) => stageStreamBatchedCached(spark, batchDocs, tag, k)(batchOf)
-      case None    => stageStreamBatched(spark, batchDocs, batchOf, tag)
+  /** A stage behind [[runGate]]'s key gate: `corpusKeys` are the
+    * standing corpus's gate keys, read from a store the caller wrote once
+    * (in place of the gate's own corpus store), and `keep` maps the
+    * micro-batch rows whose key passed to the rows that survive. */
+  final case class Refine(corpusKeys: DataFrame, keep: DataFrame => DataFrame)
+
+  /** First-accepted, keep-min dedup across micro-batches, through the
+    * real streaming engine. `fingerprint` maps rows to (id, key
+    * columns…); ids are unique per row. The corpus's keys are computed
+    * ONCE per run into `<root>/corpus` (or come from `refine`). Each
+    * micro-batch then runs one fingerprint pass, keeps the lowest id per
+    * key, drops every key already in the corpus or in an earlier batch's
+    * `seen` part, runs `refine` on the survivors' batch rows (the refine
+    * sees the batch's own columns, so the fingerprint's id must be one of
+    * them), and writes ONE part: every distinct batch key with its
+    * keep-min id and a `kept` flag.
+    * Returns the kept (id, key columns…) of all parts.
+    *
+    * Idempotence: a part is overwritten by batch id and a batch reads
+    * only the parts of batches strictly before its own, so a retry of
+    * foreachBatch's at-least-once delivery rewrites the same part from
+    * the same inputs. Batch-chain equality: when `batchOf` assigns
+    * ascending, disjoint id ranges, first-accepted == keep-min over the
+    * whole batch, so the converged output equals the batch chain (keep-
+    * min per key, anti-joined against the corpus, then `refine`) and the
+    * entries built on it share their batch entry's oracle. The refine
+    * gates against the corpus only, never against earlier accepted batch
+    * rows, which keeps that equality.
+    */
+  def runGate(spark: SparkSession, batch: DataFrame, corpus: DataFrame, batchOf: => Column,
+              root: String, stageKey: Option[String] = None, refine: Option[Refine] = None)
+             (fingerprint: DataFrame => DataFrame): DataFrame = {
+    val fp = fingerprint(batch)
+    val id = fp.columns.head
+    val keys = fp.columns.toSeq.tail
+    val seenSchema = fp.schema.add("kept", "boolean")
+    val corpusKeys = refine.fold {
+      fingerprint(corpus).select(keys.map(col): _*).distinct()
+        .write.mode("overwrite").parquet(s"$root/corpus")
+      spark.read.parquet(s"$root/corpus")
+    }(_.corpusKeys)
+    val noId = lit(null).cast(fp.schema(id).dataType).as(id)
+    drain(spark, batch, batchOf, root, stageKey) { (b, bid) =>
+      val prior = partsBefore(root, "seen", bid)
+      val seen =
+        if (prior.isEmpty) corpusKeys
+        else corpusKeys.unionByName(
+          spark.read.schema(seenSchema).parquet(prior: _*).select(keys.map(col): _*))
+      // ONE aggregation over the batch's fingerprints (_src 0) and the
+      // seen keys (_src 1) gives each batch key (_lo 0) its keep-min id
+      // and whether the corpus or an earlier batch holds it (_hi 1). An
+      // anti-join of a keep-min frame against the seen keys would be
+      // pushed below its aggregation, and the part's second branch would
+      // re-run the fingerprint.
+      val gated = fingerprint(b).select(keys.map(col) :+ col(id) :+ lit(0).as("_src"): _*)
+        .unionByName(seen.select(keys.map(col) :+ noId :+ lit(1).as("_src"): _*))
+        .groupBy(keys.map(col): _*)
+        .agg(min(col(id)).as(id), min("_src").as("_lo"), max("_src").as("_hi"))
+        .where(col("_lo") === 0)
+      val passed = col("_hi") === 0
+      val part = refine.fold(gated.withColumn("kept", passed)) { r =>
+        val fresh = b.join(gated.where(passed).select(id), Seq(id), "left_semi")
+        gated.join(r.keep(fresh).select(col(id), lit(true).as("_kept")), Seq(id), "left")
+          .withColumn("kept", coalesce(col("_kept"), lit(false)))
+      }
+      writeStore(part.select(col(id) +: keys.map(col) :+ col("kept"): _*), root, "seen", bid)
     }
-    val seenRoot = scratchDir(s"ingest-seen-$tag")
-    // ONE consolidated corpus-side store (r18, VERDICT r17 #7; extends
-    // the r17 persist-once discipline): the exact-hash gate and the
-    // gram-set verify read the SAME per-doc frame — (vid, toks, h,
-    // in_corpus) — written in ONE pass over the corpus∪batch docs
-    // instead of a distinct-md5 pass over the corpus PLUS a shingle
-    // pass over allDocs. Parquet column pruning keeps each gate's
-    // per-batch read to exactly its columns (h+in_corpus for the exact
-    // gate, vid+toks for the verify), so consolidating stores costs the
-    // joins nothing. Values identical: md5/gram longs roundtrip exactly,
-    // and an anti-join is indifferent to the corpus hashes no longer
-    // being pre-distinct'd.
-    val storeDir = scratchDir(s"ingest-store-$tag")
-    storeDirs.foreach(b => b ++= Seq("seen" -> seenRoot, "corpus" -> storeDir))
+    readStore(spark, root, "seen", seenSchema).where(col("kept")).select(id, keys: _*)
+  }
+
+  /** The pp_ingest chain on [[runGate]]: exact content dedup (md5 keys)
+    * against the corpus and earlier micro-batches, then the refine — the
+    * near-dup gate ((lang, n_chars)-blocked candidates against the
+    * corpus, `Dedup.verifyJaccardWithSets` ≥ `jaccardMin` drops) and,
+    * with `semantic` (embeddings keyed vec_id == doc_id, frozen IVF
+    * model, cosine threshold, corpus-side cluster cap), the SemDeDup
+    * gate: the CORPUS assignment is computed ONCE
+    * ([[graft.ann.Ann.assignClusters]]) and persisted, and each
+    * micro-batch assigns only its own fresh docs and drops those with a
+    * same-cluster corpus match at round(cos, 6) ≥ threshold
+    * ([[graft.ann.Ann.crossSemanticDup]]). Both refine gates are
+    * CORPUS-scoped: a batch doc close to an earlier ACCEPTED batch doc is
+    * kept (SemDeDup curates against standing content; cross-batch exact
+    * state still drops identical text). Expects columns (doc_id, text,
+    * lang, n_chars); returns (doc_id, split).
+    */
+  def runIngestStream(spark: SparkSession, batchDocs: DataFrame, corpus: DataFrame,
+                      batchOf: => Column, jaccardMin: Double, root: String,
+                      semantic: Option[(DataFrame, graft.ann.IvfModel, Double, Int)] = None,
+                      stageKey: Option[String] = None): DataFrame = {
+    // ONE consolidated corpus-side store, written once: the exact-hash
+    // gate and the gram-set verify read the SAME per-doc frame — (vid,
+    // toks, h, in_corpus) over corpus ∪ batch docs. Parquet column
+    // pruning keeps each gate's per-batch read to exactly its columns
+    // (h + in_corpus for the exact gate, vid + toks for the verify).
     def sideStore(side: DataFrame, inCorpus: Boolean): DataFrame =
       side.select(col("doc_id").as("vid"),
         graft.dedup.Dedup.gramSet("text", 1).as("toks"),
         md5(col("text")).as("h"), lit(inCorpus).as("in_corpus"))
     sideStore(corpus, inCorpus = true)
       .unionByName(sideStore(batchDocs, inCorpus = false))
-      .write.mode("overwrite").parquet(storeDir)
+      .write.mode("overwrite").parquet(s"$root/corpus")
+    val store = spark.read.parquet(s"$root/corpus")
+    val storeSets = store.select(col("vid"), col("toks"))
     // NOT persisted: the corpus side's capped block frame
     // (Dedup.cappedBlockSide) is a pure function of the standing corpus
     // and COULD persist once per run like the gram-set store — measured
@@ -383,214 +442,36 @@ object StreamingQueries {
     // setup write costs more than two per-trigger corpus windows over a
     // 5k-doc corpus. The helper exists for the many-trigger/large-corpus
     // regime; re-measure before flipping (r18 audit, guide §1.1).
-    // semantic stage setup: persist the corpus-side cluster assignment once
     val semState = semantic.map { case (emb, model, thr, cap) =>
-      val dir = scratchDir(s"ingest-semasg-$tag")
+      val dir = s"$root/semasg"
       graft.ann.Ann.assignClusters(
           emb.join(corpus.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
           "vec_id", "embedding", model)
         .write.mode("overwrite").parquet(dir)
-      (dir, emb, model, thr, cap)
+      (spark.read.parquet(dir), emb, model, thr, cap)
     }
-
-    def seenBefore(id: Long): Seq[String] = storesBefore(seenRoot, id)
-
-    // hoisted OUT of foreachBatch (r19, guide §2.4): the consolidated
-    // store is written once before the stream starts and never changes,
-    // so its file index / schema resolve once per RUN instead of once
-    // per trigger (the per-batch `seen` reads stay inside — their dir
-    // set depends on the batch id)
-    val store = spark.read.parquet(storeDir)
-    val corpusHashes = store.where(col("in_corpus")).select(col("h"))
-    val storeSets = store.select(col("vid"), col("toks"))
-    val q = stream.writeStream
-      .option("checkpointLocation", scratchDir(s"ckpt-ingest-$tag"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val priorDirs = seenBefore(id)
-        // ONE hash gate (r19, guide §2.4): corpus hashes and prior-batch
-        // hashes drop a batch hash identically, so the two left-anti
-        // joins fold into one against their union — one join (and one
-        // broadcast build) per trigger instead of two. Duplicates on
-        // the anti side are harmless by anti-join semantics.
-        val gate =
-          if (priorDirs.isEmpty) corpusHashes
-          else corpusHashes.unionByName(spark.read.parquet(priorDirs: _*).select(col("h")))
-        val hashed = b.withColumn("_h", md5(col("text")))
-        // keep-min per batch hash computed ONCE and shared with the
-        // store write below (r19): an anti-join on _h keeps all rows of
-        // a hash or none, so keep-min-then-gate equals gate-then-keep-min
-        // — and the write no longer re-plans the md5 scan + aggregation.
-        val batchAgg = hashed.groupBy("_h").agg(min(col("doc_id")).as("doc_id"))
-        val keptIds = batchAgg
-          .join(gate.withColumnRenamed("h", "_h"), Seq("_h"), "left_anti")
-          .select("doc_id")
-        val fresh = b.join(keptIds, Seq("doc_id"), "left_semi")
-        // guarded cross-corpus blocking (r15): the per-batch candidate
-        // stage rides the same default-on capBuckets guard as the batch
-        // ingest chain — the corpus side's block membership grows with
-        // the standing corpus, the exact quadratic cliff the cap bounds
-        val cand = graft.dedup.Dedup.crossBlockedPairs(fresh, corpus, "doc_id",
-          Seq("lang" -> col("lang"), "n_chars" -> col("n_chars")))
-        val nearDup = graft.dedup.Dedup
-          .verifyJaccardWithSets(cand, storeSets)
-          .where(col("jaccard") >= jaccardMin)
-          .select(col("a").as("doc_id")).distinct()
-        val afterJac = fresh.join(nearDup, Seq("doc_id"), "left_anti")
-        // semantic gate: assign THIS batch's survivors, join the
-        // persisted corpus assignment, drop same-cluster matches
-        val surviving = semState match {
-          case Some((dir, emb, model, thr, cap)) =>
-            val freshAsg = graft.ann.Ann.assignClusters(
-              emb.join(afterJac.select(col("doc_id").as("vec_id")),
-                Seq("vec_id"), "left_semi"),
-              "vec_id", "embedding", model)
-            val semDrop = graft.ann.Ann
-              .crossSemanticDup(freshAsg, spark.read.parquet(dir), thr, cap)
-              .select(col("vec_id").as("doc_id"))
-            afterJac.join(semDrop, Seq("doc_id"), "left_anti")
-          case None => afterJac
-        }
-        // ONE write per trigger (r18, the runMediaIngestStream device):
-        // the per-batch store carries every distinct batch content hash
-        // with its keep-min doc_id and a kept gate flag — the old
-        // separate survivors write + seen-hash write were two jobs over
-        // the same batch. Later batches read only `h` (parquet column
-        // pruning; the groupBy's key set IS the old distinct), and the
-        // converged output is the kept-filtered read-back. Values
-        // identical: surviving ids are keep-min ids by construction, so
-        // the flag left-join is fan-out-free and total. r19: the
-        // keep-min aggregation is the SAME batchAgg frame the exact gate
-        // consumed, so the plan reuses its exchange instead of
-        // re-scanning + re-hashing the batch.
-        batchAgg
-          .join(surviving.select(col("doc_id")).withColumn("_kept", lit(true)),
-            Seq("doc_id"), "left")
-          .select(col("_h").as("h"), col("doc_id"),
-            coalesce(col("_kept"), lit(false)).as("kept"))
-          .write.mode("overwrite").parquet(s"$seenRoot/seen-$id")
-        ()
+    def keep(fresh: DataFrame): DataFrame = {
+      // guarded cross-corpus blocking (r15): the same default-on
+      // capBuckets guard as the batch ingest chain — the corpus side's
+      // block membership grows with the standing corpus
+      val cand = graft.dedup.Dedup.crossBlockedPairs(fresh, corpus, "doc_id",
+        Seq("lang" -> col("lang"), "n_chars" -> col("n_chars")))
+      val nearDup = graft.dedup.Dedup.verifyJaccardWithSets(cand, storeSets)
+        .where(col("jaccard") >= jaccardMin)
+        .select(col("a").as("doc_id")).distinct()
+      val afterJac = fresh.join(nearDup, Seq("doc_id"), "left_anti")
+      semState.fold(afterJac) { case (corpusAsg, emb, model, thr, cap) =>
+        val freshAsg = graft.ann.Ann.assignClusters(
+          emb.join(afterJac.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
+          "vec_id", "embedding", model)
+        afterJac.join(graft.ann.Ann.crossSemanticDup(freshAsg, corpusAsg, thr, cap)
+          .select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti")
       }
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.read.option("recursiveFileLookup", "true").parquet(seenRoot)
-      .where(col("kept"))
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.splitAssign(col("doc_id")).as("split"))
-  }
-
-  /** Earlier micro-batches' per-batch stores under `root` — strictly
-    * BEFORE `id`, so a retried batch never sees its own (overwritten)
-    * store. Shared by [[runIngestStream]] and [[runMediaIngestStream]]
-    * (review r12: was duplicated in both).
-    */
-  private def storesBefore(root: String, id: Long): Seq[String] = {
-    val rootPath = Paths.get(root)
-    if (!Files.exists(rootPath)) Seq.empty
-    else {
-      val l = Files.list(rootPath)
-      try {
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        l.forEach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("seen-") && n.stripPrefix("seen-").toLong < id)
-            out += p.toString
-        }
-        out.toSeq
-      } finally l.close()
     }
-  }
-
-  /** MEDIA ingest with image dedup at the gate, through the real
-    * streaming engine: each micro-batch generates its slice's PNG
-    * assets, decodes + dHashes them (the full codec path), drops any
-    * hash already present in the PERSISTED corpus hash store or in an
-    * EARLIER batch's store, and keeps the lowest asset_id per hash
-    * within the batch. Cross-batch state is the same
-    * at-least-once-idempotent per-batch parquet stores
-    * [[runIngestStream]] uses (a retried batch never sees its own
-    * overwritten store). With ascending-id micro-batches, first-accepted
-    * == keep-min-id globally, so the converged output equals the batch
-    * dedup and shares its oracle. At 100 TB: the corpus hash store is
-    * 16 bytes/asset and the per-batch joins are hash-equi — decode cost
-    * stays inside each batch's scan.
-    */
-  def runMediaIngestStream(spark: SparkSession, batchDocs: DataFrame,
-                           corpusDocs: DataFrame,
-                           batchOf: org.apache.spark.sql.Column,
-                           tag: String,
-                           storeDirs: Option[scala.collection.mutable.Buffer[(String, String)]] = None,
-                           // the gate's fingerprint is pluggable (r13):
-                           // default = exact dHash; pp_ingest_media_dct
-                           // passes the robust DCT pHash with its column
-                           // names — the store/join machinery is
-                           // fingerprint-agnostic
-                           hashFn: DataFrame => DataFrame = null,
-                           hiCol: String = "dhash_hi",
-                           loCol: String = "dhash_lo",
-                           // r18: per-corpus staging cache key, see
-                           // runIngestStream
-                           stageKey: Option[String] = None): DataFrame = {
-    import graft.multimodal.Multimodal
-    val hasher: DataFrame => DataFrame =
-      if (hashFn != null) hashFn
-      else df => Multimodal.imageDHash(Multimodal.syntheticPngAssets(df))
-    val stream = stageKey match {
-      case Some(k) => stageStreamBatchedCached(spark, batchDocs, tag, k)(batchOf)
-      case None    => stageStreamBatched(spark, batchDocs, batchOf, tag)
-    }
-    val seenRoot = scratchDir(s"mingest-seen-$tag")
-    val corpusHashDir = scratchDir(s"mingest-corpus-$tag")
-    storeDirs.foreach(b => b ++= Seq("seen" -> seenRoot, "corpus" -> corpusHashDir))
-    hasher(corpusDocs)
-      .select(hiCol, loCol).distinct()
-      .write.mode("overwrite").parquet(corpusHashDir)
-    // hoisted OUT of foreachBatch (r19): the corpus hash store never
-    // changes after the pre-stream write, so its file index / schema
-    // resolve once per run instead of once per trigger
-    val corpusHashes = spark.read.parquet(corpusHashDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", scratchDir(s"ckpt-mingest-$tag"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val priorDirs = storesBefore(seenRoot, id)
-        // ONE write per trigger (r18, guide §2.4): the old out-store
-        // (gate survivors) + seen-store (all batch hashes) pair ran two
-        // jobs over a persisted decode; the unified per-batch store
-        // carries every distinct batch hash with its keep-min asset_id
-        // and a `kept` gate flag, so the decode+dHash scan runs ONCE
-        // per trigger with no persist, later batches read (hi, lo)
-        // through parquet pruning (exactly the old seen rows — the
-        // groupBy's key set IS the old distinct), and the converged
-        // output is the kept-filtered read-back. Values identical: all
-        // rows of a hash survive or none, so min(asset_id) before the
-        // gate equals min over survivors. r19: corpus + prior-batch
-        // hashes gate identically, so the two flag left-joins fold into
-        // ONE against their DISTINCT union — one join per trigger, and
-        // the distinct restores the fan-out-free invariant the r18 form
-        // lost when a hash recurred across prior stores (ADVICE r18: a
-        // kept=false row duplicated in the store per recurrence,
-        // growing the stores; output values were and stay identical).
-        val seenAll =
-          if (priorDirs.isEmpty) corpusHashes
-          else corpusHashes.unionByName(
-            spark.read.parquet(priorDirs: _*).select(hiCol, loCol)).distinct()
-        hasher(b)
-          .groupBy(hiCol, loCol).agg(min(col("asset_id")).as("asset_id"))
-          .join(seenAll.withColumn("_in_seen", lit(true)),
-            Seq(hiCol, loCol), "left")
-          .select(col("asset_id"), col(hiCol), col(loCol),
-            col("_in_seen").isNull.as("kept"))
-          .write.mode("overwrite").parquet(s"$seenRoot/seen-$id")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.read.option("recursiveFileLookup", "true").parquet(seenRoot)
-      .where(col("kept"))
-      .select("asset_id", hiCol, loCol)
+    runGate(spark, batchDocs, corpus, batchOf, root, stageKey,
+        Some(Refine(store.where(col("in_corpus")).select(col("h")), keep)))(
+        b => b.select(col("doc_id"), md5(col("text")).as("h")))
+      .select(col("doc_id"), TextFunctions.splitAssign(col("doc_id")).as("split"))
   }
 
   /** Run `transform` over a streaming read of `table`, aggregate to a

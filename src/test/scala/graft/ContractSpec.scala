@@ -83,6 +83,23 @@ class ContractSpec extends GraftTest {
     assert(sites.isEmpty, s"stream sources opened in the queries layer: ${sites.mkString(", ")}")
   }
 
+  test("src/main calls foreachBatch in exactly one place, the drain") {
+    // every per-batch store driver runs through StreamingQueries' one
+    // drain; a second foreachBatch loop would bring back a copied drain
+    val call = """\.foreachBatch\s*[({]""".r
+    val sites = scala.collection.mutable.ArrayBuffer[String]()
+    def walk(f: java.io.File): Unit =
+      if (f.isDirectory) f.listFiles.sortBy(_.getName).foreach(walk)
+      else if (f.getName.endsWith(".scala")) {
+        val lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
+        lines.indices.filter(i => call.findFirstIn(lines(i)).isDefined)
+          .foreach(i => sites += s"${f.getName}:${i + 1}")
+      }
+    walk(new java.io.File("src/main/scala"))
+    assert(sites.size === 1 && sites.head.startsWith("StreamingQueries.scala:"),
+      s"foreachBatch calls: ${sites.mkString(", ")}")
+  }
+
   test("flagship entry returns rows (driver smoke-check)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -366,7 +366,7 @@ class ProcessorsSpec extends GraftTest {
       (1, "user", "alice", "asia", 2L)
     ).toDF("batch", "side", "key", "value", "ts")
     val (finalSnap, snapRoot) = StreamingQueries.runUpsertSnapshots(
-        spark, changelog, col("batch"), "alice") { acc =>
+        spark, changelog, col("batch"), ProbeUtil.scratchDir("alice")) { acc =>
       def side(s: String) = TableView.latestPerKey(
         acc.where(col("side") === s).select("key", "value", "ts"),
         Seq("key"), col("ts"), col("value"))
@@ -393,7 +393,7 @@ class ProcessorsSpec extends GraftTest {
       (1, "alice", "asia", 10.0, 2L)
     ).toDF("batch", "user", "region", "amount", "ts")
     val (_, snapRoot) = StreamingQueries.runUpsertSnapshots(
-        spark, changelog, col("batch"), "a6-retract") { acc =>
+        spark, changelog, col("batch"), ProbeUtil.scratchDir("a6-retract")) { acc =>
       TableView.regroupAndAgg(
         TableView.latestPerKey(acc.select("user", "region", "amount", "ts"),
           Seq("user"), col("ts"), col("region")),
@@ -411,22 +411,21 @@ class ProcessorsSpec extends GraftTest {
     import spark.implicits._
     import graft.streaming.StreamingQueries
     import org.apache.spark.sql.DataFrame
-    val changelog = ProbeUtil.scratchDir("retry-changelog")
-    val snapRoot = ProbeUtil.scratchDir("retry-snap")
+    val root = ProbeUtil.scratchDir("retry-upsert")
     def snapshot(acc: DataFrame) =
       acc.groupBy("k").agg(round(sum("v"), 2).as("total"))
     val b0 = Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")
     val b1 = Seq(("a", 3.0)).toDF("k", "v")
-    StreamingQueries.upsertBatch(spark, b0, 0L, changelog, snapRoot)(snapshot)
-    StreamingQueries.upsertBatch(spark, b1, 1L, changelog, snapRoot)(snapshot)
-    def read(i: Int) = spark.read.parquet(s"$snapRoot/batch-$i")
+    StreamingQueries.upsertBatch(spark, b0, 0L, root)(snapshot)
+    StreamingQueries.upsertBatch(spark, b1, 1L, root)(snapshot)
+    def read(i: Int) = spark.read.parquet(s"$root/snapshot/batch-$i")
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     val once = read(1)
     assert(once === Map("a" -> 4.0, "b" -> 2.0))
     // foreachBatch is at-least-once: Spark may re-run the batch body
     // after a failure. A flat changelog APPEND would double batch 1's
     // rows here; the overwritten per-batch subdir must not.
-    StreamingQueries.upsertBatch(spark, b1, 1L, changelog, snapRoot)(snapshot)
+    StreamingQueries.upsertBatch(spark, b1, 1L, root)(snapshot)
     assert(read(1) === once)
   }
 
@@ -496,7 +495,7 @@ class ProcessorsSpec extends GraftTest {
     val all = batch.unionByName(corpus)
     val batchOf = least(col("doc_id") / 10, lit(2)).cast("int") // ascending thirds
     val out = graft.streaming.StreamingQueries
-      .runIngestStream(spark, batch, corpus, batchOf, jaccardMin = 0.5, tag = "spec")
+      .runIngestStream(spark, batch, corpus, batchOf, jaccardMin = 0.5, ProbeUtil.scratchDir("spec"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(out.map(_._1) === Set(0L, 30L),
       s"expected 20 dropped by cross-batch state and 10 by the near-dup gate, got $out")
@@ -548,7 +547,7 @@ class ProcessorsSpec extends GraftTest {
     val batchOf = least(col("doc_id") / 10, lit(2)).cast("int")
     val out = graft.streaming.StreamingQueries
       .runIngestStream(spark, batch, corpus, batchOf, jaccardMin = 0.5,
-        tag = "semspec", semantic = Some((emb, model, 0.95, 100)))
+        ProbeUtil.scratchDir("semspec"), semantic = Some((emb, model, 0.95, 100)))
       .collect().map(_.getLong(0)).toSet
     assert(out === Set(10L, 30L),
       s"expected 0 semantic-dropped, 20 state-dropped, 30 kept (corpus-scoped gate); got $out")
@@ -580,7 +579,7 @@ class ProcessorsSpec extends GraftTest {
     val terms = Seq("shared", "rare")
     val batchOf = least(col("doc_id") / 10, lit(2)).cast("int")
     val streamed = graft.streaming.StreamingQueries
-      .runBm25Stream(spark, docs, batchOf, terms, tag = "bm25spec")
+      .runBm25Stream(spark, docs, batchOf, terms, ProbeUtil.scratchDir("bm25spec"))
       .collect().map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
     val batch = graft.functions.TextFunctions.bm25(docs, "doc_id", "text", terms)
       .collect().map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
@@ -590,6 +589,66 @@ class ProcessorsSpec extends GraftTest {
     // df('shared') = 3 spans all batches: under any single batch's stats
     // the idf (and so the score) would differ — parity proves the
     // accumulated state, not a per-batch shortcut
+  }
+
+  test("runGate media fingerprints: corpus, cross-batch and in-batch duplicates drop, keep-min id") {
+    import spark.implicits._
+    import graft.multimodal.Multimodal
+    import graft.streaming.StreamingQueries
+    import org.apache.spark.sql.DataFrame
+    // syntheticPngAssets draws an image from (id mod 2816, n_chars mod
+    // 13) (2816 = lcm(2, 11, 256)), so ids 2816 apart with equal n_chars
+    // decode to the same pixels and share every fingerprint
+    val p = 2816L
+    val corpus = Seq((29L, 6L)).toDF("doc_id", "n_chars")
+    val batch = Seq(
+      (30L, 4L),          // batch 0: fresh, kept
+      (28L + p, 11L),     // batch 0: in-batch duplicate of 28, dropped (keep-min)
+      (28L, 11L),         // batch 0: kept
+      (29L + p, 6L),      // batch 0: the corpus image, dropped
+      (29L + 4 * p, 7L),  // batch 1: fresh, kept
+      (30L + 8 * p, 4L)   // batch 2: batch 0's image two micro-batches later, dropped
+    ).toDF("doc_id", "n_chars")
+    val batchOf = least(col("doc_id") / 10000, lit(2)).cast("int")
+    val fingerprints = Seq[(String, DataFrame => DataFrame)](
+      "dhash" -> (df => Multimodal.imageDHash(Multimodal.syntheticPngAssets(df))),
+      "phash_dct" -> (df => Multimodal.imagePHashDct(Multimodal.syntheticPngAssets(df))))
+    fingerprints.foreach { case (name, fp) =>
+      // the plant holds under this fingerprint: the corpus image and the
+      // three fresh ones have four distinct keys
+      val keyOf = fp(batch.unionByName(corpus)).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(Seq(29L, 30L, 28L, 29L + 4 * p).map(keyOf).distinct.size === 4, s"$name keys $keyOf")
+      val out = StreamingQueries.runGate(spark, batch, corpus, batchOf,
+        ProbeUtil.scratchDir(s"mgate-$name"))(fp)
+      assert(out.columns.toSeq === fp(corpus).columns.toSeq)
+      assert(out.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap ===
+        Seq(30L, 28L, 29L + 4 * p).map(i => i -> keyOf(i)).toMap, name)
+    }
+  }
+
+  test("an empty batch drains to an empty frame with the output schema (gate, ingest, BM25)") {
+    import spark.implicits._
+    import graft.multimodal.Multimodal
+    import graft.streaming.StreamingQueries
+    import org.apache.spark.sql.DataFrame
+    val docs = Seq((1L, "a b", "en", 3L), (2L, "c d", "en", 3L))
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val empty = docs.where(col("doc_id") < 0)
+    def fields(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    def batches = StreamingQueries.harnessBatches(empty, "doc_id")
+    val fp: DataFrame => DataFrame = df => Multimodal.imageDHash(Multimodal.syntheticPngAssets(df))
+    val gated = StreamingQueries.runGate(spark, empty, docs, batches,
+      ProbeUtil.scratchDir("empty-gate"))(fp)
+    val ingested = StreamingQueries.runIngestStream(spark, empty, docs, batches, 0.5,
+      ProbeUtil.scratchDir("empty-ingest"))
+    val scored = StreamingQueries.runBm25Stream(spark, empty, batches, Seq("a"),
+      ProbeUtil.scratchDir("empty-bm25"))
+    assert(gated.count() === 0 && ingested.count() === 0 && scored.count() === 0)
+    assert(fields(gated) === fields(fp(docs)))
+    assert(fields(ingested) === fields(docs.select(col("doc_id"),
+      graft.functions.TextFunctions.splitAssign(col("doc_id")).as("split"))))
+    assert(fields(scored) === fields(graft.functions.TextFunctions.bm25(docs, "doc_id", "text", Seq("a"))))
   }
 
   test("T5 graceful stop leaves the query inactive and session healthy") {
